@@ -256,11 +256,9 @@ def rfm_dual_window(
         row = agg.agg(
             F.count(F.lit(1)).alias("n"), F.max("__ad").alias("mx")
         ).first()
+        if derived and (row is None or row["n"] == 0 or row["mx"] is None):
+            raise ValueError(f"no non-null values in {date_col}")
         n_groups = row["n"] if row is not None else 0
-        if derived and n_groups and (row is None or row["mx"] is None):
-            raise ValueError(f"no non-null values in {date_col}")
-        if derived and n_groups == 0:
-            raise ValueError(f"no non-null values in {date_col}")
         agg = agg.drop("__ad")
     else:
         # Derived analysis date with an EXPENSIVE input plan

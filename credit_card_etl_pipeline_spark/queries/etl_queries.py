@@ -537,25 +537,6 @@ def ingest_statement_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _parsed_canonical_union(statement_lines(spark, str(_FIXTURE_DIR)))
 
 
-@query("ingest_via_datasource", _INGEST_ORACLE)
-def ingest_via_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same ingest through the Spark 4 Python Data Source
-    (sources/datasource.py: one InputPartition per file, identical
-    decode/routing semantics): ``format("bank_statement")`` feeding the
-    same parse, checked against the SAME expected table — feed parity
-    between the pluggable reader and the mapInPandas path is the
-    contract."""
-    from ..sources.datasource import BankStatementDataSource
-
-    spark.dataSource.register(BankStatementDataSource)
-    lines = (
-        spark.read.format("bank_statement")
-        .option("path", str(_FIXTURE_DIR))
-        .load()
-    )
-    return _parsed_canonical_union(lines)
-
-
 # ====================================================================
 # A6 Excel ingest (vendored stdlib .xlsx reader; etl.py:312-316)
 # ====================================================================
@@ -734,45 +715,3 @@ def ingest_jsonl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.score").alias("score"),
     )
 
-
-_stream_ds_counter = iter(range(1_000_000))
-
-
-@query("stream_ingest_datasource", _INGEST_ORACLE)
-def stream_ingest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same ingest as a STREAMING Python Data Source (Spark 4
-    SimpleDataSourceStreamReader): the statement directory is tailed —
-    each micro-batch delivers every file that arrived since the last
-    offset (FileStreamSource shape; ``max_files_per_batch`` throttles),
-    offsets count files consumed, and readBetweenOffsets makes
-    checkpoint replays exact.  The landed line stream feeds the identical
-    parse-union, checked against the SAME pinned expected table — so
-    batch reader, mapInPandas path, and streaming reader are proven
-    feed-equivalent.  The production shape for continuous statement
-    arrival: new files become micro-batches with no batch re-scan."""
-    import tempfile
-
-    from ..sources.datasource import BankStatementDataSource
-
-    spark.dataSource.register(BankStatementDataSource)
-    name = f"stream_ingest_ds_{next(_stream_ds_counter)}"
-    lines = (
-        spark.readStream.format("bank_statement")
-        .option("path", str(_FIXTURE_DIR))
-        .load()
-    )
-    q = (
-        lines.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ingest_ds_ckpt_")
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    landed = spark.table(name).localCheckpoint(eager=True)
-    return _parsed_canonical_union(landed)

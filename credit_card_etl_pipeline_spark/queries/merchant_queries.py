@@ -5,8 +5,8 @@
 lookup → priority-ordered regex scan → Unknown fallback) plus the B7/B8
 exclusion filters and a per-merchant aggregate.  The companion
 diagnostics mirror the reference's inline checks: the top-unknown table
-(db_to_RFManalysis.py:211-228, D6) and the payment-method frequency
-preview (db_to_Payment_RFM.py:127, D5).
+(db_to_RFManalysis.py:211-228, D6), the unknown-category rate, and the
+payment-method frequency preview (db_to_Payment_RFM.py:127, D5).
 """
 
 from __future__ import annotations
@@ -156,6 +156,38 @@ def merchant_unknown_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("n_txn"), F.asc("clean_merchant_name"))
         .limit(10)
+    )
+
+
+_UNKNOWN_RATE_ORACLE = f"""
+WITH {_RESOLVED_SQL},
+clean AS (
+    SELECT * FROM resolved WHERE {_EXCLUDE_SQL} AND NOT rfm_exclusion
+)
+SELECT CAST(count(CASE WHEN category = 'Unknown' THEN 1 END) AS BIGINT)
+           AS unknown_count,
+       CAST(count(*) AS BIGINT) AS total_count,
+       count(CASE WHEN category = 'Unknown' THEN 1 END) * 100.0 / count(*)
+           AS unknown_rate_pct
+FROM clean
+"""
+
+
+@query("merchant_unknown_rate", _UNKNOWN_RATE_ORACLE)
+def merchant_unknown_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D6 (db_to_RFManalysis.py:211-219): scalar unknown-category rate
+    after the exclusion filters — the resolver's quality diagnostic."""
+    fact = synth_transactions(spark, sf_dir)
+    df = resolve_merchant_hybrid(
+        fact, HYBRID_MERCHANT_RULES, STRIP_PREFIXES, merchant_col="merchant_name"
+    )
+    df = rfm_ops.exclude_bank_noise(df).where(~F.col("RFM_Exclusion"))
+    unknown = F.count(F.when(F.col("Category") == "Unknown", 1))
+    total = F.count(F.lit(1))
+    return df.agg(
+        unknown.cast("long").alias("unknown_count"),
+        total.cast("long").alias("total_count"),
+        (unknown * 100.0 / total).alias("unknown_rate_pct"),
     )
 
 

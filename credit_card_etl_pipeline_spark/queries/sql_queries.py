@@ -1,4 +1,4 @@
-"""SQL-text surface (operator A11 completed) + D6 unknown-rate.
+"""SQL-text surface (operator A11 completed).
 
 The reference reads its warehouse through SQL strings
 (db_to_RFManalysis.py:181 ``pd.read_sql``); the engine's equivalent is
@@ -15,12 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from ..operators import rfm as rfm_ops
-from ..operators.merchants import resolve_merchant_hybrid
 from ..streaming.windows import table_bytes
 from . import load, query
-from .merchant_queries import HYBRID_MERCHANT_RULES, STRIP_PREFIXES
-from .rfm_queries import synth_transactions
 
 _PRICING_SQL = """
 SELECT l_returnflag,
@@ -193,45 +189,6 @@ def lineitem_adaptive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("priority").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
         F.sum("cents").cast("long").alias("revenue_cents"),
-    )
-
-
-_EXCLUDE_SQL = (
-    "NOT regexp_matches(transaction_type,"
-    " '繳款|折抵|各項費用|手續費|年費|利息')"
-)
-
-from .merchant_queries import _RESOLVED_SQL  # noqa: E402
-
-_UNKNOWN_RATE_ORACLE = f"""
-WITH {_RESOLVED_SQL},
-clean AS (
-    SELECT * FROM resolved WHERE {_EXCLUDE_SQL} AND NOT rfm_exclusion
-)
-SELECT CAST(count(CASE WHEN category = 'Unknown' THEN 1 END) AS BIGINT)
-           AS unknown_count,
-       CAST(count(*) AS BIGINT) AS total_count,
-       count(CASE WHEN category = 'Unknown' THEN 1 END) * 100.0 / count(*)
-           AS unknown_rate_pct
-FROM clean
-"""
-
-
-@query("merchant_unknown_rate", _UNKNOWN_RATE_ORACLE)
-def merchant_unknown_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D6 (db_to_RFManalysis.py:211-219): scalar unknown-category rate
-    after the exclusion filters — the resolver's quality diagnostic."""
-    fact = synth_transactions(spark, sf_dir)
-    df = resolve_merchant_hybrid(
-        fact, HYBRID_MERCHANT_RULES, STRIP_PREFIXES, merchant_col="merchant_name"
-    )
-    df = rfm_ops.exclude_bank_noise(df).where(~F.col("RFM_Exclusion"))
-    unknown = F.count(F.when(F.col("Category") == "Unknown", 1))
-    total = F.count(F.lit(1))
-    return df.agg(
-        unknown.cast("long").alias("unknown_count"),
-        total.cast("long").alias("total_count"),
-        (unknown * 100.0 / total).alias("unknown_rate_pct"),
     )
 
 
@@ -526,75 +483,6 @@ def customer_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(n_only)
         .select(F.col("k").alias("custkey"), "membership")
     )
-
-
-# ====================================================================
-# Bucketed co-located join (zero-Exchange contract, self-asserted)
-# ====================================================================
-
-_BUCKETED_ORACLE = """
-SELECT CAST(c.c_nationkey AS BIGINT) AS nationkey,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS total_cents
-FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-GROUP BY c.c_nationkey
-"""
-
-
-@query("bucketed_join_colocated", _BUCKETED_ORACLE)
-def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed co-located join: both sides written ``bucketBy`` the
-    join key as external tables, then joined WITHOUT any Exchange — the
-    query RAISES if a shuffle appears in the physical plan (broadcast
-    disabled for the probe), so the zero-shuffle contract is enforced on
-    every driver run, and the per-nation aggregate values are the
-    oracle's."""
-    import tempfile
-
-    from ..operators.bucketing import enable_bucketed_joins, write_bucketed
-    from . import load
-
-    enable_bucketed_joins(spark)
-    base = tempfile.mkdtemp(prefix="bucketed_join_")
-    write_bucketed(
-        load(spark, sf_dir, "orders").select(
-            F.col("o_custkey").alias("custkey"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        ),
-        "orders_bucketed_q",
-        keys=["custkey"],
-        buckets=8,
-        path=f"{base}/orders",
-    )
-    write_bucketed(
-        load(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("custkey"),
-            F.col("c_nationkey").cast("long").alias("nationkey"),
-        ),
-        "customer_bucketed_q",
-        keys=["custkey"],
-        buckets=8,
-        path=f"{base}/customer",
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("orders_bucketed_q").join(
-            spark.table("customer_bucketed_q"), "custkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan:
-            raise AssertionError(
-                "bucketed join planned a shuffle — co-location contract "
-                "broken"
-            )
-        return joined.groupBy("nationkey").agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("total_cents"),
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 # ====================================================================

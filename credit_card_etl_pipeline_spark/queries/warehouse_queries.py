@@ -237,1528 +237,3 @@ def export_workbook_configs_query(
     return spark.createDataFrame(
         rows, "file string, row long, col string, value string"
     )
-
-
-# ====================================================================
-# Hypertable rollup (continuous aggregate + incremental bucket refresh)
-# ====================================================================
-
-_HYPER_ORACLE = """
-WITH base AS (
-    SELECT (epoch_us(ts) // 21600000000) AS hour_bucket, event_type,
-           CAST(round(value * 100) AS BIGINT) AS vc
-    FROM events
-),
-late AS (
-    SELECT hour_bucket, event_type, CAST(vc * 2 AS BIGINT) AS vc
-    FROM base
-    WHERE (hour_bucket + CASE event_type
-               WHEN 'click' THEN 0 WHEN 'view' THEN 1 WHEN 'purchase' THEN 2
-               WHEN 'signup' THEN 3 ELSE 4 END) % 10 = 0
-),
-merged AS (
-    SELECT * FROM base UNION ALL SELECT * FROM late
-)
-SELECT CAST(hour_bucket AS BIGINT) AS hour_bucket, event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(vc) AS BIGINT) AS value_cents
-FROM merged
-GROUP BY hour_bucket, event_type
-"""
-
-
-@query("hypertable_rollup_refresh", _HYPER_ORACLE)
-def hypertable_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style continuous aggregate: a 6-hour (bucket ×
-    event_type) rollup is materialized as an hour-partitioned table;
-    late-arriving rows (a deterministic slice, doubled values) touch a
-    subset of buckets, and the refresh RECOMPUTES ONLY THOSE buckets
-    from base+late and dynamic-partition-overwrites them — untouched
-    hours keep their original files.  The hashed result is the
-    post-refresh table read back from disk, equal to a from-scratch
-    recompute over the merged stream (the oracle)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    from ..functions.eventtime import event_micros
-
-    ev = load(spark, sf_dir, "events")
-    events = ev.select(
-        event_micros(ev).alias("us"),
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("vc"),
-    ).select(
-        # integer div — exact at any epoch, matching the oracle's `//`
-        F.expr("us div 21600000000").alias("hour_bucket"),
-        "event_type",
-        "vc",
-    )
-
-    def rollup(df: DataFrame) -> DataFrame:
-        return df.groupBy("hour_bucket", "event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("vc").cast("long").alias("value_cents"),
-        )
-
-    path = tempfile.mkdtemp(prefix="hypertable_") + "/hourly_rollup"
-    # materialize the base rollup ONCE: the write consumes it, and the
-    # refresh MERGES it (count/sum are additive) instead of re-scanning
-    # raw events for the dirty buckets — the IVM delta-merge shape;
-    # refresh cost is bounded by rollup rows + the late slice, never a
-    # second pass over the fact
-    base_rollup = rollup(events).localCheckpoint(eager=True)
-    # Partitioned-write task layout: one write task per hour_bucket
-    # directory.  A keyed repartition into the default shuffle
-    # partition count hands each task several partition values, and
-    # the dynamic-partition writer's per-task value switching made the
-    # write 3× slower at sf0.1 (2.33s → 0.75s for the same 120-dir
-    # table); the bucket count is read off the already-materialized
-    # rollup, so the layout scales with the data instead of a conf.
-    n_buckets = base_rollup.select("hour_bucket").distinct().count()
-    base_rollup.repartition(
-        max(n_buckets, 1), F.col("hour_bucket")
-    ).write.mode("overwrite").partitionBy("hour_bucket").parquet(path)
-
-    type_off = (
-        F.when(F.col("event_type") == "click", 0)
-        .when(F.col("event_type") == "view", 1)
-        .when(F.col("event_type") == "purchase", 2)
-        .when(F.col("event_type") == "signup", 3)
-        .otherwise(4)
-    )
-    late = events.where(
-        (F.col("hour_bucket") + type_off) % 10 == 0
-    ).withColumn("vc", (F.col("vc") * 2).cast("long"))
-
-    # one events pass for the whole refresh: the late slice is rolled
-    # up first (bounded by dirty buckets × types), and the dirty-bucket
-    # set derives from THAT instead of a second raw scan — previously
-    # `dirty` and `rollup(late)` each re-scanned events.
-    late_rollup = rollup(late).localCheckpoint(eager=True)
-    dirty = late_rollup.select("hour_bucket").distinct()
-    n_dirty = dirty.count()
-    refreshed = (
-        base_rollup.join(F.broadcast(dirty), "hour_bucket")
-        .unionByName(late_rollup)
-        .groupBy("hour_bucket", "event_type")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_cents").cast("long").alias("value_cents"),
-        )
-        .repartition(max(n_dirty, 1), F.col("hour_bucket"))
-    )
-    (
-        refreshed.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("hour_bucket")
-        .parquet(path)
-    )
-
-    return spark.read.parquet(path).select(
-        F.col("hour_bucket").cast("long").alias("hour_bucket"),
-        "event_type",
-        "n_events",
-        "value_cents",
-    )
-
-
-# ====================================================================
-# Time-series gap filling (dense calendar from a sparse rollup)
-# ====================================================================
-
-_GAPFILL_ORACLE = """
-WITH e AS (
-    SELECT event_type, (epoch_us(ts) // 86400000000) AS day FROM events
-),
-bounds AS (
-    SELECT min(day) AS d0, max(day) AS d1 FROM e
-),
-days AS (
-    SELECT unnest(generate_series(d0, d1)) AS day FROM bounds
-),
-grid AS (
-    SELECT t.event_type, d.day
-    FROM (SELECT DISTINCT event_type FROM e) t CROSS JOIN days d
-),
-counts AS (
-    SELECT event_type, day, count(*) AS n FROM e GROUP BY event_type, day
-)
-SELECT g.event_type, CAST(g.day AS BIGINT) AS day,
-       CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events
-FROM grid g LEFT JOIN counts c USING (event_type, day)
-"""
-
-
-@query("events_gap_filled_daily", _GAPFILL_ORACLE)
-def events_gap_filled_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap filling: the sparse per-(type, day) rollup densified to a
-    complete calendar — every type × every day in the observed range,
-    zero-filled where no events landed (the hypertable/time-series
-    presentation step; downstream moving averages need the zeros).
-    The dense grid is generated, never scanned: one row of min/max
-    bounds broadcast-joined to the distinct type set, ``sequence`` +
-    ``explode`` for the days — grid size is |types| × |days|, bounded
-    by the calendar, not the fact table."""
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    from ..functions.eventtime import event_micros
-
-    ev = load(spark, sf_dir, "events")
-    e = ev.select(
-        "event_type", event_micros(ev).alias("us")
-    ).select("event_type", F.expr("us div 86400000000").alias("day"))
-    counts = e.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    bounds = e.agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    )
-    days = bounds.select(
-        F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("day")
-    )
-    grid = e.select("event_type").distinct().crossJoin(days)
-    return (
-        grid.join(counts, ["event_type", "day"], "left")
-        .select(
-            "event_type",
-            F.col("day").cast("long").alias("day"),
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_events"),
-        )
-    )
-
-
-# ====================================================================
-# SCD2 dimension construction (versioned validity intervals)
-# ====================================================================
-
-_SCD2_SQL = """
-SELECT o_custkey AS custkey,
-       CAST(row_number() OVER w AS BIGINT) AS version,
-       o_orderpriority AS priority,
-       CAST(CAST(o_orderdate AS DATE) AS STRING) AS valid_from,
-       CAST(CAST(lead(o_orderdate) OVER w AS DATE) AS STRING) AS valid_to,
-       lead(o_orderdate) OVER w IS NULL AS is_current
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-"""
-
-
-@query("orders_scd2_priority", _SCD2_SQL)
-def orders_scd2_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) construction: each customer's
-    order-priority history becomes versioned validity intervals —
-    valid_from, valid_to = next change (open for the current row),
-    version number, is_current flag.  One shuffle on the dimension key;
-    the per-key ordered window never sees more than one customer's
-    history.  Ties on the change date break on orderkey so interval
-    order is deterministic.  One SQL string runs on both engines."""
-    from . import load
-
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_SCD2_SQL)
-
-
-# ====================================================================
-# Moving aggregates over the dense calendar (explicit frame specs)
-# ====================================================================
-
-_MOVING_ORACLE = """
-WITH e AS (
-    SELECT event_type, (epoch_us(ts) // 86400000000) AS day FROM events
-),
-bounds AS (
-    SELECT min(day) AS d0, max(day) AS d1 FROM e
-),
-days AS (
-    SELECT unnest(generate_series(d0, d1)) AS day FROM bounds
-),
-grid AS (
-    SELECT t.event_type, d.day
-    FROM (SELECT DISTINCT event_type FROM e) t CROSS JOIN days d
-),
-counts AS (
-    SELECT event_type, day, count(*) AS n FROM e GROUP BY event_type, day
-),
-filled AS (
-    SELECT g.event_type, CAST(g.day AS BIGINT) AS day,
-           CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events
-    FROM grid g LEFT JOIN counts c USING (event_type, day)
-)
-SELECT event_type, day, n_events,
-       CAST(sum(n_events) OVER w AS BIGINT) AS sum_7d,
-       CAST(count(*) OVER w AS BIGINT) AS frame_days
-FROM filled
-WINDOW w AS (PARTITION BY event_type ORDER BY day
-             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-"""
-
-
-@query("events_moving_7d_counts", _MOVING_ORACLE)
-def events_moving_7d_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit-frame window aggregate: 7-day moving event-count sum per
-    type over the GAP-FILLED calendar (zeros make the frame a true 7
-    days, not 7 sparse rows).  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
-    on the (type, day) grid — the window partitions on event_type, so
-    no global sort; exact integer sums.  frame_days < 7 marks the
-    warm-up edge."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    filled = events_gap_filled_daily(spark, sf_dir)
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    return filled.select(
-        "event_type",
-        "day",
-        "n_events",
-        F.sum("n_events").over(w).cast("long").alias("sum_7d"),
-        F.count(F.lit(1)).over(w).cast("long").alias("frame_days"),
-    )
-
-
-# ====================================================================
-# MERGE-style upsert (SCD1) — full-outer-join re-expression
-# ====================================================================
-
-_MERGE_ORACLE = """
-WITH tgt AS (
-    SELECT o_custkey AS custkey, o_orderpriority AS priority,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS totalprice_cents
-    FROM orders
-    WHERE o_orderdate < DATE '1997-01-01'
-    QUALIFY row_number() OVER (
-        PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC
-    ) = 1
-),
-src AS (
-    SELECT o_custkey AS custkey, o_orderpriority AS priority,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS totalprice_cents
-    FROM orders
-    WHERE o_orderdate >= DATE '1997-01-01'
-    QUALIFY row_number() OVER (
-        PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC
-    ) = 1
-)
-SELECT COALESCE(s.custkey, t.custkey) AS custkey,
-       COALESCE(s.priority, t.priority) AS priority,
-       COALESCE(s.totalprice_cents, t.totalprice_cents)
-           AS totalprice_cents,
-       CASE WHEN t.custkey IS NULL THEN 'inserted'
-            WHEN s.custkey IS NULL THEN 'unchanged'
-            ELSE 'updated' END AS merge_action
-FROM tgt t FULL OUTER JOIN src s ON t.custkey = s.custkey
-"""
-
-
-@query("warehouse_upsert_merge", _MERGE_ORACLE)
-def warehouse_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO (SCD1 upsert), Spark-first: the latest pre-cutoff
-    order state per customer is the target dim; post-cutoff arrivals
-    are the source; a single FULL OUTER join + coalesce implements
-    WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT, with the action
-    labeled per row.  Both sides reduce via the same keyed window
-    before the join, so the merge shuffles each input once on the
-    merge key — the shape a lakehouse MERGE compiles to when the
-    target has no clustering to exploit."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-
-    def latest(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("o_custkey").orderBy(
-            F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                F.col("o_custkey").alias("custkey"),
-                F.col("o_orderpriority").alias("priority"),
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
-                .alias("totalprice_cents"),
-            )
-        )
-
-    cutoff = F.lit("1997-01-01").cast("date")
-    tgt = latest(orders.where(F.col("o_orderdate") < cutoff))
-    src = latest(orders.where(F.col("o_orderdate") >= cutoff))
-    t = tgt.alias("t")
-    s = src.alias("s")
-    return t.join(s, F.col("t.custkey") == F.col("s.custkey"), "full_outer").select(
-        F.coalesce(F.col("s.custkey"), F.col("t.custkey")).alias("custkey"),
-        F.coalesce(F.col("s.priority"), F.col("t.priority")).alias("priority"),
-        F.coalesce(
-            F.col("s.totalprice_cents"), F.col("t.totalprice_cents")
-        ).alias("totalprice_cents"),
-        F.when(F.col("t.custkey").isNull(), "inserted")
-        .when(F.col("s.custkey").isNull(), "unchanged")
-        .otherwise("updated")
-        .alias("merge_action"),
-    )
-
-
-# ====================================================================
-# Point-in-time (temporal) join against a versioned dimension
-# ====================================================================
-
-_PIT_ORACLE = """
-WITH dim AS (
-    SELECT o_custkey AS k, o_orderkey AS ok, o_orderpriority AS p,
-           CAST(o_orderdate AS DATE) AS d
-    FROM orders WHERE o_orderkey % 2 = 0
-),
-probes AS (
-    SELECT o_custkey AS k, o_orderkey AS ok,
-           CAST(o_orderdate AS DATE) AS d
-    FROM orders WHERE o_orderkey % 2 = 1
-),
-u AS (
-    SELECT k, d, 0 AS tag, ok, p FROM dim
-    UNION ALL
-    SELECT k, d, 1 AS tag, ok, NULL AS p FROM probes
-),
-filled AS (
-    SELECT k, d, tag, ok,
-           last_value(p IGNORE NULLS) OVER (
-               PARTITION BY k ORDER BY d, tag, ok
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS priority_asof
-    FROM u
-)
-SELECT ok AS orderkey, k AS custkey,
-       CAST(d AS VARCHAR) AS orderdate, priority_asof
-FROM filled WHERE tag = 1
-"""
-
-
-@query("orders_point_in_time_join", _PIT_ORACLE)
-def orders_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time join: each probe row picks the dimension version
-    valid AT its date (even-key orders act as the versioned priority
-    dim, odd-key orders probe it).  The naive form is a per-key
-    inequality join (quadratic on hot keys); the scalable re-expression
-    UNIONS dim-change rows and probe rows, sorts once per key on
-    (date, tag, key) — dim sorts before probes on equal dates, giving
-    '<=' semantics — and forward-fills the last dim value with an
-    ignore-nulls window.  ONE shuffle total; probes before any version
-    get NULL, not a fabricated match."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderkey").alias("ok"),
-        F.col("o_orderpriority").alias("p"),
-        F.to_date("o_orderdate").alias("d"),
-    )
-    dim = orders.where(F.col("ok") % 2 == 0)
-    probes = orders.where(F.col("ok") % 2 == 1).drop("p")
-    u = dim.select(
-        "k", "d", F.lit(0).alias("tag"), "ok", "p"
-    ).unionByName(
-        probes.select(
-            "k", "d", F.lit(1).alias("tag"), "ok",
-            F.lit(None).cast("string").alias("p"),
-        )
-    )
-    w = (
-        Window.partitionBy("k")
-        .orderBy("d", "tag", "ok")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        u.withColumn(
-            "priority_asof", F.last("p", ignorenulls=True).over(w)
-        )
-        .where(F.col("tag") == 1)
-        .select(
-            F.col("ok").alias("orderkey"),
-            F.col("k").alias("custkey"),
-            F.col("d").cast("string").alias("orderdate"),
-            "priority_asof",
-        )
-    )
-
-
-# ====================================================================
-# Small-file compaction (content-preserving file-count reduction)
-# ====================================================================
-
-_COMPACTION_ORACLE = """
-SELECT o_orderkey AS ok,
-       CAST(round(o_totalprice * 100) AS BIGINT) AS amt_cents,
-       TRUE AS compacted
-FROM orders
-"""
-
-
-@query("warehouse_compaction", _COMPACTION_ORACLE)
-def warehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction: a table written with pathological
-    parallelism (64 splits of a modest table — the streaming-sink /
-    per-trigger small-file disease) is compacted by rewriting through
-    ``repartition(4)``; the post-compaction table READ BACK FROM DISK
-    must carry identical content with the file count actually reduced
-    (asserted into the ``compacted`` column, so a silent no-op fails
-    the hash).  At cluster scale the same rewrite keys on
-    ``maxRecordsPerFile`` / target bytes instead of a fixed 4."""
-    import glob
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("ok"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("amt_cents"),
-    )
-    root = tempfile.mkdtemp(prefix="compaction_")
-    fragmented = f"{root}/fragmented"
-    compacted = f"{root}/compacted"
-    base.repartition(64).write.mode("overwrite").parquet(fragmented)
-    n_frag = len(glob.glob(f"{fragmented}/part-*.parquet"))
-    (
-        spark.read.parquet(fragmented)
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(compacted)
-    )
-    n_comp = len(glob.glob(f"{compacted}/part-*.parquet"))
-    ok = bool(n_frag >= 32 and n_comp <= 8)
-    return spark.read.parquet(compacted).select(
-        "ok", "amt_cents", F.lit(ok).alias("compacted")
-    )
-
-
-# ====================================================================
-# Clustered (sorted) write — data-skipping layout on the hash
-# ====================================================================
-
-_SORTED_WRITE_ORACLE = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       TRUE AS clustered
-FROM events
-GROUP BY event_type
-"""
-
-
-@query("warehouse_sorted_write", _SORTED_WRITE_ORACLE)
-def warehouse_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clustering for data skipping: the events table is rewritten
-    repartitioned + sorted on event_type, so within every file the
-    parquet row groups are ORDERED AND NON-OVERLAPPING on the cluster
-    key (each row group's min >= the previous one's max) — the layout
-    that lets a type-filtered scan skip row groups by footer stats at
-    100 TB (the poor man's Z-order for a single key).  The claim is
-    VERIFIED from the written footers (pyarrow statistics) and asserted
-    onto the hashed output; content parity comes from the read-back
-    aggregate."""
-    import glob
-    import tempfile
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    path = tempfile.mkdtemp(prefix="sorted_write_") + "/events_clustered"
-    (
-        load(spark, sf_dir, "events")
-        .select("event_type", "event_id")
-        .repartition(4, F.col("event_type"))
-        .sortWithinPartitions("event_type")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    tight = True
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        pf = pq.ParquetFile(f)
-        idx = pf.schema_arrow.get_field_index("event_type")
-        prev_max = None
-        for rg in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(rg).column(idx).statistics
-            if st is None or (prev_max is not None and st.min < prev_max):
-                tight = False
-            if st is not None:
-                prev_max = st.max
-    return (
-        spark.read.parquet(path)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .withColumn("clustered", F.lit(bool(tight)))
-    )
-
-
-# ====================================================================
-# Schema evolution (mergeSchema read across file generations)
-# ====================================================================
-
-_EVOLUTION_ORACLE = """
-SELECT o_orderkey AS ok,
-       CAST(round(o_totalprice * 100) AS BIGINT) AS amt_cents,
-       CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS priority
-FROM orders
-"""
-
-
-@query("warehouse_schema_evolution", _EVOLUTION_ORACLE)
-def warehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution: generation 1 files carry (ok, amt_cents),
-    generation 2 adds a priority column; a single ``mergeSchema`` read
-    unifies them with NULLs for the pre-evolution rows — the
-    append-only column-add story every long-lived warehouse needs
-    (no rewrite of history).  The hashed result is the merged table
-    read back from disk."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("ok"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("amt_cents"),
-        F.col("o_orderpriority").alias("priority"),
-    )
-    path = tempfile.mkdtemp(prefix="schema_evo_") + "/facts"
-    orders.where(F.col("ok") % 2 == 0).drop("priority").write.mode(
-        "overwrite"
-    ).parquet(path)
-    orders.where(F.col("ok") % 2 == 1).write.mode("append").parquet(path)
-    return spark.read.option("mergeSchema", "true").parquet(path).select(
-        "ok", "amt_cents", "priority"
-    )
-
-
-# ====================================================================
-# Z-order clustered write — data skipping on TWO dimensions at once
-# ====================================================================
-
-#: Day index of 2024-01-01, the corpus epoch (shared literal with the
-#: oracle so day_rel starts at 0).
-_ZORDER_DAY0 = 19723
-
-_ZORDER_ORACLE = f"""
-SELECT (epoch_us(ts) // 86400000000) - {_ZORDER_DAY0} AS day_rel,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(event_id) AS BIGINT) AS sum_event_id,
-       TRUE AS zordered
-FROM events
-GROUP BY day_rel
-"""
-
-
-@query("warehouse_zorder_write", _ZORDER_ORACLE)
-def warehouse_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order clustered rewrite (the layout behind Delta ``OPTIMIZE
-    ZORDER BY``): events are rewritten ordered by the Morton
-    interleave of range-normalized (user_id, day) buckets, so parquet
-    row-group min/max footers go tight on BOTH columns at once — a
-    user-filtered scan AND a day-filtered scan each skip most row
-    groups, which one-column sorting cannot give.  The normalization
-    (min-max scale to 8-bit buckets before interleaving) is
-    load-bearing — see functions.zorder.  Layout claim VERIFIED from
-    the written footers: average row-group span must shrink below 75%
-    of the global span on both dimensions; content parity from the
-    read-back (day, count, sum) aggregate.  At 100 TB this is one
-    range exchange on the z-key (`repartitionByRange`) + a local sort
-    — the same cost as a single-column clustered rewrite."""
-    import glob
-    import tempfile
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from ..functions.eventtime import event_micros
-    from ..functions.zorder import morton_key, range_bucket
-    from . import load
-
-    ev = load(spark, sf_dir, "events")
-    day = (event_micros(ev) / F.lit(86_400_000_000)).cast("long") - _ZORDER_DAY0
-    df = ev.select("user_id", day.alias("day_rel"), "event_id")
-    mm = df.agg(
-        F.min("user_id").alias("umin"),
-        F.max("user_id").alias("umax"),
-        F.min("day_rel").alias("dmin"),
-        F.max("day_rel").alias("dmax"),
-    )
-    z = morton_key(
-        [
-            range_bucket(F.col("user_id"), F.col("umin"), F.col("umax")),
-            range_bucket(F.col("day_rel"), F.col("dmin"), F.col("dmax")),
-        ]
-    )
-    path = tempfile.mkdtemp(prefix="zorder_write_") + "/events_z"
-    (
-        df.crossJoin(F.broadcast(mm))
-        .withColumn("z", z)
-        .select("user_id", "day_rel", "event_id", "z")
-        .repartitionByRange(8, "z")
-        .sortWithinPartitions("z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    tight = True
-    for colname in ("user_id", "day_rel"):
-        spans = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            pf = pq.ParquetFile(f)
-            idx = pf.schema_arrow.get_field_index(colname)
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(idx).statistics
-                if st is None:
-                    tight = False
-                    continue
-                spans.append((st.min, st.max))
-        gmin = min(s[0] for s in spans)
-        gmax = max(s[1] for s in spans)
-        avg = sum(s[1] - s[0] for s in spans) / len(spans)
-        if avg > 0.75 * max(gmax - gmin, 1):
-            tight = False
-    return (
-        spark.read.parquet(path)
-        .groupBy("day_rel")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("event_id").cast("long").alias("sum_event_id"),
-        )
-        .withColumn("zordered", F.lit(bool(tight)))
-    )
-
-
-# ====================================================================
-# ORC source/sink roundtrip (columnar-format coverage beyond parquet)
-# ====================================================================
-
-_ORC_ORACLE = """
-SELECT o_orderstatus,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS total_cents
-FROM orders
-GROUP BY o_orderstatus
-"""
-
-
-@query("sink_orc_roundtrip", _ORC_ORACLE)
-def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC write/read roundtrip: orders re-materialized as ORC with
-    zlib compression, read back, aggregated — exercising Spark's
-    second columnar format end-to-end (schema, predicate pushdown and
-    column pruning work on ORC exactly as on parquet; at 100 TB the
-    choice is interop-driven, e.g. a Hive warehouse).  Money stays in
-    integer cents through the roundtrip so the parity hash is
-    byte-stable."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    path = tempfile.mkdtemp(prefix="orc_sink_") + "/orders_orc"
-    (
-        load(spark, sf_dir, "orders")
-        .select(
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .write.mode("overwrite")
-        .option("compression", "zlib")
-        .orc(path)
-    )
-    return (
-        spark.read.orc(path)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("total_cents"),
-        )
-    )
-
-
-# ====================================================================
-# Data-quality constraint audit (dbt-test-style ledger)
-# ====================================================================
-
-_CONSTRAINT_ORACLE = """
-SELECT 'orders_pk_unique' AS constraint_name,
-       CAST((SELECT count(*) FROM (
-           SELECT o_orderkey FROM orders
-           GROUP BY o_orderkey HAVING count(*) > 1)) AS BIGINT)
-           AS n_violations
-UNION ALL
-SELECT 'orders_custkey_not_null',
-       CAST((SELECT count(*) FROM orders WHERE o_custkey IS NULL)
-            AS BIGINT)
-UNION ALL
-SELECT 'orders_fk_customer',
-       CAST((SELECT count(*) FROM orders o
-             WHERE NOT EXISTS (SELECT 1 FROM customer c
-                               WHERE c.c_custkey = o.o_custkey))
-            AS BIGINT)
-UNION ALL
-SELECT 'lineitem_fk_orders',
-       CAST((SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM orders o
-                               WHERE o.o_orderkey = l.l_orderkey))
-            AS BIGINT)
-UNION ALL
-SELECT 'orders_status_accepted_values',
-       CAST((SELECT count(*) FROM orders
-             WHERE o_orderstatus NOT IN ('F', 'O', 'P')) AS BIGINT)
-UNION ALL
-SELECT 'lineitem_quantity_positive',
-       CAST((SELECT count(*) FROM lineitem WHERE l_quantity <= 0)
-            AS BIGINT)
-UNION ALL
-SELECT 'lineitem_discount_range',
-       CAST((SELECT count(*) FROM lineitem
-             WHERE l_discount < 0 OR l_discount > 1) AS BIGINT)
-UNION ALL
-SELECT 'orders_date_in_range',
-       CAST((SELECT count(*) FROM orders
-             WHERE CAST(o_orderdate AS DATE) < DATE '1990-01-01'
-                OR CAST(o_orderdate AS DATE) > DATE '2005-12-31')
-            AS BIGINT)
-"""
-
-
-@query("warehouse_constraint_audit", _CONSTRAINT_ORACLE)
-def warehouse_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dbt-test-style data-quality ledger over the warehouse tables:
-    primary-key uniqueness, not-null, two referential-integrity checks
-    (FK anti joins), accepted values, numeric ranges, and date
-    freshness — one row per constraint with its violation count (all
-    zero on this corpus, and the ZEROS are the assertion).  Each check
-    is a scan-filter-count or an anti join on the FK key; at 100 TB
-    they share scans via Spark's plan reuse and the FK probes shuffle
-    only the violating sliver.  The checks run as real anti joins, not
-    set-difference approximations."""
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-    customer = load(spark, sf_dir, "customer")
-    lineitem = load(spark, sf_dir, "lineitem")
-
-    def one(name: str, cnt) -> DataFrame:
-        return cnt.select(
-            F.lit(name).alias("constraint_name"),
-            F.col("n").cast("long").alias("n_violations"),
-        )
-
-    dup_pk = (
-        orders.groupBy("o_orderkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > 1)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    null_ck = orders.where(F.col("o_custkey").isNull()).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    fk_cust = (
-        orders.join(
-            customer,
-            orders["o_custkey"] == customer["c_custkey"],
-            "left_anti",
-        ).agg(F.count(F.lit(1)).alias("n"))
-    )
-    fk_ord = (
-        lineitem.join(
-            orders,
-            lineitem["l_orderkey"] == orders["o_orderkey"],
-            "left_anti",
-        ).agg(F.count(F.lit(1)).alias("n"))
-    )
-    status = orders.where(
-        ~F.col("o_orderstatus").isin("F", "O", "P")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    qty = lineitem.where(F.col("l_quantity") <= 0).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    disc = lineitem.where(
-        (F.col("l_discount") < 0) | (F.col("l_discount") > 1)
-    ).agg(F.count(F.lit(1)).alias("n"))
-    dates = orders.where(
-        (F.to_date("o_orderdate") < F.lit("1990-01-01").cast("date"))
-        | (F.to_date("o_orderdate") > F.lit("2005-12-31").cast("date"))
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-    return (
-        one("orders_pk_unique", dup_pk)
-        .unionByName(one("orders_custkey_not_null", null_ck))
-        .unionByName(one("orders_fk_customer", fk_cust))
-        .unionByName(one("lineitem_fk_orders", fk_ord))
-        .unionByName(one("orders_status_accepted_values", status))
-        .unionByName(one("lineitem_quantity_positive", qty))
-        .unionByName(one("lineitem_discount_range", disc))
-        .unionByName(one("orders_date_in_range", dates))
-    )
-
-
-# ====================================================================
-# CDC apply (change-data-capture log → current snapshot)
-# ====================================================================
-
-_CDC_ORACLE = """
-WITH log AS (
-    -- synthesized CDC stream over orders: every order INSERTs at
-    -- seq 0; keys %3=1 get an UPDATE (amount doubled) at seq 1;
-    -- keys %7=3 get a DELETE at seq 2.  Op codes and sequence
-    -- numbers derive from the key, so both engines build the same log
-    SELECT o_orderkey AS k, 0 AS seq, 'I' AS op,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS amt_cents
-    FROM orders
-    UNION ALL
-    SELECT o_orderkey, 1, 'U',
-           CAST(round(o_totalprice * 100) AS BIGINT) * 2
-    FROM orders WHERE o_orderkey % 3 = 1
-    UNION ALL
-    SELECT o_orderkey, 2, 'D', CAST(0 AS BIGINT)
-    FROM orders WHERE o_orderkey % 7 = 3
-),
-latest AS (
-    SELECT k, op, amt_cents,
-           row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
-    FROM log
-)
-SELECT k, amt_cents
-FROM latest WHERE rn = 1 AND op <> 'D'
-"""
-
-
-@query("warehouse_cdc_apply", _CDC_ORACLE)
-def warehouse_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC apply: a change log (insert/update/delete rows with
-    sequence numbers) collapsed to the current snapshot — per key the
-    LAST change wins and deletes drop the key, which is exactly one
-    window over the key partitioning (no iterative merge, no
-    per-operation pass: at 100 TB you apply a day's CDC in one shuffle
-    of the log, then MERGE the survivors into the table as
-    warehouse_upsert_merge does).  The log here is synthesized
-    deterministically from orders so both engines construct it
-    identically; sequence-number ordering (not arrival order) decides
-    the winner, the property that makes the apply idempotent under
-    replay."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    ins = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.lit(0).alias("seq"),
-        F.lit("I").alias("op"),
-        cents.alias("amt_cents"),
-    )
-    upd = (
-        orders.where(F.col("o_orderkey") % 3 == 1)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.lit(1).alias("seq"),
-            F.lit("U").alias("op"),
-            (cents * 2).alias("amt_cents"),
-        )
-    )
-    dele = (
-        orders.where(F.col("o_orderkey") % 7 == 3)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.lit(2).alias("seq"),
-            F.lit("D").alias("op"),
-            F.lit(0).cast("long").alias("amt_cents"),
-        )
-    )
-    log = ins.unionByName(upd).unionByName(dele)
-    w = Window.partitionBy("k").orderBy(F.col("seq").desc())
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (F.col("op") != "D"))
-        .select("k", "amt_cents")
-    )
-
-
-# ====================================================================
-# Snapshot diff (change-data-feed generation — the inverse of CDC apply)
-# ====================================================================
-
-_SNAPSHOT_DIFF_ORACLE = """
-WITH v0 AS (
-    SELECT o_orderkey AS k,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS amt_cents
-    FROM orders
-),
-v1 AS (
-    -- the "next day" snapshot, derived deterministically: keys
-    -- %11=4 were deleted, keys %5=2 had 1000 cents added, and a
-    -- synthetic negative-key row was inserted for every %13=6 key
-    SELECT k,
-           CASE WHEN k % 5 = 2 THEN amt_cents + 1000
-                ELSE amt_cents END AS amt_cents
-    FROM v0 WHERE k % 11 <> 4
-    UNION ALL
-    SELECT -k - 1, amt_cents FROM v0 WHERE k % 13 = 6
-)
-SELECT COALESCE(v0.k, v1.k) AS k,
-       CASE WHEN v1.k IS NULL THEN 'D'
-            WHEN v0.k IS NULL THEN 'I'
-            ELSE 'U' END AS op,
-       v0.amt_cents AS before_cents,
-       v1.amt_cents AS after_cents
-FROM v0 FULL OUTER JOIN v1 ON v0.k = v1.k
-WHERE v0.k IS NULL OR v1.k IS NULL OR v0.amt_cents <> v1.amt_cents
-"""
-
-
-@query("warehouse_snapshot_diff", _SNAPSHOT_DIFF_ORACLE)
-def warehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change-data-feed generation: diff two table snapshots into the
-    I/U/D change log that warehouse_cdc_apply consumes — together they
-    round-trip (apply(diff(v0,v1), v0) == v1).  One full outer join on
-    the key, unchanged rows filtered out BEFORE anything downstream
-    sees them, so the emitted feed is proportional to the churn, not
-    the table: at 100 TB this is the one-shuffle snapshot-diff you run
-    when the source can't give you a real CDC stream.  The v1 snapshot
-    is synthesized from v0 by deterministic key arithmetic so both
-    engines diff identical inputs."""
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-    v0 = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("amt_cents"),
-    )
-    survivors = v0.where(F.col("k") % 11 != 4).select(
-        "k",
-        F.when(F.col("k") % 5 == 2, F.col("amt_cents") + 1000)
-        .otherwise(F.col("amt_cents"))
-        .alias("amt_cents"),
-    )
-    inserts = v0.where(F.col("k") % 13 == 6).select(
-        (-F.col("k") - 1).alias("k"), "amt_cents"
-    )
-    v1 = survivors.unionByName(inserts)
-    j = v0.alias("a").join(
-        v1.alias("b"), F.col("a.k") == F.col("b.k"), "full_outer"
-    )
-    return j.select(
-        F.coalesce(F.col("a.k"), F.col("b.k")).alias("k"),
-        F.when(F.col("b.k").isNull(), "D")
-        .when(F.col("a.k").isNull(), "I")
-        .otherwise("U")
-        .alias("op"),
-        F.col("a.amt_cents").alias("before_cents"),
-        F.col("b.amt_cents").alias("after_cents"),
-    ).where(
-        F.col("a.k").isNull()
-        | F.col("b.k").isNull()
-        | (F.col("a.amt_cents") != F.col("b.amt_cents"))
-    )
-
-
-# ====================================================================
-# Commutative table fingerprint (order-insensitive content digest)
-# ====================================================================
-
-def _fp_oracle() -> str:
-    from ..functions.hashing import md5_int60_sql
-
-    h_o = md5_int60_sql(
-        "'o' || CAST(o_orderkey AS VARCHAR) || '|' "
-        "|| CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR)"
-    )
-    h_l = md5_int60_sql(
-        "'l' || CAST(l_orderkey AS VARCHAR) || '|' "
-        "|| CAST(l_linenumber AS VARCHAR) || '|' "
-        "|| CAST(CAST(round(l_extendedprice * 100) AS BIGINT) AS VARCHAR)"
-    )
-    return f"""
-WITH ho AS (SELECT {h_o} AS h FROM orders),
-hl AS (SELECT {h_l} AS h FROM lineitem)
-SELECT 'orders' AS table_name,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bit_xor(h) AS BIGINT) AS xor60,
-       CAST(sum(h % 1048576) AS BIGINT) AS sum20
-FROM ho
-UNION ALL
-SELECT 'lineitem', CAST(count(*) AS BIGINT),
-       CAST(bit_xor(h) AS BIGINT), CAST(sum(h % 1048576) AS BIGINT)
-FROM hl
-"""
-
-
-@query("warehouse_table_fingerprint", _fp_oracle())
-def warehouse_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-insensitive table fingerprint: per table, the XOR and a
-    modular SUM of a 60-bit hash of each row's canonical business-key
-    string, plus the row count.  Both combiners are COMMUTATIVE and
-    ASSOCIATIVE, so the digest is identical however the table is
-    partitioned, sorted, or compacted — which is exactly what makes it
-    usable as a replication / migration integrity check at 100 TB:
-    each side computes its digest fully map-side (partial aggregates,
-    one 2-row exchange) and only the 3-number summaries cross the
-    wire.  XOR alone is blind to duplicated-row pairs; the modular sum
-    and count close that hole."""
-    from pyspark.sql import functions as F
-
-    from ..functions.hashing import md5_int60
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-    ho = orders.select(
-        md5_int60(
-            F.concat(
-                F.lit("o"),
-                F.col("o_orderkey").cast("string"),
-                F.lit("|"),
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
-                .cast("string"),
-            )
-        ).alias("h")
-    )
-    hl = lineitem.select(
-        md5_int60(
-            F.concat(
-                F.lit("l"),
-                F.col("l_orderkey").cast("string"),
-                F.lit("|"),
-                F.col("l_linenumber").cast("string"),
-                F.lit("|"),
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .cast("string"),
-            )
-        ).alias("h")
-    )
-
-    def digest(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.expr("bit_xor(h)").cast("long").alias("xor60"),
-            F.sum(F.col("h") % 1_048_576).cast("long").alias("sum20"),
-        ).select(F.lit(name).alias("table_name"), "n_rows", "xor60", "sum20")
-
-    return digest(ho, "orders").unionByName(digest(hl, "lineitem"))
-
-
-# ====================================================================
-# Anti-entropy repair plan (per-partition digest diff, Merkle-style)
-# ====================================================================
-
-def _repair_oracle() -> str:
-    from ..functions.hashing import md5_int60_sql
-
-    h = md5_int60_sql(
-        "CAST(k AS VARCHAR) || '|' || CAST(amt_cents AS VARCHAR)"
-    )
-    return f"""
-WITH v0 AS (
-    SELECT o_orderkey AS k,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS amt_cents,
-           CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
-               AS part_ym
-    FROM orders
-),
-v1 AS (
-    -- replica that diverged: %5=2 rows doubled, %11=4 rows missing
-    SELECT k,
-           CASE WHEN k % 5 = 2 THEN amt_cents * 2 ELSE amt_cents END
-               AS amt_cents,
-           part_ym
-    FROM v0 WHERE k % 11 <> 4
-),
-d0 AS (
-    SELECT part_ym, CAST(count(*) AS BIGINT) AS n0,
-           CAST(bit_xor({h}) AS BIGINT) AS x0,
-           CAST(sum({h} % 1048576) AS BIGINT) AS s0
-    FROM v0 GROUP BY part_ym
-),
-d1 AS (
-    SELECT part_ym, CAST(count(*) AS BIGINT) AS n1,
-           CAST(bit_xor({h}) AS BIGINT) AS x1,
-           CAST(sum({h} % 1048576) AS BIGINT) AS s1
-    FROM v1 GROUP BY part_ym
-)
-SELECT COALESCE(d0.part_ym, d1.part_ym) AS part_ym,
-       COALESCE(d0.n0, 0) AS n_primary,
-       COALESCE(d1.n1, 0) AS n_replica,
-       d0.part_ym IS NULL OR d1.part_ym IS NULL
-           OR d0.x0 <> d1.x1 OR d0.s0 <> d1.s1 OR d0.n0 <> d1.n1
-           AS needs_repair
-FROM d0 FULL OUTER JOIN d1 ON d1.part_ym = d0.part_ym
-"""
-
-
-@query("warehouse_partition_repair_plan", _repair_oracle())
-def warehouse_partition_repair_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Anti-entropy repair planning (the Merkle-tree sync pattern):
-    primary and replica each digest every month partition with the
-    commutative (count, xor, modular-sum) fingerprint, then ONLY the
-    digests — one row per partition — are joined to decide which
-    partitions need re-sync.  This is how replicated stores reconcile
-    100 TB without shipping data: digests are computed fully map-side
-    on each site, the comparison moves kilobytes, and the repair job
-    re-reads only flagged partitions.  The replica's divergence
-    (doubled amounts, missing rows) is synthesized deterministically
-    so both engines diff identical sites."""
-    from pyspark.sql import functions as F
-
-    from ..functions.hashing import md5_int60
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-    v0 = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("amt_cents"),
-        (
-            F.year("o_orderdate") * 100 + F.month("o_orderdate")
-        )
-        .cast("long")
-        .alias("part_ym"),
-    )
-    v1 = v0.where(F.col("k") % 11 != 4).select(
-        "k",
-        F.when(F.col("k") % 5 == 2, F.col("amt_cents") * 2)
-        .otherwise(F.col("amt_cents"))
-        .alias("amt_cents"),
-        "part_ym",
-    )
-
-    def digest(df: DataFrame, n: str, x: str, s: str) -> DataFrame:
-        h = md5_int60(
-            F.concat(
-                F.col("k").cast("string"),
-                F.lit("|"),
-                F.col("amt_cents").cast("string"),
-            )
-        )
-        return df.select("part_ym", h.alias("h")).groupBy("part_ym").agg(
-            F.count(F.lit(1)).cast("long").alias(n),
-            F.expr("bit_xor(h)").cast("long").alias(x),
-            F.sum(F.col("h") % 1_048_576).cast("long").alias(s),
-        )
-
-    d0 = digest(v0, "n0", "x0", "s0")
-    d1 = digest(v1, "n1", "x1", "s1")
-    j = d0.alias("a").join(
-        d1.alias("b"), F.col("a.part_ym") == F.col("b.part_ym"), "full_outer"
-    )
-    return j.select(
-        F.coalesce(F.col("a.part_ym"), F.col("b.part_ym")).alias("part_ym"),
-        F.coalesce(F.col("a.n0"), F.lit(0)).cast("long").alias("n_primary"),
-        F.coalesce(F.col("b.n1"), F.lit(0)).cast("long").alias("n_replica"),
-        (
-            F.col("a.part_ym").isNull()
-            | F.col("b.part_ym").isNull()
-            | (F.col("a.x0") != F.col("b.x1"))
-            | (F.col("a.s0") != F.col("b.s1"))
-            | (F.col("a.n0") != F.col("b.n1"))
-        ).alias("needs_repair"),
-    )
-
-
-# ====================================================================
-# Incremental view maintenance (delta-merge an aggregate under CDC)
-# ====================================================================
-
-_IVM_ORACLE = """
-WITH v0 AS (
-    SELECT o_orderkey AS k, o_orderpriority AS priority,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS amt_cents
-    FROM orders
-),
-v1 AS (
-    -- same deterministic churn as warehouse_snapshot_diff
-    SELECT k, priority,
-           CASE WHEN k % 5 = 2 THEN amt_cents + 1000
-                ELSE amt_cents END AS amt_cents
-    FROM v0 WHERE k % 11 <> 4
-    UNION ALL
-    SELECT -k - 1, priority, amt_cents FROM v0 WHERE k % 13 = 6
-)
--- the oracle recomputes the view from scratch on v1; the engine must
--- reach the identical state by delta-merging the change feed into the
--- v0 aggregate
-SELECT priority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(amt_cents) AS BIGINT) AS revenue_cents
-FROM v1 GROUP BY priority
-"""
-
-
-@query("warehouse_ivm_delta_merge", _IVM_ORACLE)
-def warehouse_ivm_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance: the materialized aggregate
-    (orders and revenue per priority) is brought up to date by
-    delta-merging the CDC feed — inserts add (+1, +amt), deletes add
-    (-1, -before), updates add (0, after-before) — NEVER by
-    re-aggregating the base table.  The oracle recomputes the view
-    from scratch on the next snapshot, so the hash proves
-    delta-maintenance reaches the exact recompute state.  This is the
-    counts-and-sums IVM rule every self-maintainable aggregate view
-    uses: at 100 TB the refresh cost is proportional to the day's
-    churn, not the table (the feed here is the same one
-    warehouse_snapshot_diff emits, keyed so the delta aggregate
-    shuffles only changed groups).  Exact integers make the merged
-    state bit-identical to recompute under any partitioning."""
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    orders = load(spark, sf_dir, "orders")
-    v0 = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("amt_cents"),
-    )
-    # the standing materialized view over v0
-    view0 = v0.groupBy("priority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("amt_cents").cast("long").alias("revenue_cents"),
-    )
-    # the change feed (same churn rules as warehouse_snapshot_diff),
-    # carried WITH the group key so deltas aggregate per group
-    upd = v0.where((F.col("k") % 11 != 4) & (F.col("k") % 5 == 2)).select(
-        "priority", F.lit(0).alias("dn"), F.lit(1000).alias("damt")
-    )
-    dele = v0.where(F.col("k") % 11 == 4).select(
-        "priority", F.lit(-1).alias("dn"), (-F.col("amt_cents")).alias("damt")
-    )
-    ins = v0.where(F.col("k") % 13 == 6).select(
-        "priority", F.lit(1).alias("dn"), F.col("amt_cents").alias("damt")
-    )
-    deltas = (
-        upd.unionByName(dele)
-        .unionByName(ins)
-        .groupBy("priority")
-        .agg(
-            F.sum("dn").cast("long").alias("dn"),
-            F.sum("damt").cast("long").alias("damt"),
-        )
-    )
-    # full group-lifecycle merge (update / death / birth) — the shared
-    # operator, soaked under group-emptying churn in tools/soak_ivm.py
-    from ..warehouse import ivm_merge
-
-    return ivm_merge(
-        view0,
-        deltas,
-        keys=["priority"],
-        count_col="n_orders",
-        sum_cols={"damt": "revenue_cents"},
-    )
-
-
-# ====================================================================
-# Z-order (Morton) layout clustering — 2-D scan-pruning data layout
-# ====================================================================
-
-#: Equal-width z-range buckets standing in for output files: at scale
-#: the same bucket id drives repartitionByRange + sortWithinPartitions
-#: before the write, so each file's min/max stats are tight on BOTH
-#: key dimensions.
-_ZORDER_BUCKETS = 32
-
-from ..functions.zorder import morton_interleave, morton_interleave_sql  # noqa: E402
-
-_ZORDER_ORACLE = f"""
-WITH z AS (
-    SELECT l_orderkey, l_partkey,
-           {morton_interleave_sql('l_orderkey', 'l_partkey')} AS zval
-    FROM lineitem
-),
-bounds AS (
-    -- division-first bucket step: (zval - zmin) * K would overflow
-    -- int64 for z values near 2^62 (Spark wraps, DuckDB raises)
-    SELECT min(zval) AS zmin,
-           (max(zval) - min(zval)) // {_ZORDER_BUCKETS} + 1 AS zstep
-    FROM z
-)
-SELECT CAST((zval - zmin) // zstep AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(min(l_orderkey) AS BIGINT) AS min_orderkey,
-       CAST(max(l_orderkey) AS BIGINT) AS max_orderkey,
-       CAST(min(l_partkey) AS BIGINT) AS min_partkey,
-       CAST(max(l_partkey) AS BIGINT) AS max_partkey
-FROM z CROSS JOIN bounds
-GROUP BY 1
-"""
-
-
-@query("lineitem_zorder_layout", _ZORDER_ORACLE)
-def lineitem_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout clustering: interleave the bits of the two scan
-    keys (functions/zorder.py — exact int64 parallel-prefix spread,
-    DuckDB twin bit-identical) and bucket rows by equal-width z ranges.
-    Each bucket's (orderkey, partkey) bounding box is small on BOTH
-    dimensions — the property that makes parquet min/max pruning work
-    for 2-D predicates, where a single-key sort only prunes one.  The
-    per-bucket bbox report IS the layout-quality measurement, and it
-    is hash-checked cross-engine.
-
-    Scale shape: one aggregate for the exact z bounds (broadcast
-    scalar), one map-only bucket assignment, one bucket-keyed
-    aggregation — no global sort, no window.  A real writer swaps the
-    bucket id for ``repartitionByRange(zval)`` +
-    ``sortWithinPartitions(zval)`` + partitioned write (the
-    hypertable_rollup pattern), which adds the range exchange and
-    nothing else."""
-    from pyspark.sql import functions as F
-
-    from . import load
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    z = li.select(
-        "l_orderkey",
-        "l_partkey",
-        morton_interleave(F.col("l_orderkey"), F.col("l_partkey")).alias(
-            "zval"
-        ),
-    )
-    # division-first step, matching the oracle: a (z - zmin) * K form
-    # would overflow int64 for z near 2^62 (Spark wraps, DuckDB raises)
-    bounds = z.agg(
-        F.min("zval").alias("zmin"),
-        F.expr(
-            f"(max(zval) - min(zval)) div {_ZORDER_BUCKETS} + 1"
-        ).alias("zstep"),
-    )
-    return (
-        z.crossJoin(F.broadcast(bounds))
-        .select(
-            "l_orderkey",
-            "l_partkey",
-            F.expr("(zval - zmin) div zstep").alias("bucket"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.min("l_orderkey").cast("long").alias("min_orderkey"),
-            F.max("l_orderkey").cast("long").alias("max_orderkey"),
-            F.min("l_partkey").cast("long").alias("min_partkey"),
-            F.max("l_partkey").cast("long").alias("max_partkey"),
-        )
-    )
-
-
-# Rectangle = [20%,30%] of the orderkey span × [50%,60%] of the partkey
-# span, bounds computed with EXACT integer arithmetic from the table's
-# own min/max so the same rectangle exists at every scale factor.
-_ZRECT_ORACLE = """
-WITH b AS (
-    SELECT min(l_orderkey) AS omn, max(l_orderkey) AS omx,
-           min(l_partkey) AS pmn, max(l_partkey) AS pmx
-    FROM lineitem
-),
-r AS (
-    SELECT omn + ((omx - omn) * 2) // 10 AS o_lo,
-           omn + ((omx - omn) * 3) // 10 AS o_hi,
-           pmn + ((pmx - pmn) * 5) // 10 AS p_lo,
-           pmn + ((pmx - pmn) * 6) // 10 AS p_hi
-    FROM b
-)
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(min(l_orderkey) AS BIGINT) AS min_orderkey,
-       CAST(max(l_orderkey) AS BIGINT) AS max_orderkey,
-       CAST(min(l_partkey) AS BIGINT) AS min_partkey,
-       CAST(max(l_partkey) AS BIGINT) AS max_partkey
-FROM lineitem CROSS JOIN r
-WHERE l_orderkey BETWEEN o_lo AND o_hi
-  AND l_partkey BETWEEN p_lo AND p_hi
-"""
-
-
-@query("lineitem_zorder_rectangle_scan", _ZRECT_ORACLE)
-def lineitem_zorder_rectangle_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D rectangle scan OVER the z-ordered layout: lineitem is
-    physically rewritten with ``zorder_layout_write`` (bucket-stretch →
-    Morton interleave → one range exchange → sorted files), then read
-    back with a literal rectangle predicate on both keys and
-    aggregated.  The oracle runs the same rectangle on the base table,
-    so a green hash proves the layout round-trip loses/duplicates
-    nothing and the pruned read returns exactly the right rows.  The
-    rectangle bounds are LITERALS (collected from one 4-scalar agg),
-    which is what lets Spark push both BETWEENs into the parquet scan
-    (PushedFilters) and skip non-intersecting files/row-groups via
-    min/max footers — tests/test_zorder_pruning.py quantifies the
-    files-skipped ratio vs a linear single-key layout and pins the
-    pushdown in the plan."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from . import load
-    from ..functions.zorder import zorder_layout_write
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    b = li.agg(
-        F.min("l_orderkey").alias("omn"),
-        F.max("l_orderkey").alias("omx"),
-        F.min("l_partkey").alias("pmn"),
-        F.max("l_partkey").alias("pmx"),
-    ).collect()[0]
-    o_span, p_span = b["omx"] - b["omn"], b["pmx"] - b["pmn"]
-    o_lo, o_hi = b["omn"] + o_span * 2 // 10, b["omn"] + o_span * 3 // 10
-    p_lo, p_hi = b["pmn"] + p_span * 5 // 10, b["pmn"] + p_span * 6 // 10
-
-    path = tempfile.mkdtemp(prefix="zorder_rect_") + "/lineitem_z"
-    # the rectangle bounds above already collected each key's min/max —
-    # hand them to the writer so it skips its own stretch aggregation
-    # (one fewer full lineitem pass)
-    zorder_layout_write(
-        li,
-        ["l_orderkey", "l_partkey"],
-        path,
-        n_files=16,
-        bounds={
-            "l_orderkey": (b["omn"], b["omx"]),
-            "l_partkey": (b["pmn"], b["pmx"]),
-        },
-    )
-    return (
-        spark.read.parquet(path)
-        .where(
-            F.col("l_orderkey").between(o_lo, o_hi)
-            & F.col("l_partkey").between(p_lo, p_hi)
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("long"))
-            .cast("long")
-            .alias("sum_qty"),
-            F.min("l_orderkey").cast("long").alias("min_orderkey"),
-            F.max("l_orderkey").cast("long").alias("max_orderkey"),
-            F.min("l_partkey").cast("long").alias("min_partkey"),
-            F.max("l_partkey").cast("long").alias("max_partkey"),
-        )
-    )

@@ -91,15 +91,6 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             f"{repo_root}:{prior}" if prior else repo_root,
         )
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — hostile-environment knobs
-    # (e.g. force-spill thresholds for the spill-path certification,
-    # tools/spill_certify.py) without touching call sites.  Applied
-    # before ``extra_conf`` so explicit caller conf still wins.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in filter(None, (p.strip() for p in env_conf.split(";"))):
-        k, sep, v = pair.partition("=")
-        if sep:
-            builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

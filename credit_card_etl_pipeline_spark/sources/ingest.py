@@ -62,31 +62,6 @@ class BankSpec:
     header_keyword: str | None = None
 
 
-def load_bank_specs(path: str) -> list["BankSpec"]:
-    """A8: banks_config.yaml → specs.  YAML shape (per bank id):
-    ``file_type``, ``encoding``, ``header_keyword``, ``columns_mapping``
-    (configs/banks_configs_example.yaml:12-77) plus the engine's
-    ``keywords`` routing list (falling back to the bank id itself)."""
-    from .configs import load_yaml_config
-
-    cfg = load_yaml_config(path)
-    specs = []
-    for bank_id, spec in (cfg or {}).items():
-        if not isinstance(spec, dict):
-            continue
-        specs.append(
-            BankSpec(
-                bank_id=bank_id,
-                keywords=list(spec.get("keywords") or [bank_id]),
-                columns_mapping=dict(spec.get("columns_mapping") or {}),
-                file_type=spec.get("file_type", "csv"),
-                encoding=spec.get("encoding", "utf-8"),
-                header_keyword=spec.get("header_keyword"),
-            )
-        )
-    return specs
-
-
 #: Default specs replicating the reference's four banks
 #: (configs/banks_configs_example.yaml; FIXTURES.md §1).
 DEFAULT_BANK_SPECS: list[BankSpec] = [
@@ -413,7 +388,7 @@ def parse_bank(
     # hpos is ONE ROW PER FILE (path, header line no) — broadcast it so
     # the fact side (every line of every file) is never sorted/shuffled
     # by path: without the hint Spark picks SortMergeJoin here (sizes
-    # unknown behind the datasource scan), which at ingest scale means
+    # unknown behind the decode scan), which at ingest scale means
     # a full shuffle of the raw lines just to attach one int per file.
     hpos = _header_positions(bank_lines, spec)
     with_h = bank_lines.join(F.broadcast(hpos), "path")

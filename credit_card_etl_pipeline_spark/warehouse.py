@@ -113,83 +113,3 @@ def write_warehouse(
         )
     return count
 
-
-def ivm_merge(
-    view0: DataFrame,
-    deltas: DataFrame,
-    keys: list[str],
-    count_col: str,
-    sum_cols: dict[str, str],
-) -> DataFrame:
-    """Counts-and-sums incremental view maintenance: bring the standing
-    materialized aggregate ``view0`` (``keys`` + ``count_col`` + the
-    ``sum_cols`` values) up to date from a pre-aggregated delta feed
-    (``keys`` + ``count_col`` + ``sum_cols`` keys, one row per changed
-    group) WITHOUT touching the base table.  Handles the full group
-    lifecycle:
-
-    * update  — existing group, deltas add onto the standing row;
-    * death   — a group whose maintained count drops to 0 leaves the
-      view (a from-scratch GROUP BY would never emit it);
-    * birth   — a key present only in the delta feed enters the view
-      as a fresh row (a left-join-only merge would silently drop it).
-
-    Scale shape: the view is NEVER shuffled.  The delta feed is one
-    changed-groups aggregate (small by the IVM premise), so it rides a
-    broadcast left join onto the view; births are found by
-    broadcast-semi-ing the view's MATCHED keys (bounded by the delta
-    size, so the anti-join build side stays tiny even when the view
-    has billions of groups).  Refresh cost ~ churn, not table size.
-
-    ``sum_cols`` maps each delta column name -> the view column it
-    maintains, e.g. ``{"damt": "revenue_cents"}``; ``count_col`` names
-    the view's count column, maintained by the delta column of the
-    same name prefixed with ``d`` (``dn`` for ``n_orders`` is passed
-    explicitly as a sum_cols-style pair below for clarity).
-    """
-    dcount = [c for c in deltas.columns if c not in keys and c not in sum_cols]
-    if len(dcount) != 1:
-        raise ValueError(
-            f"delta feed must carry exactly one count column besides "
-            f"{keys} and {sorted(sum_cols)}; got {sorted(deltas.columns)}"
-        )
-    dcount = dcount[0]
-    # a delta column named like a view column (e.g. a delta count also
-    # called 'n_orders') makes F.col(...) ambiguous after the join and
-    # dies at analysis time with an opaque error — reject it up front
-    clash = sorted(
-        (set(deltas.columns) - set(keys)) & set(view0.columns)
-    )
-    if clash:
-        raise ValueError(
-            f"ivm_merge: delta column(s) {clash} collide with view "
-            f"columns; rename the delta feed's non-key columns"
-        )
-
-    merged = view0.join(F.broadcast(deltas), keys, "left").select(
-        *keys,
-        (F.col(count_col) + F.coalesce(dcount, F.lit(0)))
-        .cast("long")
-        .alias(count_col),
-        *[
-            (F.col(vcol) + F.coalesce(dc, F.lit(0)))
-            .cast("long")
-            .alias(vcol)
-            for dc, vcol in sum_cols.items()
-        ],
-    )
-    # births: delta keys with no standing row.  The view's matched key
-    # set is <= |deltas| rows (broadcast semi keeps the view map-side),
-    # so IT can broadcast as the anti-join build side.
-    matched = view0.select(*keys).join(
-        F.broadcast(deltas.select(*keys).distinct()), keys, "left_semi"
-    )
-    births = deltas.join(F.broadcast(matched), keys, "left_anti").select(
-        *keys,
-        F.col(dcount).cast("long").alias(count_col),
-        *[
-            F.col(dc).cast("long").alias(vcol)
-            for dc, vcol in sum_cols.items()
-        ],
-    )
-    return merged.unionByName(births).where(F.col(count_col) > 0)

@@ -989,81 +989,6 @@ def test_top_pc_finds_planted_direction(spark):
     assert top_pc(same, iters=2) == [0, 0, 0, 0]
 
 
-def test_morton_interleave_matches_reference(spark):
-    """Bit-level check of the parallel-prefix spread: the z-value of
-    (x, y) equals the directly-computed bit interleave for random and
-    boundary inputs (0, 1, max 31-bit)."""
-    import random
-
-    from credit_card_etl_pipeline_spark.functions.zorder import (
-        INPUT_MASK,
-        morton_interleave,
-    )
-
-    def ref(x, y):
-        x &= INPUT_MASK
-        y &= INPUT_MASK
-        z = 0
-        for b in range(31):
-            z |= ((x >> b) & 1) << (2 * b)
-            z |= ((y >> b) & 1) << (2 * b + 1)
-        return z
-
-    rng = random.Random(11)
-    cases = [(0, 0), (1, 0), (0, 1), (INPUT_MASK, INPUT_MASK)] + [
-        (rng.randrange(1 << 31), rng.randrange(1 << 31)) for _ in range(20)
-    ]
-    df = spark.createDataFrame(cases, "x long, y long")
-    got = {
-        (r.x, r.y): r.z
-        for r in df.select(
-            "x", "y", morton_interleave(F.col("x"), F.col("y")).alias("z")
-        ).collect()
-    }
-    for x, y in cases:
-        assert got[(x, y)] == ref(x, y), (x, y)
-
-
-def test_range_bucket_stretches_full_range(spark):
-    """Range buckets must stretch narrow spans onto the full 8-bit
-    range — the top bucket for span s lands at s*256 // (s+1) (247 for
-    a 0..29 day index), i.e. in the highest cell-width, not at s
-    itself — or the interleave degenerates to a single-key sort; the
-    warehouse_zorder_write footer check depends on this."""
-    from credit_card_etl_pipeline_spark.functions.zorder import (
-        morton_key,
-        range_bucket,
-    )
-
-    df = spark.createDataFrame([(i,) for i in range(30)], "v long")
-    mm = df.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    out = (
-        df.crossJoin(F.broadcast(mm))
-        .select(
-            range_bucket(F.col("v"), F.col("mn"), F.col("mx")).alias("b")
-        )
-        .agg(F.min("b"), F.max("b"))
-        .first()
-    )
-    # 0..29 stretches onto equal-width cells: max bucket 29*256//30
-    assert (out[0], out[1]) == (0, 247)
-    # interleave of two full-range buckets stays within 16 bits
-    z = (
-        df.crossJoin(F.broadcast(mm))
-        .select(
-            morton_key(
-                [
-                    range_bucket(F.col("v"), F.col("mn"), F.col("mx")),
-                    range_bucket(F.col("v"), F.col("mn"), F.col("mx")),
-                ]
-            ).alias("z")
-        )
-        .agg(F.max("z"))
-        .first()[0]
-    )
-    assert 0 <= z < (1 << 16)
-
-
 def test_within_group_dup_ids_matches_bruteforce(spark):
     """The vectorized gram-tile scorer == the O(n^2) reference model,
     including across tile boundaries (block=4 forces multi-tile paths

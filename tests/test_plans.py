@@ -243,17 +243,6 @@ def test_anti_join_for_not_exists(spark):
     assert "LeftAnti" in plan
 
 
-def test_point_in_time_join_single_shuffle(spark):
-    # union + window fill: exactly ONE exchange keyed on the entity —
-    # no inequality join blowup
-    from credit_card_etl_pipeline_spark.queries.warehouse_queries import (
-        orders_point_in_time_join,
-    )
-
-    plan = _plan(orders_point_in_time_join(spark, "/root/testdata/sf0.001"))
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    # one shuffle for the window (plus AQE reads); no join exchanges
-    assert plan.count("hashpartitioning(k") <= 2
 
 
 def test_tpch_q22_anti_join_broadcasts(spark):
@@ -412,16 +401,6 @@ def test_prorate_single_order_key_shuffle(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_table_fingerprint_is_map_side(spark):
-    # commutative digest: NO key shuffle anywhere — partial aggregates
-    # into single-partition exchanges only
-    from credit_card_etl_pipeline_spark.queries.warehouse_queries import (
-        warehouse_table_fingerprint,
-    )
-
-    plan = _plan(warehouse_table_fingerprint(spark, SF))
-    assert "hashpartitioning" not in _strip_spread_guard(plan)
-    assert "SortMergeJoin" not in plan
 
 
 def test_adaptive_aggregate_flips_on_hot_key(spark):
@@ -659,7 +638,7 @@ def test_top_smj_queries_join_strategy_pinned(spark):
         # ONE checkpointed (path, hpos) aggregate (sources/ingest.py
         # _headers_and_positions), so the 4 banks share one broadcast
         # build each instead of two (8 -> 4).
-        "ingest_via_datasource": (0, 4),
+        "ingest_statement_files": (0, 4),
         # LSH-bucket / containment self-joins: both sides are the doc
         # corpus — SMJ is the only shape that survives 100 TB.
         # r11 INTENTIONAL change (substring_containment checkpoint +
@@ -682,8 +661,6 @@ def test_top_smj_queries_join_strategy_pinned(spark):
         "dedup_semantic_hierarchical": (0, 1),
         # anchor-shingle candidate self-join; dims broadcast
         "dedup_ngram_jaccard": (1, 4),
-        # CDC merge: base and delta are both table-sized -> SMJ
-        "warehouse_upsert_merge": (1, 0),
     }
     got = {
         name: _join_counts(q.QUERIES[name](spark, SF))

@@ -3,6 +3,7 @@
 import datetime as dt
 
 import pandas as pd
+import pytest
 
 from credit_card_etl_pipeline_spark.operators import rfm as rfm_ops
 
@@ -101,3 +102,34 @@ def test_dual_window_split_matches_single_pass(spark):
     a = sorted(map(tuple, single.collect()))
     b = sorted(map(tuple, split.collect()))
     assert a == b
+
+
+def test_derived_analysis_date_requires_a_non_null_date(spark):
+    """A derived analysis date is max(date) + 1: all-null dates and an
+    empty input have none, on both the single-pass and split plans."""
+    all_null = spark.createDataFrame(
+        [(1, 101, None, 100), (2, 201, None, 50)],
+        "k long, id long, d date, amt long",
+    )
+    empty = all_null.limit(0)
+    for df in (all_null, empty):
+        for split in (False, True):
+            with pytest.raises(ValueError, match="no non-null values in d"):
+                rfm_ops.rfm_dual_window(
+                    df, ["k"], date_col="d", id_col="id", amount_col="amt",
+                    split_windows=split,
+                )
+
+
+def test_hybrid_rule_replacement_determines_category():
+    """rfm_merchant_full groups by (clean name, Category, Sub_Category);
+    that equals the oracle's group-by-name only while each Replacement
+    maps to ONE (Category, Sub_Category) across the rule table."""
+    from credit_card_etl_pipeline_spark.queries.merchant_queries import (
+        HYBRID_MERCHANT_RULES,
+    )
+
+    seen: dict[str, tuple[str, str]] = {}
+    for rule in HYBRID_MERCHANT_RULES:
+        cats = (rule["Category"], rule["Sub_Category"])
+        assert seen.setdefault(rule["Replacement"], cats) == cats, rule

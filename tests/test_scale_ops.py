@@ -110,58 +110,6 @@ def test_prorate_cents_sum_back_exactly(spark, sf_dir):
     assert bad == 0
 
 
-def test_snapshot_diff_cdc_roundtrip(spark, sf_dir):
-    """Applying the generated change feed to v0 must reproduce v1
-    exactly — the diff/apply round-trip both docstrings promise."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    import credit_card_etl_pipeline_spark.queries as q
-
-    feed = q.QUERIES["warehouse_snapshot_diff"](spark, sf_dir)
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    v0 = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("amt_cents"),
-    )
-    # v1 per the same deterministic rules the query synthesizes
-    v1 = (
-        v0.where(F.col("k") % 11 != 4)
-        .select(
-            "k",
-            F.when(F.col("k") % 5 == 2, F.col("amt_cents") + 1000)
-            .otherwise(F.col("amt_cents"))
-            .alias("amt_cents"),
-        )
-        .unionByName(
-            v0.where(F.col("k") % 13 == 6).select(
-                (-F.col("k") - 1).alias("k"), "amt_cents"
-            )
-        )
-    )
-
-    # apply the feed to v0: upserts replace/insert, deletes drop
-    log = v0.select(
-        "k", F.lit(0).alias("seq"), F.lit("K").alias("op"), "amt_cents"
-    ).unionByName(
-        feed.select(
-            "k",
-            F.lit(1).alias("seq"),
-            "op",
-            F.col("after_cents").alias("amt_cents"),
-        )
-    )
-    w = Window.partitionBy("k").orderBy(F.col("seq").desc())
-    applied = (
-        log.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (F.col("op") != "D"))
-        .select("k", "amt_cents")
-    )
-    assert applied.exceptAll(v1).count() == 0
-    assert v1.exceptAll(applied).count() == 0
-
-
 def test_prefix_filter_exact_on_random_vocab(spark):
     """Prefix-filter exactness on an adversarial random vocabulary:
     candidates from rarest-first prefixes must find every pair that

@@ -79,98 +79,3 @@ def test_count_check_raises(spark, refined_df, tmp_path):
     path = str(tmp_path / "bad")
     with pytest.raises(ValueError, match="post-load validation"):
         write_warehouse(to_warehouse(refined_df), path, expected_rows=99)
-
-
-def test_morton_key_interleaves_and_orders_quadrants(spark):
-    from pyspark.sql import functions as F
-
-    from credit_card_etl_pipeline_spark.functions.zorder import (
-        morton_key,
-        range_bucket,
-    )
-
-    # 2-bit toy domain: keys (x, y) in [0,4) x [0,4); morton of the
-    # four quadrant corners must be strictly quadrant-ordered
-    df = spark.createDataFrame(
-        [(x, y) for x in range(4) for y in range(4)], "x long, y long"
-    )
-    z = morton_key([F.col("x"), F.col("y")], bits=2)
-    rows = {(r.x, r.y): r.z for r in df.withColumn("z", z).collect()}
-    # interleave: x bit b at position 2b, y bit b at 2b+1
-    assert rows[(0, 0)] == 0
-    assert rows[(1, 0)] == 1
-    assert rows[(0, 1)] == 2
-    assert rows[(3, 3)] == 15
-    # same-quadrant keys are contiguous: quadrant (x>=2, y>=2) spans
-    # exactly [12, 15]
-    q = sorted(v for (x, y), v in rows.items() if x >= 2 and y >= 2)
-    assert q == [12, 13, 14, 15]
-
-    # range_bucket maps min..max onto [0, 256) monotonically
-    b = df.select(
-        range_bucket(F.col("x"), F.lit(0), F.lit(3)).alias("b")
-    ).distinct()
-    got = sorted(r.b for r in b.collect())
-    assert got == [0, 64, 128, 192]
-
-
-def test_ivm_merge_full_group_lifecycle(spark):
-    """ivm_merge must reach the exact recompute state when the churn
-    UPDATES one group, EMPTIES another (death: the row leaves the
-    view), and BIRTHS a key the view has never seen — and the merge
-    plan must stay broadcast-only (the view is never sort-shuffled)."""
-    from credit_card_etl_pipeline_spark.warehouse import ivm_merge
-
-    base = spark.createDataFrame(
-        [("A", 10), ("A", 20), ("B", 5), ("B", 7), ("C", 100)],
-        "k string, amt long",
-    )
-    view0 = base.groupBy("k").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("amt").cast("long").alias("total"),
-    )
-    # churn: +1 row to A, delete BOTH B rows (death), +2 rows to new
-    # group D (birth); C untouched (no delta row at all)
-    deltas = spark.createDataFrame(
-        [("A", 1, 30), ("B", -2, -12), ("D", 2, 9)],
-        "k string, dn long, damt long",
-    )
-    merged = ivm_merge(
-        view0, deltas, keys=["k"], count_col="n", sum_cols={"damt": "total"}
-    )
-    got = {r.k: (r.n, r.total) for r in merged.collect()}
-    # recompute state after the churn
-    assert got == {"A": (3, 60), "C": (1, 100), "D": (2, 9)}
-    assert "B" not in got
-
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan
-
-
-def test_ivm_merge_rejects_ambiguous_delta_schema(spark):
-    from credit_card_etl_pipeline_spark.warehouse import ivm_merge
-
-    view0 = spark.createDataFrame([("A", 1, 2)], "k string, n long, total long")
-    bad = spark.createDataFrame(
-        [("A", 1, 2, 3)], "k string, dn long, damt long, extra long"
-    )
-    with pytest.raises(ValueError, match="exactly one count column"):
-        ivm_merge(view0, bad, keys=["k"], count_col="n",
-                  sum_cols={"damt": "total"})
-
-
-def test_ivm_merge_rejects_view_column_collision(spark):
-    """A delta column named like a view column would make F.col(...)
-    ambiguous after the join and die at analysis time with an opaque
-    error — ivm_merge must reject it at the boundary (ADVICE r8)."""
-    from credit_card_etl_pipeline_spark.warehouse import ivm_merge
-
-    view0 = spark.createDataFrame(
-        [("A", 1, 2)], "k string, n long, total long"
-    )
-    clash = spark.createDataFrame(
-        [("A", 1, 2)], "k string, n long, damt long"
-    )
-    with pytest.raises(ValueError, match="collide with view columns"):
-        ivm_merge(view0, clash, keys=["k"], count_col="n",
-                  sum_cols={"damt": "total"})

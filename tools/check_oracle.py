@@ -22,7 +22,7 @@ unchanged and silently skipped re-verification in local iteration.
 ``--json-out`` artifacts carry a ``__meta__`` provenance header
 (master, sf, loadavg, wall, env — VERDICT r10 ask #3) so the
 certification axis that produced a sweep is verifiable from the
-artifact alone; tools/artifact_parity.py asserts its presence.
+artifact alone.
 """
 
 from __future__ import annotations
@@ -375,8 +375,6 @@ def main() -> int:
         # run under local-cluster[2,8,3072] is indistinguishable from a
         # local[32] sweep by inspecting the artifact — the judge had to
         # re-run queries to verify the multi-executor axis was real.
-        # artifact_parity.py asserts this block's presence on current-
-        # round CORRECTNESS artifacts.
         out_doc = {
             "__meta__": {
                 "tool": "tools/check_oracle.py",

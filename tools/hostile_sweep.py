@@ -6,9 +6,8 @@ SparkSession, not the engine factory's).
 
     python tools/hostile_sweep.py [--sf /root/testdata/sf0.001]
 
-Exit 0 iff every query plans and executes.  Last verified: 206/206 ok
-(2026-08-14, pyspark 4.1.2, events ts = TIMESTAMP_NTZ).
-(2026-08-13, pyspark 4.1.2, events ts = TIMESTAMP_NTZ).
+Exit 0 iff every query plans and executes.  Last verified: 202/202 ok
+(pyspark 4.1.2, sf0.001, events ts = TIMESTAMP_NTZ).
 """
 
 from __future__ import annotations

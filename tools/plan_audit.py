@@ -45,6 +45,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: joined on a non-equi or cross condition.  Each entry names the tiny
 #: side so the allowlist is auditable.
 BNLJ_ALLOWED: dict[str, str] = {
+    # Derived analysis date: the 1-row max(date) aggregate rides a
+    # broadcast cross join into the dual-window aggregate
+    # (operators/rfm.rfm_dual_window) instead of a driver round-trip.
+    "rfm_customer_dual_window": "1-row max-date analysis anchor",
+    "rfm_payment_method": "1-row max-date analysis anchor",
+    "rfm_merchant_full": "1-row max-date analysis anchor",
     # ANN probes: the explicitly-broadcast query-vector frame (n_queries
     # rows, ≪ corpus) joined to candidates on a NON-EQUI condition
     # (cand_id != query_id / Hamming radius) — similarity.py:75,401.
@@ -64,7 +70,6 @@ BNLJ_ALLOWED: dict[str, str] = {
     "sketch_hll_intersection": "1-row register states (inclusion-exclusion)",
     "sketch_heavy_hitters": "bounded CMS row state + 1-row total",
     "bloom_semi_join_pushdown": "1-row Bloom bitmap aggregate",
-    "lineitem_zorder_layout": "1-row z-bounds scalar (zmin/zstep)",
     # Curation/DSIR: 1-row corpus totals / fitted model scalars
     # (curate.py:325,425,469,551,571 — all F.broadcast'ed).
     "curate_lm_typicality": "1-row corpus log-prob totals",
@@ -83,8 +88,6 @@ BNLJ_ALLOWED: dict[str, str] = {
     "events_daily_drift": "day×type grid + 1-row totals",
     "stream_daily_drift": "day×type grid + 1-row totals",
     "events_rolling_7d_users": "1-row min/max day anchor",
-    "events_gap_filled_daily": "1-row min/max day anchor (calendar seq)",
-    "events_moving_7d_counts": "1-row min/max day anchor",
     # TPC-H decorrelated scalar subqueries: the hand-decorrelated
     # average/threshold is a 1-row frame joined with <,> conditions.
     "customers_above_avg_no_urgent": "1-row avg(acctbal) scalar (Q22)",

@@ -113,9 +113,7 @@ def main() -> int:
         "--out",
         default=None,
         help="output JSON path (default SHUFFLE_AUDIT.json at repo "
-        "root); lets per-sf audits coexist so bench_slope.py can "
-        "compute shuffle-bytes exponents between two of them "
-        "(VERDICT r8 ask #4)",
+        "root); lets per-sf audits coexist",
     )
     ap.add_argument(
         "--exclude",
@@ -159,8 +157,7 @@ def main() -> int:
         names = [n for n in names if n in set(args.only.split(","))]
     # Streaming queries run jobs on non-inheriting threads; skip them
     # here (see module docstring) — and RECORD the exclusion so the
-    # artifact's query set ∪ exclusions always equals the registry
-    # (tools/artifact_parity.py enforces this at round close).
+    # artifact's query set ∪ exclusions always equals the registry.
     excluded_streaming = sorted(n for n in names if n.startswith("stream_"))
     names = [
         n
