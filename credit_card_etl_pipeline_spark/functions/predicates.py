@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import schema as S
+
 
 def blank(col: Column | str) -> Column:
     """True where the reference would see ``''`` (null or empty/whitespace)."""
@@ -37,3 +39,14 @@ def contains_cs(col: Column | str, pattern: str) -> Column:
     """pandas ``str.contains(pattern, na=False)`` (case-sensitive;
     patterns may carry their own ``(?i)``)."""
     return F.coalesce(s(col).rlike(pattern), F.lit(False))
+
+
+def by_bank(exprs: dict[str, Column], otherwise: Column) -> Column:
+    """``CASE Bank_Name WHEN <bank_id> THEN exprs[bank_id] ... ELSE
+    otherwise END`` — one bank-specific step over a frame of all banks."""
+    bank = F.col(S.BANK_NAME)
+    out = None
+    for bank_id, expr in exprs.items():
+        cond = bank == bank_id
+        out = F.when(cond, expr) if out is None else out.when(cond, expr)
+    return otherwise if out is None else out.otherwise(otherwise)

@@ -3,7 +3,7 @@
 Node-4 of the reference's per-bank pipeline (etl.py:205-254, 343-369):
 E.Sun fused foreign-transaction fields, Cathay country/currency split,
 CTBC / Hua Nan location+currency defaults.  All pure column
-expressions.
+expressions, chosen per row by ``Bank_Name``.
 """
 
 from __future__ import annotations
@@ -13,12 +13,13 @@ from pyspark.sql import functions as F
 
 from .. import schema as S
 from ..functions.cleanse import normalize_country_code
+from ..functions.predicates import by_bank
 
 #: H7 (etl.py:214): merchant ⟨2+ spaces or tab⟩ place ⟨spaces⟩ MM/DD?
 ESUN_FOREIGN_PATTERN = r"^(.*?)(?:\s{2,}|\t)(.*?)(?:\s+(\d{2}/\d{2}))?$"
 
 
-def parse_esun_details(df: DataFrame) -> DataFrame:
+def _esun_columns() -> dict[str, F.Column]:
     """H7 (etl.py:206-242) + the location copy step (etl.py:349-357).
 
     The reference strips the merchant, extracts (name, place,
@@ -36,66 +37,70 @@ def parse_esun_details(df: DataFrame) -> DataFrame:
 
     has_place = matched & (g2 != "")
     place = F.trim(g2)
-    return df.withColumns(
-        {
-            S.MERCHANT: F.when(matched & (g1 != ""), F.trim(g1)).otherwise(merchant),
-            S.CONSUMPTION_PLACE: F.when(has_place, place).otherwise(
-                F.col(S.CONSUMPTION_PLACE)
-            ),
-            S.CONVERSION_DATE: F.when(matched & (g3 != ""), g3).otherwise(
-                F.col(S.CONVERSION_DATE)
-            ),
-            # etl.py:354-357 — the "搬運工" copy into Merchant_Location.
-            S.MERCHANT_LOCATION: F.when(has_place, place).otherwise(
-                F.col(S.MERCHANT_LOCATION)
-            ),
-        }
-    )
+    return {
+        S.MERCHANT: F.when(matched & (g1 != ""), F.trim(g1)).otherwise(merchant),
+        S.CONSUMPTION_PLACE: F.when(has_place, place).otherwise(
+            F.col(S.CONSUMPTION_PLACE)
+        ),
+        S.CONVERSION_DATE: F.when(matched & (g3 != ""), g3).otherwise(
+            F.col(S.CONVERSION_DATE)
+        ),
+        # etl.py:354-357 — the "搬運工" copy into Merchant_Location.
+        S.MERCHANT_LOCATION: F.when(has_place, place).otherwise(
+            F.col(S.MERCHANT_LOCATION)
+        ),
+    }
 
 
-def parse_cube_details(df: DataFrame) -> DataFrame:
+def _cube_columns() -> dict[str, F.Column]:
     """H9 (etl.py:245-254): ``消費地/幣別`` = ``'TW / TWD'`` → location
-    (country-normalized) + currency; raw column dropped."""
-    if S.RAW_COUNTRY_CURRENCY not in df.columns:
-        return df
+    (country-normalized) + currency."""
     raw = F.col(S.RAW_COUNTRY_CURRENCY).cast("string")
     parts = F.split(raw, " / ", 2)
     has = raw.isNotNull()
+    return {
+        S.MERCHANT_LOCATION: F.when(
+            has, normalize_country_code(F.trim(parts.getItem(0)))
+        ).otherwise(F.col(S.MERCHANT_LOCATION)),
+        S.CURRENCY_TYPE: F.when(
+            has & (F.size(parts) >= 2), F.trim(parts.getItem(1))
+        ).otherwise(F.col(S.CURRENCY_TYPE)),
+    }
+
+
+#: CTBC/HNCB null-fill defaults (etl.py:362-369).
+_DEFAULTS = {
+    "ctbc_bank": {S.MERCHANT_LOCATION: "TW", S.CURRENCY_TYPE: "TWD"},
+    "hncb_bank": {S.MERCHANT_LOCATION: "TW"},
+}
+
+
+def parse_esun_details(df: DataFrame) -> DataFrame:
+    """H7 over a frame of E.Sun rows (see :func:`_esun_columns`)."""
+    return df.withColumns(_esun_columns())
+
+
+def parse_cube_details(df: DataFrame) -> DataFrame:
+    """H9 over a frame of Cathay rows; raw column dropped."""
+    return df.withColumns(_cube_columns()).drop(S.RAW_COUNTRY_CURRENCY)
+
+
+def parse_bank_specific(df: DataFrame) -> DataFrame:
+    """Node-4 (etl.py:343-369) over a frame of all banks: each column a
+    bank step touches becomes one CASE on the row's ``Bank_Name``;
+    ``Raw_Country_Currency`` is dropped."""
+    per_bank = {"esun_bank": _esun_columns(), "cube_bank": _cube_columns()}
+    for bank_id, fills in _DEFAULTS.items():
+        per_bank[bank_id] = {
+            c: F.coalesce(F.col(c), F.lit(v)) for c, v in fills.items()
+        }
+    touched = dict.fromkeys(c for cols in per_bank.values() for c in cols)
     return df.withColumns(
         {
-            S.MERCHANT_LOCATION: F.when(
-                has, normalize_country_code(F.trim(parts.getItem(0)))
-            ).otherwise(F.col(S.MERCHANT_LOCATION)),
-            S.CURRENCY_TYPE: F.when(
-                has & (F.size(parts) >= 2), F.trim(parts.getItem(1))
-            ).otherwise(F.col(S.CURRENCY_TYPE)),
+            c: by_bank(
+                {b: cols[c] for b, cols in per_bank.items() if c in cols},
+                F.col(c),
+            )
+            for c in touched
         }
     ).drop(S.RAW_COUNTRY_CURRENCY)
-
-
-def apply_bank_defaults(df: DataFrame, bank_id: str) -> DataFrame:
-    """CTBC/HNCB null-fill defaults (etl.py:362-369)."""
-    if bank_id == "ctbc_bank":
-        return df.withColumns(
-            {
-                S.MERCHANT_LOCATION: F.coalesce(
-                    F.col(S.MERCHANT_LOCATION), F.lit("TW")
-                ),
-                S.CURRENCY_TYPE: F.coalesce(F.col(S.CURRENCY_TYPE), F.lit("TWD")),
-            }
-        )
-    if bank_id == "hncb_bank":
-        return df.withColumn(
-            S.MERCHANT_LOCATION,
-            F.coalesce(F.col(S.MERCHANT_LOCATION), F.lit("TW")),
-        )
-    return df
-
-
-def parse_bank_specific(df: DataFrame, bank_id: str) -> DataFrame:
-    """Dispatch Node-4 per bank (etl.py:343-369)."""
-    if bank_id == "esun_bank":
-        return parse_esun_details(df)
-    if bank_id == "cube_bank":
-        return parse_cube_details(df)
-    return apply_bank_defaults(df, bank_id)

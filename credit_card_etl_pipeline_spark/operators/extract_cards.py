@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import schema as S
-from ..functions.predicates import s
+from ..functions.predicates import by_bank, s
 
 
 @dataclass(frozen=True)
@@ -32,7 +32,7 @@ class CardMasterPattern:
 
     trigger: str  # regex marking a master row
     card_no: str  # extraction regex, group 1 = last-4 digits
-    card_type: str | None = None  # extraction regex, group 1 = card name
+    card_type: str  # extraction regex, group 1 = card name
 
 
 #: Reference patterns (etl.py:161-172).
@@ -59,21 +59,23 @@ def _extract_or_null(col: F.Column, pattern: str) -> F.Column:
 
 def extract_card_info(
     df: DataFrame,
-    bank_id: str,
     *,
     file_col: str = "path",
     order_col: str = "pos",
 ) -> DataFrame:
-    """E2+H8+B11 for one bank's frame (etl.py:155-203).
+    """E2+H8+B11 over a frame of any banks' rows (etl.py:155-203); the
+    bank comes from each row's ``Bank_Name``.
 
-    No-op for banks without a master-row convention, mirroring the
-    reference's target_banks guard (etl.py:156-158).
+    Rows of banks without a master-row convention pass through
+    unchanged, mirroring the reference's target_banks guard
+    (etl.py:156-158).  Expects ``Merchant``, ``Card_No`` and
+    ``Card_Type`` columns.
     """
-    cfg = CARD_MASTER_PATTERNS.get(bank_id)
-    if cfg is None or S.MERCHANT not in df.columns:
-        return df
-
-    is_master = F.coalesce(s(S.MERCHANT).rlike(cfg.trigger), F.lit(False))
+    pats = CARD_MASTER_PATTERNS
+    merchant = s(S.MERCHANT)
+    is_master = by_bank(
+        {b: merchant.rlike(p.trigger) for b, p in pats.items()}, F.lit(False)
+    )
     w = (
         Window.partitionBy(file_col)
         .orderBy(order_col)
@@ -83,19 +85,20 @@ def extract_card_info(
         F.when(is_master, F.col(S.MERCHANT)), ignorenulls=True
     ).over(w)
 
-    card_no = _extract_or_null(filled, cfg.card_no)
-    card_type = (
-        _extract_or_null(filled, cfg.card_type) if cfg.card_type else None
+    card_no = by_bank(
+        {b: _extract_or_null(filled, p.card_no) for b, p in pats.items()},
+        F.col(S.CARD_NO),
     )
-
+    card_type = by_bank(
+        {b: _extract_or_null(filled, p.card_type) for b, p in pats.items()},
+        F.col(S.CARD_TYPE),
+    )
     # Payment/transfer rows must not inherit a card (etl.py:190-195).
-    is_payment = F.coalesce(s(S.MERCHANT).rlike("繳款|轉帳"), F.lit(False))
-
-    updates = {
-        S.CARD_NO: F.when(is_payment, F.lit(None).cast("string")).otherwise(card_no)
-    }
-    if card_type is not None:
-        updates[S.CARD_TYPE] = F.when(
-            is_payment, F.lit(None).cast("string")
-        ).otherwise(card_type)
-    return df.withColumns(updates).where(~is_master)  # B11
+    cleared = F.col(S.BANK_NAME).isin(*pats) & merchant.rlike("繳款|轉帳")
+    null_s = F.lit(None).cast("string")
+    return df.withColumns(
+        {
+            S.CARD_NO: F.when(cleared, null_s).otherwise(card_no),
+            S.CARD_TYPE: F.when(cleared, null_s).otherwise(card_type),
+        }
+    ).where(~is_master)  # B11

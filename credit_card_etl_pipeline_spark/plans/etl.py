@@ -1,24 +1,23 @@
 """The extract pipeline (reference: etl.py Part 3/4, lines 259-503).
 
-Composes the ingest layer into one lazy plan per bank, unioned (G1)
-into the `result_all_banks` surface (B4 ordered projection):
+One lazy plan over every bank's statements, each step run once over all
+banks and reading the bank from the row:
 
-    statement_lines (A1 scan + A4 decode + A5 html, ONE binaryFile pass)
-      → parse_bank (A3 header detect + B1/B2 mapping + A2 filename meta)
+    statement_lines (A1 scan + A4 decode + A5 html + A3 per-file header
+                     + B1/B2 mapping, ONE binaryFile pass; A2 filename meta)
       → B3 init missing canonical columns
       → extract_card_info (E2 ordered ffill + H8 + B11)
       → parse_bank_specific (H7 / H9 / bank defaults)
       → general_cleanse (H3, H2+B6, H4, H5, H1, H6)
-      → unionByName (G1) → ordered projection (B4)
+      → ordered projection (B4)
 
-Shuffle profile: the only wide operations are the per-file header-min
-aggregate (tiny) and E2's per-file window; everything else is
-narrow column expressions over the single file scan.
+The reference's per-bank frames and their concat (G1) are one frame
+here.  Shuffle profile: the only wide operation is E2's per-file
+window; everything else is narrow column expressions over the single
+file scan.  No driver action runs before the caller's.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,7 +26,8 @@ from .. import schema as S
 from ..functions.cleanse import general_cleanse
 from ..operators.bank_parse import parse_bank_specific
 from ..operators.extract_cards import extract_card_info
-from ..sources.ingest import DEFAULT_BANK_SPECS, BankSpec, parse_banks, statement_lines
+from ..sources.ingest import BankSpec, statement_lines
+from ..sources.ingest import parse_banks  # noqa: F401  (traced-run patch table)
 
 
 def _init_missing(df: DataFrame) -> DataFrame:
@@ -48,36 +48,8 @@ def run_etl(
 ) -> DataFrame:
     """Directory of raw statements → unified canonical fact
     (`result_all_banks` shape, 16 ordered columns)."""
-    specs = specs if specs is not None else DEFAULT_BANK_SPECS
-    lines = statement_lines(spark, data_dir, specs)
-    # Each bank re-reads the line frame (header probe + data parse);
-    # materializing stops repeated binaryFile decode passes.  A
-    # localCheckpoint (not persist) also truncates the plan, so every
-    # branch gets EXACT size stats and the per-file header joins plan
-    # as broadcasts instead of stats-less sort-merges.  Statement
-    # corpora are small relative to cluster memory; spill is acceptable.
-    from ..functions import caching
-
-    lines = caching.track(lines.localCheckpoint(eager=True))
-
-    frames: list[DataFrame] = []
-    # parse_banks: ONE driver action discovers every bank's header
-    # (r12; the per-bank probe loop serialized ~3 jobs per spec)
-    parsed_by_id = parse_banks(lines, specs)
-    for spec in specs:
-        parsed = parsed_by_id.get(spec.bank_id)
-        if parsed is None:
-            continue
-        df = _init_missing(parsed)
-        df = extract_card_info(df, spec.bank_id)
-        df = parse_bank_specific(df, spec.bank_id)
-        df = general_cleanse(df)
-        frames.append(df.select(*S.ETL_OUTPUT_COLUMNS))
-
-    if not frames:
-        return spark.createDataFrame([], schema=S.CANONICAL_SCHEMA).select(
-            *S.ETL_OUTPUT_COLUMNS
-        )
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    )
+    df = _init_missing(statement_lines(spark, data_dir, specs))
+    df = extract_card_info(df)
+    df = parse_bank_specific(df)
+    df = general_cleanse(df)
+    return df.select(*S.ETL_OUTPUT_COLUMNS)

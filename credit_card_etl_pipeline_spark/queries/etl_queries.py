@@ -20,13 +20,7 @@ from pyspark.sql import functions as F
 from .. import schema as S
 from ..functions.cleanse import general_cleanse
 from ..operators.extract_cards import extract_card_info
-from ..sources.ingest import (
-    DEFAULT_BANK_SPECS,
-    BankSpec,
-    parse_banks,
-    read_excel_statement,
-    statement_lines,
-)
+from ..sources.ingest import BankSpec, read_excel_statement, statement_lines
 from . import load, query
 
 # ====================================================================
@@ -424,12 +418,16 @@ def etl_card_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(e % 11 == 0, "AUTO繳款 THANK YOU")
         .otherwise(F.concat(F.lit("SHOP-"), (e % 50).cast("string")))
     )
+    null_s = F.lit(None).cast("string")
     lines = events.select(
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("path"),
         e.alias("pos"),
+        F.lit("esun_bank").alias(S.BANK_NAME),
         merchant.alias(S.MERCHANT),
+        null_s.alias(S.CARD_NO),
+        null_s.alias(S.CARD_TYPE),
     )
-    out = extract_card_info(lines, "esun_bank")
+    out = extract_card_info(lines)
     return out.select("path", "pos", S.MERCHANT, S.CARD_NO, S.CARD_TYPE)
 
 
@@ -487,28 +485,16 @@ FROM (VALUES
 """
 
 
-def _parsed_canonical_union(lines: DataFrame) -> DataFrame:
-    """parse_bank per spec → unionByName → stable canonical projection
-    (shared by the mapInPandas and Python-DataSource ingest oracles).
-
-    The line frame is localCheckpointed first: every bank branch embeds
-    it ≥3× (header-position aggregate, header-row collect, data join),
-    so without materialization the Python decode re-runs ~12× across
-    the 4-bank union — the decode is the expensive pass, run it ONCE.
-    The checkpoint also gives exact size stats, so the per-file
-    header-position joins plan as broadcasts instead of stats-less
-    sort-merges (see BENCH_HISTORY r7: the broadcast-HINT variant was
-    slower precisely because it re-ran the un-checkpointed scan)."""
-    from ..functions import caching
-
-    lines = caching.track(lines.localCheckpoint(eager=True))
-    # parse_banks: header discovery for all banks in ONE driver action
-    # (r12 — the per-bank limit(1).collect() loop serialized ~3 jobs per
-    # spec on the driver; guide §1.2/§5)
-    parts = list(parse_banks(lines, DEFAULT_BANK_SPECS).values())
-    raw = parts[0]
-    for p in parts[1:]:
-        raw = raw.unionByName(p, allowMissingColumns=True)
+@query("ingest_statement_files", _INGEST_ORACLE)
+def ingest_statement_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A1+A2+A3+A4+A5+B1+B2 (etl.py:129-152,259-335,453-482): the
+    distributed bytes→lines→header-detect→mapping-projection ingest over
+    the committed fixture directory — one binaryFile scan, per-bank
+    routing by filename keyword, utf-8/cp950/big5 decode, HTML table
+    flattening, per-file keyword header detection and raw→canonical
+    projection, all banks in one frame.  The fixture dir is constant
+    (sf-independent) so the expected parse is a pinned literal table."""
+    raw = statement_lines(spark, str(_FIXTURE_DIR))
     return raw.select(
         F.col(S.BANK_NAME).alias("bank"),
         F.col("pos").cast("long").alias("pos"),
@@ -523,18 +509,6 @@ def _parsed_canonical_union(lines: DataFrame) -> DataFrame:
         F.col("base_year").cast("int").alias("base_year"),
         F.col("bill_month").cast("int").alias("bill_month"),
     )
-
-
-@query("ingest_statement_files", _INGEST_ORACLE)
-def ingest_statement_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1+A2+A3+A4+A5+B1+B2+G1 (etl.py:129-152,259-335,453-482): the
-    distributed bytes→lines→header-detect→mapping-projection ingest over
-    the committed fixture directory — one binaryFile scan, per-bank
-    routing by filename keyword, utf-8/cp950/big5 decode, HTML table
-    flattening, keyword header detection, raw→canonical projection, and
-    the per-bank unionByName.  The fixture dir is constant (sf-independent)
-    so the expected parse is a pinned literal table."""
-    return _parsed_canonical_union(statement_lines(spark, str(_FIXTURE_DIR)))
 
 
 # ====================================================================

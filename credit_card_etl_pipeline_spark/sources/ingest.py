@@ -7,34 +7,35 @@ directory scan) in a Spark-native shape:
 * **One `binaryFile` scan** over the statement directory — files are
   routed to banks by filename keyword (A1, etl.py:453-459) and decoded
   (A4: utf-8 / cp950 / Big5, ``errors='replace'``) inside a single
-  Arrow-batched ``mapInPandas``, yielding a distributed ``(path,
-  bank_id, pos, line)`` frame.  Line numbers are explicit — they carry
-  both header-skip (A3) and the order-dependent forward-fill (E2,
-  SURVEY §2.E) without relying on implicit row order.
-* **Header detection as a dataflow** (A3, etl.py:137-143): the header
-  row of each file is located by keyword scan over the first 50 lines
-  with a per-file aggregate, not a driver-side file read; data rows are
-  the lines after it, parsed with ``from_csv``.
+  Arrow-batched ``mapInPandas``.
+* **Each file under its own header** (A3 + B1/B2, etl.py:129-152): the
+  decode holds the whole file, so it finds the header there (the first
+  of lines 0-50 containing the spec's ``header_keyword``, else line 0),
+  maps that header's cells through the spec's ``columns_mapping`` and
+  emits one fixed-schema row per data line: ``path``, ``Bank_Name``,
+  ``pos`` and the canonical raw string columns.  Two files of one bank
+  may order their columns differently.  CSV lines are split with
+  Python's ``csv`` module; like pandas' ``on_bad_lines='skip'`` a row
+  with more fields than its header is skipped and a shorter one is
+  padded with nulls.  Line numbers stay explicit — they carry the
+  order-dependent forward-fill (E2, SURVEY §2.E) without relying on
+  implicit row order.
 * **HTML statements** (A5, etl.py:290-304) are flattened to
-  cell-separator lines by a stdlib-``HTMLParser`` table extractor inside
+  cell-separator rows by a stdlib-``HTMLParser`` table extractor inside
   the same decode step (BeautifulSoup/lxml are not required).
-* **Excel** (A6, etl.py:312-316) is a driver-side ``pandas.read_excel``
-  gated behind an import-try — the workbook engines aren't part of the
-  engine's hard dependencies.
+* **Excel** (A6, etl.py:312-316) is a driver-side read of one workbook
+  (:func:`read_excel_statement`), sniffed by magic bytes.
 
-Scale design: per-file work parallelizes across executors; the only
-driver-side step is reading ONE header line per bank (a KB-sized
-``limit(1)`` collect) to compile the per-bank CSV schema.  Statement
-files are assumed layout-consistent per bank (the reference's per-bank
-``columns_mapping`` encodes the same assumption).
+The scan is one lazy plan for every bank: no driver action, no cache,
+no per-bank branch.  Filename metadata (A2) is a Spark column
+expression on top of the decode.
 """
 
 from __future__ import annotations
 
 import csv as _csv
-import io
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from html.parser import HTMLParser
 from typing import Any
 
@@ -183,23 +184,80 @@ def route_bank(filename: str, specs: list[BankSpec]) -> BankSpec | None:
     return None
 
 
-_LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("bank_id", T.StringType()),
-        T.StructField("pos", T.LongType()),
-        T.StructField("line", T.StringType()),
-    ]
-)
+_HEADER_SCAN_LINES = 50  # A3: header keyword searched in lines 0-50
+
+
+def _split_cells(line: str, html: bool) -> list[str]:
+    if html:
+        return line.split(HTML_CELL_SEP)
+    return next(_csv.reader((line,)), [])
+
+
+def _header_index(lines: list[str], keyword: str | None) -> int:
+    """A3 (etl.py:137-149): first of lines 0-50 containing the keyword;
+    files without one fall back to line 0."""
+    if keyword is not None:
+        for i, line in enumerate(lines[: _HEADER_SCAN_LINES + 1]):
+            if keyword in line:
+                return i
+    return 0
+
+
+def _file_rows(
+    path: str, spec: BankSpec, lines: list[str], columns: list[str]
+) -> Iterator[tuple]:
+    """A3+B1+B2 for one file: its own header picks, for each canonical
+    column, the cell it comes from; one row per non-blank data line."""
+    if not lines:
+        return
+    html = spec.file_type == "html"
+    hpos = _header_index(lines, spec.header_keyword)
+    # B2: trim + flatten whitespace in raw header names (etl.py:301,319)
+    header = [" ".join(c.split()) for c in _split_cells(lines[hpos], html)]
+    where: dict[str, int] = {}
+    for i, raw in enumerate(header):
+        canonical = spec.columns_mapping.get(raw)
+        if canonical is not None:
+            where.setdefault(canonical, i)
+    idx = [where.get(c) for c in columns]
+    width = len(header)
+    for pos in range(hpos + 1, len(lines)):
+        line = lines[pos]
+        if not line.strip(" "):
+            continue
+        try:
+            cells = _split_cells(line, html)
+        except _csv.Error:  # e.g. a field over the csv module's size limit
+            continue
+        if not html and len(cells) > width:
+            continue  # etl.py:146 on_bad_lines='skip': too many fields
+        # short rows pad with nulls; an empty CSV field is null, an empty
+        # HTML cell stays ''
+        vals = [None if i is None or i >= len(cells) else cells[i] for i in idx]
+        if not html:
+            vals = [v or None for v in vals]
+        yield (path, spec.bank_id, pos, *vals)
 
 
 def statement_lines(
     spark: SparkSession, data_dir: str, specs: list[BankSpec] | None = None
 ) -> DataFrame:
-    """A1+A4+A5: one distributed (path, bank_id, pos, line) frame over
-    every routable statement file under ``data_dir``."""
-    specs = specs if specs is not None else DEFAULT_BANK_SPECS
-    spec_list = list(specs)
+    """A1-A5 + B1/B2: one distributed frame of every data line of every
+    routable statement file under ``data_dir`` — ``path``,
+    ``Bank_Name``, ``pos``, the canonical raw string columns, and the
+    filename's ``base_year`` / ``bill_month`` (A2)."""
+    spec_list = list(specs if specs is not None else DEFAULT_BANK_SPECS)
+    # every spec's mapping targets, in first-seen order
+    columns = list(
+        dict.fromkeys(c for s in spec_list for c in s.columns_mapping.values())
+    )
+    names = ["path", S.BANK_NAME, "pos", *columns]
+    schema = T.StructType(
+        [T.StructField("path", T.StringType()),
+         T.StructField(S.BANK_NAME, T.StringType()),
+         T.StructField("pos", T.LongType())]
+        + [T.StructField(c, T.StringType()) for c in columns]
+    )
 
     files = (
         spark.read.format("binaryFile")
@@ -210,10 +268,9 @@ def statement_lines(
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: list[tuple[str, str, int, str]] = []
+            out: list[tuple] = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                name = path.rsplit("/", 1)[-1]
-                spec = route_bank(name, spec_list)
+                spec = route_bank(path.rsplit("/", 1)[-1], spec_list)
                 if spec is None:
                     continue
                 text = bytes(content).decode(spec.encoding, errors="replace")
@@ -221,12 +278,12 @@ def statement_lines(
                     lines = html_table_lines(text, spec.header_keyword)
                 else:
                     lines = text.splitlines()
-                out.extend(
-                    (path, spec.bank_id, i, ln) for i, ln in enumerate(lines)
-                )
-            yield pd.DataFrame(out, columns=["path", "bank_id", "pos", "line"])
+                out.extend(_file_rows(path, spec, lines, columns))
+            yield pd.DataFrame(out, columns=names)
 
-    return files.mapInPandas(decode, _LINES_SCHEMA)
+    return files.mapInPandas(decode, schema).withColumns(
+        filename_meta(F.col("path"))
+    )
 
 
 def filename_meta(path_col: F.Column) -> dict[str, F.Column]:
@@ -251,205 +308,25 @@ def filename_meta(path_col: F.Column) -> dict[str, F.Column]:
     return {"base_year": base_year, "bill_month": bill_month}
 
 
-def _header_positions(lines: DataFrame, spec: BankSpec) -> DataFrame:
-    """A3: per-file header line position — first of the first 50 lines
-    containing the keyword; files without one fall back to line 0
-    (etl.py:137-149)."""
-    if spec.header_keyword is None:
-        return lines.select("path").distinct().withColumn("hpos", F.lit(0))
-    hits = lines.where(
-        (F.col("pos") <= 50) & F.col("line").contains(spec.header_keyword)
-    )
-    found = hits.groupBy("path").agg(F.min("pos").alias("hpos"))
-    # one row per FILE on both sides — broadcast keeps the join
-    # hash-based however the stats look (no per-path sort of anything)
-    return (
-        lines.select("path")
-        .distinct()
-        .join(F.broadcast(found), "path", "left")
-        .na.fill({"hpos": 0})
-    )
+# The traced benchmark run (perfbench/spans.py) wraps these two names by
+# attribute; they are off the extract path and go away with that patch
+# table.
 
 
-def _split_header(header_line: str, sep: str) -> list[str]:
-    if sep == HTML_CELL_SEP:
-        cells = header_line.split(sep)
-    else:
-        cells = next(_csv.reader(io.StringIO(header_line)))
-    # B2: trim + flatten whitespace in raw header names (etl.py:301,319).
-    return [" ".join(str(c).split()) for c in cells]
-
-
-def _headers_and_positions(
-    lines: DataFrame, specs: list[BankSpec]
-) -> tuple[DataFrame, dict[str, str]]:
-    """A3 for EVERY bank at once: one distributed header-position pass
-    plus ONE driver action for the header lines.
-
-    The per-bank :func:`parse_bank` path pays one ``limit(1).collect()``
-    plus a header-position aggregate per spec — with AQE that is
-    several Spark jobs per bank, serialized on the driver (r12: the
-    4-spec union spent more wall time in driver round-trips than in
-    tasks; guide §1.2 fixed costs / §5 driver).  Here the per-file
-    header position (first keyword hit in the first 50 lines, else 0)
-    is ONE aggregate over all banks — eagerly materialized, so every
-    per-bank branch broadcast-joins the same tiny (path, hpos) table —
-    and the per-bank header lines come back in ONE ≤|banks|-row
-    collect.  The driver holds O(banks) strings; the per-file table
-    stays distributed (a 100 TB backfill can have millions of files).
-
-    The header line is taken from the lexicographically first file of
-    each bank (statement layouts are per-bank consistent — the same
-    assumption the per-bank ``limit(1)`` pick already relied on, made
-    deterministic here).  Banks with no files are absent from the map.
-    """
-    kw_items: list[F.Column] = []
-    for s in specs:
-        if s.header_keyword is not None:
-            kw_items += [F.lit(s.bank_id), F.lit(s.header_keyword)]
-    paths = lines.select("path", "bank_id").distinct()
-    if kw_items:
-        kw = F.create_map(*kw_items)[F.col("bank_id")]
-        found = (
-            lines.where(
-                (F.col("pos") <= 50) & F.col("line").contains(kw)
-            )
-            .groupBy("path")
-            .agg(F.min("pos").alias("hpos"))
-        )
-        hpos_all = paths.join(found, "path", "left").na.fill({"hpos": 0})
-    else:
-        hpos_all = paths.withColumn("hpos", F.lit(0))
-    # one row per FILE — eager checkpoint so the per-bank broadcast
-    # builds scan materialized blocks instead of re-aggregating
-    hpos_all = hpos_all.localCheckpoint(eager=True)
-    hdr_rows = (
-        lines.join(F.broadcast(hpos_all.select("path", "hpos")), "path")
-        .where(F.col("pos") == F.col("hpos"))
-        .groupBy("bank_id")
-        .agg(F.min_by("line", "path").alias("line"))
-        .collect()
-    )
-    return hpos_all, {r["bank_id"]: r["line"] for r in hdr_rows}
+def _headers_and_positions(lines: DataFrame) -> DataFrame:
+    """Per-file (path, Bank_Name, first data line) table of a
+    :func:`statement_lines` frame; headers are found and applied in the
+    decode."""
+    return lines.groupBy("path", S.BANK_NAME).agg(F.min("pos").alias("pos"))
 
 
 def parse_banks(
     lines: DataFrame, specs: list[BankSpec] | None = None
 ) -> dict[str, DataFrame]:
-    """A3+B1+B2 for every bank with one shared header-position pass and
-    ONE driver action for all header discovery (see
-    :func:`_headers_and_positions`); ``lines`` should be materialized
-    (checkpointed/persisted) by the caller — both engine call sites
-    already do.  Returns ``{bank_id: parsed}`` for each bank that has
-    files, in spec order."""
-    specs = list(specs if specs is not None else DEFAULT_BANK_SPECS)
-    hpos_all, headers = _headers_and_positions(lines, specs)
-    frames: dict[str, DataFrame] = {}
-    for spec in specs:
-        if spec.bank_id not in headers:
-            continue
-        parsed = parse_bank(
-            lines, spec, precomputed=(headers[spec.bank_id], hpos_all)
-        )
-        if parsed is not None:
-            frames[spec.bank_id] = parsed
-    return frames
-
-
-def parse_bank(
-    lines: DataFrame, spec: BankSpec, *,
-    precomputed: tuple[str, DataFrame] | None = None,
-) -> DataFrame | None:
-    """A3+B1+B2+B3: parse one bank's lines into canonical columns.
-
-    Returns null if the bank has no files.  Output carries ``path`` and
-    ``pos`` (explicit ingest order for E2) plus ``base_year`` /
-    ``bill_month`` (A2) alongside the mapped canonical columns.
-
-    ``precomputed`` is ``(header_line, hpos_all)`` from
-    :func:`_headers_and_positions` — multi-bank callers use
-    :func:`parse_banks` so header discovery costs one driver action for
-    the whole union instead of one per bank; standalone calls keep the
-    self-contained per-bank probe below.
-    """
-    bank_lines = lines.where(F.col("bank_id") == spec.bank_id)
-    if precomputed is not None:
-        header_line, hpos_all = precomputed
-        # the materialized all-banks (path, hpos) table: filter this
-        # bank's rows and broadcast — no extra aggregate per bank
-        hpos = hpos_all.where(
-            F.col("bank_id") == spec.bank_id
-        ).select("path", "hpos")
-        with_h = bank_lines.join(F.broadcast(hpos), "path")
-        raw_names = _split_header(
-            header_line, HTML_CELL_SEP if spec.file_type == "html" else ","
-        )
-        return _parse_bank_tail(with_h, spec, raw_names)
-    # hpos is ONE ROW PER FILE (path, header line no) — broadcast it so
-    # the fact side (every line of every file) is never sorted/shuffled
-    # by path: without the hint Spark picks SortMergeJoin here (sizes
-    # unknown behind the decode scan), which at ingest scale means
-    # a full shuffle of the raw lines just to attach one int per file.
-    hpos = _header_positions(bank_lines, spec)
-    with_h = bank_lines.join(F.broadcast(hpos), "path")
-
-    header_row = (
-        with_h.where(F.col("pos") == F.col("hpos")).select("line").limit(1).collect()
-    )
-    if not header_row:
-        return None
-    sep = HTML_CELL_SEP if spec.file_type == "html" else ","
-    raw_names = _split_header(header_row[0]["line"], sep)
-    return _parse_bank_tail(with_h, spec, raw_names)
-
-
-def _parse_bank_tail(
-    with_h: DataFrame, spec: BankSpec, raw_names: list[str]
-) -> DataFrame:
-    """B1+B2 shared tail: data-row slice + per-column projection."""
-
-    data = with_h.where(
-        (F.col("pos") > F.col("hpos")) & (F.trim(F.col("line")) != "")
-    )
-    if spec.file_type == "html":
-        cells = F.split(F.col("line"), HTML_CELL_SEP)
-        parsed = data.select(
-            "path",
-            "pos",
-            *[
-                F.trim(cells.getItem(i)).alias(f"_c{i}")
-                for i in range(len(raw_names))
-            ],
-        )
-    else:
-        # _corrupt captures rows the CSV parser rejects (e.g. more
-        # fields than the header) — dropping them mirrors the
-        # reference's on_bad_lines='skip' (etl.py:146).
-        struct_schema = (
-            ", ".join(f"`_c{i}` string" for i in range(len(raw_names)))
-            + ", `_corrupt` string"
-        )
-        rec = F.from_csv(
-            F.col("line"),
-            struct_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        )
-        parsed = data.select(
-            "path",
-            "pos",
-            *[rec.getItem(f"_c{i}").alias(f"_c{i}") for i in range(len(raw_names))],
-            rec.getItem("_corrupt").alias("__corrupt"),
-        ).where(F.col("__corrupt").isNull()).drop("__corrupt")
-
-    # B1: keep only mapped columns, rename raw → canonical; B3 init of
-    # missing canonical strings happens downstream via schema.conform.
-    cols: list[F.Column] = [F.col("path"), F.col("pos")]
-    for i, raw in enumerate(raw_names):
-        canonical = spec.columns_mapping.get(raw)
-        if canonical is not None:
-            cols.append(F.col(f"_c{i}").alias(canonical))
-    out = parsed.select(*cols).withColumn(S.BANK_NAME, F.lit(spec.bank_id))
-    return out.withColumns(filename_meta(F.col("path")))
+    """``{bank_id: that bank's rows}`` of a :func:`statement_lines`
+    frame, in spec order (lazy, no action)."""
+    specs = specs if specs is not None else DEFAULT_BANK_SPECS
+    return {s.bank_id: lines.where(F.col(S.BANK_NAME) == s.bank_id) for s in specs}
 
 
 #: OLE2 / Compound-File-Binary magic — the container of legacy binary

@@ -632,13 +632,12 @@ def test_top_smj_queries_join_strategy_pinned(spark):
     from credit_card_etl_pipeline_spark import queries as q
 
     expected = {
-        # header-position joins: one row per FILE, broadcast by
-        # construction (sources/ingest.py) — never a fact-side sort.
-        # r12 INTENTIONAL change: per-bank header discovery fused into
-        # ONE checkpointed (path, hpos) aggregate (sources/ingest.py
-        # _headers_and_positions), so the 4 banks share one broadcast
-        # build each instead of two (8 -> 4).
-        "ingest_statement_files": (0, 4),
+        # INTENTIONAL change (4 -> 0): each file's header is found and
+        # applied inside the decode (sources/ingest.py statement_lines),
+        # so the per-file header-position joins are gone and the ingest
+        # is one scan with no join at all.  A join reappearing here means
+        # header handling left the decode.
+        "ingest_statement_files": (0, 0),
         # LSH-bucket / containment self-joins: both sides are the doc
         # corpus — SMJ is the only shape that survives 100 TB.
         # r11 INTENTIONAL change (substring_containment checkpoint +
