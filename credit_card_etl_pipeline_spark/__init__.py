@@ -21,7 +21,6 @@ Layout
 - ``queries``    : registered driver-checkable queries + DuckDB oracles.
 - ``dataops``    : large-scale training-data operators (dedup, similarity
                    search, text analysis, multimodal columns).
-- ``streaming``  : Structured Streaming extension over event sources.
 """
 
 __version__ = "0.1.0"

@@ -18,8 +18,7 @@ draws the line once, at the read:
 Engine gate and SQL twin live side by side so they cannot drift; the
 SQL form is substituted into every registered oracle reading
 ``FROM events`` by queries.__init__ at import time.  The gate is one
-map-side conjunction — no shuffle, streaming-safe (applied inside
-streaming.windows.events_stream too).
+map-side conjunction — no shuffle.
 """
 
 from __future__ import annotations
@@ -35,7 +34,7 @@ EVENTS_VALID_SQL = (
 
 def valid_events(df: DataFrame) -> DataFrame:
     """Filter to rows satisfying the events validity contract (see
-    module docstring).  Works on batch and streaming DataFrames."""
+    module docstring)."""
     v = F.col("value")
     return df.where(
         F.col("event_id").isNotNull()

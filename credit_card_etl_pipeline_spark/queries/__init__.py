@@ -105,10 +105,7 @@ _SPREAD_KEYS: dict[str, str] = {
     "orders": "o_orderkey",
     "lineitem": "l_orderkey",
     "customer": "c_custkey",
-    "supplier": "s_suppkey",
     "part": "p_partkey",
-    "nation": "n_nationkey",
-    "region": "r_regionkey",
     "events": "event_id",
     "documents": "doc_id",
     "embeddings": "vec_id",
@@ -130,9 +127,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # row-validity contract (functions.contracts): null-key /
         # null-ts / NaN-value rows never reach an operator — on EVERY
         # read path (the audit early-return below included).  Applied
-        # here — the one batch read point — and in
-        # streaming.windows.events_stream; the DuckDB twin is spliced
-        # into every events oracle below (_apply_events_contract).
+        # here, the one read point; the DuckDB twin is spliced into
+        # every events oracle below (_apply_events_contract).
         from ..functions.contracts import valid_events
 
         df = valid_events(df)
@@ -193,8 +189,6 @@ from . import (  # noqa: E402,F401
     merchant_queries,
     refine_queries,
     rfm_queries,
-    sql_queries,
-    streaming_queries,
     warehouse_queries,
 )
 

@@ -404,8 +404,8 @@ GROUP BY user_id, sess_idx
 
 @query("events_sessionization", _SESSIONIZE_ORACLE)
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (the batch twin of the streaming
-    session_window operator): a user's events are split into sessions
+    """Gap-based sessionization (the batch form of Spark's
+    session_window): a user's events are split into sessions
     wherever the inactivity gap exceeds 30 minutes, via the classic
     lag → new-session flag → running-sum-of-flags window chain.  ONE
     shuffle on user_id serves all three windowed steps (lag, running
@@ -890,13 +890,12 @@ def events_skew_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-skew diagnostics: for every key within 20x of the
     heaviest, its absolute count, corpus share in ppm, multiple of
     the perfectly-even per-key load, and multiple of the median key —
-    the numbers that decide whether a groupBy/join needs salting and
-    what factor (operators/skew.py) or whether AQE's skew-join
-    threshold will catch it.  One shuffle for the per-key histogram;
-    the corpus totals ride a 1-row broadcast; exact integer ratios
-    make the report hash-checkable.  At 100 TB this query IS the
-    cheap pre-flight you run before the expensive job — its own
-    skew exposure is just the histogram groupBy."""
+    the numbers that decide whether a groupBy/join needs salting or
+    whether AQE's skew-join threshold will catch it.  One shuffle for
+    the per-key histogram; the corpus totals ride a 1-row broadcast;
+    exact integer ratios make the report hash-checkable.  At 100 TB
+    this query IS the cheap pre-flight you run before the expensive
+    job — its own skew exposure is just the histogram groupBy."""
     ev = load(spark, sf_dir, "events")
     per_key = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n")

@@ -8,16 +8,12 @@ engine assumed a reader conf would paper over it.  These tests pin:
   the next silent corpus/Spark change fails in minutes with a message
   naming the drift;
 * that `event_micros` matches DuckDB's ``epoch_us`` exactly on the
-  real corpus — including under a non-UTC session timezone;
-* that the STREAMING path emits real wall-clock timestamps (the silent
-  round-3 hazard was 1000×-compressed timestamps landing in 1970).
+  real corpus — including under a non-UTC session timezone.
 """
 
 from __future__ import annotations
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from credit_card_etl_pipeline_spark.functions.eventtime import (
     describe_ts_dtype,
@@ -98,34 +94,3 @@ def test_event_micros_instant_branch(spark):
         inst.select(event_micros(inst).alias("us")).collect()[0].us
         == 1_704_067_798_778_549
     )
-
-
-@pytest.mark.timeout(300)
-def test_streaming_emits_wall_clock_timestamps(spark, tmp_path):
-    """The streaming path must produce the SAME absolute event_ts as
-    the oracle — not 1000×-compressed values landing in 1970 (the
-    round-3 declared-schema hazard, invisible to count-only checks)."""
-    from credit_card_etl_pipeline_spark.streaming.windows import (
-        event_time,
-        events_stream,
-    )
-
-    out = event_time(events_stream(spark, SF)).select(
-        "event_id", F.unix_micros("event_ts").alias("us")
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wallclock_pin")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = {
-        (r.event_id, r.us)
-        for r in spark.sql(
-            "SELECT * FROM wallclock_pin ORDER BY event_id LIMIT 3"
-        ).collect()
-    }
-    assert got == set(_oracle_us())

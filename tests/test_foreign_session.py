@@ -4,32 +4,35 @@ its own SparkSession, not the engine factory's)."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-def test_queries_survive_hostile_session(spark):
+from tools.check_oracle import frame_digest  # noqa: E402
+
+
+def test_queries_survive_hostile_session(spark, duck, sf_dir):
+    from credit_card_etl_pipeline_spark import queries as q
+
     ns = spark.newSession()
     ns.conf.set("spark.sql.ansi.enabled", "true")
     ns.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
 
-    from credit_card_etl_pipeline_spark.queries import QUERIES
+    # The probe is real: without the registry wrapper's conf reset the
+    # cleanse's permissive casts fail under ANSI.
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        q.QUERIES["etl_general_cleanse"].__wrapped__(ns, sf_dir).collect()
 
-    # ANSI-sensitive (invalid casts) + timezone-sensitive (dates/windows)
-    n1 = QUERIES["etl_general_cleanse"](ns, "/root/testdata/sf0.001").count()
-    win = QUERIES["events_tumbling_window"](ns, "/root/testdata/sf0.001")
-    rows = win.collect()
-    assert n1 > 0 and len(rows) > 0
+    # Concrete VALUES, not just row counts: each result run in the
+    # hostile session must hash-match its DuckDB oracle.
+    for name in ("etl_general_cleanse", "rfm_customer_dual_window"):
+        df = q.QUERIES[name](ns, sf_dir)
+        got = frame_digest(df.columns, [tuple(r) for r in df.collect()])[0]
+        rel = duck.sql(q.ORACLES[name])
+        want = frame_digest(list(rel.columns), rel.fetchall())[0]
+        assert got == want, name
     assert ns.conf.get("spark.sql.ansi.enabled") == "false"
     assert ns.conf.get("spark.sql.session.timeZone") == "UTC"
-
-    # Concrete VALUE pin, not just row counts: the earliest window start
-    # must equal the oracle's epoch arithmetic even though the session
-    # came in on America/Los_Angeles — a timezone-dependent event-time
-    # derivation would shift this by the UTC offset.
-    import duckdb
-
-    want = duckdb.sql(
-        "SELECT min((epoch_us(ts) // 300000000) * 300) "
-        "FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchone()[0]
-    assert min(r["window_start"] for r in rows) == want

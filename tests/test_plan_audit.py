@@ -56,8 +56,8 @@ def test_known_good_query_is_clean(spark):
     from credit_card_etl_pipeline_spark.queries import QUERIES
 
     res = audit_one(
-        "tpch_q6_forecast_revenue",
-        QUERIES["tpch_q6_forecast_revenue"],
+        "payment_method_distribution",
+        QUERIES["payment_method_distribution"],
         spark,
         SF,
     )
@@ -71,3 +71,9 @@ def test_allowlist_entries_name_their_bounded_side():
         assert why and ("1-row" in why or "broadcast" in why or
                         "grid" in why or "bounded" in why or
                         "scalar" in why or "anchor" in why), (name, why)
+
+
+def test_allowlist_entries_name_registered_queries():
+    from credit_card_etl_pipeline_spark.queries import QUERIES
+
+    assert not set(BNLJ_ALLOWED) - set(QUERIES)

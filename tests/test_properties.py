@@ -11,7 +11,6 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from credit_card_etl_pipeline_spark import schema as S
 from credit_card_etl_pipeline_spark.functions.ranks import with_pct_rank
@@ -140,7 +139,7 @@ def test_surrogate_key_invariant_to_column_order(spark, rows):
 
 
 # ------------------------------------------------------------------
-# r6: AVI container round-trip and adaptive-aggregate equivalence
+# r6: AVI container round-trip
 # ------------------------------------------------------------------
 
 _frame_payloads = st.lists(
@@ -160,52 +159,3 @@ def test_avi_container_roundtrip_any_payload(frames, w, h):
     gw, gh, out = avi.decode_avi(data)
     assert (gw, gh) == (w, h)
     assert out == frames
-
-
-_corpus = st.lists(
-    st.tuples(st.integers(0, 5), st.integers(0, 100)),
-    min_size=1,
-    max_size=40,
-)
-
-
-@_slow
-@given(_corpus, st.booleans())
-def test_adaptive_aggregate_equals_plain_groupby(spark, rows, force_salt):
-    """Whatever branch the decision takes — including a forced-salt
-    override via a zero threshold — the result must equal the plain
-    groupBy on the same data."""
-    from credit_card_etl_pipeline_spark.operators.skew import (
-        adaptive_aggregate,
-        salted_count,
-        salted_max,
-        salted_sum,
-    )
-
-    df = spark.createDataFrame(rows, "k long, v long")
-    aggs = [
-        salted_count("n"),
-        salted_sum("v", "sv"),
-        salted_max("v", "mv"),
-    ]
-    got = adaptive_aggregate(
-        df,
-        ["k"],
-        aggs,
-        combine_free=True,
-        salt_source="v",
-        hot_partition_factor=0.0 if force_salt else 1e18,
-    ).collect()
-    want = (
-        df.groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("sv"),
-            F.max("v").alias("mv"),
-        )
-        .collect()
-    )
-    key = lambda r: r["k"]  # noqa: E731
-    assert sorted(map(tuple, got), key=lambda t: t[0]) == sorted(
-        map(tuple, want), key=lambda t: t[0]
-    )

@@ -1,10 +1,8 @@
-"""Round-7 property tests: randomized invariants for the exact-money
-proration, HLL merge losslessness, sequence packing, and the adaptive
-rank strategies.  Each hypothesis example drives a real Spark job, so
-example counts stay small — the properties carry the value:
+"""Round-7 property tests: randomized invariants for HLL merge
+losslessness, sequence packing, and the adaptive rank strategies.
+Each hypothesis example drives a real Spark job, so example counts
+stay small — the properties carry the value:
 
-* largest-remainder proration: allocations SUM BACK EXACTLY per order,
-  and each allocation is the floor share or floor+1;
 * HLL: merge(per-segment registers) == registers(concatenated stream)
   for ANY segmentation (the mergeability claim the 100 TB one-pass
   story rests on);
@@ -15,8 +13,6 @@ example counts stay small — the properties carry the value:
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 import pytest
@@ -37,54 +33,6 @@ _slow = settings(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-
-
-# ------------------------------------------------------------------
-# Largest-remainder proration (lineitem_prorate_cents)
-# ------------------------------------------------------------------
-
-_orders = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=10_000_00),  # total cents
-        st.lists(st.integers(min_value=1, max_value=50), min_size=1, max_size=6),
-    ),
-    min_size=1,
-    max_size=4,
-)
-
-
-@_slow
-@given(_orders)
-def test_prorate_allocations_sum_exactly(spark, tmp_path_factory, orders):
-    from credit_card_etl_pipeline_spark.queries.sql_queries import (
-        lineitem_prorate_cents,
-    )
-
-    li_rows, o_rows = [], []
-    for k, (total_cents, qtys) in enumerate(orders):
-        o_rows.append({"o_orderkey": k, "o_totalprice": total_cents / 100.0})
-        for ln, qty in enumerate(qtys):
-            li_rows.append(
-                {"l_orderkey": k, "l_linenumber": ln, "l_quantity": float(qty)}
-            )
-    d = tmp_path_factory.mktemp("prorate")
-    pd.DataFrame(li_rows).to_parquet(os.path.join(d, "lineitem.parquet"))
-    pd.DataFrame(o_rows).to_parquet(os.path.join(d, "orders.parquet"))
-
-    out = lineitem_prorate_cents(spark, str(d)).collect()
-    by_order: dict[int, list] = {}
-    for r in out:
-        by_order.setdefault(r["k"], []).append(r)
-    assert set(by_order) == set(range(len(orders)))
-    for k, (total_cents, qtys) in enumerate(orders):
-        rows = by_order[k]
-        assert len(rows) == len(qtys)
-        # exactness: no cent leaks, ever
-        assert sum(r["alloc_cents"] for r in rows) == total_cents
-        qty_sum = sum(qtys)
-        for r in rows:
-            floor_share = total_cents * int(r["qty"]) // qty_sum
-            assert r["alloc_cents"] in (floor_share, floor_share + 1)
 
 
 # ------------------------------------------------------------------

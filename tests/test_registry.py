@@ -1,6 +1,7 @@
 """The registry carries the statement → warehouse → RFM surface, each
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
-bucketing or Python-Data-Source queries that were cut from it."""
+bucketing, Python-Data-Source, TPC-H/OLAP, skew or streaming queries
+that were cut from it."""
 
 from __future__ import annotations
 
@@ -36,6 +37,39 @@ REMOVED_QUERIES = {
     "warehouse_ivm_delta_merge", "lineitem_zorder_layout",
     "lineitem_zorder_rectangle_scan", "ingest_via_datasource",
     "stream_ingest_datasource", "bucketed_join_colocated",
+    # TPC-H / OLAP showcases and the salting layer's queries
+    "sql_pricing_summary", "skew_salted_aggregate",
+    "skew_adaptive_aggregate", "lineitem_adaptive_join",
+    "json_props_extract", "events_value_percentiles", "orders_rollup",
+    "orders_pivot_status", "events_window_analytics",
+    "customer_set_operations", "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier_volume", "tpch_q4_order_priority",
+    "tpch_q6_forecast_revenue", "tpch_q10_returned_items",
+    "tpch_q14_promo_revenue", "tpch_q18_large_volume",
+    "customers_above_avg_no_urgent", "orders_grouping_sets",
+    "priority_top3_orders", "events_equidepth_histogram",
+    "skew_salted_join", "lineitem_unpivot_measures",
+    "events_weekly_calendar", "orders_above_customer_avg",
+    "events_first_last_nth", "orders_cube_status_year",
+    "tpch_q7_nation_volume", "tpch_q8_market_share",
+    "tpch_q9_product_profit", "tpch_q12_late_lines",
+    "tpch_q13_order_distribution", "tpch_q15_top_supplier",
+    "tpch_q16_supplier_breadth", "tpch_q17_small_quantity",
+    "tpch_q19_banded_revenue", "tpch_q21_sole_late_supplier",
+    "tpch_q2_min_cost_supplier", "tpch_q11_important_stock",
+    "tpch_q20_part_promotion", "sql_recursive_reachability",
+    "orders_table_profile", "orders_trend_regression",
+    "lineitem_prorate_cents", "events_variant_extract",
+    # Structured Streaming jobs and the event-time queries beside them
+    "events_tumbling_window", "events_sliding_window",
+    "events_session_windows", "stream_stateful_user_stats",
+    "stream_dedup_ingest", "stream_curation_pipeline",
+    "events_asof_last_purchase", "events_range_join_purchases",
+    "stream_static_enrich", "stream_salted_enrich",
+    "events_rolling_7d_users", "stream_stream_join_purchases",
+    "stream_foreachbatch_upsert", "stream_bloom_corpus_filter",
+    "stream_dedup_within_watermark", "stream_hll_windowed",
+    "stream_dsir_filter", "stream_daily_drift", "stream_image_dhash",
 }
 
 

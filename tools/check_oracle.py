@@ -37,8 +37,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "customer", "part", "orders", "lineitem", "events", "documents",
+    "embeddings",
 ]
 
 
@@ -134,7 +134,7 @@ def _engine_deps_digest(
     """md5 over the BYTES of every ``pkg`` module the given module file
     transitively imports (static ast walk; VERDICT r10 ask #5).  An
     edit to any operator library a query depends on — dataops/,
-    operators/, functions/, plans/, streaming/, session.py — now
+    operators/, functions/, plans/, sources/, session.py — now
     invalidates that query's --changed-only fingerprint, so local
     iteration can no longer silently skip re-verification.  Importing
     a submodule also executes its ancestor ``__init__`` chain, so

@@ -17,12 +17,12 @@ and records informational counts per query (SortMergeJoin, Exchange,
 ArrowEvalPython, FlatMapGroupsInPandas/mapInPandas, WholeStageCodegen
 spans) so round-over-round plan drift is diffable.
 
-Caveat: queries that materialize (warehouse writes, streaming
-availableNow runs) return a read-back DataFrame, so the audited plan is
-the read-back side; their write-path plans are pinned individually in
+Caveat: queries that materialize (warehouse writes, sink round-trips)
+return a read-back DataFrame, so the audited plan is the read-back
+side; their write-path plans are pinned individually in
 tests/test_plans.py.  The audit still catches regressions in the final
-(returned) plan of all 200+ queries, which no per-query test suite
-covers exhaustively.
+(returned) plan of every registered query, which no per-query test
+suite covers exhaustively.
 
 Usage:  python tools/plan_audit.py [--sf /root/testdata/sf0.001]
 Writes PLAN_AUDIT.json at the repo root; exits 1 on any violation.
@@ -86,20 +86,10 @@ BNLJ_ALLOWED: dict[str, str] = {
     "events_decayed_user_score": "1-row max-timestamp anchor",
     "events_skew_diagnostics": "1-row corpus totals",
     "events_daily_drift": "day×type grid + 1-row totals",
-    "stream_daily_drift": "day×type grid + 1-row totals",
-    "events_rolling_7d_users": "1-row min/max day anchor",
-    # TPC-H decorrelated scalar subqueries: the hand-decorrelated
-    # average/threshold is a 1-row frame joined with <,> conditions.
-    "customers_above_avg_no_urgent": "1-row avg(acctbal) scalar (Q22)",
-    "tpch_q11_important_stock": "1-row value-threshold scalar",
     # Distribution-matched sampling: the 1-row (n_total, n_buckets)
     # aggregate cross-joined onto the ≤11-row bucket histogram
     # (curate.distribution_matched_sample — F.broadcast'ed).
     "documents_length_matched_sample": "1-row corpus totals onto bucket histogram",
-    # r12: string-column profile (1-row aggregate over the ≤15-row
-    # status×priority distinct-pair checkpoint) cross-joined onto the
-    # 1-row fixed-width wide aggregate — sql_queries.orders_table_profile.
-    "orders_table_profile": "1-row string-profile aggregate onto 1-row wide aggregate",
 }
 
 VIOLATION_NODES = ("CartesianProduct", "BatchEvalPython")

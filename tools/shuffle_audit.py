@@ -2,7 +2,7 @@
 
 The plan audit (tools/plan_audit.py) checks node TYPES; this tool
 checks the thing that actually costs money at 100 TB — how many bytes
-each query shuffles, spills, and reads.  It runs every (batch)
+each query shuffles, spills, and reads.  It runs every
 registered query into a noop sink with the Spark event log enabled,
 tags each query's jobs via ``setJobGroup``, then parses the event log
 and attributes per-task metrics (shuffle read/write bytes, memory/disk
@@ -19,11 +19,6 @@ scan stages, so cross-query input comparisons should use the table
 sizes on disk.  The shuffle/spill numbers are the load-bearing ones
 (task-level counters, attribution verified: the ``_unattributed``
 bucket is empty on a full sweep).
-
-Streaming queries execute their jobs on stream-execution threads that
-do NOT inherit the caller's job group, so their metrics land in the
-"_unattributed" bucket — they are audited end-state-vs-batch in the
-oracle harness instead; the batch surface is what this tool measures.
 
 Usage:  python tools/shuffle_audit.py [--sf DIR] [--only a,b,c]
 Writes SHUFFLE_AUDIT.json at the repo root.
@@ -155,15 +150,7 @@ def main() -> int:
     names = list(q.QUERIES)
     if args.only:
         names = [n for n in names if n in set(args.only.split(","))]
-    # Streaming queries run jobs on non-inheriting threads; skip them
-    # here (see module docstring) — and RECORD the exclusion so the
-    # artifact's query set ∪ exclusions always equals the registry.
-    excluded_streaming = sorted(n for n in names if n.startswith("stream_"))
-    names = [
-        n
-        for n in names
-        if not n.startswith("stream_") and n not in excluded_other
-    ]
+    names = [n for n in names if n not in excluded_other]
 
     t_sweep0 = time.time()
     loadavg_start = [round(x, 2) for x in os.getloadavg()]
@@ -262,7 +249,6 @@ def main() -> int:
         "sf": args.sf,
         "n_queries": len(queries_out),
         "errors": errors,
-        "excluded_streaming": excluded_streaming,
         "excluded_other": excluded_other,
         "zero_shuffle_queries": zero_shuffle,
         "totals": {
