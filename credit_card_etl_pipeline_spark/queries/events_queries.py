@@ -995,3 +995,53 @@ def events_daily_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(sum(abs(day_ppm - base_ppm)) div 2 AS BIGINT)"
         ).alias("tv_ppm"),
     )
+
+
+# ------------------------------------------------------------------
+# Rolling 7-day DISTINCT users (window count-distinct re-expression)
+# ------------------------------------------------------------------
+
+_ROLLING_USERS_ORACLE = """
+WITH ud AS (
+    SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
+    FROM events
+),
+bounds AS (SELECT min(day) AS d0, max(day) AS d1 FROM ud),
+days AS (SELECT unnest(generate_series(d0, d1)) AS obs_day FROM bounds)
+SELECT CAST(obs_day AS BIGINT) AS obs_day,
+       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users_7d
+FROM days JOIN ud ON ud.day BETWEEN obs_day - 6 AND obs_day
+GROUP BY obs_day
+"""
+
+
+@query("events_rolling_7d_users", _ROLLING_USERS_ORACLE)
+def events_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling 7-day distinct actives — COUNT(DISTINCT) over a sliding
+    frame, which Spark's window functions cannot express.  Scalable
+    re-expression: dedup to (user, day), explode each user-day into the
+    ≤7 observation days it contributes to (bounded 7× expansion of the
+    already-deduped frame — NOT of the fact table), dedup (user,
+    obs_day), count per day.  Every step partial-aggregates before its
+    shuffle; the oracle is the naive range join DuckDB can afford at
+    corpus scale."""
+    ev = load(spark, sf_dir, "events")
+    ud = (
+        ev.select("user_id", event_micros(ev).alias("us"))
+        .select("user_id", F.expr("us div 86400000000").alias("day"))
+        .distinct()
+    )
+    d1 = ud.agg(F.max("day").alias("d1"))
+    contrib = (
+        ud.select(
+            "user_id",
+            F.explode(
+                F.sequence(F.col("day"), F.col("day") + F.lit(6))
+            ).alias("obs_day"),
+        )
+        .distinct()
+        .join(F.broadcast(d1), F.col("obs_day") <= F.col("d1"))
+    )
+    return contrib.groupBy("obs_day").agg(
+        F.count(F.lit(1)).cast("long").alias("n_users_7d")
+    ).select(F.col("obs_day").cast("long").alias("obs_day"), "n_users_7d")

@@ -66,7 +66,7 @@ REMOVED_QUERIES = {
     "stream_dedup_ingest", "stream_curation_pipeline",
     "events_asof_last_purchase", "events_range_join_purchases",
     "stream_static_enrich", "stream_salted_enrich",
-    "events_rolling_7d_users", "stream_stream_join_purchases",
+    "stream_stream_join_purchases",
     "stream_foreachbatch_upsert", "stream_bloom_corpus_filter",
     "stream_dedup_within_watermark", "stream_hll_windowed",
     "stream_dsir_filter", "stream_daily_drift", "stream_image_dhash",

@@ -1,5 +1,6 @@
 """Unit tests for the round-4 scale operators: the canonical-selection
-hand case and prefix-filter exactness on a random vocabulary."""
+hand case, the rolling-distinct re-expression vs a naive computation,
+and prefix-filter exactness on a random vocabulary."""
 
 from __future__ import annotations
 
@@ -26,6 +27,38 @@ def test_canonical_per_component_hand_case(spark):
     }
     # singleton component 4 is excluded (n_docs > 1 filter)
     assert rows == {(1, 2, 30, 3), (5, 5, 7, 2)}
+
+
+def test_rolling_7d_users_matches_naive(spark):
+    from credit_card_etl_pipeline_spark.queries.events_queries import (
+        events_rolling_7d_users,
+    )
+
+    got = {
+        (r.obs_day, r.n_users_7d)
+        for r in events_rolling_7d_users(
+            spark, "/root/testdata/sf0.001"
+        ).collect()
+    }
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    from credit_card_etl_pipeline_spark.functions.eventtime import (
+        event_micros,
+    )
+
+    ud = [
+        (r.user_id, r.day)
+        for r in ev.select(
+            "user_id", (event_micros(ev) / 86_400_000_000).cast("long").alias("day")
+        )
+        .distinct()
+        .collect()
+    ]
+    days = {d for _, d in ud}
+    want = set()
+    for obs in range(min(days), max(days) + 1):
+        users = {u for u, d in ud if obs - 6 <= d <= obs}
+        want.add((obs, len(users)))
+    assert got == want
 
 
 def test_prefix_filter_exact_on_random_vocab(spark):

@@ -6,7 +6,7 @@ SparkSession, not the engine factory's).
 
     python tools/hostile_sweep.py [--sf /root/testdata/sf0.001]
 
-Exit 0 iff every query plans and executes.  Last verified: 138/138 ok
+Exit 0 iff every query plans and executes.  Last verified: 139/139 ok
 (pyspark 4.1.2, sf0.001, events ts = TIMESTAMP_NTZ).
 """
 

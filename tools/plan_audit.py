@@ -86,6 +86,7 @@ BNLJ_ALLOWED: dict[str, str] = {
     "events_decayed_user_score": "1-row max-timestamp anchor",
     "events_skew_diagnostics": "1-row corpus totals",
     "events_daily_drift": "day×type grid + 1-row totals",
+    "events_rolling_7d_users": "1-row min/max day anchor",
     # Distribution-matched sampling: the 1-row (n_total, n_buckets)
     # aggregate cross-joined onto the ≤11-row bucket histogram
     # (curate.distribution_matched_sample — F.broadcast'ed).
