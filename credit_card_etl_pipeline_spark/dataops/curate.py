@@ -1,26 +1,15 @@
-"""Corpus-curation operators (engine extension for training-data
-pipelines): PII scrubbing, repetition signals, benchmark
-decontamination, and context-window chunking.
+"""Corpus-selection operators: DSIR importance weights and
+distribution-matched sampling.
 
-These extend the dedup/text families with the remaining steps a
-large-scale LLM data pipeline runs between raw crawl and tokenizer:
+Both re-express a data-selection step in exact integer arithmetic so
+the result is bit-identical on Spark and the DuckDB oracle:
 
-* **PII scrubbing** — pure JVM ``regexp_replace`` chains (no UDFs); the
-  patterns are restricted to the RE2-compatible subset (no
-  backreferences or lookaround) so the DuckDB oracle can run byte-
-  identical regexes.  At 100 TB this is a map-only pass: no shuffle.
-* **Repetition signals** (Gopher-style quality heuristics) — duplicate
-  word/bigram fractions and top-token share per document.  Exact
-  integer counts via one token explode + one bigram explode; the only
-  shuffles are the two per-doc aggregations, both map-side combinable.
-* **Decontamination** — n-gram overlap of the corpus against a
-  benchmark/eval set.  Benchmark shingle sets are tiny relative to the
-  corpus, so the join side is broadcast; the corpus is touched exactly
-  once (shingle explode), never joined against itself.
-* **Chunking** — context-window splitting (size/overlap in tokens) as a
-  pure array expression: ``sequence`` over chunk starts + ``slice`` per
-  start, exploded.  Map-only; chunk identity is (doc_id, chunk_index)
-  so downstream shuffles key on the composite.
+* **DSIR** — hashed word-bigram features scored under a target and a
+  raw model; both models are bounded by a fixed bucket count, so they
+  broadcast and the scoring join never shuffles the corpus.
+* **Distribution-matched sampling** — deterministic importance
+  resampling to a uniform bucket distribution; the acceptance test is
+  an md5 hash of the row id, not an RNG.
 """
 
 from __future__ import annotations
@@ -28,95 +17,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import normalize_text, words
+from .text import words
 
-# ------------------------------------------------------------------
-# PII scrubbing
-# ------------------------------------------------------------------
-
-#: RE2-compatible PII patterns — the SQL-oracle source of truth (no
-#: backreferences, no lookaround; the JVM runs the semantically equal
-#: PII_PATTERNS_ENGINE below).  Replacement order matters: cards
-#: before phones so a 4-4-4-4 run is consumed as one card, not a
-#: partial phone match.  Replacement strings use Java `$n` group
-#: syntax; the oracle builder translates to RE2's `\n`.
-PII_PATTERNS: list[tuple[str, str, str]] = [
-    # RFC 5321 length bounds instead of unbounded +: the bound is what
-    # keeps Java's backtracking engine LINEAR — an unbounded class
-    # quantifier over a 50 KB non-matching token is O(len²) per start
-    # position (the streaming curation pipeline read 5+ minutes on the
-    # r10 hostile corpus's giant-token docs; bounded, it's
-    # milliseconds).  RE2 (DuckDB oracle) never backtracks either way.
-    # The (^|[^class]) group emulates a left boundary — RE2 has no
-    # lookbehind — so an over-long (RFC-invalid) local part fails the
-    # match ENTIRELY instead of suffix-matching its last 64 chars and
-    # leaving the prefix unredacted.  Overflow on the TRAILING side
-    # (domain >255 / TLD >63 chars) still truncates the match, which
-    # is intended: the sensitive local@domain core is consumed and
-    # masked; only trailing excess survives.
-    ("email",
-     r"(^|[^A-Za-z0-9._%+-])"
-     r"([A-Za-z0-9._%+-]{1,64}@[A-Za-z0-9.-]{1,255}\.[A-Za-z]{2,63})",
-     "$1<EMAIL>"),
-    ("card", r"\b\d{4}[- ]\d{4}[- ]\d{4}[- ]\d{4}\b", "<CARD>"),
-    ("phone", r"\b\d{3}[-. ]\d{3}[-. ]\d{4}\b", "<PHONE>"),
-    ("ip", r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "<IP>"),
-]
-
-
-#: Engine-side twins of PII_PATTERNS.  Only the email entry differs:
-#: the JVM runs the left boundary as a zero-width lookbehind
-#: ``(?<![class])`` instead of RE2's consuming ``(^|[^class])``
-#: alternation.  Semantically identical — both accept a match iff the
-#: preceding char is outside the local-part class (or string start),
-#: and the lookbehind consumes nothing while the alternation's
-#: captured char is re-inserted by ``$1``, so replacement output,
-#: match count, and the scan-continuation position (end of the email
-#: core in both forms) all coincide; test_curate pins the equivalence
-#: on the adversarial corpus.  The split exists because the leading
-#: ``(^|[^...])`` alternation defeats Java regex's first-character
-#: scan optimization (every position starts a group trial): measured
-#: at sf0.1, the alternation costs 2.6x over the lookbehind form
-#: (BENCH_HISTORY r11 — the one accepted r11 regression, now
-#: reclaimed).  DuckDB keeps the RE2-compatible PII_PATTERNS — RE2
-#: has no lookbehind, and never backtracks, so the alternation is
-#: free there.
-PII_PATTERNS_ENGINE: list[tuple[str, str, str]] = [
-    (
-        kind,
-        r"(?<![A-Za-z0-9._%+-])"
-        r"[A-Za-z0-9._%+-]{1,64}@[A-Za-z0-9.-]{1,255}\.[A-Za-z]{2,63}",
-        "<EMAIL>",
-    )
-    if kind == "email"
-    else (kind, pat, token)
-    for kind, pat, token in PII_PATTERNS
-]
-
-
-def pii_counts(col: Column) -> dict[str, Column]:
-    """Per-kind PII occurrence counts (computed BEFORE scrubbing)."""
-    return {
-        kind: F.size(F.regexp_extract_all(col, F.lit(pat), 0)).cast("long")
-        for kind, pat, _ in PII_PATTERNS_ENGINE
-    }
-
-
-def pii_scrub(col: Column) -> Column:
-    """Mask every PII match, applying patterns in declaration order."""
-    out = col
-    for _, pat, token in PII_PATTERNS_ENGINE:
-        out = F.regexp_replace(out, pat, token)
-    return out
-
-
-# ------------------------------------------------------------------
-# Repetition signals (Gopher-style quality heuristics)
-# ------------------------------------------------------------------
 
 def token_bigrams(w: Column) -> Column:
     """Adjacent 2-grams of an already-tokenized array column (NOT
-    distinct — repetition is the signal here, unlike dedup shingles).
+    distinct — every occurrence is a DSIR feature, unlike dedup
+    shingles).
     Prefer projecting the token array once and calling this, so the
     element_at references don't each re-evaluate an inline
     normalize+split (the dedup._token_shingles lesson)."""
@@ -129,293 +36,6 @@ def token_bigrams(w: Column) -> Column:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def bigrams(col: Column) -> Column:
-    """Adjacent word 2-grams of the normalized text (expression form
-    for single-column callers; see :func:`token_bigrams`)."""
-    return token_bigrams(words(col))
-
-
-def _gram_stats(grams: DataFrame, id_col: str, prefix: str) -> DataFrame:
-    """(id, gram) rows → per-doc total / distinct / top-gram counts."""
-    return (
-        grams.groupBy(id_col, "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").cast("long").alias(f"n_{prefix}"),
-            F.count(F.lit(1)).cast("long").alias(f"n_distinct_{prefix}"),
-            F.max("cnt").cast("long").alias(f"top_{prefix}_n"),
-        )
-    )
-
-
-def repetition_signals(
-    df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document repetition profile: word and bigram totals,
-    distincts, and top-gram counts, plus the derived fractions
-    (single double division of identical integers — cross-engine
-    exact).  Docs with no bigrams (single-token texts) report zeros."""
-    text = F.col(text_col)
-    toks = df.select(
-        F.col(id_col), F.explode(words(text)).alias("gram")
-    )
-    bigs = df.select(
-        F.col(id_col), words(text).alias("__toks")
-    ).select(
-        F.col(id_col), F.explode(token_bigrams(F.col("__toks"))).alias("gram")
-    )
-    word_stats = _gram_stats(toks, id_col, "words")
-    bigram_stats = _gram_stats(bigs, id_col, "bigrams")
-    out = word_stats.join(bigram_stats, id_col, "left").na.fill(
-        {"n_bigrams": 0, "n_distinct_bigrams": 0, "top_bigrams_n": 0}
-    )
-    return out.select(
-        id_col,
-        "n_words",
-        "n_distinct_words",
-        "top_words_n",
-        "n_bigrams",
-        "n_distinct_bigrams",
-        "top_bigrams_n",
-        ((F.col("n_words") - F.col("n_distinct_words"))
-         / F.col("n_words")).alias("dup_word_frac"),
-        (F.col("top_words_n") / F.col("n_words")).alias("top_word_frac"),
-        F.when(
-            F.col("n_bigrams") > 0,
-            (F.col("n_bigrams") - F.col("n_distinct_bigrams"))
-            / F.col("n_bigrams"),
-        ).otherwise(F.lit(0.0)).alias("dup_bigram_frac"),
-    )
-
-
-# ------------------------------------------------------------------
-# Benchmark decontamination
-# ------------------------------------------------------------------
-
-def benchmark_overlap(
-    corpus_df: DataFrame,
-    benchmark_df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    broadcast_benchmark: bool = True,
-) -> DataFrame:
-    """Per corpus document: how many of its distinct word ``n``-gram
-    shingles also occur anywhere in the benchmark set.
-
-    Scale shape: the benchmark (an eval set) is usually orders of
-    magnitude smaller than the corpus, so its distinct shingle set is
-    broadcast by default; the corpus pays one shingle explode and one
-    map-side-combinable aggregation.  Pass
-    ``broadcast_benchmark=False`` when the "benchmark" is itself
-    corpus-sized (cross-corpus dedup) — the join falls back to a
-    shuffle on the shingle key.  Rows with ``n_shared > 0`` are
-    contamination candidates; ``overlap_frac`` supports thresholded
-    dropping."""
-    from .dedup import exploded_shingles
-
-    bench = (
-        exploded_shingles(benchmark_df, text_col=text_col, id_col=id_col, n=n)
-        .select("shingle")
-        .distinct()
-    )
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    doc_shingles = exploded_shingles(
-        corpus_df, text_col=text_col, id_col=id_col, n=n
-    )
-    shared = (
-        doc_shingles.join(bench, "shingle")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
-    totals = doc_shingles.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_shingles")
-    )
-    return (
-        totals.join(shared, id_col, "left")
-        .na.fill({"n_shared": 0})
-        .select(
-            id_col,
-            "n_shingles",
-            "n_shared",
-            (F.col("n_shared") / F.col("n_shingles")).alias("overlap_frac"),
-        )
-    )
-
-
-# ------------------------------------------------------------------
-# Context-window chunking
-# ------------------------------------------------------------------
-
-def chunk_documents(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 32,
-    overlap: int = 8,
-) -> DataFrame:
-    """Split each document's token stream into ``chunk_tokens``-sized
-    windows advancing by ``chunk_tokens - overlap`` — the standard
-    pre-tokenizer context packing step.  Pure array expressions
-    (sequence of starts + slice per start), map-only: no shuffle, no
-    UDF; every document with non-NULL text yields at least one chunk
-    (empty text = one single-empty-token chunk), and a NULL text
-    yields NO chunks — there is nothing to chunk, and a pseudo-chunk
-    with NULL length poisons every downstream token count (pinned by
-    the r10 null-hostile corpus)."""
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be smaller than chunk_tokens")
-    stride = chunk_tokens - overlap
-    # project the token array once (the size + per-start slice
-    # references would otherwise each re-evaluate normalize+split)
-    base = df.select(F.col(id_col), words(F.col(text_col)).alias("__toks"))
-    w = F.col("__toks")
-    # NULL toks -> NULL starts -> explode drops the row (no chunks)
-    starts = F.when(
-        w.isNotNull(),
-        F.sequence(
-            F.lit(1), F.greatest(F.size(w), F.lit(1)), F.lit(stride)
-        ),
-    )
-    chunk = F.explode(
-        F.transform(
-            starts,
-            lambda s: F.struct(
-                s.alias("chunk_start"),
-                F.slice(w, s, chunk_tokens).alias("toks"),
-            ),
-        )
-    )
-    exploded = base.select(F.col(id_col), chunk.alias("c"))
-    return exploded.select(
-        id_col,
-        ((F.col("c.chunk_start") - 1) / stride).cast("long").alias("chunk_index"),
-        F.col("c.chunk_start").cast("long").alias("chunk_start"),
-        F.size("c.toks").cast("long").alias("n_chunk_tokens"),
-        F.concat_ws(" ", "c.toks").alias("chunk_text"),
-    )
-
-
-# ------------------------------------------------------------------
-# Corpus-wide duplicate-chunk removal (the C4 line-dedup analogue:
-# this corpus has no newlines, so the dedup unit is the fixed-size
-# token chunk instead of the line)
-# ------------------------------------------------------------------
-
-def dedup_corpus_chunks(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 32,
-) -> DataFrame:
-    """Drop every repeated occurrence of a token chunk ACROSS the whole
-    corpus, keeping only the globally-first copy (ordered by
-    (doc_id, chunk_index)) — C4's duplicate-line removal re-expressed
-    at chunk granularity.
-
-    Non-overlapping chunks (stride == size) so every token belongs to
-    exactly one chunk and "kept tokens" is well-defined.  The global
-    first-occurrence test is ONE window over the chunk hash: chunks
-    shuffle by their 128-bit md5 (never by the text payload), ranks are
-    computed within each hash bucket, and no chunk-to-chunk join
-    exists — at 100 TB this is a single exchange keyed on a uniform
-    hash, immune to text-length skew.  Returns the kept chunks with
-    their provenance (doc_id, chunk_index, n_chunk_tokens, chunk_text).
-    """
-    from pyspark.sql import Window
-
-    chunks = chunk_documents(
-        df,
-        text_col=text_col,
-        id_col=id_col,
-        chunk_tokens=chunk_tokens,
-        overlap=0,
-    ).withColumn("chunk_hash", F.md5(F.col("chunk_text")))
-    w = Window.partitionBy("chunk_hash").orderBy(id_col, "chunk_index")
-    return (
-        chunks.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .drop("rk", "chunk_hash")
-    )
-
-
-# ------------------------------------------------------------------
-# LM-typicality quality score (KenLM-filter stand-in): how surprising
-# is each document under a bigram model fit on the corpus itself?
-# ------------------------------------------------------------------
-
-def lm_typicality(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document typicality under a corpus-fit word-bigram model —
-    the perplexity-filter step of an LLM data pipeline (KenLM et al.)
-    re-expressed in EXACT integer arithmetic so the score is
-    bit-identical on any engine and any partial-aggregation order.
-
-    Each bigram occurrence contributes its integer surprisal
-    ``floor(log2 T) - floor(log2 c)`` (c = corpus count of the bigram,
-    T = total bigram occurrences) — within 1 bit of the real
-    ``-log2(c/T)``, monotone in it, and float-free in the comparison
-    that matters (both engines evaluate log2 of the SAME exact integer,
-    where IEEE log2 cannot straddle a floor boundary: it is exact at
-    powers of two and >0.5 ulp away elsewhere).
-
-    Two shuffles total at any scale: one groupBy(gram) to fit the
-    model, one groupBy(doc) to score; the model re-joins the exploded
-    grams on the gram key (uniform hash, no skew beyond true token
-    skew, which a salting pass upstream would absorb).  The scalar T
-    rides a 1-row broadcast cross join, never a driver collect.  Docs
-    with fewer than two tokens have no bigrams and are absent from the
-    output (they carry no evidence either way).
-    """
-    from ..functions import caching
-
-    # the exploded grams feed THREE consumers (model counts, the
-    # scalar total, and the scoring join) — persist once so the
-    # normalize+explode pipeline doesn't run per branch
-    grams = caching.track(
-        df.select(F.col(id_col), words(F.col(text_col)).alias("__toks"))
-        .select(
-            F.col(id_col),
-            F.explode(token_bigrams(F.col("__toks"))).alias("gram"),
-        )
-        .persist()
-    )
-    counts = grams.groupBy("gram").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    # Σc over grams = gram-row count: one map-side count on the cached
-    # gram stream instead of re-running the groupBy(gram) shuffle that
-    # ``counts`` (consumed lazily by the scoring join) would re-run.
-    total = grams.agg(F.count(F.lit(1)).cast("long").alias("t"))
-    scored = (
-        grams.join(counts, "gram")
-        .crossJoin(F.broadcast(total))
-        .select(
-            id_col,
-            (
-                F.floor(F.log2("t")) - F.floor(F.log2("c"))
-            ).cast("long").alias("bits"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.sum("bits").cast("long").alias("surprisal_bits"),
-        (
-            (F.sum("bits") * 1000).cast("long")
-            / F.count(F.lit(1)).cast("long")
-        ).cast("long").alias("avg_surprisal_milli"),
-    )
 
 
 # ------------------------------------------------------------------
@@ -448,15 +68,16 @@ def dsir_weights(
     ``T' = T + n_buckets``) — i.e. bits saved by explaining the gram
     with the target model instead of the raw model, within 1 bit of the
     true log-likelihood ratio and float-free in the cross-engine
-    comparison (log2 of the same exact integer on both sides; see
-    :func:`lm_typicality` for the floor-boundary argument).
+    comparison: both engines evaluate log2 of the SAME exact integer,
+    where IEEE log2 cannot straddle a floor boundary (it is exact at
+    powers of two and >0.5 ulp away elsewhere).
 
     100 TB shape: grams hash into ``n_buckets`` buckets, so each model
     fit is one map-side-combinable groupBy onto ≤ ``n_buckets`` rows;
     both models ride ONE broadcast join back onto the gram stream (the
     bucket join is uniform by construction — md5 buckets can't be
     skewed by hot tokens).  The only fact-sized shuffles are the two
-    aggregations (fit + per-doc score), same as :func:`lm_typicality`.
+    aggregations (fit + per-doc score).
     Docs with fewer than two tokens have no features and are absent.
     """
     from ..functions.hashing import md5_int60
@@ -541,7 +162,7 @@ def dsir_fit(
     """Fit ONLY the DSIR models (the offline half of the production
     split): returns the bounded ``(bucket, cr, ct, tr, tt)`` frame —
     ≤ ``n_buckets`` rows with the scalar totals attached — ready to
-    broadcast into any scoring join, including a stream-static one.
+    broadcast into any scoring join (see :func:`dsir_score`).
     Same arithmetic as :func:`dsir_weights` (which fuses fit and score
     over one shared gram explode for the batch-only path)."""
     from ..functions.hashing import md5_int60
@@ -587,9 +208,8 @@ def dsir_score(
 ) -> DataFrame:
     """Score documents against a FITTED model frame (from
     :func:`dsir_fit`): per-gram-occurrence ``(id, bits)`` rows via one
-    broadcast join — map-only, so it runs unchanged on batch AND
-    Structured Streaming frames (the online half of the split; the
-    caller aggregates per doc in whatever mode its sink needs)."""
+    broadcast join — map-only (the online half of the split; the
+    caller aggregates per doc)."""
     from ..functions.hashing import md5_int60
 
     grams = (
@@ -610,305 +230,6 @@ def dsir_score(
     )
     return grams.join(F.broadcast(model), "bucket").select(
         id_col, (bits_raw - bits_tgt).cast("long").alias("bits")
-    )
-
-
-def gram_distribution_drift(
-    ref: DataFrame,
-    new: DataFrame,
-    *,
-    text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Corpus drift detection between two snapshots (the monitoring
-    step of a continuously-crawled training corpus): hashed-bigram
-    distributions of a reference and a new snapshot compared bucket by
-    bucket, with the global total-variation distance attached.
-
-    Exact integer arithmetic: per-bucket shares in truncated ppm
-    (``c * 1e6 div T``, identical truncation both engines, zero-total
-    sides guarded to 0), per-bucket ``delta_ppm = |share_new -
-    share_ref|``, and ``tv_ppm = Σ delta div 2`` — the classic TV
-    distance in parts-per-million, hash-stable across engines.
-
-    Scale shape: one side-tagged gram explode feeds ONE combined
-    aggregation onto the bounded bucket domain (≤ ``n_buckets`` rows),
-    totals and the TV scalar ride 1-row broadcasts — however large the
-    snapshots, only the fixed-size distribution table ever shuffles
-    after the explode.
-    """
-    from ..functions.hashing import md5_int60
-
-    def side(df: DataFrame, is_new: bool) -> DataFrame:
-        return (
-            df.select(words(F.col(text_col)).alias("__toks"))
-            .select(
-                F.lit(is_new).alias("is_new"),
-                F.explode(token_bigrams(F.col("__toks"))).alias("gram"),
-            )
-            .select(
-                "is_new",
-                (md5_int60(F.col("gram")) % n_buckets).alias("bucket"),
-            )
-        )
-
-    tagged = side(ref, False).unionByName(side(new, True))
-    counts = tagged.groupBy("bucket").agg(
-        F.sum(F.when(~F.col("is_new"), 1).otherwise(0))
-        .cast("long")
-        .alias("c_ref"),
-        F.sum(F.when(F.col("is_new"), 1).otherwise(0))
-        .cast("long")
-        .alias("c_new"),
-    )
-    totals = counts.agg(
-        F.sum("c_ref").cast("long").alias("tr"),
-        F.sum("c_new").cast("long").alias("tn"),
-    )
-    shares = counts.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        "c_ref",
-        "c_new",
-        F.expr(
-            "CASE WHEN tr = 0 THEN CAST(0 AS BIGINT) "
-            "ELSE CAST(c_ref * 1000000 div tr AS BIGINT) END"
-        ).alias("share_ref_ppm"),
-        F.expr(
-            "CASE WHEN tn = 0 THEN CAST(0 AS BIGINT) "
-            "ELSE CAST(c_new * 1000000 div tn AS BIGINT) END"
-        ).alias("share_new_ppm"),
-    )
-    shares = shares.withColumn(
-        "delta_ppm",
-        F.abs(F.col("share_new_ppm") - F.col("share_ref_ppm")).cast("long"),
-    )
-    tv = shares.agg(
-        F.expr("CAST(sum(delta_ppm) div 2 AS BIGINT)").alias("tv_ppm")
-    )
-    return shares.crossJoin(F.broadcast(tv))
-
-
-# ------------------------------------------------------------------
-# Boilerplate line removal
-# ------------------------------------------------------------------
-
-def remove_boilerplate_lines(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 50,
-) -> DataFrame:
-    """Strip corpus-wide boilerplate: lines (newline-delimited) that
-    appear in at least ``min_docs`` DISTINCT documents — cookie
-    banners, copyright footers, nav text — are removed from every
-    document; the document is rebuilt with its remaining lines in
-    original order.
-
-    Shape: ONE aggregation pass detects the hot set — explode
-    deduplicated ``(line, id)`` pairs, exact two-level count-distinct
-    per line (partial-aggregatable; the hot set is tiny — lines
-    crossing a 50-doc threshold) — then the hot lines collapse to a
-    single array row that broadcast-crossJoins back, and every
-    document is rebuilt MAP-ONLY with ``F.filter`` over its own split
-    array (original order is free, nothing re-shuffles).  The earlier
-    shape shuffled full line text twice more (a posexplode'd anti-join
-    plus an ``array_sort(collect_list)`` rebuild keyed by doc) —
-    dropping both halved the stage at sf0.1 and removes the only
-    O(corpus-text) exchanges, leaving the line-distinct aggregate as
-    the single data-sized shuffle at any scale.  Returns (id, n_lines,
-    n_kept, clean_text); docs whose every line was boilerplate come
-    back empty, not dropped."""
-    text = F.col(text_col)
-    hot = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(F.split(text, "\n"))).alias("line"),
-        )
-        .groupBy("line")
-        .agg(F.count(F.lit(1)).cast("long").alias("__nd"))
-        .where(F.col("__nd") >= min_docs)
-        .select("line")
-    )
-    hot_arr = hot.agg(F.collect_list("line").alias("__hot"))
-    kept_arr = F.filter(
-        F.split(text, "\n"),
-        lambda l: ~F.array_contains(F.col("__hot"), l),
-    )
-    # NULL text: n_kept 0 and clean_text '' (the join-shape's outer
-    # coalesce contract).  session.py pins
-    # spark.sql.legacy.sizeOfNull=false, so size(NULL) is NULL and
-    # greatest(NULL, 0) = 0 (greatest skips NULLs) supplies the zero;
-    # n_lines stays size(split(NULL)) = NULL like before
-    return df.crossJoin(F.broadcast(hot_arr)).select(
-        F.col(id_col),
-        F.size(F.split(text, "\n")).cast("long").alias("n_lines"),
-        F.greatest(F.size(kept_arr), F.lit(0)).cast("long").alias("n_kept"),
-        F.coalesce(F.array_join(kept_arr, "\n"), F.lit("")).alias(
-            "clean_text"
-        ),
-    )
-
-
-# ------------------------------------------------------------------
-# Training-mix weighted sampling
-# ------------------------------------------------------------------
-
-#: Weight basis: 10_000 = exactly 1.0 epoch.  Integer basis points keep
-#: the replicate/threshold arithmetic exact across engines.
-MIX_BASIS = 10_000
-
-
-def weighted_mix(
-    df: DataFrame,
-    weights: dict[str, int],
-    *,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    default_bp: int = MIX_BASIS,
-) -> DataFrame:
-    """Deterministic training-mixture sampling: each document appears
-    ``floor(w)`` times plus one more with probability ``frac(w)``, where
-    ``w`` is its group's weight in basis points (``MIX_BASIS`` = 1.0
-    epoch) — so ``{'en': 25000}`` means 2.5 epochs of English and
-    ``{'zh': 5000}`` keeps half the Chinese docs.
-
-    The fractional keep-decision hashes the document id (md5-stream
-    determinism — reproducible across runs, engines, and partitionings;
-    no RNG state).  Map-only: the replication is a per-row ``sequence``
-    explode, so the mix composes with downstream shuffles instead of
-    adding one.  Output carries ``epoch`` (1-based replicate index)."""
-    from ..functions.hashing import md5_int60
-
-    wcol: Column = F.lit(default_bp)
-    for group, bp in sorted(weights.items()):
-        wcol = F.when(F.col(group_col) == group, F.lit(bp)).otherwise(wcol)
-    full = (wcol / MIX_BASIS).cast("long")
-    frac = wcol % MIX_BASIS
-    extra = (
-        md5_int60(F.col(id_col).cast("string")) % MIX_BASIS < frac
-    ).cast("long")
-    n_copies = (full + extra).alias("n_copies")
-    out = df.withColumn("__n_copies", n_copies).where(F.col("__n_copies") >= 1)
-    # sequence(1, 0) would DESCEND in Spark — the filter above guards it
-    return (
-        out.withColumn("epoch", F.explode(F.sequence(F.lit(1), F.col("__n_copies"))))
-        .drop("__n_copies")
-        .withColumn("epoch", F.col("epoch").cast("long"))
-    )
-
-
-# ------------------------------------------------------------------
-# Sequence packing (concat-and-chunk)
-# ------------------------------------------------------------------
-
-def distributed_prefix_sum(
-    df: DataFrame,
-    *,
-    order_col: str,
-    value_col: str,
-    out_col: str,
-    num_partitions: int | None = None,
-    exclusive: bool = True,
-) -> DataFrame:
-    """Fully distributed global prefix sum over ``order_col`` order —
-    the two-pass shape (functions.ranks, VERDICT-r1-hardened) that
-    replaces a global ordered window: within-partition prefix sums
-    after a ``repartitionByRange`` on the order key, then
-    cross-partition offsets derived from per-partition totals (one row
-    per partition — bounded by parallelism, never corpus size) and
-    broadcast back.  ``exclusive=True`` yields the sum of STRICTLY
-    earlier rows (0 for the first); ``False`` includes the row itself.
-    No global ordered window ever sees the full corpus."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    v = df.repartitionByRange(
-        num_partitions, F.col(order_col).asc()
-    ).withColumn("__pid", F.spark_partition_id())
-    # PIN the partition assignment: v feeds two branches (the
-    # within-partition window and the per-partition totals), and a
-    # re-executed range exchange may sample DIFFERENT boundaries (the
-    # sampler sees the nondeterministic row order of the upstream
-    # shuffle), silently shifting rows between __pid values across
-    # branches — offsets then disagree with the windowed sums by the
-    # straddling rows' weight (caught by the sf1 certification sweep:
-    # cum_unique_grams off by 26 over one partition stretch).  Eager
-    # localCheckpoint materializes one assignment and truncates the
-    # lineage; the input here is one row per order key (bounded by
-    # group count, not corpus size).
-    v = v.localCheckpoint(eager=True)
-    hi = -1 if exclusive else 0
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy(F.col(order_col).asc())
-        .rowsBetween(Window.unboundedPreceding, hi)
-    )
-    v = v.withColumn(
-        "__in", F.coalesce(F.sum(value_col).over(w_in), F.lit(0))
-    )
-    totals = v.groupBy("__pid").agg(F.sum(value_col).alias("__tot"))
-    w_t = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__tot").over(w_t), F.lit(0)).alias("__off"),
-    )
-    return (
-        v.join(F.broadcast(offsets), "__pid")
-        .withColumn(
-            out_col, (F.col("__off") + F.col("__in")).cast("long")
-        )
-        .drop("__pid", "__in", "__off")
-    )
-
-
-def pack_sequences(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seq_tokens: int = 512,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """GPT-style sequence packing: documents are conceptually
-    concatenated in ``id_col`` order and split into ``seq_tokens``-sized
-    training sequences; each document learns which sequences it lands in
-    (``first_seq``/``last_seq``) and at what offset.
-
-    The global token prefix sum uses the same fully distributed two-pass
-    shape as functions.ranks (VERDICT-r1-hardened): within-partition
-    prefix sums after a ``repartitionByRange`` on the order key, then
-    cross-partition offsets derived from per-partition totals (one row
-    per partition — bounded by parallelism, never by corpus size) and
-    broadcast back.  No global ordered window ever sees the full corpus.
-    """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    n_tok = F.size(words(F.col(text_col))).cast("long")
-    docs = df.select(F.col(id_col), n_tok.alias("n_tokens"))
-
-    packed = distributed_prefix_sum(
-        docs,
-        order_col=id_col,
-        value_col="n_tokens",
-        out_col="start_tok",
-        num_partitions=num_partitions,
-        exclusive=True,
-    ).select(id_col, "n_tokens", "start_tok")
-    return packed.select(
-        id_col,
-        "n_tokens",
-        "start_tok",
-        (F.col("start_tok") / seq_tokens).cast("long").alias("first_seq"),
-        ((F.col("start_tok") + F.col("n_tokens") - 1) / seq_tokens)
-        .cast("long")
-        .alias("last_seq"),
-        (F.col("start_tok") % seq_tokens).cast("long").alias("seq_offset"),
     )
 
 

@@ -682,13 +682,13 @@ def substring_containment(
     # the shingle table, the container length gate, and both verify
     # text joins) — materialize it ONCE.  Without the checkpoint each
     # consumer re-ran the caller's upstream plan plus the normalize
-    # regex and tokenize per branch (measured at sf0.1 in
-    # curation_pipeline_v2: the final save re-derived this chain four
-    # times; at scale that is four corpus passes for one).  The token
-    # array itself is NOT stored — it inflates the checkpoint by the
-    # full token count per doc; the one consumer that needs tokens
-    # (the shingle branch, itself checkpointed below when capped)
-    # re-splits the already-normalized text.
+    # regex and tokenize per branch (measured at sf0.1: the final save
+    # re-derived this chain four times; at scale that is four corpus
+    # passes for one).  The token array itself is NOT stored — it
+    # inflates the checkpoint by the full token count per doc; the one
+    # consumer that needs tokens (the shingle branch, itself
+    # checkpointed below when capped) re-splits the already-normalized
+    # text.
     sized = (
         df.select(F.col(id_col), norm.alias("__norm"))
         .select(
@@ -767,7 +767,7 @@ def substring_containment(
     # table must not be used here: a true pair whose last shingle sat
     # in an over-cap bucket would be lost).  Anchor-only candidates
     # are dominated by hot first-trigrams (boilerplate openers);
-    # measured sf0.1 curation_pipeline_v2: 38 598 length-gated
+    # measured at sf0.1: 38 598 length-gated
     # candidates, 981 verified — this gate removes ~97% of the
     # text-attach shuffle and contains() work on 16-byte rows.
     last_h = sized.where(F.col("__ntoks") >= n).select(
@@ -815,8 +815,7 @@ def duplicate_spans(
     occurrence count over ALL (doc, position) slots — self-repeats
     included — reaches ``min_count`` marks its token range duplicated;
     per doc, overlapping or adjacent marked ranges merge into maximal
-    spans.  Complements :func:`~credit_card_etl_pipeline_spark.dataops.
-    curate.dedup_corpus_chunks`: strided chunks only catch repeats
+    spans.  Unlike chunk-level dedup, which only catches repeats
     aligned to chunk boundaries, sliding windows catch a repeated
     k-token run at ANY offset.
 

@@ -117,10 +117,10 @@ def with_pct_rank(
     # the totals branch: a re-executed range exchange can sample
     # different boundaries (upstream shuffle row order is
     # nondeterministic), giving the two branches inconsistent __pid
-    # near boundaries — the exact bug the sf1 sweep caught in
-    # distributed_prefix_sum (dataops/curate.py).  One eager
-    # localCheckpoint of the distinct-value table (bounded by group
-    # count) makes the assignment a fact instead of a recomputation.
+    # near boundaries (an sf1 sweep caught exactly this in a two-pass
+    # prefix sum).  One eager localCheckpoint of the distinct-value
+    # table (bounded by group count) makes the assignment a fact
+    # instead of a recomputation.
     v = v.localCheckpoint(eager=True)
     w_in = (
         Window.partitionBy("__pid")

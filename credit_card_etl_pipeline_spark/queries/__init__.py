@@ -181,8 +181,6 @@ def scoped_pct_rank_sql(col: str, asc: bool) -> str:
 # Import query families (registration side effects).
 from . import (  # noqa: E402,F401
     anonymize_queries,
-    bpe_queries,
-    curate_queries,
     dataops_queries,
     etl_queries,
     events_queries,

@@ -2502,8 +2502,8 @@ def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     2022): every 8-token window repeated anywhere in the corpus — at
     ANY offset, self-repeats included — marks its range, and marked
     ranges merge per doc into maximal duplicated spans.  Catches the
-    unaligned repeats that strided chunk dedup (dedup_corpus_chunks)
-    and whole/near-doc dedup both miss.  Window slots shuffle as 60-bit
+    unaligned repeats that strided chunk dedup and whole/near-doc
+    dedup both miss.  Window slots shuffle as 60-bit
     hashes; the per-doc merge is one gaps-and-islands window — no pair
     join anywhere (dataops/dedup.py:duplicate_spans)."""
     return dd.duplicate_spans(corpus(spark, sf_dir), k=_SPAN_K)
@@ -4270,8 +4270,7 @@ def text_greedy_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation, greedy-decoding repetition loops included).  The
     model fit is distributed (one gram shuffle, then a per-prev argmax
     window); the {_GEN_STEPS}-step decode loop collects ONE ROW per
-    step off the ranked-continuation table — the bounded-driver-state
-    iterative pattern shared with the BPE learner."""
+    step off the ranked-continuation table."""
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents")

@@ -959,8 +959,7 @@ FROM shares GROUP BY day
 def events_daily_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral drift monitoring: each day's event-type mix compared
     to the corpus-wide baseline as an exact total-variation distance in
-    ppm — the ops-side counterpart of corpus_drift_tv (which watches
-    the TEXT distribution; this watches the BEHAVIOR distribution).
+    ppm.
     One fact-sized aggregation; everything after operates on the
     bounded (days × types) grid with 1-row broadcast totals, so the
     anomaly ledger costs one shuffle at any scale.  Absent types count

@@ -1,291 +1,10 @@
-"""Unit tests for the curation operators (dataops.curate): PII
-scrubbing order/edge cases, repetition-signal edges, decontamination
-overlap, and chunk boundary arithmetic."""
+"""Unit tests for the DSIR operators (dataops.curate): exact integer
+weights on a hand-computed case, short-document handling, and the
+fit/score split agreeing with the fused batch path."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from credit_card_etl_pipeline_spark.dataops import curate as cu
-
-
-def _one_text(spark, text):
-    return spark.createDataFrame([(1, text)], "doc_id long, text string")
-
-
-def test_pii_scrub_masks_all_kinds(spark):
-    text = (
-        "mail a.user+x@ex-ample.co.uk card 4111-1111-1111-2222 "
-        "call 555-123-4567 from 192.168.0.1 ok"
-    )
-    row = (
-        _one_text(spark, text)
-        .select(cu.pii_scrub(F.col("text")).alias("t"))
-        .first()
-    )
-    assert row["t"] == "mail <EMAIL> card <CARD> call <PHONE> from <IP> ok"
-
-
-def test_pii_card_consumed_before_phone(spark):
-    # a 4-4-4-4 run must become ONE card token, never a partial phone
-    row = (
-        _one_text(spark, "x 1234 5678 9012 3456 y")
-        .select(cu.pii_scrub(F.col("text")).alias("t"))
-        .first()
-    )
-    assert row["t"] == "x <CARD> y"
-
-
-def test_pii_counts(spark):
-    text = "a@b.co and c@d.io but 555-123-4567"
-    counts = cu.pii_counts(F.col("text"))
-    row = (
-        _one_text(spark, text)
-        .select(*[c.alias(k) for k, c in counts.items()])
-        .first()
-    )
-    assert row["email"] == 2
-    assert row["phone"] == 1
-    assert row["card"] == 0
-    assert row["ip"] == 0
-
-
-def test_repetition_signals_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "a b a b a"), (2, "solo")], "doc_id long, text string"
-    )
-    rows = {r["doc_id"]: r for r in cu.repetition_signals(df).collect()}
-    r1 = rows[1]
-    assert (r1["n_words"], r1["n_distinct_words"], r1["top_words_n"]) == (5, 2, 3)
-    # bigrams: "a b","b a","a b","b a" -> 4 total, 2 distinct, top 2
-    assert (r1["n_bigrams"], r1["n_distinct_bigrams"], r1["top_bigrams_n"]) == (
-        4, 2, 2,
-    )
-    assert r1["dup_word_frac"] == (5 - 2) / 5
-    r2 = rows[2]
-    assert (r2["n_words"], r2["n_bigrams"]) == (1, 0)
-    assert r2["dup_bigram_frac"] == 0.0
-
-
-def test_benchmark_overlap(spark):
-    train = spark.createDataFrame(
-        [(1, "the quick brown fox jumps"), (2, "totally unrelated words here")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(9, "quick brown fox runs")], "doc_id long, text string"
-    )
-    rows = {r["doc_id"]: r for r in cu.benchmark_overlap(train, bench).collect()}
-    # doc 1 shares the shingle "quick brown fox"; doc 2 shares none
-    assert rows[1]["n_shared"] == 1 and rows[1]["n_shingles"] == 3
-    assert rows[2]["n_shared"] == 0
-    assert rows[1]["overlap_frac"] == 1 / 3
-
-
-def test_chunking_boundaries(spark):
-    n = 40
-    text = " ".join(f"t{i}" for i in range(1, n + 1))
-    rows = sorted(
-        cu.chunk_documents(
-            _one_text(spark, text), chunk_tokens=32, overlap=8
-        ).collect(),
-        key=lambda r: r["chunk_index"],
-    )
-    # starts at 1 and 25: chunk0 = t1..t32, chunk1 = t25..t40 (16 toks)
-    assert [r["chunk_start"] for r in rows] == [1, 25]
-    assert [r["n_chunk_tokens"] for r in rows] == [32, 16]
-    assert rows[0]["chunk_text"].startswith("t1 t2 ") and rows[0][
-        "chunk_text"
-    ].endswith(" t32")
-    assert rows[1]["chunk_text"] == " ".join(f"t{i}" for i in range(25, 41))
-
-
-def test_chunking_short_doc_single_chunk(spark):
-    rows = cu.chunk_documents(_one_text(spark, "a b c")).collect()
-    assert len(rows) == 1
-    assert rows[0]["n_chunk_tokens"] == 3 and rows[0]["chunk_text"] == "a b c"
-
-
-def test_weighted_mix_epochs(spark):
-    df = spark.createDataFrame(
-        [(i, "en" if i % 2 == 0 else "zh") for i in range(100)],
-        "doc_id long, lang string",
-    )
-    out = cu.weighted_mix(df, {"en": 20000, "zh": 0}, group_col="lang")
-    rows = out.collect()
-    # en docs appear exactly twice (2.0 epochs), zh docs are dropped
-    assert all(r["lang"] == "en" for r in rows)
-    assert len(rows) == 100
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append(r["epoch"])
-    assert all(sorted(v) == [1, 2] for v in per_doc.values())
-
-
-def test_weighted_mix_fractional_deterministic(spark):
-    df = spark.createDataFrame(
-        [(i, "x") for i in range(1000)], "doc_id long, lang string"
-    )
-    out1 = cu.weighted_mix(df, {"x": 5000}, group_col="lang")
-    n1 = out1.count()
-    n2 = cu.weighted_mix(df, {"x": 5000}, group_col="lang").count()
-    assert n1 == n2  # md5-stream determinism, no RNG
-    assert 350 < n1 < 650  # ~half kept
-
-
-def test_pack_sequences_contiguous(spark):
-    df = spark.createDataFrame(
-        [(i, " ".join(["w"] * (10 + i))) for i in range(1, 21)],
-        "doc_id long, text string",
-    )
-    rows = sorted(
-        cu.pack_sequences(df, seq_tokens=64).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    # starts are the exclusive prefix sum in doc_id order — contiguous
-    pos = 0
-    for r in rows:
-        assert r["start_tok"] == pos
-        assert r["first_seq"] == pos // 64
-        assert r["last_seq"] == (pos + r["n_tokens"] - 1) // 64
-        assert r["seq_offset"] == pos % 64
-        pos += r["n_tokens"]
-    assert pos == sum(10 + i for i in range(1, 21))
-
-
-def test_pack_sequences_matches_single_window(spark):
-    # the two-pass distributed prefix sum must equal the naive global
-    # cumulative sum regardless of partitioning
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, " ".join(["t"] * (1 + (i * 7) % 13))) for i in range(500)],
-        "doc_id long, text string",
-    ).repartition(16)
-    got = {
-        r["doc_id"]: r["start_tok"]
-        for r in cu.pack_sequences(df, seq_tokens=32).collect()
-    }
-    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
-    want = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id",
-            F.coalesce(
-                F.sum(F.size(F.split(F.col("text"), " "))).over(w), F.lit(0)
-            ).alias("s"),
-        ).collect()
-    }
-    assert got == want
-
-
-def test_remove_boilerplate_lines(spark):
-    from credit_card_etl_pipeline_spark.dataops.curate import (
-        remove_boilerplate_lines,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "unique alpha\nFOOTER\nunique beta"),
-            (2, "FOOTER\nunique gamma"),
-            (3, "unique delta\nFOOTER"),
-            (4, "FOOTER"),              # fully boilerplate -> empty, kept
-            (5, "no footer here"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: (r["n_lines"], r["n_kept"], r["clean_text"])
-        for r in remove_boilerplate_lines(docs, min_docs=3).collect()
-    }
-    assert out[1] == (3, 2, "unique alpha\nunique beta")
-    assert out[2] == (2, 1, "unique gamma")
-    assert out[3] == (2, 1, "unique delta")
-    assert out[4] == (1, 0, "")
-    assert out[5] == (1, 1, "no footer here")
-
-
-def test_remove_boilerplate_null_text(spark):
-    """NULL text keeps the join-shape contract: n_lines follows
-    size(split(NULL)) — NULL under SQL-standard null propagation
-    (spark.sql.legacy.sizeOfNull=false; the legacy -1 sentinel
-    poisoned every downstream ratio, r10 hostile corpus) — with
-    n_kept 0 and clean_text '' from the left-join coalesce."""
-    from credit_card_etl_pipeline_spark.dataops.curate import (
-        remove_boilerplate_lines,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a\nb"), (2, None)], "doc_id long, text string"
-    )
-    out = {
-        r["doc_id"]: (r["n_lines"], r["n_kept"], r["clean_text"])
-        for r in remove_boilerplate_lines(docs, min_docs=2).collect()
-    }
-    assert out[2] == (None, 0, "")
-    assert out[1] == (2, 2, "a\nb")
-
-
-def test_dedup_corpus_chunks_keeps_first_copy(spark):
-    # doc 1 and doc 2 share an identical 4-token chunk; doc 1's copy
-    # (lower doc_id) must survive, doc 2's must not
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d x y z w"),
-            (2, "a b c d p q r s"),
-            (3, "p q r s a b c d"),
-        ],
-        "doc_id long, text string",
-    )
-    kept = cu.dedup_corpus_chunks(df, chunk_tokens=4)
-    rows = {(r.doc_id, r.chunk_index): r.chunk_text for r in kept.collect()}
-    assert rows[(1, 0)] == "a b c d"
-    assert rows[(1, 1)] == "x y z w"
-    # doc 2 keeps only its second chunk ("p q r s" — first occurrence)
-    assert (2, 0) not in rows
-    assert rows[(2, 1)] == "p q r s"
-    # doc 3 keeps nothing: both its chunks already seen earlier
-    assert not any(d == 3 for d, _ in rows)
-
-
-def test_dedup_corpus_chunks_tokens_partition_exactly(spark):
-    # non-overlapping chunks: token counts of a doc's own chunks sum
-    # to its token count when nothing is deduped
-    df = spark.createDataFrame(
-        [(7, "t0 t1 t2 t3 t4 t5 t6")], "doc_id long, text string"
-    )
-    kept = cu.dedup_corpus_chunks(df, chunk_tokens=3)
-    sizes = sorted(r.n_chunk_tokens for r in kept.collect())
-    assert sizes == [1, 3, 3]
-
-
-def test_lm_typicality_rare_bigram_scores_higher(spark):
-    # "a a" appears 8x, "a z" once: the doc carrying the rare bigram
-    # must come out more surprising per-bigram
-    common = " ".join(["a"] * 9)          # 8 occurrences of "a a"
-    df = spark.createDataFrame(
-        [(1, common), (2, "a z")], "doc_id long, text string"
-    )
-    out = {r.doc_id: r for r in cu.lm_typicality(df).collect()}
-    assert out[1].n_bigrams == 8
-    assert out[2].n_bigrams == 1
-    assert (
-        out[2].avg_surprisal_milli > out[1].avg_surprisal_milli
-    )
-    # exact check: T=9, c("a a")=8, c("a z")=1
-    # bits("a a") = floor(log2 9) - floor(log2 8) = 3 - 3 = 0
-    # bits("a z") = 3 - 0 = 3
-    assert out[1].surprisal_bits == 0
-    assert out[2].surprisal_bits == 3
-
-
-def test_lm_typicality_short_docs_absent(spark):
-    df = spark.createDataFrame(
-        [(1, "solo"), (2, ""), (3, "x y")], "doc_id long, text string"
-    )
-    ids = {r.doc_id for r in cu.lm_typicality(df).collect()}
-    assert ids == {3}
 
 
 def test_dsir_weights_exact_hand_case(spark):
@@ -328,35 +47,6 @@ def test_dsir_weights_short_docs_absent(spark):
     assert ids == {3}
 
 
-def test_gram_drift_identical_snapshots_zero_tv(spark):
-    df = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon") for i in range(4)],
-        "doc_id long, text string",
-    )
-    rows = cu.gram_distribution_drift(
-        df.select("text"), df.select("text")
-    ).collect()
-    assert rows and all(r.tv_ppm == 0 and r.delta_ppm == 0 for r in rows)
-    # counts equal on every bucket
-    assert all(r.c_ref == r.c_new for r in rows)
-
-
-def test_gram_drift_detects_planted_shift_and_guards_empty(spark):
-    ref = spark.createDataFrame(
-        [(1, "aa bb aa bb aa bb")], "doc_id long, text string"
-    ).select("text")
-    new = spark.createDataFrame(
-        [(1, "cc dd cc dd cc dd")], "doc_id long, text string"
-    ).select("text")
-    rows = cu.gram_distribution_drift(ref, new).collect()
-    # disjoint vocabularies: TV = 1.0 (1e6 ppm, up to truncation)
-    assert rows[0].tv_ppm >= 999_990
-    empty = ref.where("text = 'nope'")
-    rows2 = cu.gram_distribution_drift(ref, empty).collect()
-    # zero-total side guarded: shares read 0, no divide error
-    assert all(r.share_new_ppm == 0 for r in rows2)
-
-
 def test_dsir_fit_score_matches_fused_weights(spark):
     from pyspark.sql import functions as F
 
@@ -389,7 +79,7 @@ def test_dsir_fit_score_matches_fused_weights(spark):
 
 def test_dsir_totals_equal_model_column_sums(spark):
     # r11 optimization guard: the scalar totals are now computed
-    # straight off the gram stream (dsir_weights / lm_typicality) or a
+    # straight off the gram stream (dsir_weights) or a
     # checkpointed model (dsir_fit) instead of re-aggregating the model
     # plan — this pins the invariant the rewrite relies on:
     # tr == Σcr and tt == Σct over the fitted buckets.
@@ -409,67 +99,3 @@ def test_dsir_totals_equal_model_column_sums(spark):
     assert all(r.tr == tr and r.tt == tt for r in rows)
     assert tr == sum(r.cr for r in rows) == 8  # 4 + 4 bigrams
     assert tt == sum(r.ct for r in rows) == 4  # the en doc's bigrams
-
-
-def test_token_budget_quotas_sum_exactly(spark):
-    # largest-remainder property: per-source quotas sum to the budget
-    # exactly, and the greedy fill never exceeds a source's quota.
-    from credit_card_etl_pipeline_spark import queries as q
-
-    out = q.QUERIES["corpus_token_budget_fill"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    quotas = {}
-    for r in out:
-        quotas[r.source] = r.quota_tokens
-    from credit_card_etl_pipeline_spark.queries.curate_queries import (
-        _BUDGET_TOKENS,
-    )
-
-    assert sum(quotas.values()) == _BUDGET_TOKENS
-    for r in out:
-        if r.selected:
-            assert r.cum_tokens <= r.quota_tokens
-
-
-def test_pii_engine_lookbehind_equals_oracle_alternation(spark):
-    """PII_PATTERNS_ENGINE's email lookbehind must replace and count
-    EXACTLY like the RE2 alternation the oracles run — on the
-    boundary-adversarial cases: over-long RFC-invalid local parts
-    (the partial-redaction leak the guard closes), class-char and
-    non-class-char left contexts, string start, adjacent emails with
-    zero/one separators, and greedy-TLD absorption."""
-    cases = [
-        "a@b.co",                             # string start
-        " a@b.co",                            # non-class boundary
-        "+a@b.co",                            # class-char boundary: no match
-        "x" * 100 + "@example.com end",       # over-long local: no match
-        "a@b.cc x@y.zz",                      # one-separator adjacency
-        "a@b.ccx@y.zz",                       # zero-separator (greedy TLD)
-        "a@b.cc+x@y.zz",                      # class-char separator
-        "(a@b.co) [c@d.io] {e@f.gg}",         # punctuation boundaries
-        "mail:user.name+tag@sub.domain-x.org!",
-        "@@a@b.co@@",
-        "éa@b.co",                       # non-ASCII boundary char
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(cases)], "doc_id long, text string"
-    )
-    # oracle-form (RE2 alternation, consuming group) applied via Spark
-    kind, oracle_pat, oracle_tok = cu.PII_PATTERNS[0]
-    assert kind == "email" and "(^|" in oracle_pat
-    out = df.select(
-        "doc_id",
-        cu.pii_scrub(F.col("text")).alias("engine"),
-        F.regexp_replace("text", oracle_pat, oracle_tok).alias("oracle_repl"),
-        cu.pii_counts(F.col("text"))["email"].alias("engine_n"),
-        F.size(F.regexp_extract_all("text", F.lit(oracle_pat), 0))
-        .cast("long")
-        .alias("oracle_n"),
-    ).collect()
-    for r in out:
-        # scrub applies all four patterns; email is the only kind in
-        # these cases, so the oracle-form replace must agree exactly
-        assert r["engine"] == r["oracle_repl"], r
-        assert r["engine_n"] == r["oracle_n"], r

@@ -84,25 +84,23 @@ def test_library_edit_invalidates_digest(tmp_path):
 
 
 def test_real_query_closure_covers_operator_libs():
-    """The real registry: a curate-family query's closure must include
-    the dataops library it delegates to, and session.py (pinned confs
-    are behavior)."""
+    """The real registry: a merchant-family query's closure must include
+    the operator libraries it delegates to."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     qmod = os.path.join(
         repo, "credit_card_etl_pipeline_spark", "queries",
-        "curate_queries.py",
+        "merchant_queries.py",
     )
     co._DEPS_DIGEST_CACHE.clear()
     # reconstruct the walk's visited set by running it and reading the
     # cache key's digest twice with a probe edit is overkill here —
     # instead assert via the internal walk primitives
     deps = co._module_imports(
-        qmod, "credit_card_etl_pipeline_spark.queries.curate_queries",
+        qmod, "credit_card_etl_pipeline_spark.queries.merchant_queries",
         repo, co._ENGINE_PKG,
     )
-    assert "credit_card_etl_pipeline_spark.dataops.curate" in deps
-    assert "credit_card_etl_pipeline_spark.dataops.dedup" in deps
-    assert "credit_card_etl_pipeline_spark.functions.hashing" in deps
+    assert "credit_card_etl_pipeline_spark.operators.merchants" in deps
+    assert "credit_card_etl_pipeline_spark.operators.rfm" in deps
 
 
 def test_fingerprint_moves_with_library(tmp_path, monkeypatch):

@@ -7,11 +7,12 @@ registered query and assert it stays clean."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.plan_audit import BNLJ_ALLOWED, audit_one  # noqa: E402
 

@@ -77,60 +77,6 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "o_orderpriority" not in plan.split("ReadSchema")[1][:200]
 
 
-def test_decontamination_broadcasts_benchmark(spark):
-    # the benchmark shingle set must be the broadcast side — the corpus
-    # is never sort-merge-joined against the (tiny) eval set
-    from credit_card_etl_pipeline_spark.queries.curate_queries import (
-        decontaminate_vs_benchmark,
-    )
-
-    plan = _plan(decontaminate_vs_benchmark(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def _strip_spread_guard(body: str) -> str:
-    # queries.load() adds ONE parallelism-guard exchange for the
-    # single-row-group local corpus; since r12 it hash-partitions on
-    # the table's natural key (deterministic, no sort-before-
-    # repartition) instead of round-robin.  The guard is identifiable
-    # by its REPARTITION_BY_NUM origin tag — strip exactly those so
-    # the pins below catch any OTHER (planner-introduced) shuffle.
-    import re as _re
-
-    return _re.sub(
-        r"hashpartitioning(\([^)]*\), REPARTITION_BY_NUM)",
-        r"SPREADGUARD\1",
-        body,
-    )
-
-
-def test_chunking_is_shuffle_free(spark):
-    # chunking is map-only: the only Exchange allowed is the
-    # parallelism guard queries.load() adds for the single-row-group
-    # local corpus — no key shuffle introduced by the chunking itself
-    from credit_card_etl_pipeline_spark.queries.curate_queries import (
-        chunk_context_windows,
-    )
-
-    plan = _plan(chunk_context_windows(spark, SF))
-    body = _strip_spread_guard(plan.split("== Physical Plan ==")[-1])
-    assert "hashpartitioning" not in body.lower()
-    assert "rangepartitioning" not in body.lower()
-
-
-def test_pii_scrub_is_map_only(spark):
-    from credit_card_etl_pipeline_spark.queries.curate_queries import (
-        pii_scrub_documents,
-    )
-
-    plan = _plan(pii_scrub_documents(spark, SF))
-    body = _strip_spread_guard(plan.split("== Physical Plan ==")[-1])
-    # no key shuffle (the load() spread guard is allowed)
-    assert "hashpartitioning" not in body.lower()
-    assert "rangepartitioning" not in body.lower()
-
-
 def test_partitioned_warehouse_prunes_partitions(spark, tmp_path):
     # the month-partitioned warehouse must answer single-month queries
     # by reading ONE partition directory (PartitionFilters in the scan)
@@ -265,7 +211,6 @@ def test_r7_operator_plans_broadcast_only(spark):
     from credit_card_etl_pipeline_spark import queries as q
 
     for name in (
-        "dsir_importance_weights",
         "ann_binary_hamming",
         "embeddings_outlier_prune",
     ):
@@ -288,16 +233,13 @@ def test_binary_hamming_coarse_stage_is_codegen(spark):
 
 
 def test_r7_late_additions_no_smj_or_cartesian(spark):
-    # drift / budget / novelty / ABTT: bounded-side joins must ride
+    # drift / ABTT: bounded-side joins must ride
     # broadcasts (BNLJ for the 1-row totals is fine); never a
     # SortMergeJoin or an unbroadcast CartesianProduct.
     from credit_card_etl_pipeline_spark import queries as q
 
     for name in (
-        "corpus_drift_tv",
         "events_daily_drift",
-        "corpus_token_budget_fill",
-        "corpus_novelty_curve",
         "ann_abtt_corrected_topk",
     ):
         plan = _plan(q.QUERIES[name](spark, SF))
@@ -332,20 +274,6 @@ def test_top_smj_queries_join_strategy_pinned(spark):
         # is one scan with no join at all.  A join reappearing here means
         # header handling left the decode.
         "ingest_statement_files": (0, 0),
-        # LSH-bucket / containment self-joins: both sides are the doc
-        # corpus — SMJ is the only shape that survives 100 TB.
-        # r11 INTENTIONAL change (substring_containment checkpoint +
-        # last-shingle gate): the normalized view and the shingle table
-        # are localCheckpointed once, so (a) duplicated join subtrees
-        # collapsed (11 join nodes → 9) and (b) the checkpointed scans
-        # carry no size stats, so the corpus-derived sides that
-        # previously LOOKED broadcastable at sf0.001 plan statically as
-        # SMJ — the scale-safe default, since every one of them (canon
-        # set, containment verdicts, shingle freq, text attach) grows
-        # with the corpus; AQE re-broadcasts genuinely small sides at
-        # runtime.  The 1 remaining static BHJ is the boilerplate
-        # min-docs threshold.
-        "curation_pipeline_v2": (8, 1),
         # verdicts ride one applyInPandas per leaf (r8); sub-level
         # assignment moved from a broadcast codebook join + per-vector
         # window to a per-cell numpy batch (r9, _assign_subcells_

@@ -1,13 +1,11 @@
 """Round-7 property tests: randomized invariants for HLL merge
-losslessness, sequence packing, and the adaptive rank strategies.
+losslessness and the adaptive rank strategies.
 Each hypothesis example drives a real Spark job, so example counts
 stay small — the properties carry the value:
 
 * HLL: merge(per-segment registers) == registers(concatenated stream)
   for ANY segmentation (the mergeability claim the 100 TB one-pass
   story rests on);
-* pack_sequences: the distributed prefix sum partitions [0, total)
-  exactly, in id order, no gaps or overlaps;
 * two-pass distributed rank == single-window rank == pandas, under
   random ties/nulls and partition counts.
 """
@@ -20,7 +18,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from credit_card_etl_pipeline_spark.dataops.curate import pack_sequences
 from credit_card_etl_pipeline_spark.dataops.sketches import (
     hll_merge,
     hll_registers,
@@ -63,46 +60,6 @@ def test_hll_merge_equals_registers_of_concatenation(spark, rows):
         for r in hll_merge(hll_registers_by(df, "val", "seg")).collect()
     }
     assert whole == merged
-
-
-# ------------------------------------------------------------------
-# Sequence packing: exact partition of the token axis
-# ------------------------------------------------------------------
-
-_docs = st.lists(
-    st.integers(min_value=0, max_value=30),  # words per doc
-    min_size=1,
-    max_size=20,
-)
-
-
-@_slow
-@given(_docs, st.integers(min_value=1, max_value=4))
-def test_pack_sequences_prefix_sum_partitions_token_axis(
-    spark, word_counts, num_partitions
-):
-    pdf = pd.DataFrame(
-        {
-            "doc_id": range(len(word_counts)),
-            "text": [" ".join(["w"] * n) for n in word_counts],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = sorted(
-        pack_sequences(
-            df, seq_tokens=7, num_partitions=num_partitions
-        ).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    running = 0
-    for r, n in zip(out, word_counts):
-        # words() may count differently from n only if text is empty
-        assert r["start_tok"] == running, (r, running)
-        running += r["n_tokens"]
-        if r["n_tokens"] > 0:
-            assert r["first_seq"] == r["start_tok"] // 7
-            assert r["last_seq"] == (r["start_tok"] + r["n_tokens"] - 1) // 7
-            assert r["seq_offset"] == r["start_tok"] % 7
 
 
 # ------------------------------------------------------------------

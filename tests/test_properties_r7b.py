@@ -1,14 +1,8 @@
-"""Property tests for the round-7 curation-shape rewrites.
-
-* remove_boilerplate_lines (map-only rebuild via F.filter against a
-  broadcast hot-line array) == a direct pandas reference model, for
-  random corpora with random line sharing — order preservation,
-  duplicate-kept-line preservation, all-boilerplate docs come back
-  empty with the right n_lines/n_kept;
-* substring_containment finds EVERY planted containment (the anchor
-  guarantee: a contained doc's first n-gram is necessarily one of the
-  container's shingles) and its survivors all verify (no false
-  positives), under random texts and planted snippet/mirror structure.
+"""Property test for the round-7 containment rewrite:
+substring_containment finds EVERY planted containment (the anchor
+guarantee: a contained doc's first n-gram is necessarily one of the
+container's shingles) and its survivors all verify (no false
+positives), under random texts and planted snippet/mirror structure.
 
 Each hypothesis example drives a real Spark job — example counts stay
 small; the invariants carry the value.
@@ -16,15 +10,11 @@ small; the invariants carry the value.
 
 from __future__ import annotations
 
-import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from credit_card_etl_pipeline_spark.dataops.dedup import (
     substring_containment,
-)
-from credit_card_etl_pipeline_spark.dataops.curate import (
-    remove_boilerplate_lines,
 )
 from credit_card_etl_pipeline_spark.dataops.text import normalize_text  # noqa: F401
 
@@ -33,65 +23,6 @@ _slow = settings(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-
-# a tiny vocabulary of lines so random corpora actually SHARE lines
-_LINES = ["alpha beta", "gamma", "delta epsilon zeta", "eta", "theta iota"]
-
-_corpus = st.lists(
-    st.lists(st.integers(min_value=0, max_value=len(_LINES) - 1),
-             min_size=1, max_size=6),
-    min_size=1,
-    max_size=12,
-)
-
-
-def _reference_boilerplate(docs: list[list[int]], min_docs: int):
-    """Direct pandas model of the operator's contract."""
-    from collections import Counter
-
-    seen = Counter()
-    for d in docs:
-        for li in set(d):
-            seen[li] += 1
-    hot = {li for li, n in seen.items() if n >= min_docs}
-    out = []
-    for i, d in enumerate(docs):
-        kept = [li for li in d if li not in hot]
-        out.append(
-            (
-                i,
-                len(d),
-                len(kept),
-                "\n".join(_LINES[li] for li in kept),
-            )
-        )
-    return pd.DataFrame(
-        out, columns=["doc_id", "n_lines", "n_kept", "clean_text"]
-    )
-
-
-@_slow
-@given(_corpus, st.integers(min_value=1, max_value=6))
-def test_boilerplate_rebuild_matches_reference(spark, docs, min_docs):
-    rows = [
-        (i, "\n".join(_LINES[li] for li in d)) for i, d in enumerate(docs)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = (
-        remove_boilerplate_lines(df, min_docs=min_docs)
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    want = _reference_boilerplate(docs, min_docs)
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True).astype(
-            {"doc_id": "int64", "n_lines": "int64", "n_kept": "int64"}
-        ),
-        want.astype(
-            {"doc_id": "int64", "n_lines": "int64", "n_kept": "int64"}
-        ),
-    )
-
 
 _WORDS = ["ant", "bee", "cat", "dog", "elk", "fox", "gnu", "hen"]
 

@@ -1,7 +1,7 @@
 """The registry carries the statement → warehouse → RFM surface, each
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
-bucketing, Python-Data-Source, TPC-H/OLAP, skew or streaming queries
-that were cut from it."""
+bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation or
+BPE queries that were cut from it."""
 
 from __future__ import annotations
 
@@ -70,6 +70,16 @@ REMOVED_QUERIES = {
     "stream_foreachbatch_upsert", "stream_bloom_corpus_filter",
     "stream_dedup_within_watermark", "stream_hll_windowed",
     "stream_dsir_filter", "stream_daily_drift", "stream_image_dhash",
+    # LLM-corpus curation and BPE tokenizer queries
+    "pii_scrub_documents", "text_repetition_signals",
+    "decontaminate_vs_benchmark", "chunk_context_windows",
+    "curate_chunk_dedup", "curate_lm_typicality",
+    "dsir_importance_weights", "corpus_drift_tv", "training_mix_sample",
+    "corpus_token_budget_fill", "pack_training_sequences",
+    "curation_pipeline", "quality_filter_verdicts",
+    "remove_boilerplate_lines", "curation_pipeline_v2",
+    "curation_pipeline_v3", "corpus_novelty_curve", "bpe_learn_merges",
+    "bpe_tokenize_top_words",
 }
 
 

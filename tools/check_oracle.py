@@ -92,7 +92,7 @@ def _module_imports(
     """Statically parse ``mod_file`` and return the dotted names of
     every ``pkg``-internal module it imports (absolute or relative).
     ``from X import name`` also probes ``X.name`` as a submodule so
-    ``from . import curate_queries`` resolves."""
+    ``from . import rfm_queries`` resolves."""
     import ast
 
     try:

@@ -70,16 +70,11 @@ BNLJ_ALLOWED: dict[str, str] = {
     "sketch_hll_intersection": "1-row register states (inclusion-exclusion)",
     "sketch_heavy_hitters": "bounded CMS row state + 1-row total",
     "bloom_semi_join_pushdown": "1-row Bloom bitmap aggregate",
-    # Curation/DSIR: 1-row corpus totals / fitted model scalars
-    # (curate.py:325,425,469,551,571 — all F.broadcast'ed).
-    "curate_lm_typicality": "1-row corpus log-prob totals",
-    "remove_boilerplate_lines": "1-row hot-line array (collect_list agg)",
-    "dsir_importance_weights": "1-row gram totals per model",
-    "corpus_drift_tv": "1-row per-side totals + 1-row TV scalar",
-    "corpus_token_budget_fill": "1-row budget threshold",
+    # Corpus statistics: 1-row corpus totals / fitted model scalars,
+    # all F.broadcast'ed (retrieval.bm25_topk, the PMI totals in
+    # dataops_queries, curate.dsir_weights).
     "docs_bm25_search": "1-row corpus stats (N/sumdl/per-term df)",
     "text_pmi_collocations": "1-row unigram/bigram totals",
-    "curation_pipeline_v3": "1-row corpus totals (typicality stage)",
     "curation_pipeline_v4": "1-row DSIR totals (gate stage)",
     # Events analytics: 1-row anchors/totals and min/max-derived day
     # grids (bounded by calendar span, not data volume).
