@@ -1,7 +1,7 @@
-"""Corpus-selection operators: DSIR importance weights and
-distribution-matched sampling.
+"""Corpus-selection operators: DSIR importance weights,
+distribution-matched sampling and weighted training-mix sampling.
 
-Both re-express a data-selection step in exact integer arithmetic so
+Each re-expresses a data-selection step in exact integer arithmetic so
 the result is bit-identical on Spark and the DuckDB oracle:
 
 * **DSIR** — hashed word-bigram features scored under a target and a
@@ -10,6 +10,7 @@ the result is bit-identical on Spark and the DuckDB oracle:
 * **Distribution-matched sampling** — deterministic importance
   resampling to a uniform bucket distribution; the acceptance test is
   an md5 hash of the row id, not an RNG.
+* **Weighted mix** — per-group epochs in integer basis points.
 """
 
 from __future__ import annotations
@@ -308,4 +309,36 @@ def distribution_matched_sample(
         F.coalesce(F.col("n_sampled"), F.lit(0).cast("long")).alias(
             "n_sampled"
         ),
+    )
+
+
+#: Training-mix weight basis: 10_000 basis points = exactly 1.0 epoch.
+MIX_BASIS = 10_000
+
+
+def weighted_mix(
+    df: DataFrame,
+    weights: dict[str, int],
+    *,
+    group_col: str = "lang",
+    id_col: str = "doc_id",
+    default_bp: int = MIX_BASIS,
+) -> DataFrame:
+    """Deterministic mixture sampling: each row appears ``floor(w)``
+    times plus once more iff md5(id) falls under ``frac(w)``, where
+    ``w`` is its group's weight in basis points.  Map-only; adds a
+    1-based ``epoch`` column."""
+    from ..functions.hashing import md5_int60
+
+    w: Column = F.lit(default_bp)
+    for group, bp in sorted(weights.items()):
+        w = F.when(F.col(group_col) == group, F.lit(bp)).otherwise(w)
+    extra = md5_int60(F.col(id_col).cast("string")) % MIX_BASIS < w % MIX_BASIS
+    n = (w / MIX_BASIS).cast("long") + extra.cast("long")
+    # sequence(1, 0) would descend: drop zero-copy rows first
+    out = df.withColumn("__n", n).where(F.col("__n") >= 1)
+    return (
+        out.withColumn("epoch", F.explode(F.sequence(F.lit(1), F.col("__n"))))
+        .drop("__n")
+        .withColumn("epoch", F.col("epoch").cast("long"))
     )

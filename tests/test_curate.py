@@ -1,10 +1,38 @@
-"""Unit tests for the DSIR operators (dataops.curate): exact integer
-weights on a hand-computed case, short-document handling, and the
-fit/score split agreeing with the fused batch path."""
+"""Unit tests for the corpus-selection operators (dataops.curate):
+weighted-mix epoch replication, DSIR exact integer weights on a
+hand-computed case, short-document handling, and the fit/score split
+agreeing with the fused batch path."""
 
 from __future__ import annotations
 
 from credit_card_etl_pipeline_spark.dataops import curate as cu
+
+
+def test_weighted_mix_epochs(spark):
+    df = spark.createDataFrame(
+        [(i, "en" if i % 2 == 0 else "zh") for i in range(100)],
+        "doc_id long, lang string",
+    )
+    out = cu.weighted_mix(df, {"en": 20000, "zh": 0}, group_col="lang")
+    rows = out.collect()
+    # en docs appear exactly twice (2.0 epochs), zh docs are dropped
+    assert all(r["lang"] == "en" for r in rows)
+    assert len(rows) == 100
+    per_doc = {}
+    for r in rows:
+        per_doc.setdefault(r["doc_id"], []).append(r["epoch"])
+    assert all(sorted(v) == [1, 2] for v in per_doc.values())
+
+
+def test_weighted_mix_fractional_deterministic(spark):
+    df = spark.createDataFrame(
+        [(i, "x") for i in range(1000)], "doc_id long, lang string"
+    )
+    out1 = cu.weighted_mix(df, {"x": 5000}, group_col="lang")
+    n1 = out1.count()
+    n2 = cu.weighted_mix(df, {"x": 5000}, group_col="lang").count()
+    assert n1 == n2  # md5-stream determinism, no RNG
+    assert 350 < n1 < 650  # ~half kept
 
 
 def test_dsir_weights_exact_hand_case(spark):
