@@ -7,16 +7,15 @@ driver memory.
 
 Image and audio decode are REAL: images via Pillow when installed
 (anything PIL reads), else the vendored codecs — stdlib PNG
-(dataops/png.py), baseline JPEG (dataops/jpeg.py, gray + color luma),
-GIF87a/89a (dataops/gif.py, incl. animations), and uncompressed
-BMP (dataops/bmp.py); audio
+(dataops/png.py, incl. APNG animations), GIF87a/89a (dataops/gif.py,
+incl. animations), and uncompressed BMP (dataops/bmp.py); audio
 via the vendored RIFF/WAVE PCM codec (dataops/wav.py) — so
 ``decode_media(..., fake=False)`` and ``decode_audio_stats`` work on
 actual media in this runtime.
 ``fake=True`` keeps the deterministic byte-histogram pseudo-decoder
-used by the SQL-expressible oracle queries.  Video demuxing and
-compressed audio have no stdlib path and still raise
-``NotImplementedError`` at the exact call site a pyav/ffmpeg
+used by the SQL-expressible oracle queries.  Other image formats
+(JPEG, TIFF) need Pillow; video containers and compressed audio have
+no stdlib path and raise at the exact call site a pyav/ffmpeg
 integration would fill.
 """
 
@@ -37,9 +36,9 @@ def decode_image_gray(data: bytes) -> tuple[int, int, bytes]:
     """(width, height, luminance bytes) of a real encoded image.
 
     Prefers Pillow (any format it reads); falls back to the vendored
-    codecs routed on magic bytes — PNG, baseline JPEG (gray + color
-    luma), GIF (first frame).  Raises ``NotImplementedError`` only for
-    formats with no vendored path AND no Pillow."""
+    codecs routed on magic bytes — PNG, GIF (first frame), BMP.
+    Raises ``NotImplementedError`` only for formats with no vendored
+    path AND no Pillow."""
     try:
         from PIL import Image  # optional dependency, not in runtime
     except ImportError:
@@ -53,10 +52,6 @@ def decode_image_gray(data: bytes) -> tuple[int, int, bytes]:
     if data[:8] == _png.PNG_MAGIC:
         w, h, channels, pixels = _png.decode_png(data)
         return w, h, _png.to_gray(channels, pixels)
-    if data[:2] == b"\xff\xd8":
-        from . import jpeg as _jpeg
-
-        return _jpeg.decode_jpeg_gray(data)
     if data[:6] in _gif.GIF_MAGICS:
         w, h, gray = _gif.decode_gif_frames(data)[0]
         return w, h, gray
@@ -65,9 +60,8 @@ def decode_image_gray(data: bytes) -> tuple[int, int, bytes]:
 
         return _bmp.decode_bmp_gray(data)
     raise NotImplementedError(
-        "image decode without Pillow covers PNG, baseline JPEG, GIF, "
-        "and uncompressed BMP (dataops/{png,jpeg,gif,bmp}.py); other "
-        "formats require Pillow"
+        "image decode without Pillow covers PNG, GIF and uncompressed "
+        "BMP (dataops/{png,gif,bmp}.py); other formats require Pillow"
     )
 
 #: Metadata carried alongside every media payload.
@@ -226,12 +220,11 @@ def sample_frames(
     """Video frame-sampling: one output row per sampled frame (explode
     shape), keeping every ``every``-th frame.
 
-    Real path (``fake=False``): payloads are AVI/MJPEG containers,
-    APNG, or animated-GIF streams decoded by the vendored codecs
-    (avi.decode_avi + the JPEG decoder per frame /
-    png.decode_apng_frames / gif.decode_gif_frames, routed on magic
-    bytes) — each kept frame is emitted as its luminance pixel buffer.
-    Other containers (mp4/mkv) would slot in at the same call site via
+    Real path (``fake=False``): payloads are APNG or animated-GIF
+    streams decoded by the vendored codecs (png.decode_apng_frames /
+    gif.decode_gif_frames, routed on magic bytes) — each kept frame is
+    emitted as its luminance pixel buffer.  Video containers
+    (avi/mp4/mkv) would slot in at the same call site via
     pyav/ffmpeg.  The fake path treats the payload as fixed-size byte
     frames — the same fan-out contract, SQL-expressible for the
     oracle."""
@@ -270,18 +263,11 @@ def iter_sampled_frames(
     payloads are born inside a Python stage can sample frames in the
     SAME crossing instead of shipping the bytes JVM→Python→JVM→Python
     again; guide §4)."""
-    from . import avi as _avi
-
     data = b"" if payload is None else bytes(payload)
     if fake:
         n = len(data) // frame_bytes
         for fno in range(0, n, every):
             yield fno, data[fno * frame_bytes : (fno + 1) * frame_bytes]
-    elif data[:4] == _avi.AVI_MAGIC and data[8:12] == b"AVI ":
-        _, _, jpegs = _avi.decode_avi(data)
-        for fno in range(0, len(jpegs), every):
-            _, _, gray = decode_image_gray(jpegs[fno])
-            yield fno, gray
     elif data[:6] in _gif.GIF_MAGICS:
         gdecoded = _gif.decode_gif_frames(data)
         for fno in range(0, len(gdecoded), every):
@@ -316,7 +302,6 @@ def decode_audio_stats(
     integer signal statistics per item.  Compressed formats raise
     inside the worker at the exact call site a torchaudio/ffmpeg
     integration would fill."""
-    from . import wav as _wav
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -3369,110 +3369,6 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ====================================================================
-# REAL JPEG roundtrip (vendored baseline codec; lossy, so the oracle
-# pins the round-trip PROPERTY — dims + error bound — not the pixels)
-# ====================================================================
-
-_JPEG_ROUNDTRIP_ORACLE = """
-SELECT doc_id,
-       CAST(24 AS BIGINT) AS width,
-       CAST(16 AS BIGINT) AS height,
-       TRUE AS err_bounded,
-       TRUE AS color_err_bounded
-FROM documents WHERE doc_id % 10 = 3
-"""
-
-
-@query("multimodal_jpeg_roundtrip", _JPEG_ROUNDTRIP_ORACLE)
-def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL JPEG codec end-to-end: per document a deterministic smooth
-    24x16 gradient (pixel(r,c) = clamp((doc_id%7)*8 + r*3 + c*2)) is
-    encoded to an actual baseline JFIF stream (dataops/jpeg.py — Annex
-    K tables, byte stuffing, canonical Huffman) and decoded back
-    through the production path (decode_image_gray's JPEG branch)
-    inside Arrow-batched mapInPandas.  JPEG is lossy, so the hash pins
-    the round-trip PROPERTY instead of pixel values: exact dimensions
-    plus max |decoded - original| <= 8 per pixel (a smooth gradient
-    quantizes within half a DC step).  Any zigzag, Huffman, DCT, or
-    byte-stuffing bug blows the bound or the dims."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..dataops import jpeg as jpegc
-    from ..dataops import multimodal as mmod
-
-    W, H, BOUND = 24, 16, 8
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, oks, coks = [], [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                i64 = int(doc_id)
-                base = (i64 % 7) * 8
-                pixels = bytes(
-                    min(255, base + r * 3 + c * 2)
-                    for r in range(H)
-                    for c in range(W)
-                )
-                encoded = jpegc.encode_jpeg_gray(W, H, pixels)
-                w, h, gray = mmod.decode_image_gray(encoded)
-                err = max(
-                    abs(a - b) for a, b in zip(gray, pixels)
-                )
-                # color path: 16x16 RGB gradient through 4:2:0 chroma
-                # interleave; decoded luma must track BT.601 Y
-                rgb = bytes(
-                    v
-                    for r in range(16)
-                    for c in range(16)
-                    for v in (
-                        min(255, base + r * 6),
-                        min(255, base + c * 6),
-                        96,
-                    )
-                )
-                cenc = jpegc.encode_jpeg_color(16, 16, rgb, subsample=2)
-                cw, ch, cgray = mmod.decode_image_gray(cenc)
-                cerr = 0.0
-                for r in range(16):
-                    for c in range(16):
-                        y = (
-                            0.299 * min(255, base + r * 6)
-                            + 0.587 * min(255, base + c * 6)
-                            + 0.114 * 96
-                        )
-                        cerr = max(cerr, abs(cgray[r * 16 + c] - y))
-                ids.append(i64)
-                ws.append(w)
-                hs.append(h)
-                oks.append(bool(w == W and h == H and err <= BOUND))
-                coks.append(
-                    bool(cw == 16 and ch == 16 and cerr <= BOUND)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "err_bounded": oks,
-                    "color_err_bounded": coks,
-                }
-            )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 10 == 3)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(
-        run,
-        "doc_id long, width long, height long, err_bounded boolean,"
-        " color_err_bounded boolean",
-    )
-
-
-# ====================================================================
 # Corrupt-media decode verdicts: the per-cell failure taxonomy of the
 # vendored codecs, certified Spark-side against an oracle (the batch
 # twin of tests/test_codec_hostile.py — a 100 TB media corpus WILL
@@ -3578,122 +3474,6 @@ def multimodal_corrupt_decode_verdicts(
     docs = load(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(
         run, "doc_id long, verdict string, width long, height long"
-    )
-
-
-# ====================================================================
-# REAL video container: AVI/MJPEG frame sampling (vendored RIFF
-# container + the baseline JPEG codec per frame; lossy inside, so the
-# oracle pins dims + error bound like the JPEG roundtrip)
-# ====================================================================
-
-_AVI_FRAMES_ORACLE = """
-WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 20 = 11),
-f AS (SELECT d.doc_id, u.fno FROM d, UNNEST([0, 4]) AS u(fno))
-SELECT doc_id, CAST(fno AS INTEGER) AS frame_no,
-       CAST(24 AS BIGINT) AS width,
-       CAST(16 AS BIGINT) AS height,
-       TRUE AS err_bounded
-FROM f
-"""
-
-
-@query("multimodal_avi_frame_sample", _AVI_FRAMES_ORACLE)
-def multimodal_avi_frame_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """REAL video-container frame sampling end-to-end: per document a
-    6-frame 24x16 Motion-JPEG AVI (frame f pixel(r,c) = f*8 + r*3 +
-    c*2, a smooth gradient) is built by the vendored RIFF muxer
-    (dataops/avi.py) over real baseline-JFIF frames (dataops/jpeg.py)
-    and every 4th frame extracted through the production path
-    (sample_frames fake=False → avi.decode_avi → JPEG decode per
-    frame).  JPEG is lossy, so the hash pins the round-trip PROPERTY:
-    frame fan-out (frames 0 and 4 per doc), exact dimensions, and max
-    |decoded - gradient| <= 8 per pixel.  Any RIFF layout, chunk
-    alignment, movi/rec descent, or JPEG bug blows the bound, the
-    dims, or the fan-out."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..dataops import avi as avic
-    from ..dataops import jpeg as jpegc
-    from ..dataops import multimodal as mmod
-
-    W, H, BOUND = 24, 16, 8
-
-    # Coverage note (ADVICE r11): this query is GENERATION-FUSED —
-    # payload bytes are born and consumed inside one Python crossing,
-    # so it no longer benchmarks the binary-payload DataFrame-operator
-    # path.  That path stays benchmarked in-suite by
-    # multimodal_frame_sample / multimodal_resize_tiles (real payload
-    # columns shipped through sample_frames / resize_images) and is
-    # unit-tested per codec in tests/.
-    # r11 (guide §4): encode → sample_frames → check was three Python
-    # crossings round-tripping the MJPEG container and every decoded
-    # frame through the JVM.  One mapInPandas now encodes, samples via
-    # the operator's extracted decode path
-    # (multimodal.iter_sampled_frames — the same AVI→JPEG routing) and
-    # checks the error bound in place; only doc_id enters the crossing.
-    def gen_sample_check(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nos, ws, hs, oks = [], [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                i64 = int(doc_id)
-                frames = [
-                    jpegc.encode_jpeg_gray(
-                        W,
-                        H,
-                        bytes(
-                            min(255, f * 8 + r * 3 + c * 2)
-                            for r in range(H)
-                            for c in range(W)
-                        ),
-                    )
-                    for f in range(6)
-                ]
-                payload = avic.encode_avi_mjpeg(W, H, frames)
-                for fno, frame in mmod.iter_sampled_frames(
-                    payload, every=4, fake=False
-                ):
-                    gray = bytes(frame)
-                    expect = bytes(
-                        min(255, int(fno) * 8 + r * 3 + c * 2)
-                        for r in range(H)
-                        for c in range(W)
-                    )
-                    err = (
-                        max(abs(a - b) for a, b in zip(gray, expect))
-                        if len(gray) == len(expect)
-                        else 999
-                    )
-                    ids.append(i64)
-                    nos.append(int(fno))
-                    ws.append(W if len(gray) == W * H else 0)
-                    hs.append(H if len(gray) == W * H else 0)
-                    oks.append(bool(err <= BOUND))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_no": pd.array(nos, dtype="int32"),
-                    "width": ws,
-                    "height": hs,
-                    "err_bounded": oks,
-                }
-            )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 20 == 11)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(
-        gen_sample_check,
-        "doc_id long, frame_no int, width long, height long,"
-        " err_bounded boolean",
     )
 
 
@@ -5590,139 +5370,6 @@ def multimodal_audio_fingerprint_neardup(
         .cast("long")
         .alias("hamming"),
     ).where(F.col("hamming") <= 6)
-
-
-# ====================================================================
-# Video near-dup detection: AVI/MJPEG demux -> per-frame dHash ->
-# frame-level banded matching
-# ====================================================================
-
-_VIDEO_FP_ORACLE = """
-WITH d AS (
-    SELECT doc_id, doc_id // 100 AS g FROM documents WHERE doc_id % 20 = 15
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(4 AS BIGINT) AS n_matching_frames
-FROM d a JOIN d b
-  ON (a.g % 97) = (b.g % 97) AND a.doc_id < b.doc_id
-"""
-
-
-@query("multimodal_video_dhash_neardup", _VIDEO_FP_ORACLE)
-def multimodal_video_dhash_neardup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """VIDEO near-dup detection through the REAL container + codec
-    path: per selected doc an 8-frame 18x16 Motion-JPEG AVI (spatial
-    gradient stride keyed on the clip's group) is muxed by the
-    vendored RIFF writer, demuxed back (avi.decode_avi), every 2nd
-    frame JPEG-decoded and dHash'd (the image fingerprint reused per
-    frame), and clip pairs matched frame-by-frame: same frame_no, band
-    blocking on the frame hash, bit_count <= 6 verify, then a per-pair
-    count of matching frames with >= 3 of 4 required.  JPEG is lossy
-    but DETERMINISTIC, so the oracle pins the planted structure:
-    exactly the stride-equal clip pairs match, on all 4 sampled
-    frames (the AVI frame-sample query pins the pixel-error bound;
-    this one pins the retrieval outcome).  Scale shape: demux+hash is
-    the map-only pass (store 4 x 8-byte hashes per clip); matching is
-    the same banded join as image/audio — never all-pairs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..dataops import avi as avic
-    from ..dataops import jpeg as jpegc
-
-    W, H = 18, 16
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fnos, words, bidx, bval = [], [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                i64 = int(doc_id)
-                # frame content keyed ENTIRELY on the group residue so
-                # same-residue clips are byte-identical at ANY corpus
-                # scale: a g*29 base offset made cross-residue-class
-                # replicas differ by a constant brightness, and JPEG
-                # quantization noise under that offset pushed some
-                # frame hashes past the Hamming gate once doc_id//100
-                # wrapped past 97 (sf1 certification catch).  dHash is
-                # brightness-invariant only pre-codec; identity is the
-                # scale-proof planted structure.
-                r = (i64 // 100) % 97
-                stride = 3 + r
-                frames = [
-                    jpegc.encode_jpeg_gray(
-                        W,
-                        H,
-                        bytes(
-                            (r * 29 + f * 13 + i * stride) % 256
-                            for i in range(W * H)
-                        ),
-                    )
-                    for f in range(8)
-                ]
-                payload = avic.encode_avi_mjpeg(W, H, frames)
-                _, _, back = avic.decode_avi(payload)
-                for fno in range(0, 8, 2):
-                    w, h, gray = mm.decode_image_gray(back[fno])
-                    word, bands = mm.dhash64(w, h, gray)
-                    for j, bv in enumerate(bands):
-                        ids.append(i64)
-                        fnos.append(fno)
-                        words.append(word)
-                        bidx.append(j)
-                        bval.append(bv)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_no": fnos,
-                    "word": words,
-                    "band_idx": bidx,
-                    "band_val": bval,
-                }
-            )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 20 == 15)
-        .select("doc_id")
-    )
-    feats = docs.mapInPandas(
-        run,
-        "doc_id long, frame_no long, word long, band_idx long, band_val long",
-    )
-    left = feats.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("word").alias("wa"),
-        "frame_no",
-        "band_idx",
-        "band_val",
-    )
-    right = feats.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("word").alias("wb"),
-        "frame_no",
-        "band_idx",
-        "band_val",
-    )
-    frame_matches = (
-        left.join(right, ["frame_no", "band_idx", "band_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "frame_no", "wa", "wb")
-        .distinct()
-        .where(
-            F.bit_count(F.col("wa").bitwiseXOR(F.col("wb"))) <= 6
-        )
-    )
-    return (
-        frame_matches.groupBy("doc_a", "doc_b")
-        .agg(
-            F.countDistinct("frame_no").cast("long")
-            .alias("n_matching_frames")
-        )
-        .where(F.col("n_matching_frames") >= 3)
-    )
 
 
 # ====================================================================

@@ -28,16 +28,26 @@ def _key_part(col: str) -> Column:
     """One hash-input field: canonical string form, null → ''.
 
     Canonicalization (engine-defined, stable across engines): dates as
-    ISO ``yyyy-MM-dd``, doubles via plain string cast (shortest
-    round-trip, e.g. ``123.0``/``123.45`` — matching the reference's
-    pandas ``str(float)`` rendering, load_to_db.py:32-33), strings
-    trimmed.
+    ISO ``yyyy-MM-dd``, doubles in the reference's pandas ``str(float)``
+    rendering (load_to_db.py:32-33), strings trimmed.  The string cast
+    gives the shortest round-trip digits (``123.0``/``123.45``) but
+    switches to ``1.0E7`` at 1e7, where Python stays positional up to
+    1e16; that range is re-rendered positionally through a decimal
+    cast (``12345678.5``).  So the key matches ``str(float)`` for
+    amounts that are 0 or have 1e-3 ≤ |x| < 1e16.
     """
     c = F.col(col)
     if col in (S.TRANSACTION_DATE,):
         return F.coalesce(F.date_format(c, "yyyy-MM-dd"), F.lit(""))
     if col in (S.PAYMENT_AMOUNT,):
-        return F.coalesce(c.cast("string"), F.lit(""))
+        s = c.cast("string")
+        positional = F.regexp_replace(
+            F.regexp_replace(s.cast("decimal(38,20)").cast("string"), "0+$", ""),
+            r"\.$",
+            ".0",
+        )
+        big = (F.abs(c) >= 1e7) & (F.abs(c) < 1e16)
+        return F.coalesce(F.when(big, positional).otherwise(s), F.lit(""))
     return F.coalesce(F.trim(c.cast("string")), F.lit(""))
 
 

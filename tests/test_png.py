@@ -172,14 +172,11 @@ def test_non_png_without_pillow_raises_or_pillow_decodes():
     except ImportError:
         has_pil = False
     if not has_pil:
-        # JPEG/GIF/BMP magics now route to vendored codecs, so the
-        # honest NotImplementedError is reserved for formats with no
-        # vendored path (e.g. TIFF)
+        # GIF/BMP magics route to vendored codecs; formats with no
+        # vendored path (TIFF, JPEG) raise the capability error
         with pytest.raises(NotImplementedError, match="Pillow"):
             decode_image_gray(b"II*\x00 fake tiff bytes")
-        with pytest.raises(ValueError):
-            # malformed JPEG reaches the vendored decoder and fails
-            # with a parse error, not a capability error
+        with pytest.raises(NotImplementedError, match="Pillow"):
             decode_image_gray(b"\xff\xd8\xff\xe0 fake jpeg bytes")
 
 

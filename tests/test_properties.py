@@ -136,26 +136,3 @@ def test_surrogate_key_invariant_to_column_order(spark, rows):
     )
     k2 = [r["k"] for r in shuffled.select(transaction_id().alias("k")).collect()]
     assert k1 == k2
-
-
-# ------------------------------------------------------------------
-# r6: AVI container round-trip
-# ------------------------------------------------------------------
-
-_frame_payloads = st.lists(
-    st.binary(min_size=1, max_size=64), min_size=1, max_size=8
-)
-
-
-@settings(max_examples=25, deadline=None)
-@given(_frame_payloads, st.integers(1, 64), st.integers(1, 64))
-def test_avi_container_roundtrip_any_payload(frames, w, h):
-    """The RIFF mux/demux must be byte-lossless for ANY frame payload
-    bytes (the container does not interpret frame contents), any
-    declared dimensions, odd or even chunk sizes (word alignment)."""
-    from credit_card_etl_pipeline_spark.dataops import avi
-
-    data = avi.encode_avi_mjpeg(w, h, frames)
-    gw, gh, out = avi.decode_avi(data)
-    assert (gw, gh) == (w, h)
-    assert out == frames

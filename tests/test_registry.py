@@ -1,7 +1,7 @@
 """The registry carries the statement → warehouse → RFM surface, each
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
-bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation or
-BPE queries that were cut from it."""
+bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation,
+BPE or video-codec queries that were cut from it."""
 
 from __future__ import annotations
 
@@ -80,6 +80,9 @@ REMOVED_QUERIES = {
     "remove_boilerplate_lines", "curation_pipeline_v2",
     "curation_pipeline_v3", "corpus_novelty_curve", "bpe_learn_merges",
     "bpe_tokenize_top_words",
+    # JPEG codec and AVI/MJPEG video container queries
+    "multimodal_jpeg_roundtrip", "multimodal_avi_frame_sample",
+    "multimodal_video_dhash_neardup",
 }
 
 

@@ -3,6 +3,7 @@ count-back validation (A12)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pandas as pd
@@ -41,6 +42,33 @@ def test_surrogate_key_stability_and_duplicates(spark, refined_df):
     assert len({r["t"] for r in rows}) == 3
     # duplicates are kept, not deduped (reference contract)
     assert wh.count() == 4
+
+
+def test_surrogate_key_renders_amounts_like_pandas(spark):
+    """The key hashes the amount as pandas ``str(float)`` does
+    (load_to_db.py:26-43), also at and above 1e7, where Spark's string
+    cast would write ``1.0E7``."""
+    amounts = [45.5, 9999999.0, 10000000.0, 12345678.5, -10000000.0]
+    pdf = pd.DataFrame(
+        {
+            "Transaction_Date": pd.to_datetime(["2024-01-05"] * 5).date,
+            "Merchant": ["全聯"] * 5,
+            "Card_No": ["1234"] * 5,
+            "Payment_Amount": amounts,
+            "Transaction_Type": ["交易"] * 5,
+        }
+    )
+    got = [
+        r["t"]
+        for r in spark.createDataFrame(pdf)
+        .select(transaction_id().alias("t"))
+        .collect()
+    ]
+    want = [
+        hashlib.md5(f"2024-01-05全聯1234{a}交易".encode()).hexdigest()
+        for a in amounts
+    ]
+    assert got == want
 
 
 def test_write_overwrite_and_count_check(spark, refined_df, tmp_path):
