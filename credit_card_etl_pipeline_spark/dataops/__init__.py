@@ -10,8 +10,8 @@ operations a large-scale corpus pipeline needs, all Spark-first:
 * :mod:`.similarity` — embedding cosine top-k (exact brute force) and
   an LSH-bucketed approximate variant for scale.
 * :mod:`.multimodal` — binary media columns with typed metadata and
-  Arrow-batched decode plumbing (decoders stubbed: codec libraries are
-  not part of the engine's dependency set).
+  Arrow-batched decode plumbing, with real PNG/APNG decode through the
+  vendored stdlib codec (:mod:`.png`).
 
 Everything is native-expression or Arrow-batched; hashing is
 cross-engine stable (functions.hashing) so each operator carries a

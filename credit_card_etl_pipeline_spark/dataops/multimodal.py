@@ -1,21 +1,16 @@
 """Multimodal column support (engine extension).
 
-Media (image/audio/video) travels as opaque ``binary`` columns paired
-with a typed metadata struct; decode / feature-extraction runs as
-Arrow-batched ``mapInPandas`` so bytes never round-trip through
-driver memory.
+Media travels as opaque ``binary`` columns paired with a typed
+metadata struct; decode / feature-extraction runs as Arrow-batched
+``mapInPandas`` so bytes never round-trip through driver memory.
 
-Image and audio decode are REAL: images via Pillow when installed
-(anything PIL reads), else the vendored codecs — stdlib PNG
-(dataops/png.py, incl. APNG animations), GIF87a/89a (dataops/gif.py,
-incl. animations), and uncompressed BMP (dataops/bmp.py); audio
-via the vendored RIFF/WAVE PCM codec (dataops/wav.py) — so
-``decode_media(..., fake=False)`` and ``decode_audio_stats`` work on
-actual media in this runtime.
-``fake=True`` keeps the deterministic byte-histogram pseudo-decoder
-used by the SQL-expressible oracle queries.  Other image formats
-(JPEG, TIFF) need Pillow; video containers and compressed audio have
-no stdlib path and raise at the exact call site a pyav/ffmpeg
+Image decode is REAL: via Pillow when installed (anything PIL reads),
+else the vendored stdlib PNG codec (dataops/png.py, incl. APNG
+animations) — so ``decode_media(..., fake=False)`` works on actual
+images in this runtime.  ``fake=True`` keeps the deterministic
+byte-histogram pseudo-decoder used by the SQL-expressible oracle
+queries.  Other image formats need Pillow; video containers and audio
+have no stdlib path and raise at the exact call site a pyav/ffmpeg
 integration would fill.
 """
 
@@ -28,7 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import gif as _gif
 from . import png as _png
 
 
@@ -36,9 +30,8 @@ def decode_image_gray(data: bytes) -> tuple[int, int, bytes]:
     """(width, height, luminance bytes) of a real encoded image.
 
     Prefers Pillow (any format it reads); falls back to the vendored
-    codecs routed on magic bytes — PNG, GIF (first frame), BMP.
-    Raises ``NotImplementedError`` only for formats with no vendored
-    path AND no Pillow."""
+    PNG codec on PNG magic bytes.  Raises ``NotImplementedError`` for
+    any other format when Pillow is absent."""
     try:
         from PIL import Image  # optional dependency, not in runtime
     except ImportError:
@@ -52,16 +45,9 @@ def decode_image_gray(data: bytes) -> tuple[int, int, bytes]:
     if data[:8] == _png.PNG_MAGIC:
         w, h, channels, pixels = _png.decode_png(data)
         return w, h, _png.to_gray(channels, pixels)
-    if data[:6] in _gif.GIF_MAGICS:
-        w, h, gray = _gif.decode_gif_frames(data)[0]
-        return w, h, gray
-    if data[:2] == b"BM":
-        from . import bmp as _bmp
-
-        return _bmp.decode_bmp_gray(data)
     raise NotImplementedError(
-        "image decode without Pillow covers PNG, GIF and uncompressed "
-        "BMP (dataops/{png,gif,bmp}.py); other formats require Pillow"
+        "image decode without Pillow covers PNG/APNG (dataops/png.py); "
+        "other formats require Pillow"
     )
 
 #: Metadata carried alongside every media payload.
@@ -220,10 +206,9 @@ def sample_frames(
     """Video frame-sampling: one output row per sampled frame (explode
     shape), keeping every ``every``-th frame.
 
-    Real path (``fake=False``): payloads are APNG or animated-GIF
-    streams decoded by the vendored codecs (png.decode_apng_frames /
-    gif.decode_gif_frames, routed on magic bytes) — each kept frame is
-    emitted as its luminance pixel buffer.  Video containers
+    Real path (``fake=False``): payloads are PNG/APNG streams decoded
+    by the vendored codec (png.decode_apng_frames) — each kept frame
+    is emitted as its luminance pixel buffer.  Video containers
     (avi/mp4/mkv) would slot in at the same call site via
     pyav/ffmpeg.  The fake path treats the payload as fixed-size byte
     frames — the same fan-out contract, SQL-expressible for the
@@ -257,8 +242,7 @@ def iter_sampled_frames(
     fake: bool = False,
 ):
     """Per-payload core of :func:`sample_frames`: yield (frame_no,
-    gray_frame_bytes) for every ``every``-th frame, routing on magic
-    bytes exactly as the DataFrame operator does (this IS the
+    gray_frame_bytes) for every ``every``-th frame (this IS the
     DataFrame operator's decode path — extracted so a caller whose
     payloads are born inside a Python stage can sample frames in the
     SAME crossing instead of shipping the bytes JVM→Python→JVM→Python
@@ -268,80 +252,11 @@ def iter_sampled_frames(
         n = len(data) // frame_bytes
         for fno in range(0, n, every):
             yield fno, data[fno * frame_bytes : (fno + 1) * frame_bytes]
-    elif data[:6] in _gif.GIF_MAGICS:
-        gdecoded = _gif.decode_gif_frames(data)
-        for fno in range(0, len(gdecoded), every):
-            _, _, gray = gdecoded[fno]
-            yield fno, gray
     else:
         decoded = _png.decode_apng_frames(data)
         for fno in range(0, len(decoded), every):
             _, _, channels, pixels = decoded[fno]
             yield fno, _png.to_gray(channels, pixels)
-
-
-_AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("peak_abs", T.LongType()),
-        T.StructField("sum_abs", T.LongType()),
-    ]
-)
-
-
-def decode_audio_stats(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL audio decode: RIFF/WAVE PCM payloads through the vendored
-    stdlib codec (dataops/wav.py), Arrow-batched, emitting exact
-    integer signal statistics per item.  Compressed formats raise
-    inside the worker at the exact call site a torchaudio/ffmpeg
-    integration would fill."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, ns, peaks, sums = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rate, n, peak, tot = audio_stats_of(payload)
-                ids.append(doc_id)
-                rates.append(rate)
-                ns.append(n)
-                peaks.append(peak)
-                sums.append(tot)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": rates,
-                    "n_samples": ns,
-                    "peak_abs": peaks,
-                    "sum_abs": sums,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, _AUDIO_SCHEMA)
-
-
-def audio_stats_of(payload) -> tuple[int, int, int, int]:
-    """Per-payload core of :func:`decode_audio_stats`: decode one
-    RIFF/WAVE payload through the vendored codec and return
-    (sample_rate, n_samples, peak_abs, sum_abs) — extracted so a
-    caller whose payloads are born inside a Python stage can compute
-    the stats in the SAME crossing (guide §4), identical semantics to
-    the DataFrame operator by construction (the operator calls this)."""
-    from . import wav as _wav
-
-    rate, _, samples = _wav.decode_wav(bytes(payload))
-    return (
-        rate,
-        len(samples),
-        max((abs(s) for s in samples), default=0),
-        sum(abs(s) for s in samples),
-    )
 
 
 def dhash64(width: int, height: int, gray: bytes) -> tuple[int, list[int]]:
@@ -381,19 +296,3 @@ def dhash64(width: int, height: int, gray: bytes) -> tuple[int, list[int]]:
     ]
     return word, bands
 
-
-def gradient_fingerprint64(values: list[int]) -> tuple[int, list[int]]:
-    """64 gradient bits over a 65-value sequence (bit k = values[k] >
-    values[k+1]), packed like :func:`dhash64` into a signed int64 word
-    plus four 16-bit band keys — the shared fingerprint shape for
-    1-D signals (audio frame energies) and any ordered feature run."""
-    if len(values) != 65:
-        raise ValueError(f"gradient_fingerprint64 expects 65 values, got {len(values)}")
-    bits = [1 if values[k] > values[k + 1] else 0 for k in range(64)]
-    word = sum(b << k for k, b in enumerate(bits))
-    if word >= 1 << 63:
-        word -= 1 << 64
-    bands = [
-        sum(bits[16 * j + t] << t for t in range(16)) for j in range(4)
-    ]
-    return word, bands

@@ -2886,93 +2886,6 @@ def multimodal_apng_frame_sample(
     )
 
 
-_WAV_ROUNDTRIP_ORACLE = """
-WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 3),
-s AS (
-    SELECT d.doc_id,
-           ((d.doc_id * 13 + u.i * 7) % 2048) - 1024 AS v
-    FROM d, UNNEST(generate_series(0, 255)) AS u(i)
-)
-SELECT doc_id,
-       CAST(16000 AS INTEGER) AS sample_rate,
-       CAST(count(*) AS BIGINT) AS n_samples,
-       CAST(max(abs(v)) AS BIGINT) AS peak_abs,
-       CAST(sum(abs(v)) AS BIGINT) AS sum_abs
-FROM s
-GROUP BY doc_id
-"""
-
-
-@query("multimodal_wav_roundtrip", _WAV_ROUNDTRIP_ORACLE)
-def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio codec end-to-end: per document, 256 deterministic
-    16-bit PCM samples (s_i = (doc_id*13 + i*7) % 2048 - 1024) are
-    encoded to an actual RIFF/WAVE file (dataops/wav.py) and decoded
-    back through the production audio path (decode_audio_stats, Arrow-
-    batched mapInPandas); the exact integer signal stats of the
-    DECODED samples are compared against DuckDB computing the same
-    stats analytically from the sample formula — any header, layout,
-    or sign-handling bug in the codec breaks the hash."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..dataops import multimodal as mmod
-    from ..dataops import wav as wavc
-
-    # Coverage note (ADVICE r11): this query is GENERATION-FUSED —
-    # payload bytes are born and consumed inside one Python crossing,
-    # so it no longer benchmarks the binary-payload DataFrame-operator
-    # path.  That path stays benchmarked in-suite by
-    # multimodal_frame_sample / multimodal_resize_tiles (real payload
-    # columns shipped through sample_frames / resize_images) and is
-    # unit-tested per codec in tests/.
-    # r11 (guide §4): encode + decode-stats fused into ONE mapInPandas
-    # — the WAV payloads are born in Python and consumed in Python, so
-    # the JVM round-trip between the two stages moved every audio byte
-    # twice for nothing.  The stats come from the operator's own
-    # extracted per-payload core (multimodal.audio_stats_of — the
-    # decode_audio_stats DataFrame operator calls the same function).
-    def encode_and_stats(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, ns, peaks, sums = [], [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                i64 = int(doc_id)
-                samples = [
-                    ((i64 * 13 + i * 7) % 2048) - 1024 for i in range(256)
-                ]
-                rate, n, peak, tot = mmod.audio_stats_of(
-                    wavc.encode_wav(16000, samples)
-                )
-                ids.append(i64)
-                rates.append(rate)
-                ns.append(n)
-                peaks.append(peak)
-                sums.append(tot)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": pd.array(rates, dtype="int32"),
-                    "n_samples": ns,
-                    "peak_abs": peaks,
-                    "sum_abs": sums,
-                }
-            )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 10 == 3)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(
-        encode_and_stats,
-        "doc_id long, sample_rate int, n_samples long, peak_abs long,"
-        " sum_abs long",
-    )
-
-
 # ====================================================================
 # Deterministic hash sampling (reproducible corpus subsetting)
 # ====================================================================
@@ -3815,97 +3728,6 @@ def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("est_intersection"),
         )
         .crossJoin(exact)
-    )
-
-
-_GIF_FRAMES_ORACLE = """
-WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 20 = 11),
-f AS (SELECT d.doc_id, u.fno FROM d, UNNEST([0, 4]) AS u(fno)),
-px AS (
-    SELECT f.doc_id, f.fno,
-           (f.doc_id * 13 + f.fno * 29 + u.i * 5) % 256 AS v
-    FROM f, UNNEST(generate_series(0, 63)) AS u(i)
-)
-SELECT doc_id, CAST(fno AS INTEGER) AS frame_no,
-       CAST(sum(v) AS BIGINT) AS frame_sum,
-       CAST(count(*) AS BIGINT) AS n_px
-FROM px GROUP BY doc_id, fno
-"""
-
-
-@query("multimodal_gif_frame_sample", _GIF_FRAMES_ORACLE)
-def multimodal_gif_frame_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """REAL animated-GIF frame sampling end-to-end: per document a
-    6-frame 8x8 GIF89a animation (frame f pixel i = (doc_id*13 + f*29
-    + i*5) % 256, gray palette so index == luminance) is encoded by
-    the vendored LZW codec and every 4th frame extracted through the
-    production path (sample_frames fake=False routes GIF magic to
-    gif.decode_gif_frames); GIF is lossless, so the decoded pixel
-    sums are compared against DuckDB computing them analytically from
-    the pixel formula — any LZW, sub-block, palette, or compositing
-    bug breaks the hash."""
-    from collections.abc import Iterator
-
-    from ..dataops import gif as gifc
-    from ..dataops import multimodal as mmod
-
-    # Coverage note (ADVICE r11): this query is GENERATION-FUSED —
-    # payload bytes are born and consumed inside one Python crossing,
-    # so it no longer benchmarks the binary-payload DataFrame-operator
-    # path.  That path stays benchmarked in-suite by
-    # multimodal_frame_sample / multimodal_resize_tiles (real payload
-    # columns shipped through sample_frames / resize_images) and is
-    # unit-tested per codec in tests/.
-    # r11 (guide §4): encode → frame-sample → summarize used to be
-    # THREE chained mapInPandas stages, shipping the GIF payloads
-    # JVM→Python→JVM→Python and the decoded frames once more, with 32
-    # Python workers warming per stage.  The bytes are born in Python
-    # and consumed in Python — one crossing does all three steps via
-    # the operator's own extracted decode path
-    # (multimodal.iter_sampled_frames, the identical magic-byte
-    # routing sample_frames runs).  Only doc_id enters; only the four
-    # summary columns leave.
-    def gen_and_sample(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nos, sums, npx = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                i64 = int(doc_id)
-                frames = [
-                    bytes(
-                        (i64 * 13 + f * 29 + i * 5) % 256
-                        for i in range(64)
-                    )
-                    for f in range(6)
-                ]
-                payload = gifc.encode_gif(8, 8, frames)
-                for fno, frame in mmod.iter_sampled_frames(
-                    payload, every=4, fake=False
-                ):
-                    ids.append(i64)
-                    nos.append(fno)
-                    sums.append(sum(bytes(frame)))
-                    npx.append(len(bytes(frame)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_no": pd.array(nos, dtype="int32"),
-                    "frame_sum": sums,
-                    "n_px": npx,
-                }
-            )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 20 == 11)
-        .select("doc_id")
-    )
-    return docs.mapInPandas(
-        gen_and_sample,
-        "doc_id long, frame_no int, frame_sum long, n_px long",
     )
 
 
@@ -5190,156 +5012,6 @@ def multimodal_image_dhash_neardup(
     docs = (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 10 == 0)
-        .select("doc_id")
-    )
-    feats = docs.mapInPandas(
-        run, "doc_id long, word long, band_idx long, band_val long"
-    )
-    left = feats.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("word").alias("wa"),
-        "band_idx",
-        "band_val",
-    )
-    right = feats.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("word").alias("wb"),
-        "band_idx",
-        "band_val",
-    )
-    cand = (
-        left.join(right, ["band_idx", "band_val"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "wa", "wb")
-        .distinct()
-    )
-    return cand.select(
-        "doc_a",
-        "doc_b",
-        F.bit_count(F.col("wa").bitwiseXOR(F.col("wb")))
-        .cast("long")
-        .alias("hamming"),
-    ).where(F.col("hamming") <= 6)
-
-
-# ====================================================================
-# Audio near-dup detection: real WAV codec -> energy fingerprint ->
-# banded Hamming
-# ====================================================================
-
-_AUDIO_FP_ORACLE = """
-WITH d AS (
-    SELECT doc_id, doc_id // 50 AS g FROM documents WHERE doc_id % 10 = 5
-),
-smp AS (
-    SELECT doc_id, u.i AS i,
-           ((g * 37 + u.i * (11 + g % 7)) % 2048) - 1024
-           + CASE WHEN doc_id % 100 = 35 AND u.i = doc_id % 2080
-                  THEN 500 ELSE 0 END AS v
-    FROM d, UNNEST(generate_series(0, 2079)) AS u(i)
-),
-en AS (
-    SELECT doc_id, CAST(i // 32 AS BIGINT) AS f,
-           CAST(sum(abs(v)) AS BIGINT) AS e
-    FROM smp GROUP BY doc_id, i // 32
-),
-b AS (
-    SELECT doc_id, f,
-           CASE WHEN e > lead(e) OVER (PARTITION BY doc_id ORDER BY f)
-                THEN 1 ELSE 0 END AS bit
-    FROM en
-),
-bits AS (SELECT doc_id, f AS k, bit FROM b WHERE f < 64),
-words AS (
-    SELECT doc_id,
-           CAST(sum(CASE WHEN k < 63
-                         THEN CAST(bit AS HUGEINT)
-                              * (CAST(1 AS BIGINT) << CAST(k AS INTEGER))
-                         WHEN bit = 1
-                         THEN CAST(-9223372036854775808 AS HUGEINT)
-                         ELSE 0 END) AS BIGINT) AS word
-    FROM bits GROUP BY doc_id
-),
-bands AS (
-    SELECT doc_id, CAST(k // 16 AS BIGINT) AS band_idx,
-           CAST(sum(bit * (CAST(1 AS BIGINT)
-                           << CAST(k % 16 AS INTEGER))) AS BIGINT)
-               AS band_val
-    FROM bits GROUP BY doc_id, k // 16
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
-    FROM bands a JOIN bands b2
-      ON a.band_idx = b2.band_idx AND a.band_val = b2.band_val
-         AND a.doc_id < b2.doc_id
-)
-SELECT c.doc_a, c.doc_b,
-       CAST(bit_count(xor(wa.word, wb.word)) AS BIGINT) AS hamming
-FROM cand c
-JOIN words wa ON wa.doc_id = c.doc_a
-JOIN words wb ON wb.doc_id = c.doc_b
-WHERE bit_count(xor(wa.word, wb.word)) <= 6
-"""
-
-
-@query("multimodal_audio_fingerprint_neardup", _AUDIO_FP_ORACLE)
-def multimodal_audio_fingerprint_neardup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """AUDIO near-dup detection through the REAL codec: per selected
-    doc a deterministic 2080-sample 16-bit PCM signal (identical
-    within each doc_id//50 group; some members get a one-sample spike)
-    round-trips through an actual RIFF/WAVE encode+decode
-    (dataops/wav.py), then fingerprints — 65 frame energies
-    (Σ|s| per 32-sample frame), 64 energy-gradient bits packed into
-    ONE int64 (multimodal.gradient_fingerprint64).  Same banded-
-    Hamming candidate blocking + bit_count verify as the image dHash
-    path — the per-modality fingerprint changes, the scale shape does
-    not.  Oracle recomputes the signal analytically: codec, framing,
-    or packing bugs break the hash."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..dataops import wav as wavc
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, words, bidx, bval = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                i64 = int(doc_id)
-                g = i64 // 50
-                sig = [
-                    ((g * 37 + i * (11 + g % 7)) % 2048) - 1024
-                    for i in range(2080)
-                ]
-                if i64 % 100 == 35:
-                    sig[i64 % 2080] += 500
-                rate, _, back = wavc.decode_wav(
-                    wavc.encode_wav(16000, sig)
-                )
-                energies = [
-                    sum(abs(s) for s in back[32 * f : 32 * (f + 1)])
-                    for f in range(65)
-                ]
-                word, bands = mm.gradient_fingerprint64(energies)
-                for j, bv in enumerate(bands):
-                    ids.append(i64)
-                    words.append(word)
-                    bidx.append(j)
-                    bval.append(bv)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "word": words,
-                    "band_idx": bidx,
-                    "band_val": bval,
-                }
-            )
-
-    docs = (
-        load(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 10 == 5)
         .select("doc_id")
     )
     feats = docs.mapInPandas(

@@ -621,71 +621,3 @@ def ingest_xls_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("base_year").cast("int").alias("base_year"),
         F.col("bill_month").cast("int").alias("bill_month"),
     )
-
-
-# ====================================================================
-# JSONL corpus ingest (the jsonl interchange format LLM corpora ship as)
-# ====================================================================
-
-_JSONL_ORACLE = """
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(text AS VARCHAR) AS text,
-       CAST(lang AS VARCHAR) AS lang,
-       CAST(n_tags AS BIGINT) AS n_tags,
-       CAST(tags_joined AS VARCHAR) AS tags_joined,
-       CAST(source AS VARCHAR) AS source,
-       CAST(score AS BIGINT) AS score
-FROM (VALUES
-(1, 'the quick brown fox jumps over the lazy dog', 'en', 2,
- 'animal|pangram', 'web', 87),
-(2, 'pack my box with five dozen liquor jugs', 'en', 1, 'pangram',
- 'book', 92),
-(3, '火車站前的咖啡店 營業到午夜', 'zh', 3, 'poi|food|night', 'web', 61),
-(4, 'a so-called "stress test" of quoting', 'en', 0, '', 'forum', 45),
-(5, 'document with no tags field at all', 'en', 0, '', 'web', 70),
-(6, 'document with no meta field', 'en', 1, 'bare', NULL, NULL),
-(7, 'tabs' || chr(9) || 'and  double  spaces inside', 'en', 1,
- 'whitespace', 'crawl', 12),
-(8, 'null score inside meta', 'en', 1, 'edge', 'crawl', NULL),
-(9, '數位發展部 發布 新聞稿', 'zh', 1, 'gov', 'press', 99),
-(10, 'mixed 語言 document with ascii and cjk', 'mixed', 2,
- 'multi|script', 'web', 55),
-(11, 'trailing unicode … ellipsis — and dash', 'en', 1, 'punct',
- 'book', 78),
-(12, '12345 67890 numeric tokens only', 'und', 1, 'numeric', 'log', 3)
-) AS t(doc_id, text, lang, n_tags, tags_joined, source, score)
-"""
-
-_JSONL_SCHEMA = (
-    "doc_id long, text string, lang string, tags array<string>, "
-    "meta struct<source: string, score: long>"
-)
-
-
-@query("ingest_jsonl_corpus", _JSONL_ORACLE)
-def ingest_jsonl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL corpus ingest — the one-JSON-document-per-line interchange
-    format large text corpora ship as.  Declared schema (never inferred
-    — inference is a full extra pass at scale), nested struct access,
-    array handling with absent-field vs empty-array distinction, and
-    escaped quotes/tabs/CJK round-tripping.  The fixture is constant,
-    so the expected parse is a pinned literal table; at scale this path
-    is a parallel line-split text scan with per-line JVM JSON parsing —
-    map-only, no shuffle."""
-    fixture = str(_FIXTURE_DIR.parent / "corpus_sample.jsonl")
-    docs = spark.read.schema(_JSONL_SCHEMA).json(fixture)
-    return docs.select(
-        "doc_id",
-        "text",
-        "lang",
-        F.when(F.col("tags").isNull(), F.lit(0))
-        .otherwise(F.size("tags"))
-        .cast("long")
-        .alias("n_tags"),
-        F.when(F.col("tags").isNull(), F.lit(""))
-        .otherwise(F.concat_ws("|", "tags"))
-        .alias("tags_joined"),
-        F.col("meta.source").alias("source"),
-        F.col("meta.score").alias("score"),
-    )
-

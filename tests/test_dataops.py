@@ -374,15 +374,15 @@ def test_cms_estimate_upper_bounds_truth(spark):
 def test_iter_sampled_frames_matches_dataframe_operator(spark):
     """The extracted per-payload helper must emit exactly the rows the
     sample_frames DataFrame operator emits, for both the fake path and
-    a real GIF payload (it IS the operator's decode routing — the
-    fused queries rely on that equivalence)."""
-    from credit_card_etl_pipeline_spark.dataops import gif as gifc
+    a real APNG payload (it IS the operator's decode path — the fused
+    queries rely on that equivalence)."""
     from credit_card_etl_pipeline_spark.dataops import multimodal as mm
+    from credit_card_etl_pipeline_spark.dataops import png
 
     frames = [bytes((f * 29 + i * 5) % 256 for i in range(64)) for f in range(6)]
-    gif_payload = gifc.encode_gif(8, 8, frames)
+    apng_payload = png.encode_apng(8, 8, 1, frames)
     fake_payload = bytes(range(128))
-    for payload, fake in ((gif_payload, False), (fake_payload, True)):
+    for payload, fake in ((apng_payload, False), (fake_payload, True)):
         df = spark.createDataFrame(
             pd.DataFrame({"doc_id": [7], "payload": [payload]})
         )
@@ -398,29 +398,6 @@ def test_iter_sampled_frames_matches_dataframe_operator(spark):
         )
         assert via_op == via_helper
         assert via_helper  # non-vacuous: at least one sampled frame
-
-
-def test_audio_stats_of_matches_dataframe_operator(spark):
-    """The extracted per-payload audio-stats helper must return exactly
-    what decode_audio_stats emits (the operator calls it — pin the
-    contract anyway so a drift in either layer fails loudly)."""
-    from credit_card_etl_pipeline_spark.dataops import multimodal as mm
-    from credit_card_etl_pipeline_spark.dataops import wav as wavc
-
-    samples = [((i * 7) % 2048) - 1024 for i in range(256)]
-    payload = wavc.encode_wav(16000, samples)
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [3], "payload": [payload]})
-    )
-    row = mm.decode_audio_stats(df).collect()[0]
-    rate, n, peak, tot = mm.audio_stats_of(payload)
-    assert (
-        row["sample_rate"],
-        row["n_samples"],
-        row["peak_abs"],
-        row["sum_abs"],
-    ) == (rate, n, peak, tot)
-    assert n == 256 and rate == 16000
 
 
 def test_cms_build_weighted_matches_raw(spark):
@@ -944,25 +921,6 @@ def test_dhash64_known_pattern_and_perturbation():
     # dimension contract is enforced
     with pytest.raises(ValueError):
         dhash64(16, 16, bytes(256))
-
-
-def test_gradient_fingerprint64_contract():
-    from credit_card_etl_pipeline_spark.dataops.multimodal import (
-        gradient_fingerprint64,
-    )
-
-    # strictly increasing → all bits 0; strictly decreasing → all 1
-    assert gradient_fingerprint64(list(range(65))) == (0, [0, 0, 0, 0])
-    w, bands = gradient_fingerprint64(list(range(65, 0, -1)))
-    assert w == -1 and bands == [0xFFFF] * 4
-    # a single spike on a rising run flips exactly one gradient bit
-    # (k=10 turns 1; k=9 stays 0 since 9 > 1000 is still false)
-    vals = list(range(65))
-    vals[10] = 1000
-    w2, _ = gradient_fingerprint64(vals)
-    assert bin(w2 & ((1 << 64) - 1)).count("1") == 1
-    with pytest.raises(ValueError):
-        gradient_fingerprint64(list(range(64)))
 
 
 def test_top_pc_finds_planted_direction(spark):

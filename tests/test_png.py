@@ -172,12 +172,16 @@ def test_non_png_without_pillow_raises_or_pillow_decodes():
     except ImportError:
         has_pil = False
     if not has_pil:
-        # GIF/BMP magics route to vendored codecs; formats with no
-        # vendored path (TIFF, JPEG) raise the capability error
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_image_gray(b"II*\x00 fake tiff bytes")
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_image_gray(b"\xff\xd8\xff\xe0 fake jpeg bytes")
+        # only PNG has a vendored path; every other format (TIFF,
+        # JPEG, GIF, BMP) raises the capability error
+        for data in (
+            b"II*\x00 fake tiff bytes",
+            b"\xff\xd8\xff\xe0 fake jpeg bytes",
+            b"GIF89a fake gif bytes",
+            b"BM fake bmp bytes",
+        ):
+            with pytest.raises(NotImplementedError, match="Pillow"):
+                decode_image_gray(data)
 
 
 def test_fixtures_match_generator():

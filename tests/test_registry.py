@@ -1,7 +1,7 @@
 """The registry carries the statement → warehouse → RFM surface, each
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
 bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation,
-BPE or video-codec queries that were cut from it."""
+BPE, codec or JSONL-corpus queries that were cut from it."""
 
 from __future__ import annotations
 
@@ -83,6 +83,9 @@ REMOVED_QUERIES = {
     # JPEG codec and AVI/MJPEG video container queries
     "multimodal_jpeg_roundtrip", "multimodal_avi_frame_sample",
     "multimodal_video_dhash_neardup",
+    # GIF/BMP/WAV codec and JSONL corpus queries
+    "multimodal_wav_roundtrip", "multimodal_gif_frame_sample",
+    "multimodal_audio_fingerprint_neardup", "ingest_jsonl_corpus",
 }
 
 
