@@ -82,14 +82,6 @@ def _token_shingles(w: Column, n: int) -> Column:
     return F.array_distinct(grams)
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word ``n``-grams of the normalized text.  Prefer
-    :func:`exploded_shingles` on whole frames — it projects the token
-    array once so the ``n`` element_at references don't each
-    re-evaluate the normalize+split expression."""
-    return _token_shingles(F.split(normalize_text(col), " "), n)
-
-
 def exploded_shingles(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:

@@ -159,15 +159,6 @@ def with_pct_rank(
     return df.join(ranked, on=col, how="left")
 
 
-def with_pct_ranks(
-    df: DataFrame, specs: list[tuple[str, bool, str]]
-) -> DataFrame:
-    """Apply :func:`with_pct_rank` for each ``(col, ascending, out)``."""
-    for col, ascending, out in specs:
-        df = with_pct_rank(df, col, ascending=ascending, out=out)
-    return df
-
-
 # NOTE: the oracle-side SQL twin of this rank lives ONLY in
 # queries/__init__.py (pct_rank_sql / scoped_pct_rank_sql) — a second
 # copy here once diverged on null handling and was deleted.

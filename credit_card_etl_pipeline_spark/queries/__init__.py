@@ -103,8 +103,6 @@ _SCAN_SPREAD_MEMO: dict[str, bool] = {}
 #: near-unique so 32-1024 partitions spread evenly.
 _SPREAD_KEYS: dict[str, str] = {
     "orders": "o_orderkey",
-    "lineitem": "l_orderkey",
-    "customer": "c_custkey",
     "part": "p_partkey",
     "events": "event_id",
     "documents": "doc_id",

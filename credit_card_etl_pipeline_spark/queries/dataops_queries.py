@@ -2091,164 +2091,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# Count-min sketch (deterministic universal hashes -> oracle-checkable)
-# ------------------------------------------------------------------
-
-def _cms_bucket_sql(j: int) -> str:
-    from ..dataops.sketches import CMS_WIDTH
-
-    a, b = MINHASH_COEFFS[j]
-    x = f"({md5_int60_sql('CAST(k AS VARCHAR)')} % {MERSENNE_P})"
-    return f"((({a} * {x} + {b}) % {MERSENNE_P}) % {CMS_WIDTH})"
-
-
-_CMS_CELLS_SQL = "\n    UNION ALL\n    ".join(
-    f"SELECT {j} AS j, {_cms_bucket_sql(j)} AS bucket FROM keys"
-    for j in range(4)
-)
-
-_CMS_ORACLE = f"""
-WITH keys AS (SELECT o_custkey AS k FROM orders),
-sketch AS (
-    SELECT j, bucket, CAST(count(*) AS BIGINT) AS counter
-    FROM ({_CMS_CELLS_SQL})
-    GROUP BY j, bucket
-),
-probes AS (
-    SELECT DISTINCT o_custkey AS k FROM orders WHERE o_custkey % 100 = 0
-),
-lookups AS (
-    {" UNION ALL ".join(
-        f"SELECT k, {j} AS j, {_cms_bucket_sql(j)} AS bucket FROM probes"
-        for j in range(4))}
-),
-est AS (
-    SELECT l.k, CAST(min(s.counter) AS BIGINT) AS cms_estimate
-    FROM lookups l JOIN sketch s ON s.j = l.j AND s.bucket = l.bucket
-    GROUP BY l.k
-),
-truth AS (
-    SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS true_n
-    FROM orders GROUP BY o_custkey
-)
-SELECT e.k AS custkey, t.true_n, e.cms_estimate
-FROM est e JOIN truth t ON t.k = e.k
-"""
-
-
-@query("sketch_count_min", _CMS_ORACLE)
-def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch over order customer keys: the 4×256 sketch is
-    built in one explode + one groupBy, broadcast, and point-queried for
-    every probe key alongside the exact count — estimates are
-    deterministic (fixed universal-hash family over md5 residues), so
-    the sketch arithmetic itself is on the hash, and
-    ``cms_estimate >= true_n`` always holds."""
-    from ..dataops import sketches as sk
-
-    orders = load(spark, sf_dir, "orders")
-    keys = orders.select(F.col("o_custkey").alias("k"))
-    # r11 (§1.1, §2.4): one orders pass — the sketch builds from the
-    # exact per-key counts (counter = Σ true_n per cell ≡ raw-row
-    # count), probes filter the same key table, and the audit join
-    # reads it again; was 3 full scans + per-row md5 ×4.
-    truth = (
-        keys.groupBy("k")
-        .agg(F.count(F.lit(1)).cast("long").alias("true_n"))
-        .localCheckpoint(eager=True)
-    )
-    sketch = sk.cms_build(truth, "k", weight_col="true_n")
-    probes = truth.where(F.col("k") % 100 == 0).select("k")
-    est = sk.cms_estimate(sketch, probes, "k")
-    return (
-        est.join(truth, "k")
-        .select(F.col("k").alias("custkey"), "true_n", "cms_estimate")
-    )
-
-
-# ------------------------------------------------------------------
-# Bloom filter membership (deterministic bit set, per-segment FP audit)
-# ------------------------------------------------------------------
-
-def _bloom_pos_sql(j: int) -> str:
-    from ..dataops.sketches import BLOOM_M
-
-    a, b = MINHASH_COEFFS[j]
-    x = f"({md5_int60_sql('CAST(k AS VARCHAR)')} % {MERSENNE_P})"
-    return f"((({a} * {x} + {b}) % {MERSENNE_P}) % {BLOOM_M})"
-
-
-_BLOOM_ORACLE = f"""
-WITH members AS (
-    SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING'
-),
-bloom AS (
-    SELECT DISTINCT pos FROM (
-        {" UNION ALL ".join(
-            f"SELECT {_bloom_pos_sql(j)} AS pos FROM members"
-            for j in range(4))}
-    )
-),
-probes AS (SELECT c_custkey AS k, c_mktsegment AS seg FROM customer),
-lookups AS (
-    {" UNION ALL ".join(
-        f"SELECT k, seg, {_bloom_pos_sql(j)} AS pos FROM probes"
-        for j in range(4))}
-),
-claims AS (
-    SELECT l.k, l.seg,
-           CAST(count(b.pos) AS BIGINT) = 4 AS claimed
-    FROM lookups l LEFT JOIN bloom b ON b.pos = l.pos
-    GROUP BY l.k, l.seg
-)
-SELECT seg,
-       CAST(count(*) AS BIGINT) AS n_probed,
-       CAST(sum(CASE WHEN claimed THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_claimed,
-       CAST(sum(CASE WHEN claimed AND seg <> 'BUILDING' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_false_positive
-FROM claims
-GROUP BY seg
-"""
-
-
-@query("sketch_bloom_membership", _BLOOM_ORACLE)
-def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Bloom filter: the filter is built over one market
-    segment's customer keys (its distinct set bit positions — ≤1024
-    rows, broadcastable), then EVERY customer key is probed and the
-    claim rate audited per segment — the member segment must come back
-    100% claimed (no false negatives, a structural property), other
-    segments measure the false-positive rate.  The same fixed hash
-    family as minhash/count-min makes the filter contents themselves
-    hash-checkable in DuckDB, not just the verdict counts."""
-    from ..dataops import sketches as sk
-
-    customer = load(spark, sf_dir, "customer")
-    members = customer.where(
-        F.col("c_mktsegment") == "BUILDING"
-    ).select(F.col("c_custkey").alias("k"))
-    bloom = sk.bloom_build(members, "k")
-    probes = customer.select(
-        F.col("c_custkey").alias("k"), F.col("c_mktsegment").alias("seg")
-    )
-    claimed = sk.bloom_probe(bloom, probes, "k")
-    return claimed.groupBy("seg").agg(
-        F.count(F.lit(1)).cast("long").alias("n_probed"),
-        F.sum(F.when(F.col("bloom_member"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_claimed"),
-        F.sum(
-            F.when(
-                F.col("bloom_member") & (F.col("seg") != "BUILDING"), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_false_positive"),
-    )
-
-
-# ------------------------------------------------------------------
 # TF-IDF top terms (integer-exact scoring)
 # ------------------------------------------------------------------
 
@@ -2887,401 +2729,6 @@ def multimodal_apng_frame_sample(
 
 
 # ====================================================================
-# Deterministic hash sampling (reproducible corpus subsetting)
-# ====================================================================
-
-_HASH_SAMPLE_ORACLE = f"""
-SELECT doc_id, lang, n_chars
-FROM documents
-WHERE {md5_int60_sql("CAST(doc_id AS VARCHAR)")} % 5 = 0
-"""
-
-
-@query("documents_hash_sample", _HASH_SAMPLE_ORACLE)
-def documents_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~20% Bernoulli sample keyed on a content-stable
-    hash (md5 of the id) — the reproducible subsetting a training
-    pipeline needs where TABLESAMPLE's RNG is neither cross-engine nor
-    run-stable.  The predicate is a pure scan filter: no shuffle, no
-    state, and the SAME rows come back on any engine, any partitioning,
-    any day."""
-    from ..functions.hashing import md5_int60
-
-    return (
-        load(spark, sf_dir, "documents")
-        .where(md5_int60(F.col("doc_id").cast("string")) % 5 == 0)
-        .select("doc_id", "lang", "n_chars")
-    )
-
-
-# ====================================================================
-# Deterministic HyperLogLog (approx distinct with a checkable sketch)
-# ====================================================================
-
-_HLL_H_SQL = md5_int60_sql("CAST(o_custkey AS VARCHAR)")
-
-_HLL_REGISTERS_ORACLE = f"""
-WITH hashed AS (
-    SELECT {_HLL_H_SQL} % 64 AS bucket,
-           {_HLL_H_SQL} // 64 AS rest
-    FROM orders
-),
-rho AS (
-    SELECT CAST(bucket AS INT) AS bucket,
-           CASE WHEN rest = 0 THEN 55
-                ELSE CAST(log2(rest & -rest) AS INT) + 1 END AS r
-    FROM hashed
-)
-SELECT bucket, CAST(max(r) AS INT) AS max_rho
-FROM rho GROUP BY bucket
-"""
-
-
-@query("sketch_hll_registers", _HLL_REGISTERS_ORACLE)
-def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic HyperLogLog registers over the order-customer
-    stream (SURVEY §7's opt-in approx-distinct path, made verifiable):
-    bucket/rank derive from the cross-engine md5 hash, so the sketch
-    STATE — not just a count — is on the value hash.  One narrow
-    map-side-combined groupBy to 64 rows; registers merge by max, so
-    per-partition/per-day sketches union for free at cluster scale."""
-    from ..dataops.sketches import hll_registers
-
-    return hll_registers(load(spark, sf_dir, "orders"), "o_custkey")
-
-
-_HLL_ESTIMATE_ORACLE = f"""
-WITH hashed AS (
-    SELECT {_HLL_H_SQL} % 64 AS bucket,
-           {_HLL_H_SQL} // 64 AS rest
-    FROM orders
-),
-rho AS (
-    SELECT bucket,
-           CASE WHEN rest = 0 THEN 55
-                ELSE CAST(log2(rest & -rest) AS INT) + 1 END AS r
-    FROM hashed
-),
-regs AS (SELECT bucket, max(r) AS max_rho FROM rho GROUP BY bucket),
-agg AS (
-    SELECT CAST(sum(1::BIGINT << (56 - max_rho))
-                + (64 - count(*)) * (1::BIGINT << 56) AS BIGINT)
-               AS s_scaled,
-           CAST(count(*) AS BIGINT) AS n_buckets_hit
-    FROM regs
-)
-SELECT n_buckets_hit, s_scaled,
-       (0.7213 / (1 + 1.079 / 64)) * 64 * 64
-           * CAST(1::BIGINT << 56 AS DOUBLE) / s_scaled AS hll_estimate,
-       (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders)
-           AS n_exact
-FROM agg
-"""
-
-
-@query("sketch_hll_estimate", _HLL_ESTIMATE_ORACLE)
-def sketch_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL cardinality estimate next to the exact count: the harmonic
-    sum rides exact integers (2^(56-rho) per register, common
-    denominator 2^56), leaving ONE double division — bit-identical
-    across engines given identical registers, which the registers
-    query proves.  The exact distinct is the expensive full-shuffle
-    the sketch replaces at 100 TB; here it sits in the same row as the
-    estimate so the error is visible on the board."""
-    from ..dataops.sketches import hll_estimate, hll_registers
-
-    orders = load(spark, sf_dir, "orders")
-    est = hll_estimate(hll_registers(orders, "o_custkey"))
-    exact = orders.agg(
-        F.countDistinct("o_custkey").cast("long").alias("n_exact")
-    )
-    return est.crossJoin(exact)
-
-
-# ====================================================================
-# Python UDTF (table function) — sentence segmentation
-# ====================================================================
-
-_UDTF_SENTENCES_ORACLE = """
-WITH parts AS (
-    SELECT doc_id,
-           u.i - 1 AS pos,
-           trim(s[u.i]) AS sentence
-    FROM (SELECT doc_id, string_split(text, '. ') AS s FROM documents),
-         UNNEST(generate_series(1, len(s))) AS u(i)
-)
-SELECT doc_id, CAST(pos AS INT) AS pos, sentence
-FROM parts WHERE sentence <> ''
-"""
-
-
-@query("udtf_sentence_split", _UDTF_SENTENCES_ORACLE)
-def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF (Spark 4 user-defined TABLE function): a sentence
-    segmenter that fans each document into (pos, sentence) rows via a
-    LATERAL join — the API for row-multiplying Python logic that
-    doesn't fit a scalar UDF (its eval streams per-row through Arrow
-    like any Python worker stage).  Here the segmentation rule is
-    deliberately SQL-expressible so the UDTF machinery itself —
-    registration, lateral correlation, fan-out schema — is what the
-    oracle checks; a production segmenter would carry the
-    model/abbreviation logic SQL can't."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="pos: int, sentence: string")
-    class SentenceSplit:
-        def eval(self, text: str):  # noqa: ANN001 - UDTF contract
-            if text is None:
-                return
-            for i, raw in enumerate(text.split(". ")):
-                # strip SPACES only: the oracle's trim() does not eat
-                # tabs/newlines, so neither may the Python side
-                s = raw.strip(" ")
-                if s:
-                    yield i, s
-
-    spark.udtf.register("sentence_split", SentenceSplit)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
-    return spark.sql(
-        "SELECT d.doc_id, s.pos, s.sentence "
-        "FROM docs_udtf d, LATERAL sentence_split(d.text) s"
-    )
-
-
-# ====================================================================
-# Per-stratum fixed-size deterministic sample
-# ====================================================================
-
-_STRATUM_SAMPLE_ORACLE = f"""
-WITH keyed AS (
-    SELECT lang, doc_id, n_chars,
-           row_number() OVER (
-               PARTITION BY lang
-               ORDER BY {md5_int60_sql("CAST(doc_id AS VARCHAR)")}, doc_id
-           ) AS rk
-    FROM documents
-)
-SELECT lang, doc_id, n_chars, CAST(rk AS BIGINT) AS rk
-FROM keyed WHERE rk <= 5
-"""
-
-
-@query("documents_stratified_fixed_sample", _STRATUM_SAMPLE_ORACLE)
-def documents_stratified_fixed_sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-stratum fixed-size sampling: exactly 5 docs per language,
-    chosen by ranking each stratum on the cross-engine md5 hash — the
-    deterministic equivalent of per-group reservoir sampling (eval-set
-    carving, per-source quota enforcement).  One shuffle on the
-    stratum key; the hash order is data-independent, so the SAME
-    sample survives repartitioning, engine swaps, and reruns."""
-    from pyspark.sql import Window
-
-    from ..functions.hashing import md5_int60
-
-    docs = load(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        md5_int60(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        docs.select("lang", "doc_id", "n_chars")
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= 5)
-    )
-
-
-# ====================================================================
-# PageRank over the user hand-off graph (iterative algorithm, exact
-# integer arithmetic, unrolled oracle)
-# ====================================================================
-
-_PR_ITERS = 3
-_PR_BASE = 10**9  # nano-units; see dataops.graph.RANK_BASE headroom note
-_PR_TELEPORT = (3 * _PR_BASE) // 20
-
-
-def _pr_iter_sql(i: int) -> str:
-    # split-division identity (exact): floor(rank*w/outw) =
-    # w*(rank//outw) + (rank%outw)*w//outw — the naive product
-    # overflows BIGINT on hot nodes (r9 skewed corpus)
-    return f"""
-c{i} AS (
-    SELECT e.dst AS node,
-           CAST(sum(e.w * (r.rank // e.outw)
-                    + ((r.rank % e.outw) * e.w) // e.outw)
-                AS BIGINT) AS s
-    FROM e JOIN r{i - 1} r ON r.node = e.src
-    GROUP BY e.dst
-),
-r{i} AS (
-    SELECT n.node,
-           CAST({_PR_TELEPORT} + (17 * COALESCE(c.s, 0)) // 20
-                AS BIGINT) AS rank
-    FROM nodes n LEFT JOIN c{i} c ON c.node = n.node
-)"""
-
-
-_PAGERANK_ORACLE = f"""
-WITH seq AS (
-    SELECT event_type, user_id,
-           lead(user_id) OVER (PARTITION BY event_type
-                               ORDER BY ts, event_id) AS nxt
-    FROM events
-),
-edges AS (
-    SELECT user_id AS src, nxt AS dst, CAST(count(*) AS BIGINT) AS w
-    FROM seq
-    WHERE nxt IS NOT NULL AND nxt <> user_id
-    GROUP BY user_id, nxt
-),
-nodes AS (
-    SELECT src AS node FROM edges UNION SELECT dst FROM edges
-),
-outw AS (
-    SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM edges GROUP BY src
-),
-e AS (SELECT src, dst, w, outw FROM edges JOIN outw USING (src)),
-r0 AS (
-    SELECT node, CAST({_PR_BASE} AS BIGINT) AS rank FROM nodes
-),{",".join(_pr_iter_sql(i) for i in range(1, _PR_ITERS + 1))}
-SELECT node AS user_id, rank FROM r{_PR_ITERS}
-"""
-
-
-@query("events_user_pagerank", _PAGERANK_ORACLE)
-def events_user_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank over the user hand-off graph (edge u→v when
-    v's event directly follows u's within an event_type stream, weight
-    = hand-off count), {_PR_ITERS} rounds in EXACT integer micro-units
-    — see dataops.graph.pagerank for why float PageRank can't be
-    value-checked and this one can.  Each round is one src-keyed join
-    + one dst-keyed aggregate, driver state zero; the edge derivation
-    is a lead() window (sequence extraction), then the iteration cost
-    depends only on the AGGREGATED graph, not the fact volume."""
-    from pyspark.sql import Window
-
-    from ..dataops.graph import pagerank
-
-    events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    seq = events.select(
-        "user_id", F.lead("user_id").over(w).alias("nxt")
-    )
-    edges = (
-        seq.where(F.col("nxt").isNotNull() & (F.col("nxt") != F.col("user_id")))
-        .groupBy(
-            F.col("user_id").alias("src"), F.col("nxt").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    return pagerank(edges, iters=_PR_ITERS).select(
-        F.col("node").alias("user_id"), "rank"
-    )
-
-
-# ====================================================================
-# HLL sketch merge (per-segment sketches → union — the sketch algebra
-# that makes one pass serve every rollup grain)
-# ====================================================================
-
-_HLL_MERGE_ORACLE = f"""
-WITH hashed AS (
-    SELECT o_orderpriority AS seg,
-           {_HLL_H_SQL} % 64 AS bucket,
-           {_HLL_H_SQL} // 64 AS rest
-    FROM orders
-),
-rho AS (
-    SELECT seg, CAST(bucket AS INT) AS bucket,
-           CASE WHEN rest = 0 THEN 55
-                ELSE CAST(log2(rest & -rest) AS INT) + 1 END AS r
-    FROM hashed
-),
-segregs AS (
-    SELECT seg, bucket, CAST(max(r) AS INT) AS max_rho
-    FROM rho GROUP BY seg, bucket
-),
-merged AS (
-    SELECT bucket, CAST(max(max_rho) AS INT) AS max_rho
-    FROM segregs GROUP BY bucket
-),
-globalregs AS (
-    SELECT bucket, CAST(max(r) AS INT) AS max_rho
-    FROM rho GROUP BY bucket
-),
-agg AS (
-    SELECT CAST(sum(1::BIGINT << (56 - max_rho))
-                + (64 - count(*)) * (1::BIGINT << 56) AS BIGINT)
-               AS s_scaled,
-           CAST(count(*) AS BIGINT) AS n_buckets_hit
-    FROM merged
-),
-diff AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_mismatch
-    FROM merged m FULL JOIN globalregs g USING (bucket)
-    WHERE m.max_rho IS DISTINCT FROM g.max_rho
-)
-SELECT (SELECT CAST(count(DISTINCT seg) AS BIGINT) FROM segregs)
-           AS n_segments,
-       n_buckets_hit, s_scaled,
-       (0.7213 / (1 + 1.079 / 64)) * 64 * 64
-           * CAST(1::BIGINT << 56 AS DOUBLE) / s_scaled AS hll_estimate,
-       (SELECT n_mismatch FROM diff) = 0 AS merge_lossless
-FROM agg
-"""
-
-
-@query("sketch_hll_merge", _HLL_MERGE_ORACLE)
-def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL merge: per-priority segment sketches (5 sketches x 64
-    registers) unioned by per-bucket max, with the merged estimate AND
-    an in-engine losslessness check (merged registers == registers of
-    the concatenated stream, via full-outer anti-compare).  This is
-    the sketch property that matters at 100 TB: distinct-count any
-    rollup grain from ONE pass of per-partition sketches, no second
-    scan, no giant distinct shuffle."""
-    from ..dataops.sketches import (
-        hll_estimate,
-        hll_merge,
-        hll_registers,
-        hll_registers_by,
-    )
-
-    orders = load(spark, sf_dir, "orders")
-    by_seg = hll_registers_by(orders, "o_custkey", "o_orderpriority")
-    merged = hll_merge(by_seg)
-    est = hll_estimate(merged)
-    glob = hll_registers(orders, "o_custkey")
-    n_mismatch = (
-        merged.withColumnRenamed("max_rho", "m_rho")
-        .join(
-            glob.withColumnRenamed("max_rho", "g_rho"),
-            "bucket",
-            "full",
-        )
-        .where(
-            ~(F.col("m_rho").eqNullSafe(F.col("g_rho")))
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    n_segments = by_seg.agg(
-        F.countDistinct("seg").cast("long").alias("n_segments")
-    )
-    return (
-        n_segments.crossJoin(est)
-        .crossJoin(n_mismatch.select((F.col("n") == 0).alias("merge_lossless")))
-        .select(
-            "n_segments",
-            "n_buckets_hit",
-            "s_scaled",
-            "hll_estimate",
-            "merge_lossless",
-        )
-    )
-
-
-# ====================================================================
 # Corrupt-media decode verdicts: the per-cell failure taxonomy of the
 # vendored codecs, certified Spark-side against an oracle (the batch
 # twin of tests/test_codec_hostile.py — a 100 TB media corpus WILL
@@ -3391,150 +2838,6 @@ def multimodal_corrupt_decode_verdicts(
 
 
 # ====================================================================
-# Bloom semi-join pushdown (pre-shuffle fact reduction)
-# ====================================================================
-
-#: Bits per member key for the pushdown filter.  m is DERIVED from the
-#: dim-side count at run time (rounded up to a 65536 multiple with
-#: exact integer arithmetic — the identical formula on both engines),
-#: because a FIXED width saturates as the corpus grows: the r8 sf1
-#: certification measured the old hardcoded 2^16 filter at 46k keys
-#: passing essentially every fact row (wall 9.7x the sf0.1 reading —
-#: the only linear-scaling query in the registry), and the 30x soak
-#: saw the same with the 1024-bit default (BENCH_HISTORY r5c).
-_PUSHDOWN_BITS_PER_KEY = 32
-
-
-def _pushdown_m(n_keys: int) -> int:
-    """Smallest 65536 multiple >= 32*n — exact int, both engines."""
-    return 65536 * ((_PUSHDOWN_BITS_PER_KEY * n_keys + 65535) // 65536)
-
-
-def _bloom_key_pos_sql(j: int, key_expr: str, m: int | str) -> str:
-    a, b = MINHASH_COEFFS[j]
-
-    x = f"({md5_int60_sql(f'CAST({key_expr} AS VARCHAR)')} % {MERSENNE_P})"
-    return f"((({a} * {x} + {b}) % {MERSENNE_P}) % {m})"
-
-
-# m rides a 1-row CROSS JOIN as a plain column (NOT a scalar subquery
-# inside the join predicates: that blocked DuckDB's hash-semi-join
-# conversion and the probe went nested-loop — effectively hung at sf1)
-_BLOOM_PUSHDOWN_ORACLE = f"""
-WITH dim AS (
-    SELECT o_orderkey AS k,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS ordprice_cents
-    FROM orders
-    WHERE o_orderpriority = '1-URGENT'
-      AND year(CAST(o_orderdate AS DATE)) = 1996
-),
-mparam AS (
-    SELECT 65536 * (({_PUSHDOWN_BITS_PER_KEY} * count(*) + 65535)
-                    // 65536) AS m
-    FROM dim
-),
-bloom AS (
-    SELECT DISTINCT pos FROM (
-        {" UNION ALL ".join(
-            f"SELECT {_bloom_key_pos_sql(j, 'k', 'm')}"
-            f" AS pos FROM dim CROSS JOIN mparam"
-            for j in range(4))}
-    )
-),
-lpos AS (
-    SELECT l_orderkey, l_extendedprice,
-           {", ".join(
-        f"{_bloom_key_pos_sql(j, 'l.l_orderkey', 'm')} AS p{j}"
-        for j in range(4))}
-    FROM lineitem l CROSS JOIN mparam
-),
-passed AS (
-    SELECT l_orderkey, l_extendedprice FROM lpos
-    WHERE {" AND ".join(
-        f"EXISTS (SELECT 1 FROM bloom b WHERE b.pos = p{j})"
-        for j in range(4))}
-),
-joined AS (
-    SELECT p.l_orderkey, p.l_extendedprice
-    FROM passed p JOIN dim d ON d.k = p.l_orderkey
-)
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_fact,
-       (SELECT CAST(count(*) AS BIGINT) FROM passed) AS n_bloom_pass,
-       CAST(count(*) AS BIGINT) AS n_joined,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-           AS revenue_cents
-FROM joined
-"""
-
-
-@query("bloom_semi_join_pushdown", _BLOOM_PUSHDOWN_ORACLE)
-def bloom_semi_join_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter join pushdown: the urgent-1996 order keys build a
-    <=1024-position Bloom filter, the lineitem fact is pre-filtered
-    MAP-SIDE by chained broadcast semi-joins (dataops.sketches.
-    bloom_prefilter — the manual form of Spark's runtime row-level
-    filtering), and only the surviving sliver reaches the exact join
-    that removes the false positives.  Because the filter is the
-    deterministic hash-family sketch, the oracle recomputes the EXACT
-    pushdown pass-count — the reduction itself is on the value hash,
-    not just the final join result.  At 100 TB: broadcast KBs, shuffle
-    the matching fraction instead of everything."""
-    from ..dataops import sketches as sk
-
-    from ..functions import caching
-
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-    # the dim slice feeds the sizing count, the filter build, and the
-    # exact join's broadcast — persist it so the orders scan runs once
-    # (r11, guide §5; it is the broadcast side, so caching it is free
-    # at any scale).  NOTE this is the SERIAL-reuse persist shape
-    # (count → build → join happen in sequence), where persist wins —
-    # unlike the parallel-consumer cases reverted elsewhere this round.
-    dim = caching.track(
-        orders.where(
-            (F.col("o_orderpriority") == "1-URGENT")
-            & (F.year(F.to_date("o_orderdate")) == 1996)
-        )
-        .select(F.col("o_orderkey").alias("k"))
-        .persist()
-    )
-    # size the filter FROM the member count (one bounded scalar
-    # collect) — a fixed m saturates as the corpus grows and the
-    # pushdown silently degrades to pass-everything (r8 sf1 catch)
-    m = _pushdown_m(dim.count())
-    # the position set is the build side of all 4 chained semi joins —
-    # persist it or each broadcast exchange re-runs the build (r11)
-    bloom = caching.track(sk.bloom_build(dim, "k", m=m).persist())
-    passed = sk.bloom_prefilter(
-        bloom,
-        lineitem.select("l_orderkey", "l_extendedprice"),
-        "l_orderkey",
-        m=m,
-    )
-    n_fact = lineitem.agg(F.count(F.lit(1)).cast("long").alias("n_fact"))
-    # ONE pass over the bloom-surviving sliver: the dim key is unique,
-    # so a broadcast LEFT join preserves |passed| rows and the pass /
-    # joined / revenue aggregates all read the same scan (was two
-    # separate passes over `passed`, r11 §1.1)
-    stats = passed.join(
-        F.broadcast(dim), passed["l_orderkey"] == dim["k"], "left"
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_bloom_pass"),
-        F.count(F.col("k")).cast("long").alias("n_joined"),
-        F.sum(
-            F.when(
-                F.col("k").isNotNull(),
-                F.round(F.col("l_extendedprice") * 100).cast("long"),
-            )
-        )
-        .cast("long")
-        .alias("revenue_cents"),
-    )
-    return n_fact.crossJoin(stats)
-
-
-# ====================================================================
 # Vectorized Pandas UDF (Arrow scalar path) — Damerau-Levenshtein
 # ====================================================================
 
@@ -3620,420 +2923,6 @@ def udf_vectorized_edit_distance(
     prefix = F.substring(tx.normalize_text(F.col("text")), 1, 40)
     return docs.select(
         "doc_id", dl_udf(prefix).alias("edit_distance")
-    )
-
-
-# ====================================================================
-# HLL set algebra: intersection estimate via inclusion-exclusion
-# ====================================================================
-
-_HLL_EST_EXPR = (
-    "(0.7213 / (1 + 1.079 / 64)) * 64 * 64 "
-    "* CAST(1::BIGINT << 56 AS DOUBLE) / s_scaled"
-)
-
-
-def _hll_seg_cte(name: str, pred: str) -> str:
-    return f"""
-{name}_rho AS (
-    SELECT CAST({_HLL_H_SQL} % 64 AS INT) AS bucket,
-           CASE WHEN {_HLL_H_SQL} // 64 = 0 THEN 55
-                ELSE CAST(log2(({_HLL_H_SQL} // 64)
-                               & -({_HLL_H_SQL} // 64)) AS INT) + 1
-           END AS r
-    FROM orders WHERE {pred}
-),
-{name}_regs AS (
-    SELECT bucket, CAST(max(r) AS INT) AS max_rho
-    FROM {name}_rho GROUP BY bucket
-),
-{name}_est AS (
-    SELECT {_HLL_EST_EXPR} AS est FROM (
-        SELECT CAST(sum(1::BIGINT << (56 - max_rho))
-                    + (64 - count(*)) * (1::BIGINT << 56) AS BIGINT)
-                   AS s_scaled
-        FROM {name}_regs
-    )
-)"""
-
-
-_HLL_INTERSECT_ORACLE = f"""
-WITH {_hll_seg_cte("a", "o_orderpriority = '1-URGENT'")},
-{_hll_seg_cte("b", "o_orderpriority = '2-HIGH'")},
-u_regs AS (
-    SELECT bucket, CAST(max(max_rho) AS INT) AS max_rho
-    FROM (SELECT * FROM a_regs UNION ALL SELECT * FROM b_regs)
-    GROUP BY bucket
-),
-u_est AS (
-    SELECT {_HLL_EST_EXPR} AS est FROM (
-        SELECT CAST(sum(1::BIGINT << (56 - max_rho))
-                    + (64 - count(*)) * (1::BIGINT << 56) AS BIGINT)
-                   AS s_scaled
-        FROM u_regs
-    )
-),
-exact AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_exact FROM (
-        SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-        INTERSECT
-        SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'
-    )
-)
-SELECT a_est.est AS est_a, b_est.est AS est_b, u_est.est AS est_union,
-       a_est.est + b_est.est - u_est.est AS est_intersection,
-       (SELECT n_exact FROM exact) AS n_exact
-FROM a_est, b_est, u_est
-"""
-
-
-@query("sketch_hll_intersection", _HLL_INTERSECT_ORACLE)
-def sketch_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL set algebra: the customer overlap between two order
-    priorities estimated by inclusion-exclusion (|A| + |B| - |A∪B|,
-    the union estimate coming from the per-bucket max merge — HLLs
-    cannot intersect directly), with the exact INTERSECT count in the
-    same row so the error is on the board.  At 100 TB the three
-    estimates derive from the SAME per-segment register sets computed
-    in one pass; only the audit column needs the exact distinct."""
-    from ..dataops.sketches import hll_estimate, hll_merge, hll_registers
-
-    orders = load(spark, sf_dir, "orders")
-    a = orders.where(F.col("o_orderpriority") == "1-URGENT")
-    b = orders.where(F.col("o_orderpriority") == "2-HIGH")
-    ra = hll_registers(a, "o_custkey")
-    rb = hll_registers(b, "o_custkey")
-    ru = hll_merge(
-        ra.select(F.lit("a").alias("seg"), "bucket", "max_rho").unionByName(
-            rb.select(F.lit("b").alias("seg"), "bucket", "max_rho")
-        )
-    )
-    ea = hll_estimate(ra).select(F.col("hll_estimate").alias("est_a"))
-    eb = hll_estimate(rb).select(F.col("hll_estimate").alias("est_b"))
-    eu = hll_estimate(ru).select(F.col("hll_estimate").alias("est_union"))
-    exact = (
-        a.select("o_custkey")
-        .intersect(b.select("o_custkey"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
-    )
-    return (
-        ea.crossJoin(eb)
-        .crossJoin(eu)
-        .select(
-            "est_a",
-            "est_b",
-            "est_union",
-            (
-                F.col("est_a") + F.col("est_b") - F.col("est_union")
-            ).alias("est_intersection"),
-        )
-        .crossJoin(exact)
-    )
-
-
-# ====================================================================
-# Triangle counting (degree-ordered wedge join)
-# ====================================================================
-
-_TRIANGLES_ORACLE = """
-WITH seq AS (
-    SELECT event_type, user_id,
-           lead(user_id) OVER (PARTITION BY event_type
-                               ORDER BY ts, event_id) AS nxt
-    FROM events
-),
-raw AS (
-    SELECT user_id AS src, nxt AS dst
-    FROM seq WHERE nxt IS NOT NULL AND nxt <> user_id
-),
-und AS (
-    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-    FROM raw
-),
-deg AS (
-    SELECT n, count(*) AS d FROM (
-        SELECT a AS n FROM und UNION ALL SELECT b FROM und
-    ) GROUP BY n
-),
-oriented AS (
-    SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS lo,
-           CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS hi
-    FROM und
-    JOIN deg dga ON dga.n = und.a
-    JOIN deg dgb ON dgb.n = und.b,
-    LATERAL (SELECT dga.d AS da, dgb.d AS db) t
-),
-wedges AS (
-    SELECT w1.lo AS p, w1.hi AS q1, w2.hi AS q2
-    FROM oriented w1 JOIN oriented w2 ON w1.lo = w2.lo
-    WHERE w1.hi < w2.hi
-),
-tris AS (
-    SELECT p, q1, q2
-    FROM wedges JOIN und ON und.a = q1 AND und.b = q2
-)
-SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-FROM (
-    SELECT p AS node FROM tris
-    UNION ALL SELECT q1 FROM tris
-    UNION ALL SELECT q2 FROM tris
-)
-GROUP BY node
-"""
-
-
-@query("events_triangle_counts", _TRIANGLES_ORACLE)
-def events_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts on the undirected hand-off graph via
-    the degree-ordered wedge join (dataops.graph.triangle_counts):
-    edges orient from the lower-(degree, id) endpoint, so wedge
-    fan-out is bounded by the graph's degeneracy, not its max degree
-    — the property that survives power-law graphs at 100 TB.  Exact
-    integer counts, identical orientation rule in the oracle."""
-    from pyspark.sql import Window
-
-    from ..dataops.graph import triangle_counts
-
-    events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    seq = events.select(
-        "user_id", F.lead("user_id").over(w).alias("nxt")
-    )
-    edges = seq.where(
-        F.col("nxt").isNotNull() & (F.col("nxt") != F.col("user_id"))
-    ).select(F.col("user_id").alias("src"), F.col("nxt").alias("dst"))
-    return triangle_counts(edges).select(
-        F.col("node").alias("node"), "n_triangles"
-    )
-
-
-# ====================================================================
-# Greedy LM generation (argmax decoding from the corpus bigram model)
-# ====================================================================
-
-_GEN_STEPS = 12
-
-
-def _gen_oracle() -> str:
-    # MATERIALIZED: the 12 unrolled decode steps each reference
-    # `best`; without the hint DuckDB inlines the whole model fit into
-    # every correlated subquery (85s observed; 2s materialized)
-    parts = [f"""
-w AS MATERIALIZED (SELECT string_split({_NORM_DOC_SQL}, ' ') AS toks
-                   FROM documents),
-uni AS MATERIALIZED (
-    SELECT t AS tok, count(*) AS c FROM (SELECT unnest(toks) AS t FROM w)
-    GROUP BY t
-),
-big AS MATERIALIZED (
-    SELECT prev, nxt, count(*) AS c FROM (
-        SELECT unnest(list_slice(toks, 1, len(toks) - 1)) AS prev,
-               unnest(list_slice(toks, 2, len(toks))) AS nxt
-        FROM w
-    ) GROUP BY prev, nxt
-),
-best AS MATERIALIZED (
-    SELECT prev, nxt FROM (
-        SELECT prev, nxt,
-               row_number() OVER (PARTITION BY prev
-                                  ORDER BY c DESC, nxt) AS rn
-        FROM big
-    ) WHERE rn = 1
-),
-g0 AS (
-    SELECT CAST(0 AS BIGINT) AS step,
-           (SELECT tok FROM uni ORDER BY c DESC, tok LIMIT 1) AS tok
-)"""]
-    for i in range(1, _GEN_STEPS):
-        parts.append(f"""
-g{i} AS (
-    SELECT CAST({i} AS BIGINT) AS step,
-           (SELECT nxt FROM best
-            WHERE prev = (SELECT tok FROM g{i - 1})) AS tok
-)""")
-    union = " UNION ALL ".join(
-        f"SELECT * FROM g{i}" for i in range(_GEN_STEPS)
-    )
-    return (
-        "WITH " + ",".join(parts)
-        + f"\nSELECT step, tok FROM ({union}) WHERE tok IS NOT NULL"
-    )
-
-
-_GEN_ORACLE = _gen_oracle()
-
-
-@query("text_greedy_generation", _GEN_ORACLE)
-def text_greedy_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy argmax decoding from the corpus-fit word-bigram model —
-    the deterministic skeleton of LM inference (the stochastic part is
-    sampling; argmax with a lexicographic tie-break is exactly
-    reproducible, so both engines emit the SAME {_GEN_STEPS}-token
-    continuation, greedy-decoding repetition loops included).  The
-    model fit is distributed (one gram shuffle, then a per-prev argmax
-    window); the {_GEN_STEPS}-step decode loop collects ONE ROW per
-    step off the ranked-continuation table."""
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    toks = tx.words(F.col("text"))
-    w = docs.select(toks.alias("toks"))
-    uni = (
-        w.select(F.explode("toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    grams = (
-        w.where(F.size("toks") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1),"
-                    " i -> struct(element_at(toks, i) AS prev,"
-                    " element_at(toks, i + 1) AS nxt))"
-                )
-            ).alias("g")
-        )
-        .select("g.prev", "g.nxt")
-        .groupBy("prev", "nxt")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    rk = Window.partitionBy("prev").orderBy(F.col("c").desc(), F.col("nxt"))
-    # the ranked table is vocab-sized; ONE partition lets the whole
-    # decode walk run inside a single task (below)
-    best = (
-        grams.withColumn("rn", F.row_number().over(rk))
-        .where(F.col("rn") == 1)
-        .select("prev", "nxt")
-        .coalesce(1)
-    )
-
-    start = (
-        uni.orderBy(F.col("c").desc(), F.col("tok")).limit(1).collect()
-    )[0]["tok"]
-
-    # r11 (guide §1.2 fixed costs): the decode loop used to collect ONE
-    # row per step — 12 sequential driver jobs whose per-job constant
-    # (~0.2s each) dominated the query.  The walk over the argmax
-    # pointer table is a pure function of that table, so run it in the
-    # EXECUTOR: one Arrow-batched pass over the single-partition ranked
-    # table builds the prev→next map and emits the _GEN_STEPS-token
-    # path — one job, and driver state stays the path itself (the
-    # vocab-sized map lives in one task, exactly where the coalesced
-    # table already sat).
-    def walk(batches):
-        import pandas as pd
-
-        nxt: dict = {}
-        for pdf in batches:
-            for p, n in zip(pdf["prev"], pdf["nxt"]):
-                nxt[p] = n
-        steps, toks = [0], [start]
-        cur = start
-        for step in range(1, _GEN_STEPS):
-            if cur not in nxt:
-                break
-            cur = nxt[cur]
-            steps.append(step)
-            toks.append(cur)
-        yield pd.DataFrame(
-            {"step": pd.array(steps, dtype="int64"), "tok": toks}
-        )
-
-    return best.mapInPandas(walk, schema="step long, tok string")
-
-
-# ------------------------------------------------------------------
-# Heavy hitters via count-min (sketch-filtered candidates + audit)
-# ------------------------------------------------------------------
-
-def _cms_user_bucket_sql(j: int) -> str:
-    from ..dataops.sketches import CMS_WIDTH
-
-    a, b = MINHASH_COEFFS[j]
-    x = f"({md5_int60_sql('CAST(k AS VARCHAR)')} % {MERSENNE_P})"
-    return f"((({a} * {x} + {b}) % {MERSENNE_P}) % {CMS_WIDTH})"
-
-
-_HEAVY_ORACLE = f"""
-WITH keys AS (SELECT user_id AS k FROM events),
-sketch AS (
-    SELECT j, bucket, CAST(count(*) AS BIGINT) AS counter
-    FROM (
-        {" UNION ALL ".join(
-            f"SELECT {j} AS j, {_cms_user_bucket_sql(j)} AS bucket FROM keys"
-            for j in range(4))}
-    )
-    GROUP BY j, bucket
-),
-thresh AS (
-    SELECT CAST(count(*) // 256 AS BIGINT) AS phi_n FROM keys
-),
-probes AS (SELECT DISTINCT k FROM keys),
-lookups AS (
-    {" UNION ALL ".join(
-        f"SELECT k, {j} AS j, {_cms_user_bucket_sql(j)} AS bucket FROM probes"
-        for j in range(4))}
-),
-est AS (
-    SELECT l.k, CAST(min(s.counter) AS BIGINT) AS cms_estimate
-    FROM lookups l JOIN sketch s ON s.j = l.j AND s.bucket = l.bucket
-    GROUP BY l.k
-),
-truth AS (
-    SELECT k, CAST(count(*) AS BIGINT) AS true_n FROM keys GROUP BY k
-)
-SELECT e.k AS user_id, e.cms_estimate, t.true_n,
-       t.true_n > th.phi_n AS is_true_heavy
-FROM est e
-JOIN truth t ON t.k = e.k
-CROSS JOIN thresh th
-WHERE e.cms_estimate > th.phi_n
-"""
-
-
-@query("sketch_heavy_hitters", _HEAVY_ORACLE)
-def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy hitters (phi = 1/256 of the stream) through the count-min
-    sketch: candidate keys are kept only when their CMS estimate
-    clears the threshold, then audited against exact counts.  CMS
-    never under-counts, so every true heavy hitter survives the filter
-    (no false negatives — the structural guarantee this query makes
-    checkable: rows with is_true_heavy=false are the sketch's false
-    positives, and no true-heavy key is absent).  The sketch is d·w ≤
-    1024 cells however large the stream — it broadcasts; the exact
-    audit join is one shuffle on the surviving candidates only, which
-    is the point of sketch-first filtering at 100 TB."""
-    from ..dataops import sketches as sk
-
-    ev = load(spark, sf_dir, "events")
-    keys = ev.select(F.col("user_id").alias("k"))
-    # r11 (§1.1, §2.4): sketch, threshold, probes, estimates and audit
-    # are ALL functions of the exact per-key counts — one events pass
-    # (groupBy k) instead of four full scans, and each key is md5-ed
-    # once per sketch row instead of every EVENT row.  counter = Σ
-    # true_n per cell ≡ raw-row count per cell; Σ true_n ≡ count(*);
-    # truth's keys ≡ distinct probes — identical rows by construction.
-    truth = (
-        keys.groupBy("k")
-        .agg(F.count(F.lit(1)).cast("long").alias("true_n"))
-        .localCheckpoint(eager=True)
-    )
-    sketch = sk.cms_build(truth, "k", weight_col="true_n")
-    thresh = truth.agg(
-        (F.sum("true_n") / F.lit(256)).cast("long").alias("phi_n")
-    )
-    est = sk.cms_estimate(sketch, truth.select("k"), "k")
-    return (
-        est.join(truth, "k")
-        .crossJoin(F.broadcast(thresh))
-        .where(F.col("cms_estimate") > F.col("phi_n"))
-        .select(
-            F.col("k").alias("user_id"),
-            "cms_estimate",
-            "true_n",
-            (F.col("true_n") > F.col("phi_n")).alias("is_true_heavy"),
-        )
     )
 
 
@@ -4171,98 +3060,6 @@ def parts_fuzzy_link(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .drop("rn")
-    )
-
-
-# ------------------------------------------------------------------
-# Hop-bounded shortest paths (Bellman-Ford, exact integer costs)
-# ------------------------------------------------------------------
-
-_SP_ITERS = 4
-_SP_INF = 10**15
-
-
-def _sp_iter_sql(i: int) -> str:
-    return f"""
-relax{i} AS (
-    SELECT e.dst AS node, min(d.dist + e.cost) AS rd
-    FROM e JOIN d{i - 1} d ON d.node = e.src
-    WHERE d.dist < {_SP_INF}
-    GROUP BY e.dst
-),
-d{i} AS (
-    SELECT d.node,
-           least(d.dist, coalesce(r.rd, {_SP_INF})) AS dist
-    FROM d{i - 1} d LEFT JOIN relax{i} r ON r.node = d.node
-)"""
-
-
-_SP_ORACLE = f"""
-WITH seq AS (
-    SELECT event_type, user_id,
-           lead(user_id) OVER (PARTITION BY event_type
-                               ORDER BY ts, event_id) AS nxt
-    FROM events
-),
-edges AS (
-    SELECT user_id AS src, nxt AS dst,
-           CAST(1000000 // count(*) AS BIGINT) AS cost
-    FROM seq
-    WHERE nxt IS NOT NULL AND nxt <> user_id
-    GROUP BY user_id, nxt
-),
-seeds AS (
-    SELECT DISTINCT user_id AS node FROM events WHERE user_id % 29 = 0
-),
-nodes AS (
-    SELECT src AS node FROM edges
-    UNION SELECT dst FROM edges
-    UNION SELECT node FROM seeds
-),
-d0 AS (
-    SELECT n.node,
-           CASE WHEN s.node IS NULL THEN CAST({_SP_INF} AS BIGINT)
-                ELSE CAST(0 AS BIGINT) END AS dist
-    FROM nodes n LEFT JOIN seeds s ON s.node = n.node
-),
-e AS (SELECT src, dst, cost FROM edges),
-{",".join(_sp_iter_sql(i) for i in range(1, _SP_ITERS + 1))}
-SELECT node AS user_id, dist AS dist_cost
-FROM d{_SP_ITERS} WHERE dist < {_SP_INF}
-"""
-
-
-@query("events_shortest_paths", _SP_ORACLE)
-def events_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hop-bounded weighted shortest paths over the user hand-off
-    graph (edge cost = 10^6 // hand-off count, so stronger ties are
-    cheaper): Bellman-Ford from the seed set, 4 relaxation rounds,
-    all-integer — the "influence distance" companion to
-    events_user_pagerank on the same graph.  Every round is one
-    src-keyed join + one dst-keyed min + a key-aligned merge back
-    (bounded driver state, linear plan growth); the 4-round unroll is
-    mirrored CTE-for-CTE in the oracle so the entire distance table is
-    on the hash.  At 100 TB rounds localCheckpoint every few
-    iterations exactly as connected components does."""
-    from pyspark.sql import Window
-
-    from ..dataops.graph import shortest_paths
-
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    seq = ev.select("user_id", F.lead("user_id").over(w).alias("nxt"))
-    edges = (
-        seq.where(F.col("nxt").isNotNull() & (F.col("nxt") != F.col("user_id")))
-        .groupBy(F.col("user_id").alias("src"), F.col("nxt").alias("dst"))
-        .agg(F.expr("1000000 div count(*)").cast("long").alias("cost"))
-    )
-    seeds = (
-        ev.where(F.col("user_id") % 29 == 0)
-        .select(F.col("user_id").alias("node"))
-        .distinct()
-    )
-    return shortest_paths(edges, seeds, iters=_SP_ITERS).select(
-        F.col("node").alias("user_id"), F.col("dist").alias("dist_cost")
     )
 
 
@@ -4456,243 +3253,6 @@ def parts_fuzzy_link_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rn", F.row_number().over(wb))
         .where(F.col("rn") == 1)
         .drop("rn")
-    )
-
-
-# ------------------------------------------------------------------
-# Grouped-aggregate pandas UDAF (exact integer Gini per segment)
-# ------------------------------------------------------------------
-
-_GINI_ORACLE = """
-WITH v AS (
-    SELECT o_orderpriority AS priority,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-           o_orderkey AS k
-    FROM orders
-),
-ranked AS (
-    SELECT priority, cents,
-           row_number() OVER (
-               PARTITION BY priority ORDER BY cents, k
-           ) AS i,
-           CAST(count(*) OVER (PARTITION BY priority) AS BIGINT) AS n,
-           CAST(sum(cents) OVER (PARTITION BY priority) AS BIGINT) AS s
-    FROM v
-)
-SELECT priority,
-       min(n) AS n_orders,
-       min(s) AS total_cents,
-       CAST(sum((2 * i - n - 1) * cents) AS BIGINT) AS gini_num
-FROM ranked
-GROUP BY priority
-"""
-
-
-@query("orders_gini_by_priority", _GINI_ORACLE)
-def orders_gini_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-aggregate pandas UDAF (the §2.K surface Spark calls
-    PandasUDFType.GROUPED_AGG): exact Gini concentration of order
-    value per priority segment.  The UDAF receives each group's value
-    vector as ONE Arrow batch and returns the Gini numerator
-    Σ(2i-n-1)·x_(i) as a single BIGINT — rank-weighted sums over the
-    sorted vector, exact in integers.  The denominator's FACTORS
-    (n_orders, total_cents) are returned separately rather than as the
-    materialized product n·Σx: that product reaches ~3.4e18 per
-    priority at sf1 and overflows int64 at modest scale-up — Spark
-    would wrap silently while DuckDB raises, so the engines would
-    diverge instead of both failing loudly (ADVICE r5).  Consumers
-    form gini_num / (n_orders·total_cents) in arbitrary precision or
-    float as needed.  Grouped-agg UDFs
-    hold one group in memory — fine for segment-cardinality groups; a
-    100 TB per-key variant would use the two-pass rank decomposition
-    that functions/ranks.py already implements for pct-rank."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def gini_num(cents: pd.Series) -> int:
-        x = cents.sort_values(kind="mergesort").to_numpy()
-        n = len(x)
-        i = pd.RangeIndex(1, n + 1).to_numpy()
-        return int(((2 * i - n - 1) * x).sum())
-
-    v = load(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    # Spark disallows mixing GROUPED_AGG pandas UDFs with JVM
-    # aggregates in one agg(); the JVM side runs separately and joins
-    # back on the (broadcast-tiny) segment key.
-    nums = v.groupBy("priority").agg(gini_num(F.col("cents")).alias("gini_num"))
-    plain = v.groupBy("priority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("total_cents"),
-    )
-    return plain.join(F.broadcast(nums), "priority").select(
-        "priority", "n_orders", "total_cents", "gini_num"
-    )
-
-
-# ------------------------------------------------------------------
-# Cogrouped applyInPandas as-of join (orders ⟵ last event before)
-# ------------------------------------------------------------------
-
-_COGROUP_ASOF_ORACLE = """
-WITH o AS (
-    SELECT o_custkey AS k, o_orderkey,
-           epoch_us(o_orderdate) AS order_us
-    FROM orders
-),
-e AS (
-    -- one row per (k, us): ties collapse to the max event_id, which
-    -- is the same rule the pandas side applies before merge_asof
-    SELECT user_id AS k, epoch_us(ts) AS us,
-           CAST(max(event_id) AS BIGINT) AS event_id
-    FROM events GROUP BY user_id, epoch_us(ts)
-),
-m AS (
-    SELECT o.k, o.o_orderkey, o.order_us, e.event_id, e.us,
-           row_number() OVER (
-               PARTITION BY o.o_orderkey ORDER BY e.us DESC
-           ) AS rn
-    FROM o JOIN e ON e.k = o.k AND e.us <= o.order_us
-)
-SELECT o.k, o.o_orderkey, o.order_us,
-       m.event_id AS last_event_id, m.us AS last_event_us
-FROM o LEFT JOIN (SELECT * FROM m WHERE rn = 1) m
-    ON m.o_orderkey = o.o_orderkey
-"""
-
-
-@query("orders_cogroup_asof_event", _COGROUP_ASOF_ORACLE)
-def orders_cogroup_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cogrouped applyInPandas (the §2.K cogroup surface): each order
-    is matched to the customer's LAST event at-or-before the order
-    date with pandas ``merge_asof`` running per key group — Spark
-    shuffles BOTH relations on the key once, hands each key's pair of
-    Arrow batches to one Python worker, and the quadratic
-    time-predicate join never exists (contrast the oracle, which
-    must build every (order, earlier-event) pair and rank it).  Ties
-    inside a timestamp collapse to the max event_id BEFORE the asof
-    scan so the pick is deterministic; orders whose customer id has no
-    event stream come back null-filled (left semantics).  This is the
-    cogroup twin of the window-based events_asof_last_purchase —
-    same semantics family, different physical strategy."""
-    import pandas as pd
-
-    from ..functions.eventtime import event_micros
-
-    orders = load(spark, sf_dir, "orders")
-    ev = load(spark, sf_dir, "events")
-    o = orders.select(
-        F.col("o_custkey").alias("k"),
-        "o_orderkey",
-        event_micros(orders, "o_orderdate").alias("order_us"),
-    )
-    e = (
-        ev.select(
-            F.col("user_id").alias("k"),
-            event_micros(ev).alias("us"),
-            "event_id",
-        )
-        .groupBy("k", "us")
-        .agg(F.max("event_id").alias("event_id"))
-    )
-
-    def asof(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # one call per BUCKET of customers, not per customer:
-        # merge_asof(by="k") does the per-key matching inside a single
-        # vectorized pass, so Python crosses the boundary ~n_buckets
-        # times however many keys exist (the first per-key version
-        # spent 19.8s on ~15k pandas invocations at sf0.1; this shape
-        # runs in ~1s)
-        left = left.sort_values("order_us", kind="mergesort")
-        out = left[["k", "o_orderkey", "order_us"]].reset_index(drop=True)
-        if len(right):
-            right = right.sort_values("us", kind="mergesort")
-            merged = pd.merge_asof(
-                left[["k", "order_us"]].reset_index(drop=True),
-                right[["k", "us", "event_id"]].reset_index(drop=True),
-                left_on="order_us",
-                right_on="us",
-                by="k",
-                direction="backward",
-            )
-            out["last_event_id"] = merged["event_id"].astype("Int64").values
-            out["last_event_us"] = merged["us"].astype("Int64").values
-        else:
-            out["last_event_id"] = pd.array([None] * len(left), dtype="Int64")
-            out["last_event_us"] = pd.array([None] * len(left), dtype="Int64")
-        return out
-
-    ob = o.withColumn("b", F.col("k") % 64)
-    eb = e.withColumn("b", F.col("k") % 64)
-    return (
-        ob.groupby("b")
-        .cogroup(eb.groupby("b"))
-        .applyInPandas(
-            asof,
-            "k long, o_orderkey long, order_us long, "
-            "last_event_id long, last_event_us long",
-        )
-    )
-
-
-# ------------------------------------------------------------------
-# mapInArrow byte-level document stats (§2.K Arrow-native surface)
-# ------------------------------------------------------------------
-
-_ARROW_STATS_ORACLE = """
-SELECT doc_id,
-       CAST(strlen(text) AS BIGINT) AS n_bytes,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       CAST(length(text) - length(replace(text, ' ', '')) AS BIGINT)
-           AS n_spaces
-FROM documents
-"""
-
-
-@query("udf_arrow_byte_stats", _ARROW_STATS_ORACLE)
-def udf_arrow_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInArrow (the zero-copy sibling of mapInPandas): per-document
-    byte/char/space counts computed directly on pyarrow RecordBatch
-    buffers — no pandas materialization, no Python-object rows; the
-    batch's UTF-8 buffer is scanned with pyarrow.compute kernels
-    (C++-side), so the Python worker only routes batches.  This
-    completes the §2.K ladder: scalar pandas UDF → GROUPED_AGG UDAF →
-    grouped/cogrouped applyInPandas → UDTF → mapInArrow.  Byte length
-    vs char length differ on the corpus's CJK documents, which is
-    what the oracle's strlen/length pair checks."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def stats(batches):
-        for batch in batches:
-            t = pa.table(
-                {
-                    "doc_id": batch.column("doc_id"),
-                    "n_bytes": pc.cast(
-                        pc.binary_length(
-                            pc.cast(batch.column("text"), pa.binary())
-                        ),
-                        pa.int64(),
-                    ),
-                    "n_chars": pc.cast(
-                        pc.utf8_length(batch.column("text")), pa.int64()
-                    ),
-                    "n_spaces": pc.cast(
-                        pc.count_substring(batch.column("text"), " "),
-                        pa.int64(),
-                    ),
-                }
-            )
-            for out in t.to_batches():
-                yield out
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInArrow(
-        stats, "doc_id long, n_bytes long, n_chars long, n_spaces long"
     )
 
 
@@ -5341,93 +3901,6 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ====================================================================
-# BM25 ranked retrieval (integer-exact; see dataops.retrieval)
-# ====================================================================
-
-#: Fixed corpus query: one rare term ('dup' — high idf) against two
-#: common ones, so the idf spread and the tf-saturation both matter to
-#: the ranking.
-_BM25_TERMS = ["dup", "spark", "window"]
-
-from ..dataops import retrieval as rt  # noqa: E402
-
-_BM25_ORACLE = rt.bm25_oracle_sql(_BM25_TERMS, k=10)
-
-
-@query("docs_bm25_search", _BM25_ORACLE)
-def docs_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 documents for a 3-term bag-of-words query under
-    integer-exact BM25 (k1=1.2, b=0.75; rational idf — same
-    cross-engine-exact idf as text_tfidf_top_terms).  One
-    tokenize+explode pass, per-term tf as conditional aggregates in a
-    single groupBy(doc_id), corpus stats as a crossJoined 1-row
-    aggregate, TakeOrdered top-k — no driver collect, no corpus-sized
-    join.  The oracle SQL is GENERATED from the same term list
-    (dataops.retrieval.bm25_oracle_sql), so engine and oracle cannot
-    drift."""
-    docs = load(spark, sf_dir, "documents")
-    return rt.bm25_topk(docs, _BM25_TERMS, k=10)
-
-
-# ====================================================================
-# Classifier-quality AUC (histogram-exact Mann-Whitney)
-# ====================================================================
-
-_AUC_ORACLE = f"""
-WITH base AS (
-    SELECT source AS grp,
-           CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_pos,
-           coalesce(len(string_split({_NORM_SQL}, ' ')), -1) AS score
-    FROM documents
-),
-hist AS (
-    SELECT grp, score,
-           CAST(sum(is_pos) AS BIGINT) AS n_pos,
-           CAST(sum(1 - is_pos) AS BIGINT) AS n_neg
-    FROM base GROUP BY grp, score
-),
-pref AS (
-    SELECT grp, n_pos, n_neg,
-           2 * n_pos * (sum(n_neg) OVER (PARTITION BY grp ORDER BY score ASC
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        - n_neg)
-               + n_pos * n_neg AS num_x2
-    FROM hist
-)
-SELECT grp, CAST(sum(n_pos) AS BIGINT) AS n_pos,
-       CAST(sum(n_neg) AS BIGINT) AS n_neg,
-       CAST(CASE WHEN sum(n_pos) = 0 OR sum(n_neg) = 0 THEN NULL
-            ELSE (sum(num_x2) * 1000000) // (2 * sum(n_pos) * sum(n_neg))
-            END AS BIGINT) AS auc_ppm
-FROM pref GROUP BY grp
-"""
-
-
-@query("quality_score_auc", _AUC_ORACLE)
-def quality_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROC-AUC (ppm, exact integer Mann-Whitney with half-tie credit)
-    of a document quality score — token count — against a binary label
-    (lang = 'en'), per source.  The scalable AUC shape: corpus-sized
-    data stops at a partial-aggregatable groupBy(group, score)
-    histogram; the rank prefix-sum windows over the TINY histogram,
-    never the corpus.  See dataops.evaluate.binary_auc_by_group.
-    Null-hostile: null lang counts negative, null text scores -1 on
-    both engines (window null-ordering divergence pre-empted by the
-    coalesce)."""
-    from ..dataops import evaluate as ev
-
-    docs = load(spark, sf_dir, "documents")
-    base = docs.select(
-        F.col("source").alias("grp"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("is_pos"),
-        F.coalesce(
-            F.size(tx.words(F.col("text"))).cast("long"), F.lit(-1)
-        ).alias("score"),
-    )
-    return ev.binary_auc_by_group(base)
-
-
-# ====================================================================
 # PMI collocations (corpus association mining)
 # ====================================================================
 
@@ -5657,113 +4130,6 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= 5)
         .select("query_id", "cand_id", "rrf_x1e6", "n_systems", "rk")
     )
-
-
-# ====================================================================
-# URL canonicalization dedup (web-crawl first-pass dedup)
-# ====================================================================
-
-from ..dataops import urls as ur  # noqa: E402
-
-
-def _url_corpus_sql(cast_t: str, intdiv: str) -> str:
-    """Deterministic URL spellings synthesized from doc_id — four
-    variants per group (host case, default port, www., tracking
-    params, param order, fragment, trailing slash) that all
-    canonicalize to the same URL.  Groups are CONSECUTIVE id runs
-    (doc_id div 4) so the collapse is non-vacuous at every corpus
-    size.  Same fragment runs on BOTH engines (only the string cast
-    type and integer-division operator differ)."""
-    g = f"(doc_id {intdiv} 4)"
-    gs = f"CAST({g} AS {cast_t})"
-    dom = f"concat('site', CAST({g} % 7 AS {cast_t}), '.org')"
-    return f"""CASE doc_id % 4
-        WHEN 0 THEN concat('https://', {dom}, '/page/', {gs}, '?a=1&b=2')
-        WHEN 1 THEN concat('HTTPS://WWW.', upper({dom}), ':443/page/',
-                           {gs}, '/?b=2&utm_source=news&a=1#top')
-        WHEN 2 THEN concat('https://www.', {dom}, '/page/', {gs},
-                           '?utm_campaign=x&a=1&b=2')
-        ELSE concat('https://', {dom}, ':443/page/', {gs},
-                    '/?a=1&fbclid=abc123&b=2')
-        END"""
-
-
-_URL_ORACLE = f"""
-WITH raw AS (
-    SELECT doc_id, {_url_corpus_sql('VARCHAR', '//')} AS url
-    FROM documents
-)
-SELECT {ur.canonical_url_sql('url')} AS canonical_url,
-       CAST(count(*) AS BIGINT) AS n_copies,
-       min(doc_id) AS canonical_doc_id
-FROM raw
-GROUP BY 1
-ORDER BY 1
-"""
-
-
-@query("docs_url_canonical_dedup", _URL_ORACLE)
-def docs_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-crawl first-pass dedup: canonicalize URL spelling variants
-    (host case, default ports, ``www.``, tracking params, param order,
-    fragments, trailing slashes — dataops.urls policy) and collapse to
-    one row per canonical URL with copy count and min-id canonical
-    doc.  The canonicalization is ONE nested JVM expression (regexp +
-    split + filter + array_sort — whole-stage codegen, no UDF); the
-    only shuffle is the partial-aggregatable groupBy on the canonical
-    string.  The oracle's canonicalizer is GENERATED from the same
-    policy constants (dataops.urls.canonical_url_sql) so engine and
-    oracle cannot drift."""
-    docs = load(spark, sf_dir, "documents")
-    raw = docs.select(
-        "doc_id", F.expr(_url_corpus_sql("STRING", "div")).alias("url")
-    )
-    return ur.url_dedup_groups(raw).orderBy("canonical_url")
-
-
-#: Blocklisted canonical hosts for the rollup query (2 of the 7
-#: synthesized domains).
-_BLOCKED_HOSTS = ["site2.org", "site5.org"]
-
-_HOST_ROLLUP_ORACLE = f"""
-WITH raw AS (
-    SELECT doc_id, {_url_corpus_sql('VARCHAR', '//')} AS url
-    FROM documents
-),
-h AS (
-    SELECT doc_id,
-           {ur.canonical_host_sql('url')} AS host,
-           {ur.canonical_url_sql('url')} AS canonical_url
-    FROM raw
-)
-SELECT host,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(DISTINCT canonical_url) AS BIGINT) AS n_urls
-FROM h
-WHERE host IS NULL
-   OR host NOT IN ({", ".join(f"'{b}'" for b in _BLOCKED_HOSTS)})
-GROUP BY host
-ORDER BY host
-"""
-
-
-@query("docs_host_blocklist_rollup", _HOST_ROLLUP_ORACLE)
-def docs_host_blocklist_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Domain filtering + host-level crawl profile: canonical-host
-    extraction (map-side expression), broadcast ANTI-join against the
-    blocklist (a real blocklist is ~100k domains — never shuffle the
-    corpus for it), then a per-host rollup of document count and
-    distinct canonical URLs.  The oracle mirrors the anti-join's
-    null-key semantics explicitly (IS NULL OR NOT IN) so a null host
-    survives filtering on both engines.  See
-    dataops.urls.host_blocklist_rollup."""
-    docs = load(spark, sf_dir, "documents")
-    raw = docs.select(
-        "doc_id", F.expr(_url_corpus_sql("STRING", "div")).alias("url")
-    )
-    return ur.host_blocklist_rollup(raw, _BLOCKED_HOSTS).orderBy("host")
 
 
 # ====================================================================

@@ -14,10 +14,8 @@ from credit_card_etl_pipeline_spark.session import get_spark
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
 TABLES = [
-    "customer",
     "part",
     "orders",
-    "lineitem",
     "events",
     "documents",
     "embeddings",

@@ -348,29 +348,6 @@ def test_dedup_exact_survivors(spark):
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
 
 
-def test_cms_estimate_upper_bounds_truth(spark):
-    from pyspark.sql import functions as F
-
-    from credit_card_etl_pipeline_spark.dataops import sketches as sk
-
-    df = spark.createDataFrame(
-        [(i % 37,) for i in range(2000)], "k long"
-    )
-    sketch = sk.cms_build(df, "k")
-    probes = df.distinct()
-    est = {r["k"]: r["cms_estimate"] for r in sk.cms_estimate(sketch, probes, "k").collect()}
-    truth = {
-        r["k"]: r["n"]
-        for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert set(est) == set(truth)
-    # count-min never underestimates
-    assert all(est[k] >= truth[k] for k in truth)
-    # with 37 keys in 4x256 cells, most estimates should be exact
-    exact = sum(1 for k in truth if est[k] == truth[k])
-    assert exact >= 30
-
-
 def test_iter_sampled_frames_matches_dataframe_operator(spark):
     """The extracted per-payload helper must emit exactly the rows the
     sample_frames DataFrame operator emits, for both the fake path and
@@ -398,29 +375,6 @@ def test_iter_sampled_frames_matches_dataframe_operator(spark):
         )
         assert via_op == via_helper
         assert via_helper  # non-vacuous: at least one sampled frame
-
-
-def test_cms_build_weighted_matches_raw(spark):
-    """cms_build(weight_col=...) over exact (key, count) rows must
-    produce the cell-identical sketch the raw-row build produces —
-    the equivalence the one-pass sketch queries rely on."""
-    from pyspark.sql import functions as F
-
-    from credit_card_etl_pipeline_spark.dataops import sketches as sk
-
-    raw = spark.createDataFrame(
-        [(i % 23,) for i in range(1500)], "k long"
-    )
-    counts = raw.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-    cells_raw = {
-        (r["j"], r["bucket"]): r["counter"]
-        for r in sk.cms_build(raw, "k").collect()
-    }
-    cells_w = {
-        (r["j"], r["bucket"]): r["counter"]
-        for r in sk.cms_build(counts, "k", weight_col="n").collect()
-    }
-    assert cells_raw == cells_w
 
 
 def test_substring_containment_semantics(spark):
@@ -492,27 +446,6 @@ def test_substring_containment_hot_last_shingle_survives_cap(spark):
         for r in substring_containment(docs, max_anchor_bucket=2).collect()
     }
     assert (1, 2) in pairs
-
-
-def test_bloom_no_false_negatives_and_mergeable(spark):
-    from credit_card_etl_pipeline_spark.dataops.sketches import (
-        bloom_build,
-        bloom_probe,
-    )
-
-    a = spark.range(0, 50).selectExpr("id AS k")
-    b = spark.range(50, 100).selectExpr("id AS k")
-    bloom_a = bloom_build(a, "k")
-    # every inserted key must be claimed (structural: no false negatives)
-    claimed = bloom_probe(bloom_a, a, "k")
-    assert claimed.where("NOT bloom_member").count() == 0
-    # merge by union-distinct == build over the union
-    merged = bloom_a.unionByName(bloom_build(b, "k")).distinct()
-    direct = bloom_build(a.unionByName(b), "k")
-    sym_diff = merged.exceptAll(direct).count() + direct.exceptAll(merged).count()
-    assert sym_diff == 0
-    # the filter is bounded by its bit space
-    assert merged.count() <= 1024
 
 
 def test_lsh_probe_pairs_asymmetric_and_capped(spark):
@@ -597,31 +530,6 @@ def test_pq_fit_rejects_ragged_split(spark):
         pq_fit(df, m=4, dim=6)
 
 
-def test_pagerank_integer_exact_and_hub_ranks_highest(spark):
-    from credit_card_etl_pipeline_spark.dataops.graph import (
-        RANK_BASE,
-        pagerank,
-    )
-
-    # star graph: everyone points at node 0
-    edges = spark.createDataFrame(
-        [(i, 0, 1) for i in range(1, 6)], "src long, dst long, w long"
-    )
-    out = {r.node: r.rank for r in pagerank(edges, iters=3).collect()}
-    assert set(out) == set(range(6))
-    assert out[0] == max(out.values())
-    # spokes get pure teleport after round 1 (no in-edges)
-    teleport = (3 * RANK_BASE) // 20
-    for i in range(1, 6):
-        assert out[i] == teleport
-    # deterministic under repartitioning (integer arithmetic only)
-    out2 = {
-        r.node: r.rank
-        for r in pagerank(edges.repartition(7), iters=3).collect()
-    }
-    assert out2 == out
-
-
 def test_damerau_levenshtein_matches_duckdb_variant():
     import random
 
@@ -641,79 +549,6 @@ def test_damerau_levenshtein_matches_duckdb_variant():
         assert _damerau_levenshtein(a, b) == want, (a, b)
     # the transposition-then-edit case that separates full DL from OSA
     assert _damerau_levenshtein("ca", "abc") == 2
-
-
-def test_triangle_counts_known_graph(spark):
-    from credit_card_etl_pipeline_spark.dataops.graph import (
-        triangle_counts,
-    )
-
-    # K4 on {1,2,3,4} (4 triangles, each node in 3) plus a pendant
-    # edge 4-5 (no triangles) and a duplicate/reversed edge noise
-    edges = spark.createDataFrame(
-        [
-            (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
-            (4, 5), (2, 1), (3, 2),
-        ],
-        "src long, dst long",
-    )
-    out = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
-    assert out == {1: 3, 2: 3, 3: 3, 4: 3}
-    # total = sum/3
-    assert sum(out.values()) // 3 == 4
-
-
-def test_shortest_paths_known_graph(spark):
-    from credit_card_etl_pipeline_spark.dataops.graph import shortest_paths
-
-    # line 1→2→3→4 (cost 10 each) with an expensive shortcut 1→4 (35)
-    # and an unreachable island 9→10
-    edges = spark.createDataFrame(
-        [(1, 2, 10), (2, 3, 10), (3, 4, 10), (1, 4, 35), (9, 10, 10)],
-        "src long, dst long, cost long",
-    )
-    seeds = spark.createDataFrame([(1,)], "node long")
-    got = {
-        r.node: r.dist for r in shortest_paths(edges, seeds, iters=4).collect()
-    }
-    # 3 hops beat the direct edge; the island never appears
-    assert got == {1: 0, 2: 10, 3: 20, 4: 30}
-
-    # hop bound binds: with 2 rounds node 4 is only reachable via the
-    # shortcut (1 hop, cost 35), not the cheaper 3-hop chain
-    got2 = {
-        r.node: r.dist for r in shortest_paths(edges, seeds, iters=2).collect()
-    }
-    assert got2[4] == 35
-
-    # duplicate seed rows must not multiply dist rows (the operator
-    # dedups seeds itself; callers aren't required to — ADVICE r5)
-    dup_seeds = spark.createDataFrame([(1,), (1,), (1,)], "node long")
-    rows = shortest_paths(edges, dup_seeds, iters=4).collect()
-    assert len(rows) == len({r.node for r in rows})
-    assert {r.node: r.dist for r in rows} == got
-
-
-def test_shortest_paths_partition_invariant(spark):
-    from credit_card_etl_pipeline_spark.dataops.graph import shortest_paths
-
-    edges = spark.createDataFrame(
-        [(i, i + 1, (i % 3) + 1) for i in range(20)]
-        + [(0, 10, 100), (5, 15, 1)],
-        "src long, dst long, cost long",
-    )
-    seeds = spark.createDataFrame([(0,), (5,)], "node long")
-    a = sorted(
-        (r.node, r.dist)
-        for r in shortest_paths(edges, seeds, iters=5).collect()
-    )
-    b = sorted(
-        (r.node, r.dist)
-        for r in shortest_paths(
-            edges.repartition(7), seeds.repartition(3), iters=5
-        ).collect()
-    )
-    assert a == b
 
 
 def test_prefix_filter_blocking_is_exact(spark, sf_dir):
@@ -1104,80 +939,6 @@ def test_sanitize_unicode_contract(spark):
     assert out[5]["n_astral"] == 1 and not out[5]["changed"]
 
 
-# ------------------------------------------------------------------
-# URL canonicalization (dataops.urls)
-# ------------------------------------------------------------------
-
-_URL_CASES = [
-    # (raw, expected canonical)
-    ("https://Example.COM/a/b?x=2&a=1", "https://example.com/a/b?a=1&x=2"),
-    ("HTTPS://WWW.EXAMPLE.COM:443/a/b/?a=1&x=2#frag",
-     "https://example.com/a/b?a=1&x=2"),
-    ("http://example.com:80/", "http://example.com/"),
-    ("http://example.com:8080/", "http://example.com:8080/"),  # non-default
-    ("https://example.com:80/", "https://example.com:80/"),  # wrong scheme
-    ("https://example.com", "https://example.com/"),  # bare host -> '/'
-    ("https://example.com/p?utm_source=x&utm_medium=y&fbclid=z&gclid=q"
-     "&msclkid=m&ref=r", "https://example.com/p"),
-    ("https://example.com/p?ref=r&real=1", "https://example.com/p?real=1"),
-    ("https://example.com/p///", "https://example.com/p"),
-    ("https://example.com/p?b=2&a=1&b=1", "https://example.com/p?a=1&b=1&b=2"),
-]
-
-
-def test_canonical_url_policy(spark):
-    from credit_card_etl_pipeline_spark.dataops import urls as ur
-
-    df = spark.createDataFrame(
-        [(i, raw) for i, (raw, _) in enumerate(_URL_CASES)],
-        "i long, url string",
-    )
-    got = {
-        r["i"]: r["c"]
-        for r in df.select("i", ur.canonical_url("url").alias("c")).collect()
-    }
-    for i, (raw, want) in enumerate(_URL_CASES):
-        assert got[i] == want, f"{raw!r}: {got[i]!r} != {want!r}"
-
-
-def test_canonical_url_duckdb_twin_parity(spark):
-    import duckdb
-
-    from credit_card_etl_pipeline_spark.dataops import urls as ur
-
-    df = spark.createDataFrame(
-        [(i, raw) for i, (raw, _) in enumerate(_URL_CASES)],
-        "i long, url string",
-    )
-    spark_out = {
-        r["i"]: r["c"]
-        for r in df.select("i", ur.canonical_url("url").alias("c")).collect()
-    }
-    con = duckdb.connect()
-    # NULL url: both engines must yield NULL (DuckDB concat would
-    # otherwise skip the null fragments and emit junk)
-    assert (
-        con.execute(
-            f"SELECT {ur.canonical_url_sql('url')} "
-            "FROM (SELECT CAST(NULL AS VARCHAR) AS url)"
-        ).fetchone()[0]
-        is None
-    )
-    null_spark = (
-        spark.createDataFrame([(None,)], "url string")
-        .select(ur.canonical_url("url").alias("c"))
-        .collect()[0]["c"]
-    )
-    assert null_spark is None
-    for i, (raw, _) in enumerate(_URL_CASES):
-        duck = con.execute(
-            f"SELECT {ur.canonical_url_sql('url')} "
-            "FROM (SELECT ? AS url)",
-            [raw],
-        ).fetchone()[0]
-        assert duck == spark_out[i], f"{raw!r}: duck {duck!r} != spark"
-
-
 def test_distribution_matched_sample(spark):
     from credit_card_etl_pipeline_spark.dataops.curate import (
         distribution_matched_sample,
@@ -1211,28 +972,6 @@ def test_distribution_matched_sample(spark):
         ).collect()
     }
     assert again == {b: d["n_sampled"] for b, d in out.items()}
-
-
-def test_host_blocklist_rollup(spark):
-    from credit_card_etl_pipeline_spark.dataops import urls as ur
-
-    df = spark.createDataFrame(
-        [
-            (0, "https://WWW.Bad.com:443/x"),
-            (1, "http://bad.com:80/y?utm_source=z"),
-            (2, "https://good.org/a?b=2&a=1"),
-            (3, "https://good.org/a?a=1&b=2"),  # same canonical as 2
-            (4, "https://good.org/other"),
-        ],
-        "doc_id long, url string",
-    )
-    out = {
-        r["host"]: r.asDict()
-        for r in ur.host_blocklist_rollup(df, ["bad.com"]).collect()
-    }
-    assert "bad.com" not in out            # both spellings blocked
-    assert out["good.org"]["n_docs"] == 3
-    assert out["good.org"]["n_urls"] == 2  # 2 and 3 collapse
 
 
 def test_assign_cluster_sql_text_matches_column_form(spark):

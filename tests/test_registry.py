@@ -1,7 +1,8 @@
 """The registry carries the statement → warehouse → RFM surface, each
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
 bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation,
-BPE, codec or JSONL-corpus queries that were cut from it."""
+BPE, codec, JSONL-corpus, sketch, graph, URL, ranking-metric or
+stand-alone showcase queries that were cut from it."""
 
 from __future__ import annotations
 
@@ -86,6 +87,18 @@ REMOVED_QUERIES = {
     # GIF/BMP/WAV codec and JSONL corpus queries
     "multimodal_wav_roundtrip", "multimodal_gif_frame_sample",
     "multimodal_audio_fingerprint_neardup", "ingest_jsonl_corpus",
+    # sketch, graph, URL, BM25 and AUC queries
+    "sketch_count_min", "sketch_bloom_membership", "sketch_hll_registers",
+    "sketch_hll_estimate", "sketch_hll_merge", "bloom_semi_join_pushdown",
+    "sketch_hll_intersection", "sketch_heavy_hitters",
+    "events_user_pagerank", "events_triangle_counts",
+    "events_shortest_paths", "docs_bm25_search", "quality_score_auc",
+    "docs_url_canonical_dedup", "docs_host_blocklist_rollup",
+    # stand-alone showcase queries
+    "documents_hash_sample", "udtf_sentence_split",
+    "documents_stratified_fixed_sample", "text_greedy_generation",
+    "orders_gini_by_priority", "orders_cogroup_asof_event",
+    "udf_arrow_byte_stats",
 }
 
 

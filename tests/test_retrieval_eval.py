@@ -1,135 +1,11 @@
-"""Unit tests for the r11b additions: BM25 ranked retrieval,
-histogram-exact binary AUC, hard-negative mining, and the PMI
-collocation query's determinism contract."""
+"""Unit tests for hard-negative mining and the determinism contracts
+of the PMI collocation and reciprocal-rank fusion queries."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row, functions as F
 
-from credit_card_etl_pipeline_spark.dataops import evaluate as ev
-from credit_card_etl_pipeline_spark.dataops import retrieval as rt
 from credit_card_etl_pipeline_spark.dataops import similarity as sim
-
-
-# ------------------------------------------------------------------
-# BM25
-# ------------------------------------------------------------------
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(rows)]
-    )
-
-
-def test_bm25_rare_term_outranks_common(spark):
-    # 'rare' appears in one doc, 'common' in all four: the rare-term
-    # doc must outrank docs matching only the common term.
-    docs = _docs(
-        spark,
-        [
-            "common rare pad pad",
-            "common pad pad pad",
-            "common pad pad pad",
-            "common pad pad pad",
-        ],
-    )
-    out = rt.bm25_topk(docs, ["rare", "common"], k=4).collect()
-    assert out[0]["doc_id"] == 0
-    assert out[0]["n_terms"] == 2
-    assert all(r["score_x1e9"] < out[0]["score_x1e9"] for r in out[1:])
-
-
-def test_bm25_tf_saturates(spark):
-    # Doubling tf must increase the score sublinearly (k1 saturation):
-    # score(tf=8) < 2 * score(tf=4) for same-length docs.
-    docs = _docs(
-        spark,
-        [
-            "t t t t x x x x",          # tf=4, dl=8
-            "t t t t t t t t",          # tf=8, dl=8
-            "x x x x x x x x",          # keeps df/avgdl stable
-        ],
-    )
-    rows = {r["doc_id"]: r["score_x1e9"] for r in
-            rt.bm25_topk(docs, ["t"], k=3).collect()}
-    assert rows[1] > rows[0]
-    assert rows[1] < 2 * rows[0]
-
-
-def test_bm25_length_damping(spark):
-    # Same tf, longer doc → lower score (the b term).
-    docs = _docs(
-        spark,
-        [
-            "t t pad pad",
-            "t t pad pad pad pad pad pad pad pad pad pad",
-        ],
-    )
-    rows = {r["doc_id"]: r["score_x1e9"] for r in
-            rt.bm25_topk(docs, ["t"], k=2).collect()}
-    assert rows[0] > rows[1]
-
-
-def test_bm25_empty_terms_raise(spark):
-    with pytest.raises(ValueError):
-        rt.bm25_topk(_docs(spark, ["x"]), [])
-
-
-def test_bm25_no_match_is_empty(spark):
-    docs = _docs(spark, ["a b c", "d e f"])
-    assert rt.bm25_topk(docs, ["zzz"], k=5).count() == 0
-
-
-# ------------------------------------------------------------------
-# Binary AUC
-# ------------------------------------------------------------------
-
-def _auc(spark, rows):
-    df = spark.createDataFrame(
-        [Row(grp=g, is_pos=p, score=s) for g, p, s in rows]
-    )
-    return {
-        r["grp"]: (r["n_pos"], r["n_neg"], r["auc_ppm"])
-        for r in ev.binary_auc_by_group(df).collect()
-    }
-
-
-def test_auc_perfect_separation(spark):
-    out = _auc(spark, [("a", 1, 10), ("a", 1, 9), ("a", 0, 2), ("a", 0, 1)])
-    assert out["a"] == (2, 2, 1_000_000)
-
-
-def test_auc_perfect_inversion(spark):
-    out = _auc(spark, [("a", 0, 10), ("a", 1, 1)])
-    assert out["a"][2] == 0
-
-
-def test_auc_all_tied_is_half(spark):
-    out = _auc(spark, [("a", 1, 5), ("a", 0, 5), ("a", 1, 5), ("a", 0, 5)])
-    assert out["a"][2] == 500_000
-
-
-def test_auc_known_mixed_value(spark):
-    # pos scores {3, 1}, neg scores {2, 0}: pairs won = 3 of 4, no
-    # ties → AUC = 750000 ppm.
-    out = _auc(spark, [("a", 1, 3), ("a", 1, 1), ("a", 0, 2), ("a", 0, 0)])
-    assert out["a"] == (2, 2, 750_000)
-
-
-def test_auc_degenerate_group_is_null(spark):
-    out = _auc(spark, [("a", 1, 3), ("a", 1, 1), ("b", 1, 2), ("b", 0, 1)])
-    assert out["a"][2] is None
-    assert out["b"][2] == 1_000_000
-
-
-def test_auc_groups_independent(spark):
-    out = _auc(
-        spark,
-        [("a", 1, 10), ("a", 0, 1), ("b", 0, 10), ("b", 1, 1)],
-    )
-    assert out["a"][2] == 1_000_000
-    assert out["b"][2] == 0
 
 
 # ------------------------------------------------------------------

@@ -36,10 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "customer", "part", "orders", "lineitem", "events", "documents",
-    "embeddings",
-]
+TABLES = ["part", "orders", "events", "documents", "embeddings"]
 
 
 def canon_cell(v) -> str:

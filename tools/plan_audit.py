@@ -62,18 +62,9 @@ BNLJ_ALLOWED: dict[str, str] = {
     "ann_hamming_recall_at_5": "broadcast probe frame",
     "ann_hard_negatives": "broadcast anchor frame (non-equi label filter)",
     "ann_rrf_fusion": "broadcast anchor frames (both fused rankings)",
-    # Sketch estimates: the merged register/sketch state is ONE row (or
-    # d×w bounded CMS rows), cross-joined onto the exact-side scalar for
-    # the error report — sketches.py.
-    "sketch_hll_estimate": "1-row merged HLL register state",
-    "sketch_hll_merge": "1-row merged register state per side",
-    "sketch_hll_intersection": "1-row register states (inclusion-exclusion)",
-    "sketch_heavy_hitters": "bounded CMS row state + 1-row total",
-    "bloom_semi_join_pushdown": "1-row Bloom bitmap aggregate",
     # Corpus statistics: 1-row corpus totals / fitted model scalars,
-    # all F.broadcast'ed (retrieval.bm25_topk, the PMI totals in
-    # dataops_queries, curate.dsir_weights).
-    "docs_bm25_search": "1-row corpus stats (N/sumdl/per-term df)",
+    # all F.broadcast'ed (the PMI totals in dataops_queries,
+    # curate.dsir_weights).
     "text_pmi_collocations": "1-row unigram/bigram totals",
     "curation_pipeline_v4": "1-row DSIR totals (gate stage)",
     # Events analytics: 1-row anchors/totals and min/max-derived day
