@@ -208,423 +208,6 @@ def hard_negative_topk(
 
 
 # ------------------------------------------------------------------
-# IVF (inverted-file) approximate variant
-# ------------------------------------------------------------------
-
-def _dot_lit(vec: Column, values: list[float]) -> Column:
-    return _dot_f(vec, F.array(*[F.lit(float(v)) for v in values]))
-
-
-def _dot_f(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-# -- SQL-text twins of the literal-expression builders ---------------
-#
-# Building centroid-literal expressions through the Column API costs
-# one py4j round-trip per F.lit/operator: a k=8 × dim=16 codebook is
-# ~500 driver↔JVM calls, and profiling showed PLAN CONSTRUCTION (not
-# execution) dominating the ANN queries' wall clock (~4s build vs ~1s
-# exec for ann_pq_topk at sf0.1).  Rendering the same expression as
-# ONE SQL string parsed JVM-side by F.expr is ~100x cheaper to build
-# and analyzes to the identical tree (CreateArray of foldable literals
-# constant-folds to the same array Literal; the lambda forms below are
-# the textual spelling of the exact F.zip_with/F.aggregate calls), so
-# results are bit-identical.  ``repr(float)`` round-trips doubles
-# exactly and every centroid sits on the 2^-20 grid, so the text is
-# lossless.
-
-def _f64_sql(v: float) -> str:
-    return repr(float(v)) + "D"
-
-
-def _arr64_sql(values) -> str:
-    return "array(" + ", ".join(_f64_sql(v) for v in values) + ")"
-
-
-def _arr_long_sql(values) -> str:
-    return "array(" + ", ".join(f"{int(x)}L" for x in values) + ")"
-
-
-def _dot_sql(vec_sql: str, values) -> str:
-    """SQL text of ``_dot_f(vec, literal array)`` — same tree."""
-    return (
-        "aggregate(zip_with(" + vec_sql + ", " + _arr64_sql(values)
-        + ", (x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _qcol(name: str) -> str:
-    """Backtick-quote a column name for use in SQL text."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-#: Centroid components live on this fixed binary grid (multiples of
-#: 2⁻²⁰): every centroid value, every v·c product, and every 64-term
-#: dot sum is then EXACTLY representable in a double, so dot products
-#: are order-independent and bit-identical across engines — which is
-#: what makes the fully unrolled DuckDB oracle of the 3-iteration fit
-#: possible.
-CENTROID_GRID = 1 << 20
-
-
-def _trunc_div(a: int, b: int) -> int:
-    """Integer division truncating toward zero (DuckDB ``//``
-    semantics; Python ``//`` floors, which differs for negative a)."""
-    q = abs(a) // b
-    return q if a >= 0 else -q
-
-
-def _grid_to_float(g: list[int]) -> list[float]:
-    return [x / CENTROID_GRID for x in g]
-
-
-def ivf_fit(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    k: int = 8,
-    iters: int = 3,
-) -> list[list[float]]:
-    """Deterministic mini k-means coarse quantizer (the IVF codebook).
-
-    Iterative-algorithm pattern: the driver holds only the k×dim
-    codebook (bounded state); each iteration is one distributed
-    assignment pass + ONE per-cluster aggregation of 64 element sums
-    (``element_at`` projections — no row explosion; the former
-    ``posexplode`` shuffled |corpus|×dim rows).  Determinism: initial
-    centroids are the k lowest-id vectors; updates aggregate the
-    INTEGER quantized vectors (exact, order-independent sums) and land
-    on the ``CENTROID_GRID`` binary grid via truncating division, so
-    every subsequent float dot product is exact — no accumulation
-    drift, and the whole fit unrolls into the DuckDB oracle
-    (queries/dataops_queries.py) bit-for-bit.
-    """
-    init = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(vec_col)
-        .collect()
-    )
-    grids = [[int(x) * CENTROID_GRID for x in r[vec_col]] for r in init]
-    if not grids or iters <= 0:
-        return [_grid_to_float(g) for g in grids]
-    dim = len(grids[0])
-
-    sum_aggs = [
-        F.sum(F.element_at(F.col(vec_col), d + 1)).alias(f"s{d}")
-        for d in range(dim)
-    ]
-    for _ in range(iters):
-        assigned = assign_cells(
-            df,
-            [_grid_to_float(g) for g in grids],
-            vec_col=vec_col,
-            out_col="__cluster",
-        )
-        rows = (
-            assigned.groupBy("__cluster")
-            .agg(*sum_aggs, F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        # clusters with no members keep their previous centroid
-        for r in rows:
-            c, n = r["__cluster"], r["__n"]
-            grids[c] = [
-                _trunc_div(int(r[f"s{d}"]) * CENTROID_GRID, n)
-                for d in range(dim)
-            ]
-    return [_grid_to_float(g) for g in grids]
-
-
-#: Above this codebook size the per-centroid literal dot expressions
-#: stop being "tiny code" and assignment switches to the higher-order
-#: form, where the codebook is a literal ARRAY (data, not code) and
-#: the dot runs through transform/aggregate — O(k*dim) plan DATA
-#: instead of O(k*dim) generated CODE, so k can scale with the corpus
-#: (SemDeDup sizes k ~ n/1000).
-ASSIGN_LITERAL_MAX_K = 16
-
-
-def assign_cluster(
-    vec: "Column | str", centroids: list[list[float]]
-) -> Column:
-    """Nearest-centroid id by maximum dot product, lowest cell on ties.
-
-    ``vec`` may be a Column or SQL text naming the vector expression;
-    the SQL form builds the whole assignment as ONE ``F.expr`` string
-    (one py4j call) instead of ~k·dim Column-API calls — same analyzed
-    tree, see the SQL-twin note above — and is what the hot fit/query
-    paths use.
-
-    Small codebooks (k <= ASSIGN_LITERAL_MAX_K): one literal dot
-    expression per centroid, evaluated JVM-side with whole-stage
-    codegen.  Built as ``array_sort`` over (negdot, cell) structs so
-    each centroid dot appears ONCE in the expression tree: the
-    when/otherwise fold this replaces re-nested every previous dot
-    into each comparison, giving O(k²)-size codegen (multi-MiB task
-    binaries whose compile time dominated small scans).
-
-    Large codebooks: the centroid matrix becomes one literal
-    array<array<double>> column and the same argmin runs via
-    transform + aggregate — identical results (both dot orders are
-    sequential and the quantized inputs keep every product exact in
-    f64, so the sums are order-independent), but plan size grows as
-    data, not code."""
-    if isinstance(vec, str):
-        if len(centroids) <= ASSIGN_LITERAL_MAX_K:
-            structs = ", ".join(
-                f"named_struct('negdot', -({_dot_sql(vec, c)}), "
-                f"'cell', CAST({i} AS BIGINT))"
-                for i, c in enumerate(centroids)
-            )
-            return F.expr(
-                f"element_at(array_sort(array({structs})), 1).cell"
-            )
-        cents = (
-            "array(" + ", ".join(_arr64_sql(c) for c in centroids) + ")"
-        )
-        return F.expr(
-            "element_at(array_sort(transform(" + cents + ", (c, i) -> "
-            "named_struct('negdot', -(aggregate(zip_with(" + vec + ", c, "
-            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)), "
-            "'cell', CAST(i AS BIGINT)))), 1).cell"
-        )
-    if len(centroids) <= ASSIGN_LITERAL_MAX_K:
-        entries = F.array(
-            *[
-                F.struct(
-                    (-_dot_lit(vec, c)).alias("negdot"),
-                    F.lit(i).cast("long").alias("cell"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-        return F.element_at(F.array_sort(entries), 1)["cell"]
-    cents = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in c])
-            for c in centroids
-        ]
-    )
-    entries = F.transform(
-        cents,
-        lambda c, i: F.struct(
-            (-_dot_f(vec, c)).alias("negdot"),
-            i.cast("long").alias("cell"),
-        ),
-    )
-    return F.element_at(F.array_sort(entries), 1)["cell"]
-
-
-def assign_cells(
-    df: DataFrame,
-    centroids: list[list[float]],
-    *,
-    vec_col: str = "qvec",
-    out_col: str = "cell",
-) -> DataFrame:
-    """DataFrame-level nearest-centroid assignment: ``df`` plus a
-    ``out_col`` long column, same semantics as :func:`assign_cluster`
-    (max dot, lowest cell on ties).
-
-    Small codebooks keep the literal whole-stage-codegen expression.
-    Large ones (k > ASSIGN_LITERAL_MAX_K) route through an Arrow-
-    batched numpy matmul instead of the interpreted transform/aggregate
-    HOFs: V·Cᵀ as one BLAS call per batch, argmax per row.  This is
-    the fit/assignment analogue of the within_group_dup_ids verdict
-    vectorization — with k ~ √n (ivf_auto_k) or k ~ n/1000 (SemDeDup)
-    the n·k interpreted dots became the dominant stage wall.
-
-    Bit-identical by the grid-exactness argument: quantized components
-    are ints ≤ ~2¹¹ and centroids sit on the 2⁻²⁰ binary grid, so every
-    product is m/2²⁰ with |m| < 2⁴², every 64-term partial sum <
-    2⁴⁸ — exactly representable in f64 in ANY summation order, so BLAS
-    reordering/FMA cannot change a single bit, and numpy's first-max
-    argmax is precisely the lowest-cell tie rule."""
-    if len(centroids) <= ASSIGN_LITERAL_MAX_K:
-        return df.withColumn(
-            out_col, assign_cluster(_qcol(vec_col), centroids)
-        )
-    import numpy as np
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    C = np.array(centroids, dtype=np.float64).T  # dim × k
-    schema = StructType(
-        df.schema.fields + [StructField(out_col, LongType(), False)]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out = pdf.copy()
-            if len(pdf) == 0:
-                out[out_col] = np.zeros(0, dtype=np.int64)
-            else:
-                V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                out[out_col] = (V @ C).argmax(axis=1).astype(np.int64)
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def _probe_cells(
-    queries: DataFrame,
-    centroids: list[list[float]],
-    *,
-    id_col: str,
-    vec_col: str,
-    nprobe: int,
-) -> DataFrame:
-    """query → its nprobe nearest cells (small: |queries| × nprobe
-    rows), ready to broadcast into the cell join.
-
-    Small codebooks: literal (negdot, cell) structs sorted JVM-side.
-    Large ones (k > ASSIGN_LITERAL_MAX_K, e.g. ivf_auto_k's √n): the
-    literal form is O(k·dim) GENERATED CODE — at k=447 the struct
-    array alone is a multi-MiB task binary — so the top-nprobe ranking
-    runs as an Arrow-batched numpy pass instead: one V·Cᵀ matmul, then
-    a stable argsort on -dot (stability = ascending-cell tie order,
-    the array_sort struct rule).  Exact by the same grid argument as
-    :func:`assign_cells`, so both forms rank identically."""
-    base = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm2(F.col(vec_col)).alias("qnorm"),
-    )
-    if len(centroids) <= ASSIGN_LITERAL_MAX_K:
-        structs = ", ".join(
-            f"named_struct('negdot', -({_dot_sql('qv', c)}), "
-            f"'cell', CAST({i} AS BIGINT))"
-            for i, c in enumerate(centroids)
-        )
-        return base.select(
-            "query_id",
-            "qv",
-            "qnorm",
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(array({structs})), 1, {int(nprobe)})"
-                    ".cell"
-                )
-            ).alias("cell"),
-        )
-    import numpy as np
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    C = np.array(centroids, dtype=np.float64).T  # dim × k
-    schema = StructType(
-        base.schema.fields + [StructField("cell", LongType(), False)]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                out = pdf.copy()
-                out["cell"] = np.zeros(0, dtype=np.int64)
-                yield out
-                continue
-            V = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
-            # stable sort on -dot keeps lower cells first on exact ties
-            top = np.argsort(-(V @ C), axis=1, kind="stable")[:, :nprobe]
-            out = pdf.iloc[
-                np.repeat(np.arange(len(pdf)), top.shape[1])
-            ].copy()
-            out["cell"] = top.reshape(-1).astype(np.int64)
-            yield out
-
-    return base.mapInPandas(run, schema=schema)
-
-
-def _score_cell_join(cand: DataFrame, q: DataFrame, k: int) -> DataFrame:
-    """Exact integer re-scoring of candidates inside the probed cells."""
-    scored = cand.join(F.broadcast(q), "cell").where(
-        F.col("cand_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id",
-        "cand_id",
-        (
-            _dot(F.col("qv"), F.col("cvec"))
-            / F.sqrt(F.col("qnorm").cast("double") * F.col("cnorm").cast("double"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("long"))
-    )
-
-
-def ivf_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's
-    ``nprobe`` nearest codebook cells, exact integer re-scoring inside.
-    One shuffle on the cell id; never all-pairs."""
-    cand = assign_cells(
-        df.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
-        ),
-        centroids,
-        vec_col="cvec",
-        out_col="cell",
-    ).select(
-        "cand_id", "cvec", _norm2(F.col("cvec")).alias("cnorm"), "cell"
-    )
-    q = _probe_cells(
-        queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe
-    )
-    return _score_cell_join(cand, q, k)
-
-
-def ivf_probe_index(
-    index: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    cell_col: str = "cell",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Probe a MATERIALIZED IVF index: same semantics as
-    :func:`ivf_topk`, but the candidate side is a standing table whose
-    cell assignment was computed at index-build time (e.g. parquet
-    partitioned by ``cell_col``).  This is the serving shape at 100 TB:
-    the index is built once offline, incoming batches carry only
-    |batch| × nprobe probe rows, and with a cell-partitioned layout the
-    scan touches only the probed cells' partitions (dynamic partition
-    pruning from the broadcast probe side) instead of re-assigning the
-    whole corpus per query batch."""
-    cand = index.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm2(F.col(vec_col)).alias("cnorm"),
-        F.col(cell_col).cast("long").alias("cell"),
-    )
-    q = _probe_cells(
-        queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe
-    )
-    return _score_cell_join(cand, q, k)
-
-
-# ------------------------------------------------------------------
 # LSH-bucketed approximate variant
 # ------------------------------------------------------------------
 
@@ -691,320 +274,6 @@ def ann_lsh_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "cand_id", "cosine", F.col("rank").cast("long"))
-    )
-
-
-# ------------------------------------------------------------------
-# Hierarchical quantization (per-cell sub-codebooks)
-# ------------------------------------------------------------------
-
-def _assign_subcells_batched(
-    df: DataFrame,
-    codebook: list[tuple[int, int, list[float]]],
-    *,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-) -> DataFrame:
-    """``df`` + a ``subcell`` long column: within each coarse cell,
-    argmax dot against that cell's sub-centroids, lowest subcell on
-    ties — the sub-level analogue of :func:`assign_cells`.
-
-    Replaces the broadcast-join → n·k_sub exploded rows → interpreted
-    dot → per-vector window form: one Arrow batch per coarse cell, the
-    cell's (subcell-sorted) centroid matrix in a numpy matmul, argmax
-    per row.  Bit-identical by the same grid-exactness argument
-    (products m/2²⁰, partial sums < 2⁴⁸, exact in any order; numpy's
-    first-max argmax over the subcell-ascending matrix = the
-    lowest-subcell tie rule).  The shuffle is one exchange on the
-    coarse cell instead of the window's exchange on vec_id over the
-    k_sub-times-larger exploded frame."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    by_cell: dict[int, tuple[list[int], "np.ndarray"]] = {}
-    for c, s, vals in sorted(codebook, key=lambda t: (t[0], t[1])):
-        by_cell.setdefault(int(c), ([], []))[0].append(int(s))
-        by_cell[int(c)][1].append(vals)
-    mats = {
-        c: (subs, np.array(vecs, dtype=np.float64).T)  # dim × k_c
-        for c, (subs, vecs) in by_cell.items()
-    }
-    schema = StructType(
-        df.schema.fields + [StructField("subcell", LongType(), False)]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.copy()
-        if len(pdf) == 0:
-            out["subcell"] = np.zeros(0, dtype=np.int64)
-            return out
-        cell = int(pdf[cell_col].iloc[0])
-        if cell not in mats:
-            # Intentional, diagnosable failure (ADVICE r9 #3): the old
-            # broadcast-join form silently DROPPED vectors whose coarse
-            # cell had no sub-codebook entry (a codebook fit on
-            # different assignments, or an empty sub_fit); dropping
-            # rows is a correctness hazard, so fail loudly instead.
-            raise ValueError(
-                f"_assign_subcells_batched: coarse cell {cell} has no "
-                f"sub-codebook entry (codebook covers "
-                f"{sorted(mats)[:20]}{'...' if len(mats) > 20 else ''}); "
-                "fit the sub-codebook (sub_fit) on the same coarse "
-                "assignment that produced this cell"
-            )
-        subs, C = mats[cell]
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        idx = (V @ C).argmax(axis=1)
-        out["subcell"] = np.asarray(subs, dtype=np.int64)[idx]
-        return out
-
-    return df.groupBy(cell_col).applyInPandas(run, schema=schema)
-
-
-def sub_fit(
-    assigned: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    cell_col: str = "cell",
-    k_sub: int = 4,
-    iters: int = 2,
-) -> list[tuple[int, int, list[float]]]:
-    """Per-cell sub-codebooks — the hierarchical level that bounds
-    cluster size with FIXED per-level fan-out: a coarse level of k
-    cells plus k_sub sub-cells each yields k*k_sub leaves at O(n·k +
-    n·k_sub) assignment cost, where a flat codebook of the same leaf
-    count would pay O(n·k·k_sub).  Stacking levels multiplies leaves
-    exponentially while assignment stays linear per level — the escape
-    from the O(n·K) flat-assignment asymptotics (SCALE.md).
-
-    Every cell's sub-k-means runs SIMULTANEOUSLY in the same
-    distributed passes: init = the ``k_sub`` lowest-id members per
-    cell; each iteration broadcast-joins the (cell, subcell) codebook
-    (k*k_sub rows), picks each vector's argmax-dot subcell (lowest
-    subcell on ties), and re-grids per-(cell, subcell) INTEGER sums by
-    truncating division — the same grid-exact arithmetic as
-    :func:`ivf_fit`, so the whole fit unrolls into a DuckDB oracle.
-    Driver state is the k*k_sub x dim codebook, never per-vector.
-    Sub-cells that lose all members keep their previous centroid."""
-    w = Window.partitionBy(cell_col).orderBy(id_col)
-    init = (
-        assigned.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k_sub)
-        .select(
-            cell_col, (F.col("__rn") - 1).alias("subcell"), vec_col
-        )
-        .collect()
-    )
-    grids: dict[tuple[int, int], list[int]] = {
-        (int(r[cell_col]), int(r["subcell"])): [
-            int(x) * CENTROID_GRID for x in r[vec_col]
-        ]
-        for r in init
-    }
-    if not grids:
-        return []
-    dim = len(next(iter(grids.values())))
-    sum_aggs = [
-        F.sum(F.element_at(F.col(vec_col), d + 1)).alias(f"s{d}")
-        for d in range(dim)
-    ]
-
-    def winners(df: DataFrame) -> DataFrame:
-        book = [
-            (c, s, _grid_to_float(g)) for (c, s), g in sorted(grids.items())
-        ]
-        return _assign_subcells_batched(
-            df.select(id_col, cell_col, vec_col),
-            book,
-            id_col=id_col,
-            vec_col=vec_col,
-            cell_col=cell_col,
-        )
-
-    for _ in range(iters):
-        rows = (
-            winners(assigned)
-            .groupBy(cell_col, "subcell")
-            .agg(*sum_aggs, F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        for r in rows:
-            key = (int(r[cell_col]), int(r["subcell"]))
-            n = r["__n"]
-            grids[key] = [
-                _trunc_div(int(r[f"s{d}"]) * CENTROID_GRID, n)
-                for d in range(dim)
-            ]
-    return [
-        (c, s, _grid_to_float(g)) for (c, s), g in sorted(grids.items())
-    ]
-
-
-def assign_subcells(
-    assigned: DataFrame,
-    codebook: list[tuple[int, int, list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Final (cell, subcell) assignment against a fitted sub-codebook:
-    per-cell Arrow-batched numpy argmax (lowest-subcell ties), all
-    other columns carried through — see
-    :func:`_assign_subcells_batched` for the bit-identity argument vs
-    the former broadcast-join + window form."""
-    return _assign_subcells_batched(
-        assigned,
-        codebook,
-        id_col=id_col,
-        vec_col=vec_col,
-        cell_col=cell_col,
-    )
-
-
-# ------------------------------------------------------------------
-# Product quantization (PQ) approximate variant
-# ------------------------------------------------------------------
-
-def pq_fit(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-) -> list[list[list[float]]]:
-    """Per-subspace codebooks for product quantization: the vector is
-    split into ``m`` contiguous sub-vectors and each subspace gets its
-    own deterministic grid k-means codebook (:func:`ivf_fit` on the
-    slice).  Driver state is m x k x (dim/m) floats — bounded; each
-    subspace fit is the same two-shuffles-per-iteration pass as IVF.
-    At 100 TB the fit runs on a sample offline and the codebooks ship
-    as broadcast literals — exactly how they are consumed here."""
-    if dim % m:
-        raise ValueError("dim must divide evenly into m subspaces")
-    sub = dim // m
-    return [
-        ivf_fit(
-            df.select(
-                id_col,
-                F.slice(F.col(vec_col), s * sub + 1, sub).alias(vec_col),
-            ),
-            id_col=id_col,
-            vec_col=vec_col,
-            k=k,
-            iters=iters,
-        )
-        for s in range(m)
-    ]
-
-
-def pq_codes(
-    vec: "Column | str", books: list[list[list[float]]], *, dim: int = 64
-) -> list[Column]:
-    """Sub-vector -> nearest-centroid code, one per subspace.  ``vec``
-    as SQL text takes the one-expr-string build path (see the SQL-twin
-    note above)."""
-    sub = dim // len(books)
-    if isinstance(vec, str):
-        return [
-            assign_cluster(f"slice({vec}, {s * sub + 1}, {sub})", book)
-            for s, book in enumerate(books)
-        ]
-    return [
-        assign_cluster(F.slice(vec, s * sub + 1, sub), book)
-        for s, book in enumerate(books)
-    ]
-
-
-def ann_pq_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    books: list[list[list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    k: int = 5,
-    dim: int = 64,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: every candidate is
-    represented ONLY by its m codes (m bytes at k<=256 — the ~256x
-    memory compression that lets a 100 TB embedding corpus live in
-    executor RAM), and scoring reads nothing else: per subspace the
-    query's exact dot with each of the k centroids forms a literal
-    lookup table, and the candidate's code selects the entry
-    (``element_at``).  All arithmetic stays on the 2^-20 binary grid
-    (exact in doubles, order-independent), so even the approximation
-    is value-checkable cross-engine.  The scan is a broadcast of the
-    tiny query set over the code table — map-only, no shuffle until
-    the per-query top-k window."""
-    sub = dim // len(books)
-    vec_sql = _qcol(vec_col)
-    cand = df.select(
-        F.col(id_col).alias("cand_id"),
-        *[
-            code.alias(f"code{s}")
-            for s, code in enumerate(pq_codes(vec_sql, books, dim=dim))
-        ],
-    )
-    # the ADC lookup tables depend ONLY on the query: materialize the
-    # k exact per-centroid dots per subspace on the tiny query side
-    # BEFORE the join, so the per-pair work is 2m element_at's + adds
-    # (building the tables inside the join would redo m·k sub-vector
-    # dots for every (query, candidate) pair — the difference between
-    # O(Q·N·m) and O(Q·N·m·k·sub) at scan time)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _norm2(F.col(vec_col)).alias("qnorm"),
-        *[
-            F.expr(
-                "array(" + ", ".join(
-                    _dot_sql(
-                        f"slice({vec_sql}, {s * sub + 1}, {sub})", c
-                    )
-                    for c in book
-                ) + ")"
-            ).alias(f"tab{s}")
-            for s, book in enumerate(books)
-        ],
-    )
-    scored = cand.join(
-        F.broadcast(q), F.col("cand_id") != F.col("query_id")
-    )
-    adc: Column = F.lit(0.0)
-    rnorm: Column = F.lit(0.0)
-    for s, book in enumerate(books):
-        adc = adc + F.element_at(
-            F.col(f"tab{s}"), F.col(f"code{s}").cast("int") + 1
-        )
-        norms = F.expr(
-            _arr64_sql([float(sum(x * x for x in c)) for c in book])
-        )
-        rnorm = rnorm + F.element_at(
-            norms, F.col(f"code{s}").cast("int") + 1
-        )
-    scored = scored.select(
-        "query_id",
-        "cand_id",
-        (
-            adc / F.sqrt(F.col("qnorm").cast("double") * rnorm)
-        ).alias("adc_cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "cand_id", "adc_cosine", F.col("rank").cast("long")
-        )
     )
 
 
@@ -1211,356 +480,3 @@ def centroid_outlier_verdicts(
             "is_outlier"
         ),
     )
-
-
-# ------------------------------------------------------------------
-# Top principal component (grid-exact power iteration)
-# ------------------------------------------------------------------
-
-#: Fixed-point scale for the iterated direction vector.
-PC_SCALE = 1 << 20
-
-
-def top_pc(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    iters: int = 3,
-    scale: int = PC_SCALE,
-) -> list[int]:
-    """Dominant principal direction of a (quantized) embedding corpus
-    by power iteration in EXACT integer arithmetic — the estimation
-    step of all-but-the-top / whitening embedding post-processing.
-
-    Determinism recipe (the ivf_fit playbook applied to eigenvectors):
-    vectors are centered on the truncating-division milli-mean; each
-    iteration computes per-vector projections ``s = xc·v`` (exact
-    int64), truncates them back to the milli domain (``div scale`` —
-    toward zero on every engine), accumulates ``u_d = Σ xc_d·s'``
-    (order-independent integer sums), and renormalizes by max-abs:
-    ``v' = u·scale div max|u|``.  No sqrt, no floats, so the whole
-    iteration unrolls into a SQL oracle bit-for-bit.
-
-    Driver state is ONE 64-long vector per iteration (plus the 64-long
-    centroid) — bounded like the IVF codebook collects.  Per iteration
-    the corpus does one map pass (projections) and one (dim)-keyed
-    aggregation onto |dims| rows.  Int64 bound: |xc|·(|s| div scale)·n
-    — holds past 1e11 vectors at milli quantization."""
-    spark = df.sparkSession
-
-    stats = (
-        df.select(F.posexplode(F.col(vec_col)).alias("pos", "x"))
-        .groupBy("pos")
-        .agg(
-            F.expr("CAST(sum(x) div count(1) AS BIGINT)").alias("c")
-        )
-        .orderBy("pos")
-        .collect()
-    )
-    center = [int(r["c"]) for r in stats]
-    dim = len(center)
-
-    # centered vectors are consumed once per power iteration; persist
-    # them so the upstream plan (validity filter + quantize) runs ONCE
-    # instead of once per iteration (r11 — was `iters` re-evaluations),
-    # and build the center/direction literal arrays as single SQL
-    # strings (see the SQL-twin note above) instead of O(dim) py4j
-    # calls per iteration.
-    xc = df.select(
-        F.expr(
-            f"zip_with({_qcol(vec_col)}, {_arr_long_sql(center)}, "
-            "(x, c) -> x - c)"
-        ).alias("xc"),
-    ).persist()
-    try:
-        v = [scale] + [0] * (dim - 1)
-        for _ in range(iters):
-            # r12 (guide §4.2): the projection + accumulation used to
-            # run as interpreted higher-order array expressions
-            # (aggregate/zip_with per row, posexplode + dim-keyed
-            # aggregation) — measured 15-25 CPU-seconds PER ITERATION
-            # over a ~1 MB cached corpus at sf0.1.  One mapInPandas
-            # pass hands whole Arrow batches to NumPy instead: the
-            # identical exact-int64 arithmetic (s = xc·v; s' = s div
-            # scale truncated TOWARD ZERO like Spark's div, hence the
-            # sign/abs dance; partial u = Xᵀ·s'), emitting one
-            # |dim|-row partial per batch.  Partials are summed on the
-            # driver in arbitrary-precision Python ints; per-element
-            # bounds are the docstring's int64 argument, unchanged.
-            v_np = list(v)
-            dim_n = dim
-            sc = scale
-
-            def _iter_partials(batches, _v=v_np, _d=dim_n, _s=sc):
-                import numpy as np
-                import pandas as pd
-
-                va = np.asarray(_v, dtype=np.int64)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    X = np.stack(pdf["xc"].to_numpy()).astype(
-                        np.int64, copy=False
-                    )
-                    s = X @ va
-                    sp = np.sign(s) * (np.abs(s) // _s)
-                    u_part = X.T @ sp
-                    yield pd.DataFrame(
-                        {"pos": np.arange(_d, dtype=np.int32),
-                         "u": u_part.astype(np.int64)}
-                    )
-
-            u_rows = xc.mapInPandas(
-                _iter_partials, schema="pos int, u long"
-            ).collect()
-            u = [0] * dim
-            for r in u_rows:
-                u[int(r["pos"])] += int(r["u"])
-            m = max(abs(x) for x in u)
-            if m == 0:  # fully degenerate corpus: all centered vectors 0
-                v = [0] * dim
-                break
-            # truncate toward zero (matches Spark div / DuckDB //)
-            v = [
-                (abs(x) * scale // m) * (1 if x >= 0 else -1) for x in u
-            ]
-    finally:
-        xc.unpersist(False)
-    return v
-
-
-def abtt_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    v_scaled: list[int],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    k: int = 5,
-    v_shrink: int = 1 << 10,
-) -> DataFrame:
-    """All-but-the-top CORRECTED retrieval: cosine similarity with the
-    common (top principal) direction removed from every centered
-    vector, computed without ever materializing the corrected vectors.
-
-    Algebra (exact integers until the final double division):
-    with ``w = v div v_shrink`` (the :func:`top_pc` direction shrunk
-    so products stay in int64) and per-vector ``aw = a·w``,
-    ``num(a,b) = (a·b)(w·w) − aw·bw`` and ``den(a) = (a·a)(w·w) − aw²``
-    — the corrected cosine is ``num / sqrt(den_a · den_b)``.  Inputs
-    must be CENTERED (same truncating mean as the fit); vectors lying
-    entirely along the removed direction get den = 0 and are skipped
-    (they carry no corrected signal).
-
-    Scale shape identical to :func:`cosine_topk`: per-vector scalars
-    (aw, den) ride the one candidate pass, queries broadcast, ranking
-    windows partition per query."""
-    w = [_trunc_div(x, v_shrink) for x in v_scaled]
-    ww = sum(x * x for x in w)
-    w_lit = F.expr(_arr_long_sql(w))
-
-    def enrich(frame: DataFrame, prefix: str) -> DataFrame:
-        aw = _dot(F.col(vec_col), w_lit)
-        return frame.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.col(vec_col).alias(f"{prefix}v"),
-            aw.alias(f"{prefix}w"),
-            (_norm2(F.col(vec_col)) * ww - aw * aw).alias(f"{prefix}den"),
-        )
-
-    cand = enrich(df, "cand").where(F.col("candden") > 0)
-    q = enrich(queries, "query").where(F.col("queryden") > 0)
-    scored = cand.join(
-        F.broadcast(q), F.col("cand_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "cand_id",
-        (
-            (_dot(F.col("queryv"), F.col("candv")) * ww
-             - F.col("queryw") * F.col("candw"))
-            / F.sqrt(
-                F.col("queryden").cast("double")
-                * F.col("candden").cast("double")
-            )
-        ).alias("corrected_cosine"),
-    )
-    rank_w = Window.partitionBy("query_id").orderBy(
-        F.desc("corrected_cosine"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rank_w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "cand_id", "corrected_cosine",
-            F.col("rank").cast("long"),
-        )
-    )
-
-
-def within_group_dup_ids(
-    assigned: DataFrame,
-    group_cols: list[str],
-    *,
-    threshold: float = 0.999,
-    id_col: str = "vec_id",
-    vec_col: str = "qvec",
-    n2_col: str = "n2",
-    block: int = 1024,
-    max_group: int = 2_000_000,
-) -> DataFrame:
-    """SemDeDup verdict stage, vectorized: within each group (cluster
-    cell, or (cell, subcell) leaf) mark every vector that matches a
-    LOWER-id group member at ``cosine >= threshold``.  Returns the
-    distinct dup ``id_col`` values.
-
-    Replaces the self-join + interpreted higher-order dot (zip_with /
-    aggregate are CodegenFallback — ~69s for the 11M-pair sf1 stage)
-    with one Arrow batch per group and numpy int64 gram-matrix tiles:
-    the quantized dots are EXACT int64 (64 terms x (round(x*1000))^2
-    << 2^63), and the cosine double ops (divide by sqrt of the exact
-    norm product) are the identical IEEE operations the expression
-    form and the DuckDB oracle perform — bit-identical verdicts,
-    ~40x the throughput.  Memory per task is bounded by ``block``
-    tiles (block^2 doubles) + the group's vectors — NOT by pairs, but
-    the whole group's vectors DO land in one Arrow batch, so a skewed
-    mega-cluster (bad centroid assignment) would OOM the executor
-    silently.  ``max_group`` turns that into a loud task failure:
-    re-cluster with more cells (or sub-split) instead of raising the
-    cap.  2M 64-dim int64 vectors ≈ 1 GiB/task — inside a standard
-    4 GiB executor-core budget."""
-    import numpy as np
-    import pandas as pd
-
-    def find(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_group:
-            raise ValueError(
-                f"within_group_dup_ids: group of {len(pdf)} rows exceeds "
-                f"max_group={max_group}; centroid assignment is skewed — "
-                f"increase cluster count or sub-split before dedup"
-            )
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy()
-        c = len(pdf)
-        if c < 2:
-            return pd.DataFrame({id_col: ids[:0]})
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.int64)
-        n2 = pdf[n2_col].to_numpy().astype(np.float64)
-        dup = np.zeros(c, dtype=bool)
-        for i0 in range(0, c, block):
-            A = V[i0 : i0 + block]
-            for j0 in range(i0, c, block):
-                B = V[j0 : j0 + block]
-                g = A @ B.T  # exact int64 dots
-                cos = g / np.sqrt(
-                    n2[i0 : i0 + block, None] * n2[None, j0 : j0 + block]
-                )
-                hit = cos >= threshold
-                if i0 == j0:
-                    hit = np.triu(hit, k=1)  # strict lower-id rule
-                dup[j0 : j0 + block] |= hit.any(axis=0)
-        return pd.DataFrame({id_col: ids[dup]})
-
-    return assigned.select(id_col, vec_col, n2_col, *group_cols).groupBy(
-        *group_cols
-    ).applyInPandas(find, schema=f"{id_col} long")
-
-
-# ------------------------------------------------------------------
-# Strategy selection: flat vs hierarchical semantic dedup
-# ------------------------------------------------------------------
-
-#: Corpus size above which the occupancy-scaled two-level codebook
-#: (:func:`semantic_two_level_k`) beats the flat k ~ n/1000 form.
-#: Measured three ways across r9 (SOAK_SEMANTIC_FLIP_r09.json, planted
-#: constant-norm clusters):
-#:
-#: * The FIXED-depth 8×4 hierarchy never wins once assignment is a
-#:   BLAS matmul — its leaf size grows ∝ n (verdict ~2n² FLOPs):
-#:   flat 16.7s vs hier 20.7s at 220k, 40.3s vs 592.3s at 2.2M.  The
-#:   pre-vectorization ladder's "hierarchy wins sf10 6×" was entirely
-#:   the flat form's interpreted-HOF assignment (LADDER_VEC_r09.json:
-#:   156.5s → 10.1s at sf10 after the matmul swap).
-#: * The OCCUPANCY-SCALED two-level form (both levels ⌈√(n/1000)⌉,
-#:   assignment ~n^1.5 FLOPs vs flat's n²/1000) ties flat at 2.2M
-#:   (41.2 vs 40.3s) and wins the next decade: 133.0 vs 227.0s at
-#:   6.6M.  3M sits between the measured tie and the decisive win;
-#:   every certification corpus (≤242k vectors) stays comfortably on
-#:   the flat side.
-SEMANTIC_FLIP_AT: int | None = 3_000_000
-
-
-def choose_semantic_strategy(
-    n_vectors: int, *, flip_at: int | None = SEMANTIC_FLIP_AT
-) -> str:
-    """Pick the semantic-dedup codebook shape for a corpus of
-    ``n_vectors`` embeddings: ``"flat"`` (single codebook, k ~ n/1000,
-    BLAS assignment) below ``flip_at``, ``"two_level"`` (both levels
-    occupancy-scaled at ⌈√(n/1000)⌉ — :func:`semantic_two_level_k`)
-    at or above it.  ``flip_at=None`` forces flat at every size.  The
-    fixed-depth hierarchy is never chosen: it lost every soaked point
-    (see SEMANTIC_FLIP_AT).
-
-    Deterministic in the corpus size only, so the decision is stable
-    across runs and engines; all branches produce keep-lowest-id
-    verdicts with injected exact duplicates guaranteed to hit, so a
-    flip changes CLUSTER SHAPES (internal) but the dup verdict for an
-    exact duplicate never flips.
-    """
-    if flip_at is None:
-        return "flat"
-    return "flat" if n_vectors < flip_at else "two_level"
-
-
-def ivf_auto_k(n_vectors: int, *, floor_k: int = 8) -> int:
-    """The IVF codebook sizing law: k = max(floor_k, ⌊√n⌋).
-
-    With k fixed, per-cell candidate lists grow ~n and probe cost
-    ~Q·n/k — the sf1→sf10 ladder measured exactly that (ann_ivf_topk
-    wall exponent 1.18, LADDER_SF10_r09.json).  Growing k ~ √n keeps
-    expected cell occupancy ~√n, so probe cost is ~Q·nprobe·√n and the
-    fit's assignment stage is n·√n — both sublinear per vector.  The
-    double-precision sqrt/floor here is the same IEEE op sequence as
-    the DuckDB oracle's ``floor(sqrt(count(*)*1.0))``, so both engines
-    derive the identical k from the identical corpus count.
-    """
-    import math
-
-    return max(floor_k, int(math.floor(math.sqrt(n_vectors * 1.0))))
-
-
-def ivf_auto_nprobe(k: int, *, floor_probe: int = 2) -> int:
-    """nprobe companion to :func:`ivf_auto_k`: max(floor_probe, ⌊√k⌋).
-
-    Growing k with nprobe PINNED shrinks the probed corpus fraction
-    (nprobe/k), and recall collapses — measured at sf0.1 (n=2000,
-    k 8→44): recall@5 fell 0.45 → 0.30 at nprobe=2.  Scaling
-    nprobe ~ √k holds recall at-or-above the fixed-k baseline (0.49
-    at nprobe=⌊√44⌋=6; 0.67 at the constant-fraction nprobe=11) while
-    probed candidates stay sublinear: nprobe·(n/k) ~ n^(1/4)·√n =
-    n^(3/4) per query.  Same IEEE floor∘sqrt as the oracle expression
-    ``greatest(2, floor(sqrt(k*1.0)))``.
-    """
-    import math
-
-    return max(floor_probe, int(math.floor(math.sqrt(k * 1.0))))
-
-
-def semantic_two_level_k(n_vectors: int, *, leaf_target: int = 1000) -> int:
-    """Occupancy-scaled two-level codebook sizing: k₁ = k₂ =
-    ⌈√(n/leaf_target)⌉, so k₁·k₂ leaves hold ~leaf_target vectors
-    each at EVERY corpus size.
-
-    This is the hierarchy that re-enters the race SEMANTIC_FLIP_AT
-    documents: the fixed-depth 8×4 form loses because its leaf size
-    grows ∝ n (verdict ~2n² FLOPs), and the flat k ~ n/1000 form's
-    assignment matmul is n²·64/1000 FLOPs.  With both levels sized
-    ⌈√(n/1000)⌉ the assignment work is n·(k₁+k₂)·64 ≈ n^1.5·4/1000
-    FLOPs — asymptotically below flat — while the verdict stays
-    occupancy-bounded like flat's.  At n=2.2M: k₁=k₂=47, ~47 dots per
-    vector per level vs flat's 2200.  Same IEEE ops as the DuckDB
-    oracle expression ``greatest(2, ceil(sqrt(count(*) / 1000.0)))``.
-    """
-    import math
-
-    return max(2, int(math.ceil(math.sqrt(n_vectors / (leaf_target * 1.0)))))

@@ -109,6 +109,10 @@ _SPREAD_KEYS: dict[str, str] = {
     "embeddings": "vec_id",
 }
 
+#: The corpus tables, written once: ``tests/conftest`` and
+#: ``tools/check_oracle`` register exactly these as DuckDB views.
+TABLES = tuple(_SPREAD_KEYS)
+
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a corpus table, guarding scan parallelism.

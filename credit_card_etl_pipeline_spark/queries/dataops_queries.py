@@ -685,547 +685,6 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.ann_lsh_topk(vecs, queries, k=5, n_planes=6, dim=64)
 
 
-_IVF_K = 8
-_IVF_ITERS = 3
-_IVF_NPROBE = 2
-_IVF_DIM = 64
-_GRID = sim.CENTROID_GRID
-
-#: Codebook memo: the fit is deterministic, so per (sf_dir, k, iters)
-#: it is a pure function of the corpus — refitting on every query
-#: execution (bench best-of-2, repeated driver calls) would re-pay
-#: 3 iterations × (assignment + aggregation) for an identical result.
-_IVF_CODEBOOK_CACHE: dict[tuple[str, int, int], list[list[float]]] = {}
-
-
-def _ivf_codebook(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    key = (sf_dir, _IVF_K, _IVF_ITERS)
-    if key not in _IVF_CODEBOOK_CACHE:
-        vecs = _quantized(spark, sf_dir).persist()
-        try:
-            _IVF_CODEBOOK_CACHE[key] = sim.ivf_fit(
-                vecs, k=_IVF_K, iters=_IVF_ITERS
-            )
-        finally:
-            vecs.unpersist(False)
-    return _IVF_CODEBOOK_CACHE[key]
-
-
-def _ivf_iteration_sql(i: int) -> str:
-    """One unrolled k-means iteration: assign every vector to its
-    nearest centroid (max dot, lowest cell on ties — Spark's strict-``>``
-    fold), then per-cell per-dimension integer sums re-gridded by
-    truncating division (DuckDB ``//`` truncates toward zero, matching
-    similarity._trunc_div)."""
-    return f"""
-assign{i} AS (
-    SELECT vec_id, v, cell FROM (
-        SELECT n.vec_id, n.v, c.cell,
-               row_number() OVER (
-                   PARTITION BY n.vec_id
-                   ORDER BY list_dot_product(n.v,
-                       list_transform(c.g, gx -> gx / {_GRID}.0)) DESC,
-                   c.cell ASC) AS rn
-        FROM vecs n CROSS JOIN cent{i - 1} c
-    ) WHERE rn = 1
-),
-upd{i} AS (
-    SELECT cell,
-           list(CAST((CAST(s AS HUGEINT) * {_GRID}) // n AS BIGINT)
-                ORDER BY d) AS g
-    FROM (
-        SELECT cell, dims.d AS d, sum(v[dims.d]) AS s, count(*) AS n
-        FROM assign{i} CROSS JOIN dims
-        GROUP BY cell, dims.d
-    ) GROUP BY cell
-),
-cent{i} AS (
-    SELECT p.cell, COALESCE(u.g, p.g) AS g
-    FROM cent{i - 1} p LEFT JOIN upd{i} u ON p.cell = u.cell
-)"""
-
-
-#: Shared fit + corpus-assignment prefix (vecs → normed → unrolled
-#: k-means → final centroids → per-vector cell): reused verbatim by the
-#: inline-IVF oracle and the persisted-index probe oracle.
-_IVF_FIT_SQL = f"""
-WITH vecs AS (
-    SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings
-),
-normed AS (
-    SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM vecs
-),
-dims AS (SELECT unnest(generate_series(1, {_IVF_DIM})) AS d),
-cent0 AS (
-    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-           list_transform(v, x -> x * {_GRID}) AS g
-    FROM (SELECT vec_id, v FROM vecs ORDER BY vec_id LIMIT {_IVF_K})
-),{",".join(_ivf_iteration_sql(i) for i in range(1, _IVF_ITERS + 1))},
-centf AS (
-    SELECT cell, list_transform(g, gx -> gx / {_GRID}.0) AS c
-    FROM cent{_IVF_ITERS}
-),
-cand AS (
-    SELECT vec_id, v, n2, cell FROM (
-        SELECT n.vec_id, n.v, n.n2, c.cell,
-               row_number() OVER (PARTITION BY n.vec_id
-                                  ORDER BY list_dot_product(n.v, c.c) DESC,
-                                           c.cell ASC) AS rn
-        FROM normed n CROSS JOIN centf c
-    ) WHERE rn = 1
-)"""
-
-_IVF_ORACLE = f"""{_IVF_FIT_SQL},
-qprobe AS (
-    SELECT vec_id AS query_id, v AS qv, n2 AS qn2, cell FROM (
-        SELECT n.vec_id, n.v, n.n2, c.cell,
-               row_number() OVER (PARTITION BY n.vec_id
-                                  ORDER BY list_dot_product(n.v, c.c) DESC,
-                                           c.cell ASC) AS rn
-        FROM normed n CROSS JOIN centf c
-        WHERE n.vec_id % 100 = 0
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-scored AS (
-    SELECT q.query_id, c.vec_id AS cand_id,
-           list_dot_product(q.qv, c.v)
-               / sqrt(CAST(q.qn2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cosine
-    FROM qprobe q JOIN cand c ON c.cell = q.cell AND c.vec_id <> q.query_id
-),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, cand_id) AS rank
-    FROM scored
-)
-SELECT query_id, cand_id, cosine, rank FROM ranked WHERE rank <= 5
-"""
-
-
-@query("ann_ivf_topk", _IVF_ORACLE)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5: deterministic k-means codebook (k=8,
-    3 iterations, exact integer centroid sums on the 2⁻²⁰ binary grid),
-    nprobe=2 cell search, exact re-scoring inside cells.  Grid-exact
-    centroid arithmetic makes every dot product order-independent, so
-    the genuinely iterative fit unrolls into a hash-checked DuckDB
-    oracle; the codebook is fit once per corpus and memoized (at scale:
-    fit offline, broadcast the codebook)."""
-    centroids = _ivf_codebook(spark, sf_dir)
-    vecs = _quantized(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") % 100 == 0)
-    return sim.ivf_topk(vecs, queries, centroids, k=5, nprobe=2)
-
-
-# ------------------------------------------------------------------
-# IVF with the k ~ sqrt(n) sizing law (self-tuning codebook size)
-# ------------------------------------------------------------------
-
-# The auto oracle is the SAME unrolled k-means + probe tail as
-# _IVF_ORACLE, derived from it by three asserted single-site swaps (so
-# the two oracles cannot drift apart): a params CTE computes
-# k = greatest(8, ⌊√n⌋) once, the cent0 seed LIMIT and the qprobe
-# nprobe bound read from it.
-_IVF_PARAMS_SQL = (
-    f"params AS (SELECT greatest({_IVF_K}, "
-    f"CAST(floor(sqrt(count(*)*1.0)) AS BIGINT)) AS k FROM vecs),\n"
-    "dims AS"
-)
-assert _IVF_FIT_SQL.count("dims AS") == 1
-assert _IVF_FIT_SQL.count(f"LIMIT {_IVF_K})") == 1
-_IVF_AUTO_FIT_SQL = _IVF_FIT_SQL.replace("dims AS", _IVF_PARAMS_SQL).replace(
-    f"LIMIT {_IVF_K})", "LIMIT (SELECT k FROM params))"
-)
-_IVF_TAIL_SQL = _IVF_ORACLE[len(_IVF_FIT_SQL):]
-assert _IVF_TAIL_SQL.count(f"rn <= {_IVF_NPROBE}") == 1
-_IVF_AUTO_ORACLE = _IVF_AUTO_FIT_SQL + _IVF_TAIL_SQL.replace(
-    f"rn <= {_IVF_NPROBE}",
-    "rn <= (SELECT greatest(2, CAST(floor(sqrt(k*1.0)) AS BIGINT)) "
-    "FROM params)",
-)
-
-#: Base embeddings count per corpus dir — one count job, not one per
-#: execution (the auto-k pick is a pure function of it).
-_EMB_COUNT_CACHE: dict[str, int] = {}
-
-
-@query("ann_ivf_auto_k", _IVF_AUTO_ORACLE)
-def ann_ivf_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-5 with the codebook sized by the k ~ √n law and nprobe
-    scaled ~ √k (sim.ivf_auto_k / sim.ivf_auto_nprobe) instead of
-    fixed k=8, nprobe=2.
-
-    The sf1→sf10 ladder measured the fixed-k failure mode this exists
-    for: with k=8 pinned, cell occupancy grows ~n and ann_ivf_topk's
-    wall exponent reads 1.18 across the decade (LADDER_SF10_r09.json —
-    "the known IVF sizing law, not a bug").  Sizing k = ⌊√n⌋ bounds
-    expected occupancy at ~√n — but nprobe must grow with it or the
-    probed corpus FRACTION shrinks and recall collapses (measured at
-    sf0.1: recall@5 0.45 → 0.30 with nprobe pinned at 2).  nprobe =
-    ⌊√k⌋ restores recall to 0.49 ≥ the fixed-k baseline while probed
-    candidates stay sublinear at ~n^(3/4) per query.  At 100 TB the
-    fit runs offline on a corpus sample and only the k×dim codebook
-    ships to executors (broadcast — the assignment path switches to the
-    higher-order array form above 16 centroids, so plan SIZE stays
-    constant as k grows).  One memoized count job picks (k, nprobe);
-    both engines derive them from the identical count via the identical
-    IEEE floor∘sqrt, so the genuinely data-dependent codebook still
-    unrolls into a hash-checked DuckDB oracle."""
-    n = _EMB_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = emb_valid(spark, sf_dir).count()
-        _EMB_COUNT_CACHE[sf_dir] = n
-    k = sim.ivf_auto_k(n, floor_k=_IVF_K)
-    key = (sf_dir, k, _IVF_ITERS)
-    if key not in _IVF_CODEBOOK_CACHE:
-        vecs = _quantized(spark, sf_dir).persist()
-        try:
-            _IVF_CODEBOOK_CACHE[key] = sim.ivf_fit(
-                vecs, k=k, iters=_IVF_ITERS
-            )
-        finally:
-            vecs.unpersist(False)
-    centroids = _IVF_CODEBOOK_CACHE[key]
-    vecs = _quantized(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") % 100 == 0)
-    return sim.ivf_topk(
-        vecs, queries, centroids, k=5, nprobe=sim.ivf_auto_nprobe(k)
-    )
-
-
-# ------------------------------------------------------------------
-# Persisted IVF index + incremental batch probe
-# ------------------------------------------------------------------
-
-_IVF_PROBE_ORACLE = f"""{_IVF_FIT_SQL},
-newb AS (
-    SELECT vec_id + 1000000 AS vec_id,
-           list_transform(generate_series(1, len(v)),
-               i -> CASE WHEN i = 1 THEN v[i] + 250 ELSE v[i] END) AS v
-    FROM vecs WHERE vec_id % 50 = 0
-),
-newn AS (SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM newb),
-qprobe AS (
-    SELECT vec_id AS query_id, v AS qv, n2 AS qn2, cell FROM (
-        SELECT n.vec_id, n.v, n.n2, c.cell,
-               row_number() OVER (PARTITION BY n.vec_id
-                                  ORDER BY list_dot_product(n.v, c.c) DESC,
-                                           c.cell ASC) AS rn
-        FROM newn n CROSS JOIN centf c
-    ) WHERE rn <= {_IVF_NPROBE}
-),
-scored AS (
-    SELECT q.query_id, c.vec_id AS cand_id,
-           list_dot_product(q.qv, c.v)
-               / sqrt(CAST(q.qn2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cosine
-    FROM qprobe q JOIN cand c ON c.cell = q.cell AND c.vec_id <> q.query_id
-),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, cand_id) AS rank
-    FROM scored
-)
-SELECT query_id, cand_id, cosine, rank FROM ranked WHERE rank <= 5
-"""
-
-
-@query("ann_ivf_persisted_probe", _IVF_PROBE_ORACLE)
-def ann_ivf_persisted_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ANN SERVING shape: the IVF index is MATERIALIZED — corpus
-    vectors with their cell assignment written as parquet partitioned
-    by cell — and an incoming batch (perturbed copies of every 50th
-    vector, ids +1e6) probes the standing table with nprobe=2, exact
-    integer re-scoring inside the probed cells.  At 100 TB the index
-    builds once offline; each batch's probe broadcasts |batch|×nprobe
-    rows and the cell-partitioned layout lets the scan prune to the
-    probed cells (dynamic partition pruning) instead of re-assigning
-    the corpus per batch.  Timing includes the index write+read-back —
-    the materialization IS the operator (hypertable convention)."""
-    import tempfile
-
-    centroids = _ivf_codebook(spark, sf_dir)
-    vecs = _quantized(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="ivf_index_") + "/index"
-    vecs.withColumn(
-        "cell", sim.assign_cluster("qvec", centroids)
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
-    idx = spark.read.parquet(path)
-    newb = vecs.where(F.col("vec_id") % 50 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.transform(
-            F.col("qvec"),
-            lambda x, i: F.when(i == 0, x + 250).otherwise(x),
-        ).alias("qvec"),
-    )
-    return sim.ivf_probe_index(idx, newb, centroids, k=5, nprobe=2)
-
-
-# ------------------------------------------------------------------
-# Semantic (cluster-scoped) embedding dedup — SemDeDup shape
-# ------------------------------------------------------------------
-
-#: fit memo for the dup-injected corpus (distinct from _IVF_CODEBOOK_
-#: CACHE: the fit corpus includes the injected duplicates)
-_SEMDEDUP_CODEBOOK_CACHE: dict[str, list[list[float]]] = {}
-
-_SEMDEDUP_ORACLE = f"""
-WITH vecs AS (
-    SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings
-    UNION ALL
-    SELECT vec_id + 1000000, {_QUANT_SQL} AS v
-    FROM embeddings WHERE vec_id % 10 = 0
-),
-normed AS (
-    SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM vecs
-),
-dims AS (SELECT unnest(generate_series(1, {_IVF_DIM})) AS d),
-cent0 AS (
-    -- k scales with the corpus (SemDeDup: cluster size, not cluster
-    -- count, must stay bounded) — same greatest(8, n // 1000) rule
-    -- the Spark side computes
-    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-           list_transform(v, x -> x * {_GRID}) AS g
-    FROM (SELECT vec_id, v FROM vecs ORDER BY vec_id
-          LIMIT (SELECT greatest({_IVF_K}, count(*) // 1000) FROM vecs))
-),{",".join(_ivf_iteration_sql(i) for i in range(1, _IVF_ITERS + 1))},
-centf AS (
-    SELECT cell, list_transform(g, gx -> gx / {_GRID}.0) AS c
-    FROM cent{_IVF_ITERS}
-),
-cand AS (
-    SELECT vec_id, v, n2, cell FROM (
-        SELECT n.vec_id, n.v, n.n2, c.cell,
-               row_number() OVER (PARTITION BY n.vec_id
-                                  ORDER BY list_dot_product(n.v, c.c) DESC,
-                                           c.cell ASC) AS rn
-        FROM normed n CROSS JOIN centf c
-    ) WHERE rn = 1
-),
-pairs AS (
-    SELECT b.vec_id
-    FROM cand a JOIN cand b ON a.cell = b.cell AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v)
-              / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) >= 0.999
-)
-SELECT c.vec_id, CAST(c.cell AS BIGINT) AS cell,
-       (d.vec_id IS NOT NULL) AS is_semantic_dup
-FROM cand c
-LEFT JOIN (SELECT DISTINCT vec_id FROM pairs) d ON d.vec_id = c.vec_id
-"""
-
-
-@query("dedup_semantic_clusters", _SEMDEDUP_ORACLE)
-def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic dedup, SemDeDup shape: k-means-cluster the embedding
-    corpus (the deterministic grid-exact IVF fit), then hunt near-dups
-    ONLY within each cluster — the candidate generator that keeps
-    embedding dedup sub-quadratic when hyperplane buckets are too
-    coarse: pair fan-out is bounded by cluster size, never |corpus|²,
-    and at 100 TB the fit is offline and the per-cluster pass shuffles
-    once on cell.  Every vector gets a verdict row (keep-lowest-id
-    rule: a vector is a semantic dup iff a lower-id vector in its
-    cluster matches at cosine >= 0.999); injected exact duplicates
-    guarantee hits.  The genuinely iterative fit unrolls into the
-    DuckDB oracle bit-for-bit (same machinery as ann_ivf_topk).
-
-    k SCALES WITH THE CORPUS — greatest(8, n // 1000), identically in
-    the oracle's cent0 LIMIT — because SemDeDup's cost is quadratic in
-    CLUSTER SIZE: the r6 soak with fixed k=8 went quadratic at 30x
-    volume (~10⁹ within-cell pairs); sizing k ~ n/1000 bounds cluster
-    occupancy so the pair fan-out stays ~500·n.  Above 16 centroids
-    assignment switches to the literal-array higher-order form
-    (similarity.assign_cluster), so the plan grows as data, not
-    generated code."""
-    emb = emb_valid(spark, sf_dir)
-    dups = emb.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    base = emb.select("vec_id", "embedding").unionByName(dups)
-    vecs = base.select(
-        "vec_id",
-        sim.quantize(
-            F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        ).alias("qvec"),
-    )
-    if sf_dir not in _SEMDEDUP_CODEBOOK_CACHE:
-        pv = vecs.persist()
-        try:
-            k = max(_IVF_K, pv.count() // 1000)
-            _SEMDEDUP_CODEBOOK_CACHE[sf_dir] = sim.ivf_fit(
-                pv, k=k, iters=_IVF_ITERS
-            )
-        finally:
-            pv.unpersist(False)
-    centroids = _SEMDEDUP_CODEBOOK_CACHE[sf_dir]
-    # corpus→cell routing through the batched numpy matmul form for
-    # the n//1000-sized codebook (assign_cells; bit-identical to the
-    # expression form by the grid-exactness argument)
-    assigned = sim.assign_cells(
-        vecs.select("vec_id", "qvec"), centroids, out_col="cell"
-    ).select(
-        "vec_id", "qvec", sim._norm2(F.col("qvec")).alias("n2"), "cell"
-    )
-    # vectorized within-cell verdicts: one Arrow batch per cell, numpy
-    # int64 gram tiles — bit-identical to the expression form (exact
-    # integer dots, same IEEE cosine ops), ~40x its throughput (the
-    # zip_with/aggregate dot is CodegenFallback: 69s for the 11M-pair
-    # stage at the 10x corpus, r8 slope-table finding)
-    dup_ids = sim.within_group_dup_ids(
-        assigned, ["cell"], threshold=0.999
-    ).withColumn("__dup", F.lit(True))
-    return assigned.join(dup_ids, "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        F.coalesce("__dup", F.lit(False)).alias("is_semantic_dup"),
-    )
-
-
-# ------------------------------------------------------------------
-# Product quantization (asymmetric-distance top-k over PQ codes)
-# ------------------------------------------------------------------
-
-_PQ_M = 4
-_PQ_K = 8
-_PQ_ITERS = 2
-_PQ_SUB = _IVF_DIM // _PQ_M
-
-_PQ_CODEBOOK_CACHE: dict[tuple[str, int, int, int], list] = {}
-
-
-def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
-    key = (sf_dir, _PQ_M, _PQ_K, _PQ_ITERS)
-    if key not in _PQ_CODEBOOK_CACHE:
-        vecs = _quantized(spark, sf_dir).persist()
-        try:
-            _PQ_CODEBOOK_CACHE[key] = sim.pq_fit(
-                vecs, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS, dim=_IVF_DIM
-            )
-        finally:
-            vecs.unpersist(False)
-    return _PQ_CODEBOOK_CACHE[key]
-
-
-def _pq_iter_sql(s: int, i: int) -> str:
-    """One unrolled subspace k-means iteration (same arithmetic as
-    the IVF oracle: strict-max dot assignment, exact integer sums
-    re-gridded by truncating division)."""
-    return f"""
-passign{s}_{i} AS (
-    SELECT vec_id, v, cell FROM (
-        SELECT n.vec_id, n.v, c.cell,
-               row_number() OVER (
-                   PARTITION BY n.vec_id
-                   ORDER BY list_dot_product(n.v,
-                       list_transform(c.g, gx -> gx / {_GRID}.0)) DESC,
-                   c.cell ASC) AS rn
-        FROM pv{s} n CROSS JOIN pcent{s}_{i - 1} c
-    ) WHERE rn = 1
-),
-pupd{s}_{i} AS (
-    SELECT cell,
-           list(CAST((CAST(sm AS HUGEINT) * {_GRID}) // n AS BIGINT)
-                ORDER BY d) AS g
-    FROM (
-        SELECT cell, pdims.d AS d, sum(v[pdims.d]) AS sm, count(*) AS n
-        FROM passign{s}_{i} CROSS JOIN pdims
-        GROUP BY cell, pdims.d
-    ) GROUP BY cell
-),
-pcent{s}_{i} AS (
-    SELECT p.cell, COALESCE(u.g, p.g) AS g
-    FROM pcent{s}_{i - 1} p LEFT JOIN pupd{s}_{i} u ON p.cell = u.cell
-)"""
-
-
-def _pq_subspace_sql(s: int) -> str:
-    lo = s * _PQ_SUB + 1
-    hi = (s + 1) * _PQ_SUB
-    iters = ",".join(_pq_iter_sql(s, i) for i in range(1, _PQ_ITERS + 1))
-    return f"""
-pv{s} AS (SELECT vec_id, list_slice(v, {lo}, {hi}) AS v FROM vecs),
-pcent{s}_0 AS (
-    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-           list_transform(v, x -> x * {_GRID}) AS g
-    FROM (SELECT vec_id, v FROM pv{s} ORDER BY vec_id LIMIT {_PQ_K})
-),{iters},
-pcentf{s} AS (
-    SELECT cell, list_transform(g, gx -> gx / {_GRID}.0) AS c
-    FROM pcent{s}_{_PQ_ITERS}
-),
-pcode{s} AS (
-    SELECT vec_id, cell FROM (
-        SELECT n.vec_id, c.cell,
-               row_number() OVER (PARTITION BY n.vec_id
-                                  ORDER BY list_dot_product(n.v, c.c) DESC,
-                                           c.cell ASC) AS rn
-        FROM pv{s} n CROSS JOIN pcentf{s} c
-    ) WHERE rn = 1
-)"""
-
-
-_PQ_ADC = " + ".join(
-    f"list_dot_product(list_slice(q.qv, {s * _PQ_SUB + 1},"
-    f" {(s + 1) * _PQ_SUB}), f{s}.c)"
-    for s in range(_PQ_M)
-)
-_PQ_RNORM = " + ".join(
-    f"list_dot_product(f{s}.c, f{s}.c)" for s in range(_PQ_M)
-)
-_PQ_JOINS = "\n    ".join(
-    f"JOIN pcode{s} k{s} ON k{s}.vec_id = c.vec_id"
-    f" JOIN pcentf{s} f{s} ON f{s}.cell = k{s}.cell"
-    for s in range(_PQ_M)
-)
-
-_PQ_ORACLE = f"""
-WITH vecs AS (
-    SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings
-),
-normed AS (
-    SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM vecs
-),
-pdims AS (SELECT unnest(generate_series(1, {_PQ_SUB})) AS d),
-{",".join(_pq_subspace_sql(s) for s in range(_PQ_M))},
-queries AS (
-    SELECT vec_id AS query_id, v AS qv, n2 AS qn2
-    FROM normed WHERE vec_id % 100 = 0
-),
-scored AS (
-    SELECT q.query_id, c.vec_id AS cand_id,
-           ({_PQ_ADC})
-               / sqrt(CAST(q.qn2 AS DOUBLE) * ({_PQ_RNORM}))
-               AS adc_cosine
-    FROM queries q
-    CROSS JOIN vecs c
-    {_PQ_JOINS}
-    WHERE c.vec_id <> q.query_id
-),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adc_cosine DESC, cand_id) AS rank
-    FROM scored
-)
-SELECT query_id, cand_id, adc_cosine, rank FROM ranked WHERE rank <= 5
-"""
-
-
-@query("ann_pq_topk", _PQ_ORACLE)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization approximate top-5: {_PQ_M} subspaces of
-    {_PQ_SUB} dims, each with a deterministic k={_PQ_K} grid k-means
-    codebook; candidates are stored ONLY as {_PQ_M} codes (the ~256x
-    memory compression that lets a 100 TB embedding corpus live in
-    RAM), and scoring is asymmetric-distance: the query's exact dot
-    with each centroid forms a literal lookup table indexed by the
-    candidate's code.  Every product stays on the 2^-20 binary grid
-    (exact in doubles), so the whole pipeline — including {_PQ_M}
-    independent 2-iteration k-means fits — unrolls into a
-    hash-checked DuckDB oracle."""
-    books = _pq_codebooks(spark, sf_dir)
-    vecs = _quantized(spark, sf_dir)
-    queries = vecs.where(F.col("vec_id") % 100 == 0)
-    return sim.ann_pq_topk(vecs, queries, books, k=5, dim=_IVF_DIM)
-
-
 _MH_EQ_SUM = " + ".join(
     f"CASE WHEN a.mh{j} = b.mh{j} THEN 1 ELSE 0 END"
     for j in range(len(MINHASH_COEFFS))
@@ -1450,361 +909,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.select("vec_a", "vec_b", cosine.alias("cosine"))
         .where(F.col("cosine") >= 0.999)
-    )
-
-
-# ------------------------------------------------------------------
-# Hierarchical semantic dedup (two-level grid-exact quantization)
-# ------------------------------------------------------------------
-
-_HIER_CODEBOOK_CACHE: dict[str, tuple] = {}
-_SUB_K = 4
-_SUB_ITERS = 2
-
-
-def _sub_iteration_sql(i: int) -> str:
-    """One unrolled sub-k-means iteration: assign every vector to its
-    cell's nearest SUB-centroid (max dot, lowest subcell on ties),
-    then per-(cell, subcell) grid-exact integer mean updates; empty
-    sub-cells keep their previous centroid."""
-    return f"""
-sassign{i} AS (
-    SELECT vec_id, cell, v, n2, subcell FROM (
-        SELECT c.vec_id, c.cell, c.v, c.n2, s.subcell,
-               row_number() OVER (PARTITION BY c.vec_id
-                   ORDER BY list_dot_product(c.v,
-                       list_transform(s.g, gx -> gx / {_GRID}.0)) DESC,
-                   s.subcell ASC) AS rn
-        FROM cand c JOIN sub{i - 1} s ON s.cell = c.cell
-    ) WHERE rn = 1
-),
-supd{i} AS (
-    SELECT cell, subcell,
-           list(CAST((CAST(sm AS HUGEINT) * {_GRID}) // n AS BIGINT)
-                ORDER BY d) AS g
-    FROM (
-        SELECT cell, subcell, dims.d AS d, sum(v[dims.d]) AS sm,
-               count(*) AS n
-        FROM sassign{i} CROSS JOIN dims GROUP BY cell, subcell, dims.d
-    ) GROUP BY cell, subcell
-),
-sub{i} AS (
-    SELECT p.cell, p.subcell, COALESCE(u.g, p.g) AS g
-    FROM sub{i - 1} p LEFT JOIN supd{i} u
-      ON u.cell = p.cell AND u.subcell = p.subcell
-)"""
-
-
-_HIER_ORACLE = f"""
-WITH vecs AS (
-    SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings
-    UNION ALL
-    SELECT vec_id + 1000000, {_QUANT_SQL} AS v
-    FROM embeddings WHERE vec_id % 10 = 0
-),
-normed AS (
-    SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM vecs
-),
-dims AS (SELECT unnest(generate_series(1, {_IVF_DIM})) AS d),
-cent0 AS (
-    SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-           list_transform(v, x -> x * {_GRID}) AS g
-    FROM (SELECT vec_id, v FROM vecs ORDER BY vec_id LIMIT {_IVF_K})
-),{",".join(_ivf_iteration_sql(i) for i in range(1, _IVF_ITERS + 1))},
-centf AS (
-    SELECT cell, list_transform(g, gx -> gx / {_GRID}.0) AS c
-    FROM cent{_IVF_ITERS}
-),
-cand AS (
-    SELECT vec_id, v, n2, cell FROM (
-        SELECT n.vec_id, n.v, n.n2, c.cell,
-               row_number() OVER (PARTITION BY n.vec_id
-                                  ORDER BY list_dot_product(n.v, c.c) DESC,
-                                           c.cell ASC) AS rn
-        FROM normed n CROSS JOIN centf c
-    ) WHERE rn = 1
-),
-sub0 AS (
-    SELECT cell, rn - 1 AS subcell,
-           list_transform(v, x -> x * {_GRID}) AS g
-    FROM (
-        SELECT cell, v,
-               row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS rn
-        FROM cand
-    ) WHERE rn <= {_SUB_K}
-),{",".join(_sub_iteration_sql(i) for i in range(1, _SUB_ITERS + 1))},
-sfinal AS (
-    SELECT vec_id, cell, v, n2, subcell FROM (
-        SELECT c.vec_id, c.cell, c.v, c.n2, s.subcell,
-               row_number() OVER (PARTITION BY c.vec_id
-                   ORDER BY list_dot_product(c.v,
-                       list_transform(s.g, gx -> gx / {_GRID}.0)) DESC,
-                   s.subcell ASC) AS rn
-        FROM cand c JOIN sub{_SUB_ITERS} s ON s.cell = c.cell
-    ) WHERE rn = 1
-),
-spairs AS (
-    SELECT b.vec_id
-    FROM sfinal a JOIN sfinal b
-      ON a.cell = b.cell AND a.subcell = b.subcell
-     AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v)
-              / sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) >= 0.999
-)
-SELECT f.vec_id, CAST(f.cell AS BIGINT) AS cell,
-       CAST(f.subcell AS BIGINT) AS subcell,
-       (d.vec_id IS NOT NULL) AS is_semantic_dup
-FROM sfinal f
-LEFT JOIN (SELECT DISTINCT vec_id FROM spairs) d ON d.vec_id = f.vec_id
-"""
-
-
-@query("dedup_semantic_hierarchical", _HIER_ORACLE)
-def dedup_semantic_hierarchical(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hierarchical semantic dedup: the scale answer to the flat
-    codebook's O(n·K) assignment (SCALE.md).  A FIXED-k coarse level
-    (k=8, 3 grid-exact iterations) routes each vector to a cell; each
-    cell then fits its own k_sub=4 sub-codebook — all cells
-    simultaneously, in the same distributed passes
-    (similarity.sub_fit: broadcast (cell,subcell) codebook join +
-    per-vector argmax window + per-leaf integer mean updates; driver
-    state = the 32xdim codebook).  Near-dups are hunted only within
-    (cell, subcell) leaves.  Per level the assignment is O(n·k) with
-    k SMALL and leaves multiply as k·k_sub — stacking levels grows
-    leaf count exponentially while assignment stays linear per level,
-    which is how cluster size stays bounded WITHOUT a corpus-sized
-    codebook.  Both levels' genuinely iterative fits unroll into the
-    DuckDB oracle bit-for-bit (grid-exact integer arithmetic end to
-    end); keep-lowest-id verdicts, injected exact duplicates
-    guarantee hits."""
-    emb = emb_valid(spark, sf_dir)
-    dups = emb.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    base = emb.select("vec_id", "embedding").unionByName(dups)
-    vecs = base.select(
-        "vec_id",
-        sim.quantize(
-            F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        ).alias("qvec"),
-    )
-    if sf_dir not in _HIER_CODEBOOK_CACHE:
-        pv = vecs.persist()
-        try:
-            coarse = sim.ivf_fit(pv, k=_IVF_K, iters=_IVF_ITERS)
-            assigned0 = pv.select(
-                "vec_id",
-                "qvec",
-                sim.assign_cluster("qvec", coarse).alias("cell"),
-            )
-            subbook = sim.sub_fit(
-                assigned0, k_sub=_SUB_K, iters=_SUB_ITERS
-            )
-            _HIER_CODEBOOK_CACHE[sf_dir] = (coarse, subbook)
-        finally:
-            pv.unpersist(False)
-    coarse, subbook = _HIER_CODEBOOK_CACHE[sf_dir]
-    assigned = vecs.select(
-        "vec_id",
-        "qvec",
-        sim._norm2(F.col("qvec")).alias("n2"),
-        sim.assign_cluster("qvec", coarse).alias("cell"),
-    )
-    leaves = sim.assign_subcells(assigned, subbook)
-    # same vectorized verdict stage as dedup_semantic_clusters, keyed
-    # on the (cell, subcell) leaf (r8: replaces the interpreted-HOF
-    # self-join pair scoring)
-    dup_ids = sim.within_group_dup_ids(
-        leaves, ["cell", "subcell"], threshold=0.999
-    ).withColumn("__dup", F.lit(True))
-    return leaves.join(dup_ids, "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        F.col("subcell").cast("long").alias("subcell"),
-        F.coalesce("__dup", F.lit(False)).alias("is_semantic_dup"),
-    )
-
-
-#: Corpus-size memo for the auto strategy pick (base + injected dups);
-#: one count job per sf_dir, not one per execution.
-_SEMDEDUP_COUNT_CACHE: dict[str, int] = {}
-
-# Two-level oracle, derived from _HIER_ORACLE by three asserted
-# single-site swaps (so the two cannot drift): a params CTE computes
-# k = greatest(2, ceil(sqrt(n/1000))) once; the coarse cent0 seed
-# LIMIT and the sub0 per-cell seed bound both read from it.  The
-# iteration CTEs are k-independent and shared verbatim.  (Defined here,
-# above dedup_semantic_auto, because the auto oracle unions it in.)
-_TWO_LEVEL_PARAMS_SQL = (
-    "params AS (SELECT greatest(2, "
-    "CAST(ceil(sqrt(count(*) / 1000.0)) AS BIGINT)) AS k FROM vecs),\n"
-    "dims AS"
-)
-assert _HIER_ORACLE.count("dims AS") == 1
-assert _HIER_ORACLE.count(f"LIMIT {_IVF_K})") == 1
-assert _HIER_ORACLE.count(f"rn <= {_SUB_K}") == 1
-_TWO_LEVEL_ORACLE = (
-    _HIER_ORACLE.replace("dims AS", _TWO_LEVEL_PARAMS_SQL)
-    .replace(f"LIMIT {_IVF_K})", "LIMIT (SELECT k FROM params))")
-    .replace(f"rn <= {_SUB_K}", "rn <= (SELECT k FROM params)")
-)
-
-# STRATEGY-AWARE auto oracle (closes ADVICE r9 #2): instead of
-# hardcoding the flat projection — which would hash-mismatch on any
-# corpus past the flip even though the engine behaves correctly — the
-# oracle mirrors the engine's selector.  Both branches carry mutually
-# exclusive guards on the same uncorrelated scalar count
-# n = |embeddings| + |injected dups| compared against the SAME flip
-# constant (read from sim.SEMANTIC_FLIP_AT at module load, so the two
-# selectors cannot drift), and each branch emits its own specialist
-# oracle's verdicts.  Exactly one branch produces ROWS at any n —
-# but DuckDB does not prune the other branch at PLAN time (the guard
-# is an uncorrelated scalar subquery, evaluated during execution), so
-# every certification run pays for BOTH specialist oracles, roughly
-# doubling this query's oracle cost at all scales.  Accepted: the
-# driver contract requires oracle_sql() to return a static SQL string
-# (no run-time n-substitution is possible for the authoritative
-# gate), certification runs at sf ≤ 1 where the doubled cost is
-# seconds, and a selector-drift bug hiding in the unpicked branch
-# would surface the moment a corpus crosses the flip.
-_AUTO_N_SQL = (
-    "(SELECT count(*) + count(*) FILTER (WHERE vec_id % 10 = 0) "
-    "FROM embeddings)"
-)
-if sim.SEMANTIC_FLIP_AT is None:
-    _SEMDEDUP_AUTO_ORACLE = f"""
-SELECT vec_id, is_semantic_dup, 'flat' AS strategy
-FROM ({_SEMDEDUP_ORACLE})
-"""
-else:
-    _SEMDEDUP_AUTO_ORACLE = f"""
-SELECT vec_id, is_semantic_dup, 'flat' AS strategy
-FROM ({_SEMDEDUP_ORACLE})
-WHERE {_AUTO_N_SQL} < {sim.SEMANTIC_FLIP_AT}
-UNION ALL
-SELECT vec_id, is_semantic_dup, 'two_level' AS strategy
-FROM ({_TWO_LEVEL_ORACLE})
-WHERE {_AUTO_N_SQL} >= {sim.SEMANTIC_FLIP_AT}
-"""
-
-
-@query("dedup_semantic_auto", _SEMDEDUP_AUTO_ORACLE)
-def dedup_semantic_auto(
-    spark: SparkSession, sf_dir: str, *, flip_at: int | None = None
-) -> DataFrame:
-    """Self-tuning semantic dedup: measure the corpus, then run the
-    codebook shape that wins at that size (sim.choose_semantic_strategy).
-
-    The selection history is itself a scale lesson, measured at every
-    step (SOAK_SEMANTIC_FLIP_r09.json).  Pre-vectorization the sf10
-    ladder showed the fixed 8×4 hierarchy winning the 220k decade 6×
-    (LADDER_SF10_r09.json) — but that was the flat form's interpreted
-    n·k assignment, not its algorithm: as a BLAS matmul (assign_cells)
-    flat beats the fixed hierarchy at every soaked size (40.3s vs
-    592.3s at 2.2M — fixed-depth leaves grow ∝ n, verdict ~2n² FLOPs).
-    What DOES overtake flat is the occupancy-scaled two-level codebook
-    (dedup_semantic_two_level, assignment ~n^1.5 FLOPs): tie at 2.2M,
-    133.0s vs 227.0s at 6.6M.  The selector flips flat → two_level at
-    the measured 3M boundary.  One count job (memoized per corpus
-    dir), then the chosen branch — no plan is built for the losers.
-    Output is the strategy-independent verdict surface (vec_id,
-    is_semantic_dup) plus the pick, so the schema is stable across
-    any flip; cluster ids (which legitimately differ by shape) stay
-    internal to the specialized queries."""
-    n = _SEMDEDUP_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        emb = emb_valid(spark, sf_dir)
-        base_n = emb.count()
-        # injected dups replicate every 10th vec_id, same all branches
-        n = base_n + emb.where(F.col("vec_id") % 10 == 0).count()
-        _SEMDEDUP_COUNT_CACHE[sf_dir] = n
-    strategy = sim.choose_semantic_strategy(
-        n, **({} if flip_at is None else {"flip_at": flip_at})
-    )
-    branch = {
-        "flat": dedup_semantic_clusters,
-        "two_level": dedup_semantic_two_level,
-    }[strategy]
-    return branch(spark, sf_dir).select(
-        "vec_id", "is_semantic_dup", F.lit(strategy).alias("strategy")
-    )
-
-
-# ------------------------------------------------------------------
-# Occupancy-scaled two-level semantic dedup (k1 = k2 = ceil(sqrt(n/1000)))
-# ------------------------------------------------------------------
-
-# (_TWO_LEVEL_ORACLE is constructed above dedup_semantic_auto, which
-# unions it into its strategy-aware oracle.)
-
-_TWO_LEVEL_CODEBOOK_CACHE: dict[str, tuple] = {}
-
-
-@query("dedup_semantic_two_level", _TWO_LEVEL_ORACLE)
-def dedup_semantic_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic dedup with an OCCUPANCY-SCALED two-level codebook:
-    both levels sized k₁ = k₂ = ⌈√(n/1000)⌉ (sim.semantic_two_level_k),
-    so leaves hold ~1000 vectors at every corpus size.
-
-    This is the hierarchy the flat-vs-fixed-hier soak
-    (SOAK_SEMANTIC_FLIP_r09.json) motivates: the fixed 8×4 form loses
-    everywhere because its leaf size grows ∝ n (verdict ~2n² FLOPs),
-    and the flat k ~ n/1000 form pays an n²·64/1000-FLOP assignment
-    matmul.  Sizing both levels by occupancy makes assignment
-    n·2⌈√(n/1000)⌉·64 ≈ n^1.5 FLOPs — asymptotically below flat —
-    while the verdict stays leaf-bounded exactly like flat's.  At
-    2.2M vectors that is 94 dots/vector vs flat's 2200.  Both fits
-    run through the batched numpy assignment (assign_cells /
-    _assign_subcells_batched); the genuinely data-dependent k still
-    unrolls into the DuckDB oracle because both engines derive it
-    from count(*) with the identical IEEE ceil∘sqrt — same pattern as
-    ann_ivf_auto_k.  Keep-lowest-id verdicts; injected exact
-    duplicates guarantee hits."""
-    emb = emb_valid(spark, sf_dir)
-    dups = emb.where(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    base = emb.select("vec_id", "embedding").unionByName(dups)
-    vecs = base.select(
-        "vec_id",
-        sim.quantize(
-            F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        ).alias("qvec"),
-    )
-    n = _SEMDEDUP_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        base_n = emb.count()
-        n = base_n + emb.where(F.col("vec_id") % 10 == 0).count()
-        _SEMDEDUP_COUNT_CACHE[sf_dir] = n
-    k = sim.semantic_two_level_k(n)
-    if sf_dir not in _TWO_LEVEL_CODEBOOK_CACHE:
-        pv = vecs.persist()
-        try:
-            coarse = sim.ivf_fit(pv, k=k, iters=_IVF_ITERS)
-            assigned0 = sim.assign_cells(
-                pv.select("vec_id", "qvec"), coarse, out_col="cell"
-            )
-            subbook = sim.sub_fit(assigned0, k_sub=k, iters=_SUB_ITERS)
-            _TWO_LEVEL_CODEBOOK_CACHE[sf_dir] = (coarse, subbook)
-        finally:
-            pv.unpersist(False)
-    coarse, subbook = _TWO_LEVEL_CODEBOOK_CACHE[sf_dir]
-    assigned = sim.assign_cells(
-        vecs.select("vec_id", "qvec"), coarse, out_col="cell"
-    ).select(
-        "vec_id", "qvec", sim._norm2(F.col("qvec")).alias("n2"), "cell"
-    )
-    leaves = sim.assign_subcells(assigned, subbook)
-    dup_ids = sim.within_group_dup_ids(
-        leaves, ["cell", "subcell"], threshold=0.999
-    ).withColumn("__dup", F.lit(True))
-    return leaves.join(dup_ids, "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell"),
-        F.col("subcell").cast("long").alias("subcell"),
-        F.coalesce("__dup", F.lit(False)).alias("is_semantic_dup"),
     )
 
 
@@ -3605,171 +2709,6 @@ def multimodal_image_dhash_neardup(
 
 
 # ====================================================================
-# Top principal component (power iteration, ABTT estimation step)
-# ====================================================================
-
-_PC = sim.PC_SCALE
-
-
-def _pc_iteration_sql(i: int) -> str:
-    return f"""
-s{i} AS (
-    SELECT xc.vec_id, CAST(sum(xc.x * p.vv) AS BIGINT) AS s
-    FROM xc JOIN v{i - 1} p ON p.d = xc.d GROUP BY xc.vec_id
-),
-sp{i} AS (SELECT vec_id, CAST(s // {_PC} AS BIGINT) AS sp FROM s{i}),
-u{i} AS (
-    SELECT xc.d, CAST(sum(xc.x * sp.sp) AS BIGINT) AS u
-    FROM xc JOIN sp{i} sp ON sp.vec_id = xc.vec_id GROUP BY xc.d
-),
-m{i} AS (SELECT max(abs(u)) AS m FROM u{i}),
-v{i} AS (
-    SELECT d,
-           CASE WHEN m = 0 THEN CAST(0 AS BIGINT)
-                WHEN u >= 0
-                THEN CAST(CAST(abs(u) AS HUGEINT) * {_PC} // m AS BIGINT)
-                ELSE -CAST(CAST(abs(u) AS HUGEINT) * {_PC} // m AS BIGINT)
-           END AS vv
-    FROM u{i} CROSS JOIN m{i}
-)"""
-
-
-_TOP_PC_ORACLE = f"""
-WITH vecs AS (
-    SELECT vec_id, {_QUANT_SQL} AS v FROM embeddings
-),
-dims AS (SELECT unnest(generate_series(1, {_IVF_DIM})) AS d),
-cent AS (
-    SELECT dims.d AS d, CAST(sum(v[dims.d]) // count(*) AS BIGINT) AS c
-    FROM vecs CROSS JOIN dims GROUP BY dims.d
-),
-xc AS (
-    SELECT vec_id, dims.d AS d,
-           CAST(v[dims.d] AS BIGINT) - c.c AS x
-    FROM vecs CROSS JOIN dims JOIN cent c ON c.d = dims.d
-),
-v0 AS (
-    SELECT d, CASE WHEN d = 1 THEN CAST({_PC} AS BIGINT)
-                   ELSE CAST(0 AS BIGINT) END AS vv
-    FROM dims
-),{",".join(_pc_iteration_sql(i) for i in range(1, 4))}
-SELECT CAST(d AS BIGINT) AS dim, CAST(vv AS BIGINT) AS v_scaled FROM v3
-"""
-
-
-@query("embeddings_top_pc", _TOP_PC_ORACLE)
-def embeddings_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dominant principal component of the embedding corpus by
-    3-round power iteration in exact integer arithmetic — the
-    estimation step of all-but-the-top / whitening post-processing
-    (remove the common direction before similarity search).  The
-    centered corpus does one projection map pass + one dim-keyed
-    aggregation per round; driver state is one 64-long vector per
-    round (the ivf_fit bounded-collect pattern); max-abs
-    renormalization replaces sqrt so the whole iteration unrolls into
-    the DuckDB oracle bit-for-bit — see dataops.similarity.top_pc."""
-    vecs = _quantized(spark, sf_dir)
-    v = sim.top_pc(vecs, iters=3)
-    return spark.createDataFrame(
-        [(i + 1, int(x)) for i, x in enumerate(v)],
-        "dim long, v_scaled long",
-    )
-
-
-# ====================================================================
-# ABTT-corrected retrieval (apply the top-PC correction)
-# ====================================================================
-
-#: top_pc memo per corpus (bounded 64-long vector; codebook-cache
-#: rationale — the fit is a pure function of the corpus).
-_TOP_PC_CACHE: dict[str, list[int]] = {}
-
-
-def _top_pc_cached(spark: SparkSession, sf_dir: str) -> list[int]:
-    if sf_dir not in _TOP_PC_CACHE:
-        _TOP_PC_CACHE[sf_dir] = sim.top_pc(
-            _quantized(spark, sf_dir), iters=3
-        )
-    return _TOP_PC_CACHE[sf_dir]
-
-
-# the shared fit prefix: everything up to v3 from the top-PC oracle
-_PC_PREFIX = _TOP_PC_ORACLE.split("\nSELECT CAST(d AS BIGINT)")[0]
-
-_ABTT_ORACLE = f"""{_PC_PREFIX},
-w AS (SELECT d, CAST(vv // 1024 AS BIGINT) AS wv FROM v3),
-ww AS (SELECT CAST(sum(wv * wv) AS BIGINT) AS ww FROM w),
-pv AS (
-    SELECT xc.vec_id,
-           CAST(sum(xc.x * w.wv) AS BIGINT) AS aw,
-           CAST(sum(xc.x * xc.x) AS BIGINT) AS n2
-    FROM xc JOIN w ON w.d = xc.d GROUP BY xc.vec_id
-),
-den AS (
-    SELECT vec_id, aw, CAST(n2 * ww - aw * aw AS BIGINT) AS den
-    FROM pv CROSS JOIN ww
-),
-qs AS (SELECT * FROM den WHERE vec_id % 100 = 0 AND den > 0),
-cs AS (SELECT * FROM den WHERE den > 0),
-pd AS (
-    SELECT xq.vec_id AS query_id, xd.vec_id AS cand_id,
-           CAST(sum(xq.x * xd.x) AS BIGINT) AS ab
-    FROM xc xq JOIN xc xd ON xq.d = xd.d
-    WHERE xq.vec_id % 100 = 0 AND xd.vec_id <> xq.vec_id
-    GROUP BY xq.vec_id, xd.vec_id
-),
-scored AS (
-    SELECT p.query_id, p.cand_id,
-           (p.ab * ww.ww - q.aw * c.aw)
-               / sqrt(CAST(q.den AS DOUBLE) * CAST(c.den AS DOUBLE))
-               AS corrected_cosine
-    FROM pd p
-    JOIN qs q ON q.vec_id = p.query_id
-    JOIN cs c ON c.vec_id = p.cand_id
-    CROSS JOIN ww
-),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY corrected_cosine DESC,
-                                          cand_id) AS rank
-    FROM scored
-)
-SELECT query_id, cand_id, corrected_cosine, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 5
-"""
-
-
-@query("ann_abtt_corrected_topk", _ABTT_ORACLE)
-def ann_abtt_corrected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-but-the-top APPLIED: top-5 retrieval under cosine with the
-    corpus's common direction removed — the post-processing that
-    recovers anisotropy-buried similarity signal.  The correction
-    never materializes corrected vectors: per-vector scalars
-    ``aw = a·w`` and ``den = (a·a)(w·w) − aw²`` ride the one candidate
-    pass and the pairwise score is ``(a·b)(w·w) − aw·bw`` over
-    ``sqrt(den_a·den_b)`` — exact integers to the final division.
-    The direction comes from the memoized exact power iteration
-    (embeddings_top_pc); the oracle re-derives it CTE-for-CTE and
-    scores the same pairs.  See dataops.similarity.abtt_topk."""
-    vecs = _quantized(spark, sf_dir)
-    v3 = _top_pc_cached(spark, sf_dir)
-    stats = (
-        vecs.select(F.posexplode("qvec").alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.expr("CAST(sum(x) div count(1) AS BIGINT)").alias("c"))
-        .orderBy("pos")
-        .collect()
-    )
-    c_lit = F.array(*[F.lit(int(r["c"])).cast("long") for r in stats])
-    xc = vecs.select(
-        "vec_id",
-        F.zip_with(F.col("qvec"), c_lit, lambda x, c: x - c).alias("qvec"),
-    )
-    queries = xc.where(F.col("vec_id") % 100 == 0)
-    return sim.abtt_topk(xc, queries, v3, k=5)
-
-
-# ====================================================================
 # Recall@5 for the binary-Hamming two-stage path
 # ====================================================================
 
@@ -4216,7 +3155,7 @@ def _apply_embeddings_contract() -> int:
     to read the validity-filtered relation instead (the DuckDB twin of
     dataops.similarity.valid_embeddings — see _EMB_VALID_SQL).
 
-    One rewrite point instead of 20 hand-edited CTEs: the contract is
+    One rewrite point instead of a hand-edited CTE per oracle: the contract is
     a property of the RELATION, not of any one query, so applying it
     uniformly here means a future embedding query cannot forget the
     gate (tests assert no unfiltered read survives).  str.replace does

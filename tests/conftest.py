@@ -9,17 +9,10 @@ import os
 import duckdb
 import pytest
 
+from credit_card_etl_pipeline_spark.queries import TABLES
 from credit_card_etl_pipeline_spark.session import get_spark
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
-
-TABLES = [
-    "part",
-    "orders",
-    "events",
-    "documents",
-    "embeddings",
-]
 
 
 @pytest.fixture(scope="session")

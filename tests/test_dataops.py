@@ -97,36 +97,6 @@ def test_ann_lsh_is_subset_quality(spark):
         )
 
 
-def test_ivf_subset_quality_and_determinism(spark):
-    import numpy as np
-
-    from credit_card_etl_pipeline_spark.dataops.similarity import (
-        ivf_fit,
-        ivf_topk,
-    )
-
-    rng = np.random.RandomState(11)
-    vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(60)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = df.select("vec_id", quantize(F.col("embedding")).alias("qvec"))
-    queries = q.where(F.col("vec_id") % 15 == 0)
-
-    centroids = ivf_fit(q, k=4, iters=2)
-    assert len(centroids) == 4 and len(centroids[0]) == 8
-    # deterministic: refit yields the identical codebook
-    assert ivf_fit(q, k=4, iters=2) == centroids
-
-    exact = {
-        (r["query_id"], r["cand_id"]): r["cosine"]
-        for r in cosine_topk(q, queries, k=59).collect()
-    }
-    approx = ivf_topk(q, queries, centroids, k=5, nprobe=2).collect()
-    assert approx
-    for r in approx:
-        # every returned score equals the exact scorer's value
-        assert exact[(r["query_id"], r["cand_id"])] == r["cosine"]
-
-
 def test_lsh_hot_bucket_cap(spark):
     from credit_card_etl_pipeline_spark.dataops.dedup import (
         exploded_shingles,
@@ -479,57 +449,6 @@ def test_lsh_probe_pairs_asymmetric_and_capped(spark):
     assert capped == []
 
 
-def test_pq_codes_and_adc_ranking(spark):
-    import numpy as np
-
-    from credit_card_etl_pipeline_spark.dataops.similarity import (
-        ann_pq_topk,
-        pq_fit,
-        pq_codes,
-    )
-
-    rng = np.random.RandomState(13)
-    # two tight clusters far apart in 8-dim space: ADC must rank
-    # same-cluster candidates above cross-cluster ones even through
-    # the code compression
-    base_a = rng.randn(8) * 0.1 + 5.0
-    base_b = rng.randn(8) * 0.1 - 5.0
-    vecs = [(i, [float(x) for x in base_a + rng.randn(8) * 0.05]) for i in range(20)]
-    vecs += [(i, [float(x) for x in base_b + rng.randn(8) * 0.05]) for i in range(20, 40)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = df.select("vec_id", quantize(F.col("embedding")).alias("qvec"))
-
-    books = pq_fit(q, m=2, k=4, iters=2, dim=8)
-    assert len(books) == 2 and len(books[0]) == 4 and len(books[0][0]) == 4
-    # deterministic refit
-    assert pq_fit(q, m=2, k=4, iters=2, dim=8) == books
-
-    codes = q.select(
-        "vec_id", *[c.alias(f"c{s}") for s, c in enumerate(pq_codes(F.col("qvec"), books, dim=8))]
-    ).collect()
-    for r in codes:
-        assert 0 <= r["c0"] < 4 and 0 <= r["c1"] < 4
-
-    queries = q.where(F.col("vec_id").isin([0, 25]))
-    top = ann_pq_topk(q, queries, books, k=5, dim=8).collect()
-    assert top
-    for r in top:
-        same_cluster = (r["query_id"] < 20) == (r["cand_id"] < 20)
-        assert same_cluster, (r["query_id"], r["cand_id"])
-
-
-def test_pq_fit_rejects_ragged_split(spark):
-    import pytest as _pytest
-
-    from credit_card_etl_pipeline_spark.dataops.similarity import pq_fit
-
-    df = spark.createDataFrame(
-        [(1, [1.0] * 6)], "vec_id long, qvec array<double>"
-    )
-    with _pytest.raises(ValueError):
-        pq_fit(df, m=4, dim=6)
-
-
 def test_damerau_levenshtein_matches_duckdb_variant():
     import random
 
@@ -566,46 +485,6 @@ def test_prefix_filter_blocking_is_exact(spark, sf_dir):
         )
     )
     assert full == pref
-
-
-def test_sub_fit_small_cells_and_empty_subcells(spark):
-    """Hierarchical sub-fit edges: a cell with fewer members than
-    k_sub gets only that many sub-centroids; a sub-cell that loses all
-    members keeps its previous centroid; assignment carries all input
-    columns and emits exactly one row per vector."""
-    from credit_card_etl_pipeline_spark.dataops.similarity import (
-        CENTROID_GRID,
-        assign_subcells,
-        sub_fit,
-    )
-
-    # cell 0: 6 members around two poles; cell 1: a single member
-    rows = [
-        (1, [10, 0], 0), (2, [11, 0], 0), (3, [10, 1], 0),
-        (4, [0, 10], 0), (5, [0, 11], 0), (6, [1, 10], 0),
-        (7, [5, 5], 1),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, qvec array<long>, cell long")
-    book = sub_fit(df, k_sub=3, iters=2)
-    cells = {}
-    for c, s, _ in book:
-        cells.setdefault(c, []).append(s)
-    assert sorted(cells[0]) == [0, 1, 2]
-    assert sorted(cells[1]) == [0]  # one member -> one sub-centroid
-
-    leaves = assign_subcells(df, book)
-    got = {r["vec_id"]: (r["cell"], r["subcell"]) for r in leaves.collect()}
-    assert len(got) == 7  # exactly one leaf per vector
-    # the two poles in cell 0 must land in different sub-cells
-    assert got[1][1] == got[2][1] == got[3][1]
-    assert got[4][1] == got[5][1] == got[6][1]
-    assert got[1][1] != got[4][1]
-    assert got[7] == (1, 0)
-
-    # centroid values live on the binary grid (exact arithmetic)
-    for _, _, c in book:
-        for x in c:
-            assert (x * CENTROID_GRID) == int(x * CENTROID_GRID)
 
 
 def test_pack_bits64_matches_python_popcount(spark):
@@ -689,41 +568,6 @@ def test_leakage_safe_split_coassigns_planted_duplicates(spark, sf_dir):
     assert leaked == 0
 
 
-def test_ivf_probe_index_equals_inline_topk(spark, tmp_path):
-    import numpy as np
-
-    from credit_card_etl_pipeline_spark.dataops.similarity import (
-        ivf_fit,
-        ivf_probe_index,
-        ivf_topk,
-        assign_cluster,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(60)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = df.select("vec_id", quantize(F.col("embedding")).alias("qvec"))
-    centroids = ivf_fit(q, k=4, iters=2)
-    queries = q.where(F.col("vec_id") % 15 == 0)
-
-    inline = sorted(
-        map(tuple, ivf_topk(q, queries, centroids, k=5, nprobe=2).collect())
-    )
-    # materialize the index as cell-partitioned parquet and probe it
-    path = str(tmp_path / "ivf_index")
-    q.withColumn("cell", assign_cluster(F.col("qvec"), centroids)).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-    idx = spark.read.parquet(path)
-    probed = sorted(
-        map(
-            tuple,
-            ivf_probe_index(idx, queries, centroids, k=5, nprobe=2).collect(),
-        )
-    )
-    assert probed == inline
-
-
 def test_dhash64_known_pattern_and_perturbation():
     from credit_card_etl_pipeline_spark.dataops.multimodal import dhash64
     from credit_card_etl_pipeline_spark.dataops import png as pngc
@@ -756,79 +600,6 @@ def test_dhash64_known_pattern_and_perturbation():
     # dimension contract is enforced
     with pytest.raises(ValueError):
         dhash64(16, 16, bytes(256))
-
-
-def test_top_pc_finds_planted_direction(spark):
-    from credit_card_etl_pipeline_spark.dataops.similarity import (
-        PC_SCALE,
-        top_pc,
-    )
-
-    # vectors spread along axis 2 with small noise on axis 0: the
-    # dominant direction must land on axis 2 (|v[2]| = PC_SCALE).
-    rows = [
-        (i, [((i % 3) - 1) * 5, 0, (i - 10) * 400, 0]) for i in range(21)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, qvec array<long>")
-    v = top_pc(df, iters=3)
-    assert abs(v[2]) == PC_SCALE
-    assert all(abs(x) < PC_SCALE // 100 for j, x in enumerate(v) if j != 2)
-
-    # degenerate corpus (all identical): centered vectors are 0 → zero
-    # vector, no crash
-    same = spark.createDataFrame(
-        [(i, [7, 7, 7, 7]) for i in range(5)], "vec_id long, qvec array<long>"
-    )
-    assert top_pc(same, iters=2) == [0, 0, 0, 0]
-
-
-def test_within_group_dup_ids_matches_bruteforce(spark):
-    """The vectorized gram-tile scorer == the O(n^2) reference model,
-    including across tile boundaries (block=4 forces multi-tile paths
-    on every group) and the strict lower-id rule."""
-    import numpy as np
-    import pandas as pd
-
-    from credit_card_etl_pipeline_spark.dataops.similarity import (
-        within_group_dup_ids,
-    )
-
-    rng = np.random.RandomState(7)
-    rows = []
-    for cell in range(3):
-        base = rng.randint(-1000, 1000, size=(6, 8))
-        for i in range(6):
-            v = base[i].copy()
-            rows.append((cell * 100 + i, v.tolist(), cell))
-        # planted dups: copies of member 0 and 2 with higher ids
-        rows.append((cell * 100 + 50, base[0].tolist(), cell))
-        rows.append((cell * 100 + 51, base[2].tolist(), cell))
-    pdf = pd.DataFrame(rows, columns=["vec_id", "qvec", "cell"])
-    pdf["n2"] = pdf["qvec"].map(lambda v: int(sum(x * x for x in v)))
-
-    df = spark.createDataFrame(pdf)
-    got = {
-        r.vec_id
-        for r in within_group_dup_ids(
-            df, ["cell"], threshold=0.999, block=4
-        ).collect()
-    }
-
-    # brute force reference
-    want = set()
-    for cell, g in pdf.groupby("cell"):
-        g = g.sort_values("vec_id").reset_index(drop=True)
-        for j in range(len(g)):
-            for i in range(j):
-                a, b = np.array(g.qvec[i]), np.array(g.qvec[j])
-                cos = float(a @ b) / np.sqrt(
-                    float(g.n2[i]) * float(g.n2[j])
-                )
-                if cos >= 0.999:
-                    want.add(int(g.vec_id[j]))
-                    break
-    assert got == want
-    assert want  # the planted copies must actually be found
 
 
 def test_reliable_checkpoint_conf_gate(spark, session_ckpt_dir):
@@ -972,48 +743,3 @@ def test_distribution_matched_sample(spark):
         ).collect()
     }
     assert again == {b: d["n_sampled"] for b, d in out.items()}
-
-
-def test_assign_cluster_sql_text_matches_column_form(spark):
-    """The SQL-text build path (one F.expr string, r11 plan-construction
-    optimization) must produce the exact rows of the Column-API form on
-    both codebook regimes (literal k<=16 and transform/aggregate
-    k>16), including tie-breaks."""
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(80)]
-    # duplicate vectors force exact dot ties across centroids
-    vecs += [(100 + i, vecs[i][1]) for i in range(6)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = df.select("vec_id", sim.quantize(F.col("embedding")).alias("qvec"))
-    for k in (4, sim.ASSIGN_LITERAL_MAX_K + 2):
-        centroids = sim.ivf_fit(q, k=k, iters=1)
-        col_form = q.select(
-            "vec_id", sim.assign_cluster(F.col("qvec"), centroids).alias("c")
-        ).collect()
-        sql_form = q.select(
-            "vec_id", sim.assign_cluster("qvec", centroids).alias("c")
-        ).collect()
-        assert sorted(map(tuple, col_form)) == sorted(map(tuple, sql_form))
-
-
-def test_pq_codes_sql_text_matches_column_form(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(50)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = df.select("vec_id", sim.quantize(F.col("embedding")).alias("qvec"))
-    books = sim.pq_fit(q, m=2, k=4, iters=1, dim=8)
-    a = q.select(
-        "vec_id",
-        *[c.alias(f"c{s}") for s, c in enumerate(
-            sim.pq_codes(F.col("qvec"), books, dim=8))],
-    ).collect()
-    b = q.select(
-        "vec_id",
-        *[c.alias(f"c{s}") for s, c in enumerate(
-            sim.pq_codes("qvec", books, dim=8))],
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

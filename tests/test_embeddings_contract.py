@@ -91,6 +91,8 @@ def test_every_embeddings_oracle_carries_the_contract():
     from credit_card_etl_pipeline_spark import queries as q
 
     marker = "FROM (SELECT vec_id, embedding, label FROM embeddings"
+    spliced = sum(marker in sql for sql in q.ORACLES.values())
+    assert q.dataops_queries._N_EMB_ORACLES == spliced == 11
     for name, sql in q.ORACLES.items():
         if "embeddings" not in sql:
             continue

@@ -5,7 +5,6 @@ as one lazy-plan pipeline."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from credit_card_etl_pipeline_spark import schema as S
@@ -32,7 +31,6 @@ CONFIG = RefineConfig(
 )
 
 
-@pytest.mark.timeout(600)
 def test_full_lifecycle(spark, tmp_path):
     data_dir = tmp_path / "statements"
     data_dir.mkdir()

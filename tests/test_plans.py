@@ -187,24 +187,6 @@ def test_windowed_funnel_single_fact_shuffle(spark):
     assert "PushedFilters" in plan
 
 
-def test_semantic_dedup_plans_no_cartesian(spark):
-    """Both semantic-dedup variants must stay join-shaped: the pair
-    hunt is an equi-join on (cell[, subcell]) — never a cartesian —
-    and the sub-codebook side of the hierarchical assignment is
-    broadcast."""
-    from credit_card_etl_pipeline_spark.queries.dataops_queries import (
-        dedup_semantic_clusters,
-        dedup_semantic_hierarchical,
-    )
-
-    p1 = _plan(dedup_semantic_clusters(spark, SF))
-    assert "CartesianProduct" not in p1
-
-    p2 = _plan(dedup_semantic_hierarchical(spark, SF))
-    assert "CartesianProduct" not in p2
-    assert "BroadcastHashJoin" in p2  # codebook join
-
-
 def test_r7_operator_plans_broadcast_only(spark):
     # Round-7 operators: the model/centroid joins must broadcast and
     # nothing may fall back to SortMergeJoin or a cartesian product.
@@ -233,18 +215,14 @@ def test_binary_hamming_coarse_stage_is_codegen(spark):
 
 
 def test_r7_late_additions_no_smj_or_cartesian(spark):
-    # drift / ABTT: bounded-side joins must ride
+    # drift: bounded-side joins must ride
     # broadcasts (BNLJ for the 1-row totals is fine); never a
     # SortMergeJoin or an unbroadcast CartesianProduct.
     from credit_card_etl_pipeline_spark import queries as q
 
-    for name in (
-        "events_daily_drift",
-        "ann_abtt_corrected_topk",
-    ):
-        plan = _plan(q.QUERIES[name](spark, SF))
-        assert "SortMergeJoin" not in plan, name
-        assert "CartesianProduct" not in plan, name
+    plan = _plan(q.QUERIES["events_daily_drift"](spark, SF))
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def _join_counts(df) -> tuple[int, int]:
@@ -274,12 +252,6 @@ def test_top_smj_queries_join_strategy_pinned(spark):
         # is one scan with no join at all.  A join reappearing here means
         # header handling left the decode.
         "ingest_statement_files": (0, 0),
-        # verdicts ride one applyInPandas per leaf (r8); sub-level
-        # assignment moved from a broadcast codebook join + per-vector
-        # window to a per-cell numpy batch (r9, _assign_subcells_
-        # batched), removing both the SMJ and one broadcast — the
-        # remaining BHJ is the leaves-to-verdict join
-        "dedup_semantic_hierarchical": (0, 1),
         # anchor-shingle candidate self-join; dims broadcast
         "dedup_ngram_jaccard": (1, 4),
     }

@@ -1,8 +1,9 @@
 """The registry carries the statement → warehouse → RFM surface, each
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
 bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation,
-BPE, codec, JSONL-corpus, sketch, graph, URL, ranking-metric or
-stand-alone showcase queries that were cut from it."""
+BPE, codec, JSONL-corpus, sketch, graph, URL, ranking-metric,
+stand-alone showcase, IVF, product-quantization, semantic-dedup or
+top-PC queries that were cut from it."""
 
 from __future__ import annotations
 
@@ -99,6 +100,11 @@ REMOVED_QUERIES = {
     "documents_stratified_fixed_sample", "text_greedy_generation",
     "orders_gini_by_priority", "orders_cogroup_asof_event",
     "udf_arrow_byte_stats",
+    # IVF, product-quantization, semantic-dedup and top-PC queries
+    "ann_ivf_topk", "ann_ivf_auto_k", "ann_ivf_persisted_probe",
+    "dedup_semantic_clusters", "ann_pq_topk", "dedup_semantic_hierarchical",
+    "dedup_semantic_auto", "dedup_semantic_two_level", "embeddings_top_pc",
+    "ann_abtt_corrected_topk",
 }
 
 

@@ -36,8 +36,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = ["part", "orders", "events", "documents", "embeddings"]
-
 
 def canon_cell(v) -> str:
     if v is None:
@@ -226,6 +224,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from credit_card_etl_pipeline_spark.queries import TABLES
     from credit_card_etl_pipeline_spark.session import get_spark
 
     t_sweep0 = time.time()
@@ -233,9 +232,8 @@ def main() -> int:
     spark = get_spark(app_name="check_oracle")
     con = duckdb.connect()
     # An in-memory DuckDB connection has NO temp directory, so a big
-    # oracle intermediate (e.g. the 43M-pair leaf self-join the skewed
-    # sf1 corpus produces in dedup_semantic_hierarchical) aborts with
-    # OOM instead of going out-of-core.  Give it a spill dir and a
+    # oracle intermediate (a pair self-join on a skewed corpus) aborts
+    # with OOM instead of going out-of-core.  Give it a spill dir and a
     # bounded memory budget so oracle-side resource limits can't
     # masquerade as correctness failures.
     import tempfile

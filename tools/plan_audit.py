@@ -53,12 +53,10 @@ BNLJ_ALLOWED: dict[str, str] = {
     "rfm_merchant_full": "1-row max-date analysis anchor",
     # ANN probes: the explicitly-broadcast query-vector frame (n_queries
     # rows, ≪ corpus) joined to candidates on a NON-EQUI condition
-    # (cand_id != query_id / Hamming radius) — similarity.py:75,401.
+    # (cand_id != query_id) — similarity.cosine_topk, ann_hamming_topk.
     "ann_cosine_topk": "broadcast query-vector frame (sampled probes)",
     "ann_binary_hamming": "broadcast query-signature frame",
-    "ann_pq_topk": "broadcast query + ADC lookup frame",
     "ann_recall_at_5": "broadcast probe frame (exact vs approx compare)",
-    "ann_abtt_corrected_topk": "broadcast corrected query frame",
     "ann_hamming_recall_at_5": "broadcast probe frame",
     "ann_hard_negatives": "broadcast anchor frame (non-equi label filter)",
     "ann_rrf_fusion": "broadcast anchor frames (both fused rankings)",
