@@ -142,10 +142,6 @@ def main() -> int:
 
     import pyspark
 
-    from credit_card_etl_pipeline_spark.functions.eventtime import (
-        describe_ts_dtype,
-    )
-
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     result = {
         "metric": "total_query_seconds",
@@ -155,11 +151,10 @@ def main() -> int:
         "sf": sf,
         "n_queries": len(timings),
         "cpus": cpus,
-        # environment canary: catches silent corpus/engine drift (the
-        # round-3 ts-type change) right in the bench of record
+        # environment canary: engine version and host load, recorded
+        # in the bench of record itself
         "env": {
             "pyspark": pyspark.__version__,
-            "events_ts_dtype": describe_ts_dtype(spark, sf_dir),
             # host-load canary: BENCH_HISTORY shows ~1.5x wall variance
             # on a loaded driver box; loadavg makes that machine-checkable
             # instead of argued from cross-query uniformity.  `loadavg`
@@ -190,8 +185,8 @@ def main() -> int:
         )
     # A bench started on a busy host is not a bench of record: r07's
     # driver run started at loadavg 14.5 and read ~15% slow across the
-    # board.  Flag it machine-checkably (tools/round_close.py refuses
-    # to stamp a flagged record; readers compare vs BENCH_HISTORY.md).
+    # board.  Flag it machine-checkably, so a reader can reject the
+    # record.
     if loadavg_start[0] > cpus / 4:
         result["loaded_host_warning"] = (
             f"loadavg {loadavg_start[0]} > cpus/4 ({cpus / 4:.0f}) at "

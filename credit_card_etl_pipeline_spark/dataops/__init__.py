@@ -5,8 +5,8 @@ operations a large-scale corpus pipeline needs, all Spark-first:
 
 * :mod:`.dedup` — exact dedup, MinHash+LSH near-dup banding, SimHash,
   n-gram Jaccard.
-* :mod:`.text` — normalization, token counting, quality metrics,
-  script-ratio language guessing, fingerprints.
+* :mod:`.text` — normalization, whitespace tokens and content
+  fingerprints.
 * :mod:`.similarity` — embedding cosine top-k (exact brute force) and
   an LSH-bucketed approximate variant for scale.
 * :mod:`.multimodal` — binary media columns with typed metadata and

@@ -348,9 +348,10 @@ def _round_checkpoint(df: DataFrame) -> DataFrame:
     reliable ``checkpoint`` into ``sparkContext.setCheckpointDir``
     storage (HDFS/object store on a real cluster), which survives
     executor loss at the cost of a filesystem round-trip per round —
-    the swap the 100 TB deployment makes.  Certified by
-    tools/soak_exec_kill.py: a SIGKILLed executor mid-propagation
-    under local-cluster completes with bit-identical labels.
+    the swap the 100 TB deployment makes.  Certified by an
+    executor-kill soak (its tool lives in git history): a SIGKILLed
+    executor mid-propagation under local-cluster completes with
+    bit-identical labels.
 
     ``Dataset.checkpoint(eager=True)`` runs TWO jobs over the plan —
     the eager materializing count, then ``ReliableRDDCheckpointData``
@@ -448,16 +449,16 @@ def connected_components(
     plan TWICE (the neighbor join and the update join), so without a
     lineage break the logical plan doubles per round and a
     deep-diameter graph (a 16-chain needs 15 rounds) OOMs the DRIVER
-    during analysis — caught by tools/soak_components.py's adversarial
-    chain soak.  The checkpoint truncates the plan to a constant-size
-    scan per round; superseded checkpoint blocks are released by the
-    ContextCleaner once unreferenced.  On a multi-node cluster where
-    executor loss must be survivable, set the session conf
-    ``spark.graft.reliableCheckpoint=true`` (plus ``setCheckpointDir``
-    on fault-tolerant storage) and the same call sites write reliable
-    checkpoints instead (:func:`_round_checkpoint`; executor-kill
-    certified by tools/soak_exec_kill.py).  The loop exits on a
-    fixpoint (no label changed).
+    during analysis — caught by an adversarial chain soak (its tool
+    lives in git history).  The checkpoint truncates the plan to a
+    constant-size scan per round; superseded checkpoint blocks are
+    released by the ContextCleaner once unreferenced.  On a multi-node
+    cluster where executor loss must be survivable, set the session
+    conf ``spark.graft.reliableCheckpoint=true`` (plus
+    ``setCheckpointDir`` on fault-tolerant storage) and the same call
+    sites write reliable checkpoints instead (:func:`_round_checkpoint`;
+    certified by the executor-kill soak).  The loop exits on a fixpoint
+    (no label changed).
     """
     if max_iters < 1:
         raise ValueError(

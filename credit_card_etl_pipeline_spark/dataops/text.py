@@ -1,22 +1,14 @@
-"""Text normalization / analysis operators (engine extension).
+"""Text normalization operators (engine extension).
 
-All pure column expressions — token counts, quality ratios, script-based
-language guessing, and content fingerprints — designed so a DuckDB SQL
-twin computes bit-identical values (integer counts; doubles only as a
-final single division of identical integers).
+Pure column expressions — normalized text, its whitespace tokens and a
+content fingerprint — designed so a DuckDB SQL twin computes
+bit-identical values.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-#: Tiny English stopword list for the stopword-ratio quality signal.
-STOPWORDS: list[str] = ["the", "a", "an", "of", "and", "to", "in", "is"]
-
-#: BPE-ish token pattern: word pieces, numbers, or single non-space
-#: symbols — a deterministic proxy for subword token counting.
-BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def normalize_text(col: Column) -> Column:
@@ -29,228 +21,7 @@ def words(col: Column) -> Column:
     return F.split(normalize_text(col), " ")
 
 
-def n_tokens(col: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(words(col))
-
-
-def _count_matches(col: Column, pattern: str) -> Column:
-    """Number of characters matching a single-char regex class."""
-    return F.length(col) - F.length(F.regexp_replace(col, pattern, ""))
-
-
-def n_bpe_tokens(col: Column) -> Column:
-    """Count of BPE-ish tokens (regexp-based subword proxy)."""
-    # regexp_extract_all + size keeps it JVM-side.
-    return F.size(F.regexp_extract_all(col, F.lit(BPE_TOKEN_RE), 0))
-
-
-def punct_count(col: Column) -> Column:
-    return _count_matches(col, r"[^\w\s]")
-
-
-def digit_count(col: Column) -> Column:
-    return _count_matches(col, r"[0-9]")
-
-
-def cjk_count(col: Column) -> Column:
-    """Characters in the CJK unified block (language-ID signal)."""
-    return _count_matches(col, r"[一-鿿]")
-
-
-def latin_count(col: Column) -> Column:
-    return _count_matches(col, r"[A-Za-z]")
-
-
-def stopword_count(col: Column) -> Column:
-    """Occurrences of the STOPWORDS among whitespace tokens."""
-    w = words(col)
-    return F.size(F.filter(w, lambda t: t.isin(*STOPWORDS)))
-
-
-def lang_guess(col: Column) -> Column:
-    """Heuristic script-ratio language ID: zh if CJK chars dominate,
-    en if latin dominates, else unknown."""
-    cjk = cjk_count(col)
-    latin = latin_count(col)
-    return (
-        F.when(cjk * 2 > latin, "zh")
-        .when(latin > 0, "en")
-        .otherwise("unknown")
-    )
-
-
 def fingerprint(col: Column) -> Column:
     """Content fingerprint: md5 of the normalized text (exact-dedup
     key; cross-engine stable)."""
     return F.md5(normalize_text(col))
-
-
-#: Tiny per-language trigram profiles for the n-gram language-ID
-#: heuristic — the classic profile-overlap method at demonstration
-#: scale (extend the dict for more languages).
-LANG_TRIGRAMS: dict[str, list[str]] = {
-    "en": ["the", "and", " th", "ing", "ion", " of", "ed ", " to", "er ", "at "],
-    "de": ["der", "ein", "sch", "ich", "nde", "die", "und", "che", "en ", " ge"],
-    "fr": ["les", "ent", " de", "ion", "que", " la", "des", " le", "ait", "eur"],
-    "es": [" de", "que", "ión", " la", " el", "ado", "nte", "los", "con", "ció"],
-    "it": ["che", " di", "zio", "lla", "del", " co", "ent", "re ", "ita", "gli"],
-    "pt": ["ção", " de", "os ", "ão ", "da ", "em ", "com", "ent", "ado", "par"],
-}
-
-
-def _occurrences(col: Column, needle: str) -> Column:
-    """Count of (possibly overlapping-adjacent) needle occurrences via
-    replace-length arithmetic — a literal (non-regex) ``replace``, the
-    cheapest JVM path for a fixed needle."""
-    return (
-        F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))
-    ) / len(needle)
-
-
-def lang_scores(col: Column, *, pre_normalized: bool = False) -> dict[str, Column]:
-    """Per-language trigram-profile hit counts over normalized text.
-
-    Pass ``pre_normalized=True`` when ``col`` is already a materialized
-    normalized column — each of the 60 occurrence expressions then reads
-    the attribute instead of inlining its own ``normalize_text`` regex
-    (the difference between 1 and 60 regex evaluations per row)."""
-    t = col if pre_normalized else normalize_text(col)
-    return {
-        lang: sum(_occurrences(t, tg) for tg in grams).cast("long")
-        for lang, grams in LANG_TRIGRAMS.items()
-    }
-
-
-def lang_argmax(scores: dict[str, Column], min_hits: int = 1) -> Column:
-    """Argmax over precomputed per-language score columns (ties break
-    by dict order), 'unknown' below the hit floor.  Give it attribute
-    references (already-projected columns) in hot paths so the score
-    expressions aren't re-evaluated inside the CASE fold."""
-    langs = list(scores)
-    best_lang: Column = F.lit(langs[0])
-    best_score: Column = scores[langs[0]]
-    for lang in langs[1:]:
-        better = scores[lang] > best_score
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(better, scores[lang]).otherwise(best_score)
-    return F.when(best_score >= min_hits, best_lang).otherwise(F.lit("unknown"))
-
-
-def lang_id_ngram(col: Column, min_hits: int = 1) -> Column:
-    """N-gram language ID: argmax of the trigram-profile scores (ties
-    break by profile order), 'unknown' when nothing scores."""
-    return lang_argmax(lang_scores(col), min_hits)
-
-
-#: Rolling-hash parameters: base × accumulator stays within int64
-#: (acc < P = 2³¹-1, so acc·B + t < 2³¹·131 + 2³¹ ≪ 2⁶³).
-ROLLING_BASE = 131
-
-
-def rolling_fingerprint(col: Column) -> Column:
-    """Order-sensitive polynomial rolling hash over the token stream:
-
-        h = fold(tokens, 0, (acc, t) → (acc·B + h60(t) mod P) mod P)
-
-    Unlike the md5 content hash, token order matters (swapped words →
-    different fingerprint) while the fold itself is a sequential
-    JVM-side ``aggregate`` — no shuffle, no UDF.  Cross-engine: DuckDB
-    ``list_reduce`` folds the same token-hash list left-to-right with
-    an identical first step (0·B + t₀ = t₀)."""
-    from ..functions.hashing import MERSENNE_P, md5_int60
-
-    token_hashes = F.transform(words(col), lambda t: md5_int60(t) % MERSENNE_P)
-    return F.aggregate(
-        token_hashes,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * ROLLING_BASE + t) % MERSENNE_P,
-    )
-
-
-# ------------------------------------------------------------------
-# Unicode sanitization (NFC + zero-width strip + whitespace collapse)
-# ------------------------------------------------------------------
-
-#: Zero-width characters stripped before normalization: ZWSP, ZWNJ,
-#: ZWJ, and the BOM/ZWNBSP — invisible bytes that break exact-dedup
-#: and tokenization if left in training text.
-ZERO_WIDTH_RE = "[​‌‍﻿]"
-
-#: Explicit whitespace class for the collapse step: Java \s, RE2 \s,
-#: and Python unicode \s all disagree at the edges (\x0b, \x85,
-#: U+00A0, U+3000), so the contract pins the exact set and both the
-#: engine and the DuckDB oracle use it verbatim.  Escape-sequence form
-#: (not raw control chars) so the same constant embeds into a SQL
-#: string literal and still means the same RE2 pattern.
-SANITIZE_WS_RE = r"[ \t\n\r\f]+"
-
-
-def sanitize_unicode(df, *, id_col: str = "doc_id", text_col: str = "text"):
-    """Per-document unicode-hygiene report via one Arrow-batched
-    ``mapInPandas`` pass (unicodedata has no JVM builtin; the batch
-    crossing is the cheapest correct path and stays partition-parallel
-    at any corpus size — no shuffle, no driver state).
-
-    Cleaning contract, applied in this exact order (the DuckDB oracle
-    mirrors it step for step, and Unicode's normalization stability
-    policy guarantees NFC agreement across implementations for
-    assigned code points):
-
-    1. strip zero-width characters (:data:`ZERO_WIDTH_RE`);
-    2. NFC-normalize (``unicodedata.normalize`` ↔ ``nfc_normalize``);
-    3. collapse :data:`SANITIZE_WS_RE` runs to one space, trim spaces.
-
-    Output per doc: raw/clean code-point lengths, astral and
-    zero-width counts, a null-propagating ``changed`` flag, and the
-    md5 of the cleaned UTF-8 bytes (the dedup-grade content key).
-    NULL text yields NULL metrics."""
-    import hashlib
-    import re as _re
-    import unicodedata
-
-    from pyspark.sql import types as T
-
-    zw = _re.compile(ZERO_WIDTH_RE)
-    ws = _re.compile(SANITIZE_WS_RE)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("n_chars_raw", T.LongType()),
-            T.StructField("n_astral", T.LongType()),
-            T.StructField("n_zero_width", T.LongType()),
-            T.StructField("changed", T.BooleanType()),
-            T.StructField("n_chars_clean", T.LongType()),
-            T.StructField("clean_md5", T.StringType()),
-        ]
-    )
-    cols = [f.name for f in schema.fields]
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, s in zip(pdf[id_col], pdf[text_col]):
-                rows[id_col].append(int(doc_id))
-                if not isinstance(s, str):
-                    for k in cols[1:]:
-                        rows[k].append(None)
-                    continue
-                t0 = zw.sub("", s)
-                clean = ws.sub(
-                    " ", unicodedata.normalize("NFC", t0)
-                ).strip(" ")
-                rows["n_chars_raw"].append(len(s))
-                rows["n_astral"].append(
-                    sum(1 for ch in s if ord(ch) > 0xFFFF)
-                )
-                rows["n_zero_width"].append(len(s) - len(t0))
-                rows["changed"].append(clean != s)
-                rows["n_chars_clean"].append(len(clean))
-                rows["clean_md5"].append(
-                    hashlib.md5(clean.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)

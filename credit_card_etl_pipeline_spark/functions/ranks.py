@@ -42,9 +42,10 @@ from pyspark.sql import functions as F
 
 
 #: Below this many input rows the two-pass machinery costs more than it
-#: saves.  Measured (tools/soak.py, local[32], 6M near-unique groups):
-#: single-window 30.3s vs two-pass 41.2s — the ordered single task is
-#: cheap well past millions of rows; what it cannot survive is the
+#: saves.  Measured by a soak run (local[32], 6M near-unique groups;
+#: the soak tool lives in git history): single-window 30.3s vs
+#: two-pass 41.2s — the ordered single task is cheap well past
+#: millions of rows; what it cannot survive is the
 #: 10⁸-10⁹-group regime where one task must hold and sort the whole
 #: distinct-value set (straggler + OOM).  32M rows ≈ low-hundreds of MB
 #: in one task: the last comfortable size, hence the cutover.

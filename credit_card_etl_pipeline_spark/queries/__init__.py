@@ -37,11 +37,8 @@ ORACLES: dict[str, str] = {}
 #: Session settings the queries depend on.  The DRIVER calls queries()
 #: with its own SparkSession, which may not come from session.get_spark
 #: — so every registered query re-asserts the runtime-settable subset
-#: (permissive casts for coerce-to-null semantics, UTC so
-#: to_date/window match the naive-UTC DuckDB oracle).  Event-time
-#: extraction deliberately does NOT ride a conf: it branches on the
-#: observed parquet type (functions.eventtime), because a conf can be
-#: silently ignored (the round-3 ``nanosAsLong`` tombstone).
+#: (permissive casts for coerce-to-null semantics, UTC so to_date
+#: matches the naive-UTC DuckDB oracle).
 _SESSION_CONF = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
@@ -103,7 +100,6 @@ _SCAN_SPREAD_MEMO: dict[str, bool] = {}
 #: near-unique so 32-1024 partitions spread evenly.
 _SPREAD_KEYS: dict[str, str] = {
     "orders": "o_orderkey",
-    "part": "p_partkey",
     "events": "event_id",
     "documents": "doc_id",
     "embeddings": "vec_id",
@@ -143,7 +139,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     parallelism = spark.sparkContext.defaultParallelism
     # the rdd conversion that exposes the scan's partition count isn't
     # free — memoize the per-table verdict (corpus files are immutable
-    # within a session; 130+ queries re-load the same ten tables)
+    # within a session, and every query re-loads the same few tables)
     key = f"{sf_dir}/{table}:{parallelism}"
     needs_spread = _SCAN_SPREAD_MEMO.get(key)
     if needs_spread is None:
@@ -185,7 +181,6 @@ from . import (  # noqa: E402,F401
     anonymize_queries,
     dataops_queries,
     etl_queries,
-    events_queries,
     merchant_queries,
     refine_queries,
     rfm_queries,

@@ -1,5 +1,5 @@
 """Dataops query family (engine extension): dedup, similarity search,
-text analysis, multimodal plumbing — each with a DuckDB oracle built on
+curation, multimodal plumbing — each with a DuckDB oracle built on
 the same cross-engine hashing (functions.hashing) and integer-exact
 arithmetic, so even the LSH/minhash internals are value-checked.
 
@@ -913,256 +913,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# Text analysis
-# ------------------------------------------------------------------
-
-_STOPWORD_LIST = ", ".join(f"'{w}'" for w in tx.STOPWORDS)
-
-_QUALITY_ORACLE = f"""
-WITH corpus AS ({_CORPUS_SQL}),
-norm AS (
-    SELECT doc_id, lang, source, {_NORM_SQL} AS t FROM corpus
-),
-m AS (
-    SELECT doc_id, lang, source,
-           length(t) AS n_chars_norm,
-           len(string_split(t, ' ')) AS n_tokens,
-           len(regexp_extract_all(t, '{tx.BPE_TOKEN_RE}')) AS n_bpe_tokens,
-           length(t) - length(regexp_replace(t, '[^\\w\\s]', '', 'g'))
-               AS n_punct,
-           length(t) - length(regexp_replace(t, '[0-9]', '', 'g')) AS n_digit,
-           length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g')) AS n_cjk,
-           length(t) - length(regexp_replace(t, '[A-Za-z]', '', 'g'))
-               AS n_latin,
-           len(list_filter(string_split(t, ' '),
-                           x -> x IN ({_STOPWORD_LIST}))) AS n_stopwords
-    FROM norm
-)
-SELECT doc_id, lang, source, n_chars_norm, n_tokens, n_bpe_tokens,
-       n_punct, n_digit, n_stopwords,
-       n_stopwords / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
-       n_punct / CAST(n_chars_norm AS DOUBLE) AS punct_ratio,
-       CASE WHEN n_cjk * 2 > n_latin THEN 'zh'
-            WHEN n_latin > 0 THEN 'en'
-            ELSE 'unknown' END AS lang_guess
-FROM m
-"""
-
-
-@query("text_quality_profile", _QUALITY_ORACLE)
-def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document quality metrics: token / subword / punctuation /
-    digit / stopword counts, ratios, script-based language guess —
-    all single-pass column expressions."""
-    c = corpus(spark, sf_dir)
-    t = tx.normalize_text(F.col("text"))
-    out = c.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.length(t).cast("long").alias("n_chars_norm"),
-        tx.n_tokens(F.col("text")).cast("long").alias("n_tokens"),
-        tx.n_bpe_tokens(t).cast("long").alias("n_bpe_tokens"),
-        tx.punct_count(t).cast("long").alias("n_punct"),
-        tx.digit_count(t).cast("long").alias("n_digit"),
-        tx.stopword_count(F.col("text")).cast("long").alias("n_stopwords"),
-        tx.cjk_count(t).alias("__cjk"),
-        tx.latin_count(t).alias("__latin"),
-    )
-    return out.select(
-        "doc_id",
-        "lang",
-        "source",
-        "n_chars_norm",
-        "n_tokens",
-        "n_bpe_tokens",
-        "n_punct",
-        "n_digit",
-        "n_stopwords",
-        (F.col("n_stopwords") / F.col("n_tokens").cast("double")).alias(
-            "stopword_ratio"
-        ),
-        (F.col("n_punct") / F.col("n_chars_norm").cast("double")).alias(
-            "punct_ratio"
-        ),
-        F.when(F.col("__cjk") * 2 > F.col("__latin"), "zh")
-        .when(F.col("__latin") > 0, "en")
-        .otherwise("unknown")
-        .alias("lang_guess"),
-    )
-
-
-# Twin of dataops.text.sanitize_unicode's cleaning contract, step for
-# step: zero-width strip → nfc_normalize (stable across conforming
-# implementations for assigned code points) → pinned-class whitespace
-# collapse + trim.  Both regex constants are shared with the engine.
-_SANITIZE_ORACLE = f"""
-WITH corpus AS ({_CORPUS_SQL}),
-z AS (
-    SELECT doc_id, text,
-           regexp_replace(text, '{tx.ZERO_WIDTH_RE}', '', 'g') AS t0
-    FROM corpus
-),
-c AS (
-    SELECT doc_id, text, t0,
-           trim(regexp_replace(nfc_normalize(t0),
-                               '{tx.SANITIZE_WS_RE}', ' ', 'g')) AS clean
-    FROM z
-)
-SELECT doc_id,
-       length(text) AS n_chars_raw,
-       length(text) - length(regexp_replace(text,
-           '[\\x{{10000}}-\\x{{10FFFF}}]', '', 'g')) AS n_astral,
-       length(text) - length(t0) AS n_zero_width,
-       (text <> clean) AS changed,
-       length(clean) AS n_chars_clean,
-       md5(clean) AS clean_md5
-FROM c
-"""
-
-
-@query("text_unicode_sanitize", _SANITIZE_ORACLE)
-def text_unicode_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode-hygiene pass every training-data pipeline needs before
-    exact dedup: zero-width strip + NFC normalization + pinned
-    whitespace collapse, reported per doc with the cleaned-content md5
-    (two visually identical docs with different code-point sequences —
-    composed vs decomposed accents, hidden ZWSP — converge to ONE
-    dedup key).  One Arrow-batched mapInPandas crossing, partition-
-    parallel, no shuffle (dataops.text.sanitize_unicode)."""
-    return tx.sanitize_unicode(
-        corpus(spark, sf_dir).select("doc_id", "text")
-    )
-
-
-_ROLLING_ORACLE = f"""
-WITH corpus AS ({_CORPUS_SQL}),
-toks AS (
-    SELECT doc_id,
-           list_transform(
-               string_split({_NORM_SQL}, ' '),
-               t -> {md5_int60_sql('t')} % {MERSENNE_P}) AS th
-    FROM corpus
-)
-SELECT doc_id,
-       md5({_NORM_SQL.replace('text', 'text')}) AS content_md5,
-       CAST(list_reduce(th, (acc, t) -> (acc * {tx.ROLLING_BASE} + t)
-                                        % {MERSENNE_P}) AS BIGINT)
-           AS rolling_hash
-FROM corpus JOIN toks USING (doc_id)
-"""
-
-
-@query("doc_fingerprints", _ROLLING_ORACLE)
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprints: order-insensitive content md5 plus the
-    order-sensitive polynomial rolling hash (sequential JVM-side fold —
-    no shuffle, no UDF); both value-checked cross-engine."""
-    c = corpus(spark, sf_dir)
-    return c.select(
-        "doc_id",
-        tx.fingerprint(F.col("text")).alias("content_md5"),
-        tx.rolling_fingerprint(F.col("text")).alias("rolling_hash"),
-    )
-
-
-def _lang_score_sql(grams: list[str]) -> str:
-    terms = " + ".join(
-        f"(length(t) - length(replace(t, '{g}', ''))) / {len(g)}.0"
-        for g in grams
-    )
-    return f"CAST(({terms}) AS BIGINT)"
-
-
-def _lang_fold_sql(langs: list[str]) -> tuple[str, str]:
-    """Nested-CASE twin of text.lang_id_ngram's strict-``>`` fold:
-    (argmax-lang expr, max-score expr) over ``s_<lang>`` columns, ties
-    breaking toward earlier profile order."""
-    best, val = f"'{langs[0]}'", f"s_{langs[0]}"
-    for lang in langs[1:]:
-        best = f"CASE WHEN s_{lang} > {val} THEN '{lang}' ELSE {best} END"
-        val = f"CASE WHEN s_{lang} > {val} THEN s_{lang} ELSE {val} END"
-    return best, val
-
-
-_LANGS = list(tx.LANG_TRIGRAMS)
-_BEST_SQL, _VAL_SQL = _lang_fold_sql(_LANGS)
-
-_LANG_ID_ORACLE = f"""
-WITH corpus AS ({_CORPUS_SQL}),
-norm AS (SELECT doc_id, {_NORM_SQL} AS t FROM corpus),
-scored AS (
-    SELECT doc_id,
-           {",".join(f"{_lang_score_sql(tx.LANG_TRIGRAMS[lang])} AS s_{lang}"
-                     for lang in _LANGS)}
-    FROM norm
-)
-SELECT doc_id, {", ".join(f"s_{lang}" for lang in _LANGS)},
-       CASE WHEN {_VAL_SQL} >= 1 THEN {_BEST_SQL}
-            ELSE 'unknown' END AS lang_guess
-FROM scored
-"""
-
-
-@query("text_lang_id_ngram", _LANG_ID_ORACLE)
-def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram language ID: trigram-profile hit counts per language and
-    the argmax guess (profile-order tiebreak, 'unknown' below the hit
-    floor) — the classic profile-overlap heuristic as pure expressions.
-    """
-    c = corpus(spark, sf_dir)
-    # Mirror the oracle's staging: normalize ONCE, project the 60
-    # occurrence counts once, argmax over the projected columns —
-    # each trigram count is literal-replace arithmetic on a shared
-    # attribute, never a re-inlined regex (was ~3x the query's cost).
-    norm = c.select("doc_id", tx.normalize_text(F.col("text")).alias("t"))
-    scores = tx.lang_scores(F.col("t"), pre_normalized=True)
-    scored = norm.select(
-        "doc_id", *[scores[lang].alias(f"s_{lang}") for lang in _LANGS]
-    )
-    return scored.select(
-        "doc_id",
-        *[f"s_{lang}" for lang in _LANGS],
-        tx.lang_argmax(
-            {lang: F.col(f"s_{lang}") for lang in _LANGS}
-        ).alias("lang_guess"),
-    )
-
-
-_STATS_ORACLE = f"""
-WITH corpus AS ({_CORPUS_SQL})
-SELECT lang, source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum(len(string_split({_NORM_SQL}, ' '))) AS BIGINT) AS total_tokens,
-       CAST(sum(n_chars) * 1000000 // count(*) AS BIGINT) AS avg_chars_ppm
-FROM corpus
-GROUP BY lang, source
-"""
-
-
-@query("text_stats_by_lang", _STATS_ORACLE)
-def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus composition aggregate per (lang, source).
-
-    avg chars is reported as an integer-exact micro-ratio
-    (total_chars * 1e6 div n_docs) so the cross-engine hash never
-    depends on float formatting; Spark ``div`` and DuckDB ``//``
-    agree on non-negative integers.
-    """
-    c = corpus(spark, sf_dir)
-    g = c.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        F.sum(tx.n_tokens(F.col("text"))).cast("long").alias("total_tokens"),
-    )
-    return g.withColumn(
-        "avg_chars_ppm",
-        F.expr("total_chars * 1000000 div n_docs").cast("long"),
-    )
-
-
-# ------------------------------------------------------------------
 # Multimodal plumbing
 # ------------------------------------------------------------------
 
@@ -1191,134 +941,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta.getField("format").alias("format"),
         meta.getField("byte_len").alias("byte_len"),
         meta.getField("checksum").alias("checksum"),
-    )
-
-
-# ------------------------------------------------------------------
-# TF-IDF top terms (integer-exact scoring)
-# ------------------------------------------------------------------
-
-_TFIDF_ORACLE = f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS term
-    FROM documents
-),
-tf AS (
-    SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-    FROM toks GROUP BY doc_id, term
-),
-dfreq AS (
-    SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-scored AS (
-    SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-           CAST(tf.tf * n.n * 1000000 // dfreq.df AS BIGINT) AS score_ppm
-    FROM tf JOIN dfreq USING (term), n
-),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY doc_id
-                                 ORDER BY score_ppm DESC, term ASC) AS rk
-    FROM scored
-)
-SELECT doc_id, term, tf, df, score_ppm, CAST(rk AS BIGINT) AS rk
-FROM ranked WHERE rk <= 3
-"""
-
-
-@query("text_tfidf_top_terms", _TFIDF_ORACLE)
-def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 TF-IDF terms.  The idf is kept integer-exact
-    (``tf * N * 1e6 div df`` — identical truncating int64 division both
-    engines) instead of a float logarithm, so ranking and scores
-    hash-match.  Shape: one token explode, two partial-aggregatable
-    groupBys, a shuffle join on the term key (document-frequency table
-    is vocabulary-sized — too big to assume broadcastable), and a
-    per-doc ranking window keyed on doc_id.  The corpus row count is
-    the one scalar driver value (a single count job)."""
-    docs = load(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    toks = docs.select(
-        "doc_id", F.explode(tx.words(F.col("text"))).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
-    dfreq = tf.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
-    )
-    scored = tf.join(dfreq, "term").select(
-        "doc_id",
-        "term",
-        "tf",
-        "df",
-        F.expr(f"CAST(tf * {n_docs}L * 1000000L div df AS LONG)").alias(
-            "score_ppm"
-        ),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score_ppm").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= 3)
-        .select("doc_id", "term", "tf", "df", "score_ppm", "rk")
-    )
-
-
-# ====================================================================
-# Corpus n-gram statistics (bigram counts — LM corpus profiling)
-# ====================================================================
-
-_NORM_DOC_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-
-_BIGRAM_ORACLE = f"""
-WITH t AS (
-    SELECT string_split({_NORM_DOC_SQL}, ' ') AS toks
-    FROM documents
-),
-t2 AS (SELECT toks FROM t WHERE len(toks) >= 2),
-b AS (
-    SELECT unnest(list_slice(toks, 1, len(toks) - 1)) || ' ' ||
-           unnest(list_slice(toks, 2, len(toks))) AS bigram
-    FROM t2
-)
-SELECT bigram, CAST(count(*) AS BIGINT) AS n
-FROM b GROUP BY bigram ORDER BY n DESC, bigram LIMIT 50
-"""
-
-
-@query("text_bigram_counts", _BIGRAM_ORACLE)
-def text_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus bigram frequencies, top 50: the n-gram statistics pass an
-    LM data pipeline runs for vocabulary/contamination profiling.  The
-    bigram list is built per document with JVM-side array expressions
-    (``transform`` over an index ``sequence`` — 1-based ``element_at``
-    mirrors the oracle's list indexing), exploded, and counted; partial
-    aggregation absorbs the explosion before the single shuffle, and the
-    top-50 compiles to TakeOrderedAndProject.  No Python UDF anywhere."""
-    docs = load(spark, sf_dir, "documents")
-    toks = tx.words(F.col("text"))
-    grams = (
-        docs.select(toks.alias("toks"))
-        .where(F.size("toks") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 1),"
-                    " i -> concat_ws(' ', element_at(toks, i),"
-                    " element_at(toks, i + 1)))"
-                )
-            ).alias("bigram")
-        )
-    )
-    return (
-        grams.groupBy("bigram")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy(F.col("n").desc(), F.col("bigram"))
-        .limit(50)
     )
 
 
@@ -1942,425 +1564,6 @@ def multimodal_corrupt_decode_verdicts(
 
 
 # ====================================================================
-# Vectorized Pandas UDF (Arrow scalar path) — Damerau-Levenshtein
-# ====================================================================
-
-#: Reference string for the distance probe (ASCII, 40 chars).
-_DL_REF = "the quick brown fox jumps over the lazy "
-
-
-def _damerau_levenshtein(a: str, b: str) -> int:
-    """Full (unrestricted) Damerau-Levenshtein — the variant DuckDB's
-    ``damerau_levenshtein`` implements (transposed chars may be edited
-    again later), verified against it on randomized pairs in
-    tests/test_dataops.py."""
-    da: dict[str, int] = {}
-    maxd = len(a) + len(b)
-    d = [[maxd] * (len(b) + 2) for _ in range(len(a) + 2)]
-    for i in range(len(a) + 1):
-        d[i + 1][1] = i
-    for j in range(len(b) + 1):
-        d[1][j + 1] = j
-    for i in range(1, len(a) + 1):
-        db = 0
-        for j in range(1, len(b) + 1):
-            k = da.get(b[j - 1], 0)
-            l_ = db
-            if a[i - 1] == b[j - 1]:
-                cost = 0
-                db = j
-            else:
-                cost = 1
-            d[i + 1][j + 1] = min(
-                d[i][j] + cost,
-                d[i + 1][j] + 1,
-                d[i][j + 1] + 1,
-                d[k][l_] + (i - k - 1) + 1 + (j - l_ - 1),
-            )
-        da[a[i - 1]] = i
-    return d[len(a) + 1][len(b) + 1]
-
-
-_DL_UDF_ORACLE = f"""
-SELECT doc_id,
-       CAST(damerau_levenshtein(
-           substring(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))),
-                     1, 40),
-           '{_DL_REF}') AS BIGINT) AS edit_distance
-FROM documents WHERE doc_id % 4 = 1
-"""
-
-
-@query("udf_vectorized_edit_distance", _DL_UDF_ORACLE)
-def udf_vectorized_edit_distance(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Arrow-vectorized scalar Pandas UDF: full Damerau-Levenshtein
-    between each document's normalized 40-char prefix and a fixed
-    reference — a function the JVM expression library does NOT have
-    (F.levenshtein exists; transposition-aware DL does not), which is
-    exactly when the Pandas-UDF slow path earns its place.  The UDF
-    receives whole Arrow batches (one Python call per ~10k rows, not
-    per row); DuckDB's built-in damerau_levenshtein is the oracle, so
-    the algorithm variant itself is hash-checked."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def dl_udf(prefixes: pd.Series) -> pd.Series:
-        # nullable Int64: NULL text -> NULL distance, like DuckDB's
-        # damerau_levenshtein(NULL, ref).  The distance is defined over
-        # UTF-8 BYTES, because that is what DuckDB's builtin measures
-        # (é vs e = 2, astral emoji = 4 — probed r10); a code-point
-        # variant would silently diverge on any non-ASCII corpus.
-        ref = _DL_REF.encode("utf-8")
-        return pd.Series(
-            [
-                None
-                if s is None
-                else _damerau_levenshtein(s.encode("utf-8"), ref)
-                for s in prefixes
-            ],
-            dtype="Int64",
-        )
-
-    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") % 4 == 1)
-    prefix = F.substring(tx.normalize_text(F.col("text")), 1, 40)
-    return docs.select(
-        "doc_id", dl_udf(prefix).alias("edit_distance")
-    )
-
-
-# ------------------------------------------------------------------
-# Entity resolution: trigram-blocked fuzzy link (exact Jaccard)
-# ------------------------------------------------------------------
-
-_FUZZY_LINK_ORACLE = """
-WITH master AS (
-    SELECT DISTINCT p_name AS name FROM part
-),
-dirty AS (
-    -- deterministic corruption: every %3=0 part loses the character
-    -- at position (key mod len)+1, so both engines link the same
-    -- dirty strings back to the master list
-    SELECT p_partkey AS k,
-           substr(p_name, 1, CAST(p_partkey % length(p_name) AS INT))
-           || substr(p_name, CAST(p_partkey % length(p_name) AS INT) + 2)
-               AS dirty_name
-    FROM part WHERE p_partkey % 3 = 0
-),
-mgrams AS (
-    SELECT DISTINCT m.name, substr(m.name, CAST(i AS INT), 3) AS g
-    FROM master m
-    CROSS JOIN UNNEST(range(1, greatest(length(m.name) - 1, 2))) AS t(i)
-),
-dgrams AS (
-    SELECT DISTINCT d.k, d.dirty_name,
-           substr(d.dirty_name, CAST(i AS INT), 3) AS g
-    FROM dirty d
-    CROSS JOIN UNNEST(range(1, greatest(length(d.dirty_name) - 1, 2)))
-        AS t(i)
-),
-msize AS (SELECT name, CAST(count(*) AS BIGINT) AS nb FROM mgrams GROUP BY name),
-dsize AS (SELECT k, CAST(count(*) AS BIGINT) AS na FROM dgrams GROUP BY k),
-cand AS (
-    SELECT d.k, d.dirty_name, m.name,
-           CAST(count(*) AS BIGINT) AS inter
-    FROM dgrams d JOIN mgrams m ON m.g = d.g
-    GROUP BY d.k, d.dirty_name, m.name
-),
-scored AS (
-    SELECT c.k, c.dirty_name, c.name AS matched_name, c.inter,
-           ds.na, ms.nb,
-           CAST(1000 * c.inter // (ds.na + ms.nb - c.inter) AS BIGINT)
-               AS jac_permille
-    FROM cand c
-    JOIN dsize ds ON ds.k = c.k
-    JOIN msize ms ON ms.name = c.name
-),
-best AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY k
-        ORDER BY jac_permille DESC, inter DESC, matched_name
-    ) AS rn
-    FROM scored WHERE jac_permille >= 400
-)
-SELECT k, dirty_name, matched_name, inter, na, nb, jac_permille
-FROM best WHERE rn = 1
-"""
-
-
-@query("parts_fuzzy_link", _FUZZY_LINK_ORACLE)
-def parts_fuzzy_link(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution / record linkage: dirty strings (a character
-    deterministically deleted from every third part name) are linked
-    back to the master vocabulary by trigram BLOCKING — candidate
-    pairs exist only where at least one 3-gram is shared, never the
-    all-pairs product — then scored with EXACT set Jaccard in integer
-    permille and reduced to the best match per dirty record by a
-    deterministic (score, overlap, name) window.  This is the
-    fuzzy-join shape dedup/ER systems run at 100 TB: the blocking join
-    shuffles on the trigram (hot trigrams are the skew hazard — the
-    same hot-key cap as LSH banding applies), sizes join back
-    broadcast-small, and nothing downstream of blocking is
-    quadratic."""
-    part = load(spark, sf_dir, "part")
-    master = part.select(F.col("p_name").alias("name")).distinct()
-    cut = (F.col("p_partkey") % F.length("p_name")).cast("int")
-    dirty = part.where(F.col("p_partkey") % 3 == 0).select(
-        F.col("p_partkey").alias("k"),
-        F.concat(
-            F.expr("substr(p_name, 1, CAST(p_partkey % length(p_name) AS INT))"),
-            F.expr(
-                "substr(p_name, CAST(p_partkey % length(p_name) AS INT) + 2)"
-            ),
-        ).alias("dirty_name"),
-    )
-
-    def grams(df: DataFrame, col: str, *keep: str) -> DataFrame:
-        return (
-            df.select(
-                *keep,
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, greatest(length({col}) - 2,"
-                        f" 1)), i -> substr({col}, i, 3))"
-                    )
-                ).alias("g"),
-            )
-            .distinct()
-        )
-
-    mg = grams(master, "name", "name")
-    dg = grams(dirty, "dirty_name", "k", "dirty_name")
-    msize = mg.groupBy("name").agg(F.count(F.lit(1)).cast("long").alias("nb"))
-    dsize = dg.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("na"))
-    cand = (
-        dg.join(mg, "g")
-        .groupBy("k", "dirty_name", "name")
-        .agg(F.count(F.lit(1)).cast("long").alias("inter"))
-    )
-    scored = (
-        cand.join(dsize, "k")
-        .join(F.broadcast(msize), "name")
-        .select(
-            "k",
-            "dirty_name",
-            F.col("name").alias("matched_name"),
-            "inter",
-            "na",
-            "nb",
-            F.expr("1000 * inter div (na + nb - inter)")
-            .cast("long")
-            .alias("jac_permille"),
-        )
-        .where(F.col("jac_permille") >= 400)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("k").orderBy(
-        F.col("jac_permille").desc(), F.col("inter").desc(), "matched_name"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-# ------------------------------------------------------------------
-# Prefix-filtered fuzzy link (EXACT blocking under the Jaccard bound)
-# ------------------------------------------------------------------
-
-_PREFIX_LINK_ORACLE = """
-WITH master AS (
-    SELECT DISTINCT p_name AS name FROM part
-),
-dirty AS (
-    SELECT p_partkey AS k,
-           substr(p_name, 1, CAST(p_partkey % length(p_name) AS INT))
-           || substr(p_name, CAST(p_partkey % length(p_name) AS INT) + 2)
-               AS dirty_name
-    FROM part WHERE p_partkey % 3 = 0
-),
-mgrams AS (
-    SELECT DISTINCT m.name, substr(m.name, CAST(i AS INT), 3) AS g
-    FROM master m
-    CROSS JOIN UNNEST(range(1, greatest(length(m.name) - 1, 2))) AS t(i)
-),
-dgrams AS (
-    SELECT DISTINCT d.k, d.dirty_name,
-           substr(d.dirty_name, CAST(i AS INT), 3) AS g
-    FROM dirty d
-    CROSS JOIN UNNEST(range(1, greatest(length(d.dirty_name) - 1, 2)))
-        AS t(i)
-),
--- one global canonical gram order: master document frequency
--- ascending (absent grams are rarest), gram text as tiebreak
-df AS (SELECT g, CAST(count(*) AS BIGINT) AS df FROM mgrams GROUP BY g),
-msize AS (SELECT name, CAST(count(*) AS BIGINT) AS nb FROM mgrams GROUP BY name),
-dsize AS (SELECT k, CAST(count(*) AS BIGINT) AS na FROM dgrams GROUP BY k),
--- prefix length for Jaccard >= 2/5: |A| - ceil(2|A|/5) + 1
-mpref AS (
-    SELECT mg.name, mg.g
-    FROM (
-        SELECT name, g, row_number() OVER (
-            PARTITION BY name ORDER BY coalesce(df.df, 0), g
-        ) AS rn
-        FROM mgrams LEFT JOIN df USING (g)
-    ) mg JOIN msize ms ON ms.name = mg.name
-    WHERE mg.rn <= ms.nb - (2 * ms.nb + 4) // 5 + 1
-),
-dpref AS (
-    SELECT dg.k, dg.g
-    FROM (
-        SELECT k, g, row_number() OVER (
-            PARTITION BY k ORDER BY coalesce(df.df, 0), g
-        ) AS rn
-        FROM dgrams LEFT JOIN df USING (g)
-    ) dg JOIN dsize ds ON ds.k = dg.k
-    WHERE dg.rn <= ds.na - (2 * ds.na + 4) // 5 + 1
-),
-cand AS (
-    SELECT DISTINCT dp.k, mp.name
-    FROM dpref dp JOIN mpref mp ON mp.g = dp.g
-),
-inter AS (
-    SELECT c.k, c.name, CAST(count(*) AS BIGINT) AS inter
-    FROM cand c
-    JOIN dgrams d ON d.k = c.k
-    JOIN mgrams m ON m.name = c.name AND m.g = d.g
-    GROUP BY c.k, c.name
-),
-scored AS (
-    SELECT i.k, d2.dirty_name, i.name AS matched_name, i.inter,
-           ds.na, ms.nb,
-           CAST(1000 * i.inter // (ds.na + ms.nb - i.inter) AS BIGINT)
-               AS jac_permille
-    FROM inter i
-    JOIN dsize ds ON ds.k = i.k
-    JOIN msize ms ON ms.name = i.name
-    JOIN (SELECT DISTINCT k, dirty_name FROM dirty) d2 ON d2.k = i.k
-),
-best AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY k
-        ORDER BY jac_permille DESC, inter DESC, matched_name
-    ) AS rn
-    FROM scored WHERE jac_permille >= 400
-)
-SELECT k, dirty_name, matched_name, inter, na, nb, jac_permille
-FROM best WHERE rn = 1
-"""
-
-
-@query("parts_fuzzy_link_prefix", _PREFIX_LINK_ORACLE)
-def parts_fuzzy_link_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered fuzzy link — the SCALE-CORRECT sibling of
-    parts_fuzzy_link that provably returns the SAME matches: under a
-    Jaccard threshold t, two sets can only reach t if they share a
-    gram within each side's first |A| - ceil(t*|A|) + 1 grams of one
-    global canonical order (rarest-first by master document
-    frequency) — the prefix-filtering bound from the set-similarity-
-    join literature.  Blocking therefore probes only rare-gram
-    buckets: soaked at 30x volume this ran 16x faster than an
-    absolute hot-gram cap (55s vs 885s, BENCH_HISTORY r5c) BECAUSE
-    the guard is relative, so vocabulary growth can't re-inflate the
-    hottest block.  Candidates are then verified on FULL gram sets —
-    exactness comes from the bound, not from luck; t = 2/5 in exact
-    integer arithmetic throughout."""
-    from pyspark.sql import Window
-
-    part = load(spark, sf_dir, "part")
-    master = part.select(F.col("p_name").alias("name")).distinct()
-    dirty = part.where(F.col("p_partkey") % 3 == 0).select(
-        F.col("p_partkey").alias("k"),
-        F.concat(
-            F.expr("substr(p_name, 1, CAST(p_partkey % length(p_name) AS INT))"),
-            F.expr(
-                "substr(p_name, CAST(p_partkey % length(p_name) AS INT) + 2)"
-            ),
-        ).alias("dirty_name"),
-    )
-
-    # r11 (§1.1, §2.4, §2.3): grams are carried as a per-row DISTINCT
-    # ARRAY (array_distinct over the transform) so (a) the per-side
-    # explode+DISTINCT shuffle disappears — master names are already
-    # distinct and dirty keys are unique, so per-row dedup ≡ the old
-    # cross-row distinct; (b) gram-set sizes are size(garr) — the two
-    # size aggregations (msize/dsize) and their joins disappear; and
-    # (c) na/nb/dirty_name ride the exploded rows through the
-    # intersection aggregate as min() passengers, so the scored frame
-    # needs ZERO re-attach joins.  Before: 11 parquet scans, 38
-    # exchanges; the same linkage now runs in 2 logical gram passes.
-    def grams(df: DataFrame, col: str) -> Column:
-        return F.array_distinct(
-            F.expr(
-                f"transform(sequence(1, greatest(length({col}) - 2,"
-                f" 1)), i -> substr({col}, i, 3))"
-            )
-        )
-
-    mg = master.select(
-        "name", F.size(grams(master, "name")).cast("long").alias("nb"),
-        F.explode(grams(master, "name")).alias("g"),
-    ).localCheckpoint(eager=True)
-    dg = dirty.select(
-        "k",
-        "dirty_name",
-        F.size(grams(dirty, "dirty_name")).cast("long").alias("na"),
-        F.explode(grams(dirty, "dirty_name")).alias("g"),
-    ).localCheckpoint(eager=True)
-    dfg = mg.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("df"))
-
-    wm = Window.partitionBy("name").orderBy(F.coalesce("df", F.lit(0)), "g")
-    mpref = (
-        mg.join(F.broadcast(dfg), "g", "left")
-        .withColumn("rn", F.row_number().over(wm))
-        .where(F.col("rn") <= F.expr("nb - (2 * nb + 4) div 5 + 1"))
-        .select("name", "g")
-    )
-    wd = Window.partitionBy("k").orderBy(F.coalesce("df", F.lit(0)), "g")
-    dpref = (
-        dg.join(F.broadcast(dfg), "g", "left")
-        .withColumn("rn", F.row_number().over(wd))
-        .where(F.col("rn") <= F.expr("na - (2 * na + 4) div 5 + 1"))
-        .select("k", "g")
-    )
-    cand = dpref.join(mpref, "g").select("k", "name").distinct()
-    scored = (
-        cand.join(dg, "k")
-        .join(mg, ["name", "g"])
-        .groupBy("k", "name")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("inter"),
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-            F.min("dirty_name").alias("dirty_name"),
-        )
-        .select(
-            "k",
-            "dirty_name",
-            F.col("name").alias("matched_name"),
-            "inter",
-            "na",
-            "nb",
-            F.expr("1000 * inter div (na + nb - inter)")
-            .cast("long")
-            .alias("jac_permille"),
-        )
-        .where(F.col("jac_permille") >= 400)
-    )
-    wb = Window.partitionBy("k").orderBy(
-        F.col("jac_permille").desc(), F.col("inter").desc(), "matched_name"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(wb))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-# ====================================================================
 # Curation pipeline v4: the round-7 operators composed
 # (DSIR gate x near-dup canonical rule x embedding outlier prune,
 #  with the leakage-safe split riding the same component labels)
@@ -2837,123 +2040,6 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anchors = vecs.where(F.col("vec_id") % 100 == 0)
     return sim.hard_negative_topk(vecs, anchors, k=5)
-
-
-# ====================================================================
-# PMI collocations (corpus association mining)
-# ====================================================================
-
-_PMI_ORACLE = f"""
-WITH t AS (
-    SELECT string_split({_NORM_SQL}, ' ') AS toks FROM documents
-),
-t2 AS (SELECT toks FROM t WHERE len(toks) >= 2),
-pairs AS (
-    SELECT unnest(list_slice(toks, 1, len(toks) - 1)) AS w1,
-           unnest(list_slice(toks, 2, len(toks))) AS w2
-    FROM t2
-),
-bi AS (
-    SELECT w1, w2, CAST(count(*) AS BIGINT) AS n_xy
-    FROM pairs GROUP BY w1, w2
-),
-uni AS (
-    SELECT w, CAST(count(*) AS BIGINT) AS n_w FROM (
-        SELECT unnest(string_split({_NORM_SQL}, ' ')) AS w FROM documents
-    ) GROUP BY w
-),
-scal AS (
-    SELECT (SELECT CAST(sum(n_w) AS BIGINT) FROM uni) AS n1,
-           (SELECT CAST(sum(n_xy) AS BIGINT) FROM bi) AS n2
-),
-scored AS (
-    SELECT b.w1, b.w2, b.n_xy, u1.n_w AS n_x, u2.n_w AS n_y,
-           (CAST(b.n_xy AS DOUBLE) * CAST(s.n1 AS DOUBLE)
-                * CAST(s.n1 AS DOUBLE))
-               / (CAST(u1.n_w AS DOUBLE) * CAST(u2.n_w AS DOUBLE)
-                  * CAST(s.n2 AS DOUBLE)) AS pmi_ratio
-    FROM bi b
-    JOIN uni u1 ON u1.w = b.w1
-    JOIN uni u2 ON u2.w = b.w2
-    CROSS JOIN scal s
-    WHERE b.n_xy >= 5
-)
-SELECT * FROM scored ORDER BY pmi_ratio DESC, w1, w2 LIMIT 50
-"""
-
-
-@query("text_pmi_collocations", _PMI_ORACLE)
-def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 word bigrams by pointwise-mutual-information ratio
-    (p(xy) / (p(x)p(y)) — the log is monotone, so ranking skips it and
-    the score stays IEEE-identical double arithmetic over exact int64
-    counts).  Collocation mining is the corpus-statistics complement of
-    text_bigram_counts (raw frequency): it surfaces ASSOCIATED pairs,
-    the signal tokenizer-vocab and boilerplate analyses want.  Shape:
-    one bigram explode + one unigram explode, two vocabulary-sized
-    joins AFTER the min-support prune (n_xy >= 5), scalar totals as
-    1-row crossJoins — nothing corpus-sized past the groupBys."""
-    docs = load(spark, sf_dir, "documents")
-    w = tx.words(F.col("text"))
-    toks = docs.select(F.explode(w).alias("w"))
-    # r11 (§1.1, §2.4, §5): `uni` feeds THREE consumers (the n1 total
-    # and both vocabulary joins) and `bi` two (the n2 total and the
-    # pruned scored frame) — without materialization each consumer
-    # re-ran its full corpus explode+groupBy.  Both tables are
-    # vocabulary-sized (bounded ≪ corpus), so the eager checkpoint
-    # trades five corpus passes for two.
-    uni = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_w"))
-        .localCheckpoint(eager=True)
-    )
-    pairs = docs.select(w.alias("toks")).where(F.size("toks") >= 2).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("toks"), i).alias("w1"),
-                    F.element_at(F.col("toks"), i + 1).alias("w2"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    bi = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
-        .localCheckpoint(eager=True)
-    )
-    scal = uni.agg(F.sum("n_w").cast("long").alias("n1")).crossJoin(
-        bi.agg(F.sum("n_xy").cast("long").alias("n2"))
-    )
-    scored = (
-        bi.where(F.col("n_xy") >= 5)
-        .join(uni.select(F.col("w").alias("w1"), F.col("n_w").alias("n_x")), "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("n_w").alias("n_y")), "w2")
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "w1",
-            "w2",
-            "n_xy",
-            "n_x",
-            "n_y",
-            (
-                (
-                    F.col("n_xy").cast("double")
-                    * F.col("n1").cast("double")
-                    * F.col("n1").cast("double")
-                )
-                / (
-                    F.col("n_x").cast("double")
-                    * F.col("n_y").cast("double")
-                    * F.col("n2").cast("double")
-                )
-            ).alias("pmi_ratio"),
-        )
-    )
-    return scored.orderBy(
-        F.desc("pmi_ratio"), F.asc("w1"), F.asc("w2")
-    ).limit(50)
 
 
 # ====================================================================

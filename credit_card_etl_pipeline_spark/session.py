@@ -59,10 +59,6 @@ def get_spark(
         # null-hostile corpus).  Force SQL-standard null propagation:
         # size(NULL) = NULL, matching DuckDB and every other engine.
         .config("spark.sql.legacy.sizeOfNull", "false")
-        # Event-time extraction does NOT ride a reader conf: the events
-        # `ts` column has shipped as both nano-longs and TIMESTAMP_NTZ
-        # micros across driver corpora, so functions.eventtime branches
-        # on the observed type instead (confs can silently no-op).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Rule/dim tables are KB-sized; files at rest are parquet. Keep

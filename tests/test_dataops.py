@@ -449,44 +449,6 @@ def test_lsh_probe_pairs_asymmetric_and_capped(spark):
     assert capped == []
 
 
-def test_damerau_levenshtein_matches_duckdb_variant():
-    import random
-
-    import duckdb
-
-    from credit_card_etl_pipeline_spark.queries.dataops_queries import (
-        _damerau_levenshtein,
-    )
-
-    rng = random.Random(5)
-    for _ in range(300):
-        a = "".join(rng.choice("abcde ") for _ in range(rng.randint(0, 14)))
-        b = "".join(rng.choice("abcde ") for _ in range(rng.randint(0, 14)))
-        want = duckdb.sql(
-            f"select damerau_levenshtein('{a}','{b}')"
-        ).fetchone()[0]
-        assert _damerau_levenshtein(a, b) == want, (a, b)
-    # the transposition-then-edit case that separates full DL from OSA
-    assert _damerau_levenshtein("ca", "abc") == 2
-
-
-def test_prefix_filter_blocking_is_exact(spark, sf_dir):
-    """The prefix-filtering bound must lose NOTHING: the prefix-blocked
-    fuzzy link returns exactly the full-blocking link's matches."""
-    import credit_card_etl_pipeline_spark.queries as q
-
-    full = sorted(
-        map(tuple, q.QUERIES["parts_fuzzy_link"](spark, sf_dir).collect())
-    )
-    pref = sorted(
-        map(
-            tuple,
-            q.QUERIES["parts_fuzzy_link_prefix"](spark, sf_dir).collect(),
-        )
-    )
-    assert full == pref
-
-
 def test_pack_bits64_matches_python_popcount(spark):
     # Known bit patterns, including bit 63 (the LONG_MIN special case):
     # quantized value > 0 sets the bit.
@@ -605,7 +567,8 @@ def test_dhash64_known_pattern_and_perturbation():
 def test_reliable_checkpoint_conf_gate(spark, session_ckpt_dir):
     """spark.graft.reliableCheckpoint=true switches the distributed
     propagation loop's round checkpoints to checkpoint-dir storage
-    (executor-loss safe; SIGKILL-certified by tools/soak_exec_kill.py).
+    (executor-loss safe; SIGKILL-certified by an executor-kill soak
+    whose tool lives in git history).
     Uses the SESSION-scoped checkpoint dir (conftest) so this test
     neither depends on nor perturbs checkpoint state for the rest of
     the run; the missing-dir refusal is covered order-independently by
@@ -676,38 +639,6 @@ def test_reliable_checkpoint_requires_dir_fresh_session():
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "RAISED_OK" in proc.stdout
-
-
-def test_sanitize_unicode_contract(spark):
-    """The cleaning contract: ZW strip -> NFC -> pinned-class collapse;
-    NULL propagates; composed and decomposed forms converge to one md5."""
-    import hashlib
-
-    from credit_card_etl_pipeline_spark.dataops.text import sanitize_unicode
-
-    composed = "café bar"           # é as one code point
-    decomposed = "café bar"        # e + combining acute
-    df = spark.createDataFrame(
-        [
-            (0, composed),
-            (1, decomposed),
-            (2, "a​b﻿c"),      # zero-width junk
-            (3, "  \t\n  "),             # whitespace-only -> ''
-            (4, None),
-            (5, "ok \U0001f600 astral"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r.asDict() for r in sanitize_unicode(df).collect()}
-    want_md5 = hashlib.md5(composed.encode()).hexdigest()
-    assert out[0]["clean_md5"] == want_md5
-    assert out[1]["clean_md5"] == want_md5          # NFC converges
-    assert out[1]["changed"] and not out[0]["changed"]
-    assert out[2]["n_zero_width"] == 2
-    assert out[2]["clean_md5"] == hashlib.md5(b"abc").hexdigest()
-    assert out[3]["n_chars_clean"] == 0 and out[3]["changed"]
-    assert all(v is None for k, v in out[4].items() if k != "doc_id")
-    assert out[5]["n_astral"] == 1 and not out[5]["changed"]
 
 
 def test_distribution_matched_sample(spark):

@@ -86,7 +86,7 @@ def test_every_events_oracle_carries_the_contract():
 
     marker = "FROM (SELECT * FROM events WHERE"
     spliced = sum(marker in sql for sql in q.ORACLES.values())
-    assert q._N_EVENTS_ORACLES == spliced == 16
+    assert q._N_EVENTS_ORACLES == spliced == 1
     for name, sql in q.ORACLES.items():
         if "FROM events" not in sql:
             continue

@@ -126,67 +126,6 @@ def test_hypertable_rollup_readback_prunes_buckets(spark, tmp_path):
     assert probe.count() == 500 // 7 + (1 if 3 < 500 % 7 else 0)
 
 
-def test_funnel_single_fact_shuffle(spark):
-    # one-pass funnel: the events fact is shuffled on user_id exactly
-    # once; the three stage frontiers stack as window aggregates over
-    # that one Exchange (a regression to per-stage joins shows up as
-    # extra user_id exchanges and/or SortMergeJoin)
-    import re
-
-    from credit_card_etl_pipeline_spark.queries.events_queries import (
-        events_funnel_conversion,
-    )
-
-    plan = _plan(events_funnel_conversion(spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert len(re.findall(r"hashpartitioning\(user_id", plan)) <= 1
-    # funnel-type filter reaches the scan
-    assert "PushedFilters" in plan
-
-
-def test_first_touch_single_fact_shuffle(spark):
-    # one-pass first-touch attribution: both whole-partition windows
-    # share a single user_id Exchange; no join back of a purchase
-    # frontier (that shape scans and shuffles the fact twice)
-    import re
-
-    from credit_card_etl_pipeline_spark.queries.events_queries import (
-        events_attribution_first_touch,
-    )
-
-    plan = _plan(events_attribution_first_touch(spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert len(re.findall(r"hashpartitioning\(user_id", plan)) <= 1
-
-
-def test_sessionization_single_user_shuffle(spark):
-    # lag → running-sum → per-session agg must all ride ONE user_id
-    # Exchange; a regression to per-stage repartitions shows as extra
-    # user_id hashpartitioning or a SortMergeJoin
-    import re
-
-    from credit_card_etl_pipeline_spark.queries.events_queries import (
-        events_sessionization,
-    )
-
-    plan = _plan(events_sessionization(spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert len(re.findall(r"hashpartitioning\(user_id", plan)) <= 1
-
-
-def test_windowed_funnel_single_fact_shuffle(spark):
-    import re
-
-    from credit_card_etl_pipeline_spark.queries.events_queries import (
-        events_windowed_funnel,
-    )
-
-    plan = _plan(events_windowed_funnel(spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert len(re.findall(r"hashpartitioning\(user_id", plan)) <= 1
-    assert "PushedFilters" in plan
-
-
 def test_r7_operator_plans_broadcast_only(spark):
     # Round-7 operators: the model/centroid joins must broadcast and
     # nothing may fall back to SortMergeJoin or a cartesian product.
@@ -212,17 +151,6 @@ def test_binary_hamming_coarse_stage_is_codegen(spark):
     assert "ArrowEvalPython" not in plan
     # the packing + XOR + bit_count all fold into plain projections
     assert "bit_count" in plan
-
-
-def test_r7_late_additions_no_smj_or_cartesian(spark):
-    # drift: bounded-side joins must ride
-    # broadcasts (BNLJ for the 1-row totals is fine); never a
-    # SortMergeJoin or an unbroadcast CartesianProduct.
-    from credit_card_etl_pipeline_spark import queries as q
-
-    plan = _plan(q.QUERIES["events_daily_drift"](spark, SF))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def _join_counts(df) -> tuple[int, int]:

@@ -2,10 +2,13 @@
 query with a DuckDB oracle, and none of the warehouse extras, Z-order,
 bucketing, Python-Data-Source, TPC-H/OLAP, skew, streaming, curation,
 BPE, codec, JSONL-corpus, sketch, graph, URL, ranking-metric,
-stand-alone showcase, IVF, product-quantization, semantic-dedup or
-top-PC queries that were cut from it."""
+stand-alone showcase, IVF, product-quantization, semantic-dedup,
+top-PC, event-analytics, text-profile or fuzzy-link queries that were
+cut from it."""
 
 from __future__ import annotations
+
+import re
 
 import __spark_entry__ as entry
 
@@ -105,6 +108,19 @@ REMOVED_QUERIES = {
     "dedup_semantic_clusters", "ann_pq_topk", "dedup_semantic_hierarchical",
     "dedup_semantic_auto", "dedup_semantic_two_level", "embeddings_top_pc",
     "ann_abtt_corrected_topk",
+    # event analytics, text profiling and fuzzy record linkage
+    "events_cohort_retention", "events_funnel_conversion",
+    "events_type_transitions", "events_attribution_first_touch",
+    "events_hourly_heatmap", "events_decayed_user_score",
+    "events_sessionization", "events_max_concurrency",
+    "events_outliers_mad", "events_type_cooccurrence",
+    "events_seasonal_backtest", "events_windowed_funnel",
+    "events_skew_diagnostics", "events_daily_drift",
+    "events_rolling_7d_users", "text_quality_profile",
+    "text_unicode_sanitize", "doc_fingerprints", "text_lang_id_ngram",
+    "text_stats_by_lang", "text_tfidf_top_terms", "text_bigram_counts",
+    "text_pmi_collocations", "udf_vectorized_edit_distance",
+    "parts_fuzzy_link", "parts_fuzzy_link_prefix",
 }
 
 
@@ -118,3 +134,16 @@ def test_registry_holds_the_paper_surface_with_oracles():
 
 def test_cut_queries_are_unregistered():
     assert not REMOVED_QUERIES & set(entry.queries())
+
+
+def test_every_corpus_table_is_read_by_an_oracle():
+    """``queries.TABLES`` is the one table list conftest and check_oracle
+    register; a table no oracle reads any more must leave it."""
+    from credit_card_etl_pipeline_spark.queries import TABLES
+
+    oracles = entry.oracle_sql().values()
+    unread = [
+        t for t in TABLES
+        if not any(re.search(rf"\b(FROM|JOIN)\s+{t}\b", sql) for sql in oracles)
+    ]
+    assert unread == []

@@ -1,5 +1,5 @@
-"""Unit tests for hard-negative mining and the determinism contracts
-of the PMI collocation and reciprocal-rank fusion queries."""
+"""Unit tests for hard-negative mining and the determinism contract of
+the reciprocal-rank fusion query."""
 
 from __future__ import annotations
 
@@ -49,24 +49,6 @@ def test_hard_negatives_rank_is_dense_from_one(spark):
     )
     for r in ranks:
         assert r["rks"] == list(range(1, len(r["rks"]) + 1))
-
-
-# ------------------------------------------------------------------
-# PMI collocations (registered query: determinism of the LIMIT)
-# ------------------------------------------------------------------
-
-def test_pmi_query_deterministic_and_bounded(spark):
-    from credit_card_etl_pipeline_spark.queries import QUERIES
-
-    fn = QUERIES["text_pmi_collocations"]
-    a = fn(spark, "/root/testdata/sf0.001").collect()
-    b = fn(spark, "/root/testdata/sf0.001").collect()
-    assert a == b
-    assert len(a) <= 50
-    assert all(r["n_xy"] >= 5 for r in a)
-    # ranking is by descending ratio
-    ratios = [r["pmi_ratio"] for r in a]
-    assert ratios == sorted(ratios, reverse=True)
 
 
 # ------------------------------------------------------------------

@@ -6,8 +6,8 @@ SparkSession, not the engine factory's).
 
     python tools/hostile_sweep.py [--sf /root/testdata/sf0.001]
 
-Exit 0 iff every query plans and executes.  Last verified: 81/81 ok
-(pyspark 4.1.2, sf0.001, events ts = TIMESTAMP_NTZ).
+Exit 0 iff every query plans and executes.  Last verified: 55/55 ok
+(pyspark 4.1.2, sf0.001).
 """
 
 from __future__ import annotations

@@ -60,17 +60,9 @@ BNLJ_ALLOWED: dict[str, str] = {
     "ann_hamming_recall_at_5": "broadcast probe frame",
     "ann_hard_negatives": "broadcast anchor frame (non-equi label filter)",
     "ann_rrf_fusion": "broadcast anchor frames (both fused rankings)",
-    # Corpus statistics: 1-row corpus totals / fitted model scalars,
-    # all F.broadcast'ed (the PMI totals in dataops_queries,
-    # curate.dsir_weights).
-    "text_pmi_collocations": "1-row unigram/bigram totals",
+    # Corpus statistics: 1-row fitted model totals, F.broadcast'ed
+    # (curate.dsir_weights).
     "curation_pipeline_v4": "1-row DSIR totals (gate stage)",
-    # Events analytics: 1-row anchors/totals and min/max-derived day
-    # grids (bounded by calendar span, not data volume).
-    "events_decayed_user_score": "1-row max-timestamp anchor",
-    "events_skew_diagnostics": "1-row corpus totals",
-    "events_daily_drift": "day×type grid + 1-row totals",
-    "events_rolling_7d_users": "1-row min/max day anchor",
     # Distribution-matched sampling: the 1-row (n_total, n_buckets)
     # aggregate cross-joined onto the ≤11-row bucket histogram
     # (curate.distribution_matched_sample — F.broadcast'ed).
