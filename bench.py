@@ -37,15 +37,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 #: Idle-host wall seconds for one _canary_seconds() pass (best-of-3),
 #: measured 2026-08-16 on the 32-core driver box (pin again if the
-#: hardware or Spark version changes; see BENCH_HISTORY.md r11).  The
-#: canary is corpus-independent, so canary_wall / THIS = pure ambient
-#: machine-state ratio — the r9/r10 bench swings (42 GB /tmp spill dir
-#: evicting the page cache, concurrent Spark jobs) both spent a round
-#: of attribution effort that this number now answers at capture time.
+#: hardware or Spark version changes).  The canary is
+#: corpus-independent, so canary_wall / THIS = pure ambient
+#: machine-state ratio: a bench swing from a page-cache-evicting spill
+#: dir or concurrent Spark jobs shows up here at capture time.
 CANARY_IDLE_BASELINE_S = 1.9
 
-#: round_close refuses to stamp a bench-of-record whose canary ratio
-#: exceeds this (1.15 = the VERDICT r10 ask #8 threshold).
+#: Above this canary ratio the record carries an informational
+#: ``canary_warning``; nothing in the repo acts on it.
 CANARY_WARN_RATIO = 1.15
 
 
@@ -125,8 +124,8 @@ def main() -> int:
             finally:
                 spark.catalog.clearCache()
         if best is not None:
-            # best-of-N damps host-load noise (BENCH_HISTORY shows ~1.5×
-            # wall variance on the driver box for identical code)
+            # best-of-N damps host-load noise (~1.5× wall variance on
+            # a loaded host for identical code)
             timings[name] = round(best, 3)
             print(f'BENCHQ {{"q": "{name}", "sec": {timings[name]}}}', flush=True)
         else:
@@ -155,19 +154,19 @@ def main() -> int:
         # in the bench of record itself
         "env": {
             "pyspark": pyspark.__version__,
-            # host-load canary: BENCH_HISTORY shows ~1.5x wall variance
-            # on a loaded driver box; loadavg makes that machine-checkable
-            # instead of argued from cross-query uniformity.  `loadavg`
+            # host-load canary: ~1.5x wall variance on a loaded host;
+            # loadavg records that load for the reader of the record.  `loadavg`
             # is sampled before Spark starts (external load only);
             # `loadavg_end` includes our own 32-core run.
             "loadavg": loadavg_start,
             "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         },
-        # pre/post fixed canary (VERDICT r10 ask #8): corpus-independent
-        # JVM-only work timed before and after the sweep.  ratio_vs_idle
-        # compares the WORSE of the two against the pinned idle-host
-        # baseline; pre/post disagreement localizes contamination that
-        # arrived mid-sweep.  round_close warns above CANARY_WARN_RATIO.
+        # pre/post fixed canary: corpus-independent JVM-only work timed
+        # before and after the sweep.  ratio_vs_idle compares the WORSE
+        # of the two against the pinned idle-host baseline; pre/post
+        # disagreement localizes contamination that arrived mid-sweep.
+        # Informational: above CANARY_WARN_RATIO the record carries a
+        # canary_warning, which no tool in the repo reads.
         "canary": {
             "pre_s": canary_pre,
             "post_s": canary_post,
@@ -183,10 +182,9 @@ def main() -> int:
             f"{CANARY_IDLE_BASELINE_S}s): machine state is inflating "
             "timings - not a bench of record"
         )
-    # A bench started on a busy host is not a bench of record: r07's
-    # driver run started at loadavg 14.5 and read ~15% slow across the
-    # board.  Flag it machine-checkably, so a reader can reject the
-    # record.
+    # A bench started on a busy host reads slow across the board (a
+    # run started at loadavg 14.5 read ~15% slow).  The informational
+    # loaded_host_warning says so; no tool in the repo reads it.
     if loadavg_start[0] > cpus / 4:
         result["loaded_host_warning"] = (
             f"loadavg {loadavg_start[0]} > cpus/4 ({cpus / 4:.0f}) at "

@@ -1,11 +1,12 @@
 """Session-lifetime tracking of operator-internal persisted frames.
 
-Operators like :func:`~credit_card_etl_pipeline_spark.operators.rfm.
-rfm_aggregate` persist an intermediate aggregate so the rank branches
-reuse one computation instead of re-scanning the fact per branch.  The
-returned DataFrame still references that cache, so the operator cannot
-unpersist before returning — and in a long-running driver each
-invocation would otherwise pin another cached table forever.
+Some ``dataops/`` operators (``dedup``, ``similarity``) persist an
+intermediate so several branches reuse one computation instead of
+re-scanning their input per branch.  The returned DataFrame still
+references that cache, so the operator cannot unpersist before
+returning — and in a long-running driver each invocation would
+otherwise pin another cached table forever.  The paper's path
+(ingest → warehouse → RFM reports) persists nothing.
 
 Every such persist is registered here; :func:`release_tracked` drops
 them all.  The query registry calls it at the start of each registered

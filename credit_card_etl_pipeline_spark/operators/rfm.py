@@ -4,24 +4,20 @@ Re-expression of the reference's three analytics jobs
 (db_to_RFManalysis.py:136-268, db_to_Payment_RFM.py:90-170,
 db_to_card_RFM.py:26-74) as a single generic Spark operator family.
 
-Scale design decisions (vs. the reference's pandas shape):
+Every report is one lazy plan: nothing is cached, and no scalar goes
+through the driver.
 
-* **Dual time windows without a second full pass.**  The reference
-  aggregates the fact twice over its FULL extent (lifetime +
-  last-N-days) and left-joins the results (db_to_RFManalysis.py:236-255,
-  operator C6+D3).  Here, with a caller-supplied analysis date, both
-  windows are computed in a single ``groupBy`` with conditional
-  aggregation (``sum(when(d >= cutoff, x))``) — one shuffle instead of
-  two plus a join.  When the analysis date must be DERIVED (max(date)+1
-  over the filtered fact), the single-pass form costs an extra full max
-  pass first; for callers whose input plan is expensive to evaluate
-  (``split_windows=True``, e.g. the merchant job's hybrid resolver) the
-  lifetime window is instead aggregated alone (per-group ``max(d)``
-  raw), the analysis date falls out of the |groups|-sized aggregate for
-  free, and the short window aggregates only the date-filtered slice —
-  one full pass plus one short-slice pass, measured 20% faster there;
-  for plain projections the single-pass form measures faster and stays
-  the default (r11 A/B in both directions).
+* **analysis_date in the plan.**  ``max(date) + 1 day`` over the
+  filtered fact (db_to_RFManalysis.py:236, operator D4) is a one-row
+  aggregate that rides a broadcast cross join into the plan.  Its
+  ``raise_error`` keeps the contract that an input without a non-null
+  date fails; a zero-row union branch makes it fire on empty input too.
+* **Dual time windows in one pass.**  The reference aggregates the fact
+  twice (lifetime + last-365-days) and left-joins the results
+  (db_to_RFManalysis.py:236-255, operator C6+D3).  Here both windows are
+  one ``groupBy`` with conditional aggregation
+  (``sum(when(d >= cutoff, x))``) — one shuffle instead of two plus a
+  join.
 * **Stage-scoped ranks preserved.**  The reference computes short-window
   ranks *inside* the short-window aggregate, i.e. only among groups with
   short-window activity, then backfills 0 after the join (SURVEY §4 trap
@@ -29,26 +25,26 @@ Scale design decisions (vs. the reference's pandas shape):
   inactive groups; ranks skip nulls (pandas NaN semantics); the final
   fill maps null short metrics/ranks → 0 and null short recency → 9999
   (db_to_RFManalysis.py:252-255).
-* **Ranks without a global sort** — see ``functions.ranks``.
-* **analysis_date** is ``max(date)+1 day`` over the filtered fact
-  (db_to_RFManalysis.py:236, operator D4) — computed as a scalar
-  aggregate; at scale this is one cheap ``max`` over a column with
-  parquet min/max statistics.
+* **Ranks** (``functions.ranks``) are global over the |groups|-sized
+  aggregate.  It is coalesced into one partition (no exchange) and each
+  window is keyed by the analysis-date column, constant over the
+  aggregate: the ranks add no exchange, and neither does a sort after
+  them.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import caching
-from ..functions.ranks import SMALL_INPUT_THRESHOLD, with_pct_rank
+from ..functions.ranks import with_pct_rank
 
 #: Bank-noise transaction types excluded from every RFM job
 #: (db_to_RFManalysis.py:23, db_to_Payment_RFM.py:28, db_to_card_RFM.py:20).
 EXCLUDE_TYPE_KEYWORDS = r"繳款|折抵|各項費用|手續費|年費|利息"
+
+#: The reference's short window, in days (SURVEY B10, ``ANALYSIS_DAYS``).
+ANALYSIS_DAYS = 365
 
 
 def exclude_bank_noise(
@@ -64,12 +60,46 @@ def exclude_bank_noise(
     )
 
 
-def analysis_date_of(df: DataFrame, date_col: str) -> _dt.date:
-    """Operator D4: ``max(date) + 1 day`` as a driver-side scalar."""
-    row = df.agg(F.max(F.to_date(F.col(date_col))).alias("mx")).first()
-    if row is None or row["mx"] is None:
-        raise ValueError(f"no non-null values in {date_col}")
-    return row["mx"] + _dt.timedelta(days=1)
+def _analysis_date(df: DataFrame, date_col: str) -> DataFrame:
+    """Operator D4: the one-row frame ``__ad = max(date) + 1 day``.
+
+    Evaluating it raises ``no non-null values in <date_col>`` when the
+    input has no non-null date (all-null or empty)."""
+    mx = F.max(F.to_date(F.col(date_col)))
+    return df.agg(
+        F.when(
+            mx.isNull(),
+            F.raise_error(F.lit(f"no non-null values in {date_col}")),
+        )
+        .otherwise(F.date_add(mx, 1))
+        .alias("__ad")
+    )
+
+
+def _checked(out: DataFrame, ad: DataFrame) -> DataFrame:
+    """``out`` plus a zero-row branch that evaluates ``ad``.
+
+    A broadcast cross join with ``ad`` raises on all-null dates but not
+    on empty input: the optimizer and AQE drop the join once its other
+    side is known to be empty, and ``ad`` never runs.  The union branch
+    selects from ``ad`` itself, so no rule can prune it; it keeps no
+    row, because ``__ad`` is null only where it raises."""
+    guard = ad.where(F.col("__ad").isNull()).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in out.schema.fields]
+    )
+    return out.unionByName(guard)
+
+
+def trailing_window(df: DataFrame, date_col: str) -> DataFrame:
+    """Operator B10: keep the last ``ANALYSIS_DAYS`` days up to the
+    latest date, ``d >= max(d) - 365`` (db_to_card_RFM.py:119-122)."""
+    ad = _analysis_date(df, date_col)
+    cutoff = F.date_sub(F.col("__ad"), ANALYSIS_DAYS + 1)
+    return (
+        df.crossJoin(F.broadcast(ad))
+        .where(F.to_date(F.col(date_col)) >= cutoff)
+        .drop("__ad")
+    )
 
 
 def rfm_aggregate(
@@ -79,76 +109,52 @@ def rfm_aggregate(
     date_col: str = "transaction_date",
     id_col: str = "transaction_id",
     amount_col: str = "payment_amount",
-    analysis_date: _dt.date | None = None,
-    prefix: str = "",
-    extra_first: list[str] | None = None,
     rank_metrics: tuple[str, ...] = ("r", "f", "m"),
 ) -> DataFrame:
     """Operator D1/D2: single-window RFM aggregate.
 
-    recency = days from last activity to ``analysis_date``;
+    recency = days from last activity to the analysis date;
     frequency = exact distinct ids (reference uses ``nunique``,
     db_to_RFManalysis.py:142 — ``approx_count_distinct`` is deliberately
-    NOT used to preserve semantics; swap in at scale only if profiling
-    demands); monetary = sum of amounts.  Ranks are appended with pandas
-    percentile semantics: recency descending, frequency/monetary
-    ascending (db_to_card_RFM.py:47-48).  ``rank_metrics`` picks which —
-    the card job ranks only frequency/monetary (db_to_card_RFM.py:47-48),
-    and each rank costs a join, so don't compute unrequested ones.
+    NOT used to preserve semantics); monetary = sum of amounts.  Ranks
+    are appended with pandas percentile semantics: recency descending,
+    frequency/monetary ascending (db_to_card_RFM.py:47-48).
+    ``rank_metrics`` picks which — the card job ranks only
+    frequency/monetary (db_to_card_RFM.py:47-48).
     """
     d = F.to_date(F.col(date_col))
-    # recency depends on analysis_date only through a POST-aggregation
-    # datediff, so the per-group max(d) is aggregated raw and the
-    # analysis date (when not supplied) is derived as max-of-max from
-    # the |groups|-sized aggregate — r11: this removes the separate
-    # full-fact max pass `analysis_date_of` ran per invocation (one
-    # fact pass total instead of two, and no driver stall before the
-    # plan exists).
-    aggs = [
-        F.max(d).alias("__gmax"),
-        F.countDistinct(F.col(id_col)).alias(f"{prefix}frequency"),
-        F.sum(F.col(amount_col)).alias(f"{prefix}monetary"),
-    ]
-    for c in extra_first or []:
-        aggs.append(F.first(F.col(c), ignorenulls=True).alias(c))
-    out = df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-    distributed = False
-    if rank_metrics or analysis_date is None:
-        # The aggregate feeds the analysis-date scalar and one rank
-        # join per metric; persist it and use its (now known)
-        # cardinality to pick the rank strategy.  Tracked for release
-        # at the next query boundary (caching.py) — the returned frame
-        # reads this cache, so it can't be unpersisted here.  One job
-        # returns the scalar AND the cardinality.
-        out = caching.track(out.persist())
-        row = out.agg(
-            F.max("__gmax").alias("mx"), F.count(F.lit(1)).alias("n")
-        ).first()
-        if analysis_date is None:
-            if row is None or row["mx"] is None:
-                raise ValueError(f"no non-null values in {date_col}")
-            analysis_date = row["mx"] + _dt.timedelta(days=1)
-        distributed = (row["n"] if row is not None else 0) >= SMALL_INPUT_THRESHOLD
-    out = out.select(
-        *[F.col(k) for k in keys],
-        F.datediff(F.lit(analysis_date), F.col("__gmax")).alias(
-            f"{prefix}recency_days"
-        ),
-        f"{prefix}frequency",
-        f"{prefix}monetary",
-        *(extra_first or []),
+    ad = _analysis_date(df, date_col)
+    # recency depends on the analysis date only through a
+    # post-aggregation datediff, so the date joins the |groups|-sized
+    # aggregate, not the fact
+    out = (
+        df.groupBy(*[F.col(k) for k in keys])
+        .agg(
+            F.max(d).alias("__gmax"),
+            F.countDistinct(F.col(id_col)).alias("frequency"),
+            F.sum(F.col(amount_col)).alias("monetary"),
+        )
+        .crossJoin(F.broadcast(ad))
+        .select(
+            *[F.col(k) for k in keys],
+            F.datediff(F.col("__ad"), F.col("__gmax")).alias("recency_days"),
+            "frequency",
+            "monetary",
+            "__ad",
+        )
+        .coalesce(1)
     )
     rank_specs = {
-        "r": (f"{prefix}recency_days", False, f"{prefix}r_rank"),
-        "f": (f"{prefix}frequency", True, f"{prefix}f_rank"),
-        "m": (f"{prefix}monetary", True, f"{prefix}m_rank"),
+        "r": ("recency_days", False, "r_rank"),
+        "f": ("frequency", True, "f_rank"),
+        "m": ("monetary", True, "m_rank"),
     }
     for metric in rank_metrics:
         col, asc, out_name = rank_specs[metric]
         out = with_pct_rank(
-            out, col, ascending=asc, out=out_name, distributed=distributed
+            out, col, ascending=asc, out=out_name, partition_by=("__ad",)
         )
-    return out
+    return _checked(out.drop("__ad"), ad)
 
 
 def rfm_dual_window(
@@ -158,175 +164,50 @@ def rfm_dual_window(
     date_col: str = "transaction_date",
     id_col: str = "transaction_id",
     amount_col: str = "payment_amount",
-    short_days: int = 365,
-    analysis_date: _dt.date | None = None,
-    extra_first: list[str] | None = None,
-    split_windows: bool = False,
 ) -> DataFrame:
-    """Operators D1+D3+C6+E1: lifetime & last-``short_days`` RFM in ONE
-    shuffle via conditional aggregation, with stage-scoped ranks and the
-    reference's null-fill contract (short metrics/ranks→0, short
+    """Operators D1+D3+C6+E1: lifetime & last-``ANALYSIS_DAYS`` RFM in
+    ONE shuffle via conditional aggregation, with stage-scoped ranks and
+    the reference's null-fill contract (short metrics/ranks→0, short
     recency→9999; db_to_RFManalysis.py:252-255).
     """
     d = F.to_date(F.col(date_col))
-    if analysis_date is not None or not split_windows:
-        # Known analysis date (or a cheap-to-evaluate input plan, the
-        # ``split_windows=False`` default): both windows in ONE pass
-        # via conditional aggregation (one shuffle instead of two plus
-        # a join).  A derived analysis date costs one extra max pass
-        # first — measured CHEAPER than the split form when the input
-        # plan is a plain projection (r11 A/B: rfm_customer_dual_window
-        # 3.5s single-pass vs 4.9s split), because the scan is cheap
-        # and the split form's second aggregate + group join add
-        # exchanges.
-        derived = analysis_date is None
-        if derived:
-            # r12: the derived analysis date used to be a DRIVER scalar
-            # (`analysis_date_of`: its own action → 2-3 AQE jobs plus a
-            # py4j round-trip BEFORE the main aggregate's plan could be
-            # built — ~1s of serialized driver wall at sf0.1).  Instead
-            # the 1-row max rides a broadcast cross join INTO the same
-            # query execution: identical values (analysis_date =
-            # max(d)+1 exactly as before, now as a column), one driver
-            # action fewer, and the scalar never touches the driver.
-            mx = df.agg(F.max(d).alias("__mxd"))
-            base = df.crossJoin(F.broadcast(mx))
-            ad_col = F.date_add(F.col("__mxd"), 1)
-        else:
-            base = df
-            ad_col = F.lit(analysis_date)
-        in_short = d >= F.date_sub(ad_col, short_days)
-        aggs = [
+    ad = _analysis_date(df, date_col)
+    ad_col = F.col("__ad")
+    in_short = d >= F.date_sub(ad_col, ANALYSIS_DAYS)
+    agg = (
+        df.crossJoin(F.broadcast(ad))
+        .groupBy(*[F.col(k) for k in keys])
+        .agg(
             F.max(d).alias("__gmax"),
             F.countDistinct(F.col(id_col)).alias("life_frequency"),
             F.sum(F.col(amount_col)).alias("life_monetary"),
             F.max(F.when(in_short, d)).alias("__smax"),
-            F.countDistinct(
-                F.when(in_short, F.col(id_col))
-            ).alias("__short_freq_raw"),
+            F.countDistinct(F.when(in_short, F.col(id_col))).alias("__sfreq"),
             F.sum(F.when(in_short, F.col(amount_col))).alias("short_monetary"),
             # constant within every group (it is a global scalar);
             # max() carries it through the aggregate as a fixed-width
             # DATE so the recency datediffs stay post-aggregation
             F.max(ad_col).alias("__ad"),
-        ]
-        for c in extra_first or []:
-            aggs.append(F.first(F.col(c), ignorenulls=True).alias(c))
-        agg = base.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-        agg = agg.select(
-            *[F.col(k) for k in keys],
-            F.datediff(F.col("__ad"), F.col("__gmax")).alias(
-                "life_recency_days"
-            ),
-            "life_frequency",
-            "life_monetary",
-            F.datediff(F.col("__ad"), F.col("__smax")).alias(
-                "short_recency_days"
-            ),
-            "__short_freq_raw",
-            "short_monetary",
-            "__ad",
-            *(extra_first or []),
         )
+    )
+    short_recency = F.datediff(ad_col, F.col("__smax"))
+    agg = agg.select(
+        *[F.col(k) for k in keys],
+        F.datediff(ad_col, F.col("__gmax")).alias("life_recency_days"),
+        "life_frequency",
+        "life_monetary",
+        short_recency.alias("short_recency_days"),
+        "short_monetary",
         # countDistinct of an all-null set is 0, not null; the
-        # reference's left join yields NaN→fillna(0).  Normalize
-        # 0-with-no-activity to null first so rank scoping (only
-        # short-active groups are ranked) matches the reference, then
-        # fill back to 0 at the end.
-        agg = agg.withColumn(
-            "short_frequency",
-            F.when(
-                F.col("short_recency_days").isNotNull(),
-                F.col("__short_freq_raw"),
-            ),
-        ).drop("__short_freq_raw")
-        # Each percentile rank fans out into its own distinct-value
-        # branch; without persistence Spark recomputes the fact
-        # aggregation once per branch (7 scans + 7 shuffles observed in
-        # the physical plan).  The aggregate is |groups| rows — orders
-        # of magnitude smaller than the fact — so caching it is the
-        # right trade at any scale.  Its count (already materialized by
-        # the persist) picks the rank strategy: small group tables use
-        # the single-window path, huge ones the two-pass
-        # range-partitioned rank (functions.ranks).  Tracked for
-        # release at the next query boundary (caching.py).  The same
-        # job also returns the derived analysis date so the
-        # no-non-null-dates contract still raises.
-        agg = caching.track(agg.persist())
-        row = agg.agg(
-            F.count(F.lit(1)).alias("n"), F.max("__ad").alias("mx")
-        ).first()
-        if derived and (row is None or row["n"] == 0 or row["mx"] is None):
-            raise ValueError(f"no non-null values in {date_col}")
-        n_groups = row["n"] if row is not None else 0
-        agg = agg.drop("__ad")
-    else:
-        # Derived analysis date with an EXPENSIVE input plan
-        # (``split_windows=True`` — callers whose upstream is a heavy
-        # resolver/cleanse chain, e.g. rfm_merchant_full's hybrid
-        # regex resolver; r11 A/B: 7.2s → 5.8s): the
-        # conditional-aggregation form needed the cutoff literal INSIDE
-        # the aggregate, which forced a separate full-fact max pass
-        # (`analysis_date_of`) first — re-evaluating the whole upstream
-        # plan.
-        # Instead aggregate the LIFETIME window alone (per-group max(d)
-        # raw), derive analysis_date as max-of-max from the
-        # |groups|-sized cached aggregate, and aggregate the short
-        # window over the date-filtered slice — one full pass plus one
-        # short-slice pass (a fraction of the fact under a 365-day
-        # window at scale, and date predicates prune at the scan)
-        # instead of two full passes.  The group-keyed left join
-        # reproduces the conditional form's null contract exactly:
-        # absent groups ⇒ null short metrics.
-        life_aggs = [
-            F.max(d).alias("__gmax"),
-            F.countDistinct(F.col(id_col)).alias("life_frequency"),
-            F.sum(F.col(amount_col)).alias("life_monetary"),
-        ]
-        for c in extra_first or []:
-            life_aggs.append(F.first(F.col(c), ignorenulls=True).alias(c))
-        agg0 = df.groupBy(*[F.col(k) for k in keys]).agg(*life_aggs)
-        agg0 = caching.track(agg0.persist())
-        row = agg0.agg(
-            F.max("__gmax").alias("mx"), F.count(F.lit(1)).alias("n")
-        ).first()
-        if row is None or row["mx"] is None:
-            raise ValueError(f"no non-null values in {date_col}")
-        analysis_date = row["mx"] + _dt.timedelta(days=1)
-        n_groups = row["n"]
-        cutoff = analysis_date - _dt.timedelta(days=short_days)
-        short = (
-            df.where(d >= F.lit(cutoff))
-            .groupBy(*[F.col(k) for k in keys])
-            .agg(
-                F.datediff(
-                    F.lit(analysis_date), F.max(d)
-                ).alias("short_recency_days"),
-                F.countDistinct(F.col(id_col)).alias("short_frequency"),
-                F.sum(F.col(amount_col)).alias("short_monetary"),
-            )
-        )
-        agg = (
-            agg0.join(short, keys, "left")
-            .select(
-                *[F.col(k) for k in keys],
-                F.datediff(F.lit(analysis_date), F.col("__gmax")).alias(
-                    "life_recency_days"
-                ),
-                "life_frequency",
-                "life_monetary",
-                "short_recency_days",
-                "short_monetary",
-                *(extra_first or []),
-                "short_frequency",
-            )
-        )
-        # the rank branches fan out over the joined frame; persist it so
-        # the short aggregate is not recomputed per branch (|groups|
-        # rows — cheap at any scale)
-        agg = caching.track(agg.persist())
-    distributed = n_groups >= SMALL_INPUT_THRESHOLD
-
+        # reference's left join yields NaN→fillna(0).  Null it for
+        # groups with no short activity so rank scoping (only
+        # short-active groups are ranked) matches the reference; the
+        # fill below maps it back to 0.
+        F.when(short_recency.isNotNull(), F.col("__sfreq")).alias(
+            "short_frequency"
+        ),
+        "__ad",
+    ).coalesce(1)
     for col, asc, out in [
         ("life_recency_days", False, "life_r_rank"),
         ("life_frequency", True, "life_f_rank"),
@@ -336,7 +217,7 @@ def rfm_dual_window(
         ("short_monetary", True, "short_m_rank"),
     ]:
         agg = with_pct_rank(
-            agg, col, ascending=asc, out=out, distributed=distributed
+            agg, col, ascending=asc, out=out, partition_by=("__ad",)
         )
 
     fill_zero = [
@@ -346,9 +227,9 @@ def rfm_dual_window(
         "short_f_rank",
         "short_m_rank",
     ]
-    agg = agg.na.fill({c: 0 for c in fill_zero})
+    agg = agg.drop("__ad").na.fill({c: 0 for c in fill_zero})
     agg = agg.na.fill({"short_recency_days": 9999})
-    return agg
+    return _checked(agg, ad)
 
 
 # --- Segment labelers (operators I2 / I3 / I4) -------------------------

@@ -291,7 +291,6 @@ def rfm_merchant_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         date_col="d",
         id_col="transaction_id",
         amount_col="amt",
-        split_windows=False,
     )
     return res.select(
         "clean_merchant_name",

@@ -395,23 +395,18 @@ def rfm_card_portfolio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bank, card) with f/m pandas ranks only, D7 truncating avg_ticket,
     I4 role matrix, F1 monetary-desc output sort.
     """
-    import datetime as _dt
-
     fact = synth_transactions(spark, sf_dir)
     clean = rfm_ops.exclude_bank_noise(fact).where(
         F.col("card_name").isNotNull() & (F.col("card_name") != "")
     )
-    analysis_date = rfm_ops.analysis_date_of(clean, "d")
-    latest = analysis_date - _dt.timedelta(days=1)
-    cutoff = latest - _dt.timedelta(days=365)
-    win = clean.where(F.col("d") >= F.lit(cutoff))
+    # max(d) over the window equals max(d) over ``clean``, so the
+    # aggregate's own analysis date is the window's anchor + 1 day
     agg = rfm_ops.rfm_aggregate(
-        win,
+        rfm_ops.trailing_window(clean, "d"),
         ["bank_name", "card_name"],
         date_col="d",
         id_col="transaction_id",
         amount_col="amt",
-        analysis_date=analysis_date,
         rank_metrics=("f", "m"),
     )
     agg = agg.withColumn("monetary", F.col("monetary") / 100.0)

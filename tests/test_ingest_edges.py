@@ -1,7 +1,7 @@
 """Ingest edge cases: rows with too many fields skipped and short rows
 padded, each file read under its own header, keyword-less files fall
 back to line 0, empty directories yield an empty canonical frame, and
-the extract-to-warehouse path leaves no persisted RDD behind."""
+the extract-to-report path leaves no persisted RDD behind."""
 
 from __future__ import annotations
 
@@ -114,8 +114,13 @@ def test_empty_dir_yields_empty_canonical(spark, tmp_path):
 
 
 def test_load_path_pins_no_persisted_rdd(spark, tmp_path):
-    """Extract → refine → warehouse, closed three times in one session,
-    leaves no persisted or checkpointed RDD in the SparkContext."""
+    """Extract → refine → warehouse, closed six times in one session and
+    each close followed by the card RFM report, leaves no persisted or
+    checkpointed RDD in the SparkContext and no tracked frame."""
+    from pyspark.sql import functions as F
+
+    from credit_card_etl_pipeline_spark.functions import caching
+    from credit_card_etl_pipeline_spark.operators import rfm as rfm_ops
     from credit_card_etl_pipeline_spark.plans.refine import RefineConfig, refine
     from credit_card_etl_pipeline_spark.warehouse import (
         to_warehouse,
@@ -130,12 +135,29 @@ def test_load_path_pins_no_persisted_rdd(spark, tmp_path):
     jsc = spark.sparkContext._jsc
     for rdd in list(jsc.getPersistentRDDs().values()):  # other tests' leftovers
         rdd.unpersist(True)
-    sizes = []
-    for _ in range(3):
+    caching.release_tracked()
+    sizes, tracked = [], []
+    for _ in range(6):
         wh = to_warehouse(refine(run_etl(spark, str(d)), RefineConfig()))
         write_warehouse(wh, str(tmp_path / "wh"), expected_rows=7)
+        # the card report as perfbench and examples/run_pipeline.py run it
+        table = spark.read.parquet(str(tmp_path / "wh"))
+        clean = rfm_ops.exclude_bank_noise(table).where(
+            F.col("card_name").isNotNull() & (F.col("card_name") != "")
+        )
+        report = rfm_ops.rfm_aggregate(
+            clean,
+            ["bank_name", "card_name"],
+            date_col="transaction_date",
+            id_col="transaction_id",
+            amount_col="payment_amount",
+            rank_metrics=("f", "m"),
+        ).collect()
+        assert report
         sizes.append(jsc.getPersistentRDDs().size())
-    assert sizes == [0, 0, 0]
+        tracked.append(len(caching._TRACKED))
+    assert sizes == [0] * 6
+    assert tracked == [0] * 6
 
 
 def test_vendored_xlsx_shared_strings_and_sparse_cells(tmp_path):

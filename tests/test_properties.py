@@ -84,9 +84,7 @@ def test_classifier_assigns_at_most_one_type_and_is_total(spark, rows):
 def test_rank_bounds_and_monotonicity(spark, values, ascending):
     pdf = pd.DataFrame({"v": pd.array(values, dtype="Int64")})
     df = spark.createDataFrame(pdf)
-    out = with_pct_rank(
-        df, "v", ascending=ascending, out="p", distributed=False
-    ).collect()
+    out = with_pct_rank(df, "v", ascending=ascending, out="p").collect()
     got = {r["v"]: r["p"] for r in out}
     non_null = sorted({v for v in values if v is not None})
     if not ascending:

@@ -14,8 +14,7 @@ from credit_card_etl_pipeline_spark.functions.ranks import with_pct_rank
 
 
 @pytest.mark.parametrize("ascending", [True, False])
-@pytest.mark.parametrize("distributed", [False, True])
-def test_rank_matches_pandas_inside_spark(spark, ascending, distributed):
+def test_rank_matches_pandas_inside_spark(spark, ascending):
     src = spark.range(2000).select(
         F.col("id"),
         (F.col("id") % 97).alias("v"),  # heavy ties
@@ -38,10 +37,7 @@ def test_rank_matches_pandas_inside_spark(spark, ascending, distributed):
     )
     got = {
         r["id"]: r["p"]
-        for r in with_pct_rank(
-            src, "v", ascending=ascending, out="p", distributed=distributed,
-            num_partitions=7,
-        ).collect()
+        for r in with_pct_rank(src, "v", ascending=ascending, out="p").collect()
     }
     for r in expected:
         if r["p"] is None or pd.isna(r["p"]):

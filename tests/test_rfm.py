@@ -82,43 +82,22 @@ def test_avg_ticket_truncates(spark):
     assert out[7.0] == 3  # 3.5 truncated
 
 
-def test_dual_window_split_matches_single_pass(spark):
-    """split_windows=True (lifetime agg + short-slice agg + group join,
-    r11) must reproduce the conditional single-pass form exactly —
-    including the null contract for groups with no short activity and
-    extra_first carry-through."""
-    from pyspark.sql import functions as F
-
-    df = _fact(spark).withColumn("cat", F.concat_ws("-", "k"))
-    single = rfm_ops.rfm_dual_window(
-        df, ["k"], date_col="d", id_col="id", amount_col="amt",
-        extra_first=["cat"],
-    )
-    split = rfm_ops.rfm_dual_window(
-        df, ["k"], date_col="d", id_col="id", amount_col="amt",
-        extra_first=["cat"], split_windows=True,
-    )
-    assert single.columns == split.columns
-    a = sorted(map(tuple, single.collect()))
-    b = sorted(map(tuple, split.collect()))
-    assert a == b
-
-
 def test_derived_analysis_date_requires_a_non_null_date(spark):
     """A derived analysis date is max(date) + 1: all-null dates and an
-    empty input have none, on both the single-pass and split plans."""
+    empty input have none.  The plan raises at its first action."""
     all_null = spark.createDataFrame(
         [(1, 101, None, 100), (2, 201, None, 50)],
         "k long, id long, d date, amt long",
     )
     empty = all_null.limit(0)
     for df in (all_null, empty):
-        for split in (False, True):
-            with pytest.raises(ValueError, match="no non-null values in d"):
-                rfm_ops.rfm_dual_window(
-                    df, ["k"], date_col="d", id_col="id", amount_col="amt",
-                    split_windows=split,
-                )
+        with pytest.raises(
+            Exception,
+            match=r"USER_RAISED_EXCEPTION\] no non-null values in d",
+        ):
+            rfm_ops.rfm_dual_window(
+                df, ["k"], date_col="d", id_col="id", amount_col="amt"
+            ).collect()
 
 
 def test_hybrid_rule_replacement_determines_category():

@@ -46,11 +46,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: side so the allowlist is auditable.
 BNLJ_ALLOWED: dict[str, str] = {
     # Derived analysis date: the 1-row max(date) aggregate rides a
-    # broadcast cross join into the dual-window aggregate
-    # (operators/rfm.rfm_dual_window) instead of a driver round-trip.
+    # broadcast cross join into the RFM plan (operators/rfm
+    # ._analysis_date) instead of a driver round-trip.
     "rfm_customer_dual_window": "1-row max-date analysis anchor",
     "rfm_payment_method": "1-row max-date analysis anchor",
     "rfm_merchant_full": "1-row max-date analysis anchor",
+    "rfm_card_portfolio": "1-row max-date analysis anchor",
     # ANN probes: the explicitly-broadcast query-vector frame (n_queries
     # rows, ≪ corpus) joined to candidates on a NON-EQUI condition
     # (cand_id != query_id) — similarity.cosine_topk, ann_hamming_topk.
