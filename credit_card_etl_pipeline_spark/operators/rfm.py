@@ -60,13 +60,11 @@ def exclude_bank_noise(
     )
 
 
-def _analysis_date(df: DataFrame, date_col: str) -> DataFrame:
-    """Operator D4: the one-row frame ``__ad = max(date) + 1 day``.
-
-    Evaluating it raises ``no non-null values in <date_col>`` when the
-    input has no non-null date (all-null or empty)."""
-    mx = F.max(F.to_date(F.col(date_col)))
-    return df.agg(
+def _day_after(mx: F.Column, date_col: str) -> F.Column:
+    """Operator D4: ``__ad = mx + 1 day`` for the aggregate ``mx`` of
+    ``date_col``.  Evaluating it raises ``no non-null values in
+    <date_col>`` where ``mx`` is null (all-null or empty input)."""
+    return (
         F.when(
             mx.isNull(),
             F.raise_error(F.lit(f"no non-null values in {date_col}")),
@@ -74,6 +72,11 @@ def _analysis_date(df: DataFrame, date_col: str) -> DataFrame:
         .otherwise(F.date_add(mx, 1))
         .alias("__ad")
     )
+
+
+def _analysis_date(df: DataFrame, date_col: str) -> DataFrame:
+    """The one-row frame ``__ad = max(date) + 1 day`` (see _day_after)."""
+    return df.agg(_day_after(F.max(F.to_date(F.col(date_col))), date_col))
 
 
 def _checked(out: DataFrame, ad: DataFrame) -> DataFrame:
@@ -123,18 +126,22 @@ def rfm_aggregate(
     frequency/monetary (db_to_card_RFM.py:47-48).
     """
     d = F.to_date(F.col(date_col))
-    ad = _analysis_date(df, date_col)
-    # recency depends on the analysis date only through a
-    # post-aggregation datediff, so the date joins the |groups|-sized
-    # aggregate, not the fact
+    agg = df.groupBy(*[F.col(k) for k in keys]).agg(
+        F.max(d).alias("__gmax"),
+        F.countDistinct(F.col(id_col)).alias("frequency"),
+        F.sum(F.col(amount_col)).alias("monetary"),
+    )
+    # max(d) is the max of the group maxima, so the analysis date comes
+    # from the |groups|-sized aggregate, not from a second pass over the
+    # fact.  The struct keeps every aggregate column in this branch, so
+    # column pruning leaves its subplan equal to the report's and the
+    # shuffle is reused; ordered by its first field, its max carries the
+    # latest date.  Recency uses the date only in a post-aggregation
+    # datediff.
+    latest = F.max(F.struct("__gmax", "frequency", "monetary"))["__gmax"]
+    ad = agg.agg(_day_after(latest, date_col))
     out = (
-        df.groupBy(*[F.col(k) for k in keys])
-        .agg(
-            F.max(d).alias("__gmax"),
-            F.countDistinct(F.col(id_col)).alias("frequency"),
-            F.sum(F.col(amount_col)).alias("monetary"),
-        )
-        .crossJoin(F.broadcast(ad))
+        agg.crossJoin(F.broadcast(ad))
         .select(
             *[F.col(k) for k in keys],
             F.datediff(F.col("__ad"), F.col("__gmax")).alias("recency_days"),

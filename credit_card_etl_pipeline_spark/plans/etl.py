@@ -3,8 +3,9 @@
 One lazy plan over every bank's statements, each step run once over all
 banks and reading the bank from the row:
 
-    statement_lines (A1 scan + A4 decode + A5 html + A3 per-file header
-                     + B1/B2 mapping, ONE binaryFile pass; A2 filename meta)
+    statement_lines (A1 scan + A4 decode + A5 html + A6 workbooks + A3
+                     per-file header + B1/B2 mapping, ONE binaryFile pass;
+                     A2 filename meta)
       → B3 init missing canonical columns
       → extract_card_info (E2 ordered ffill + H8 + B11)
       → parse_bank_specific (H7 / H9 / bank defaults)

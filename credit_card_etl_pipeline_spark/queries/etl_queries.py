@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from .. import schema as S
 from ..functions.cleanse import general_cleanse
 from ..operators.extract_cards import extract_card_info
-from ..sources.ingest import BankSpec, read_excel_statement, statement_lines
+from ..sources.ingest import BankSpec, statement_lines
 from . import load, query
 
 # ====================================================================
@@ -515,10 +515,15 @@ def ingest_statement_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A6 Excel ingest (vendored stdlib .xlsx reader; etl.py:312-316)
 # ====================================================================
 
+def _data_row_index() -> F.Column:
+    """``pos`` counted from 0 at the first data row: the workbook
+    fixtures carry their header on line 0."""
+    return (F.col("pos") - 1).alias("pos")
+
+
 _EXCEL_SPEC = BankSpec(
     bank_id="fubon_bank",
     keywords=["富邦"],
-    file_type="excel",
     header_keyword=None,
     columns_mapping={
         "交易日期": S.TRANSACTION_DATE,
@@ -547,16 +552,16 @@ FROM (VALUES
 
 @query("ingest_excel_statement", _EXCEL_ORACLE)
 def ingest_excel_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6 (etl.py:312-316): Excel statement ingest through the vendored
-    stdlib .xlsx parser (sources/xlsx.py — pandas.read_excel is used
-    instead when a workbook engine is installed), checked against the
-    hand-transcribed content of the committed fixture workbook."""
-    df = read_excel_statement(
-        spark, str(_FIXTURE_DIR / "富邦_202405.xlsx"), _EXCEL_SPEC
+    """A6 (etl.py:312-316): Excel statement ingest through the one
+    statement parser, which reads the workbook with the vendored stdlib
+    .xlsx reader (sources/xlsx.py), checked against the hand-transcribed
+    content of the committed fixture workbook."""
+    df = statement_lines(
+        spark, str(_FIXTURE_DIR / "富邦_202405.xlsx"), [_EXCEL_SPEC]
     )
     return df.select(
         F.col(S.BANK_NAME).alias("bank"),
-        F.col("pos").cast("long").alias("pos"),
+        _data_row_index(),
         F.col(S.TRANSACTION_DATE).alias("txn_date"),
         F.col(S.CARD_NO).alias("card_no"),
         F.col(S.MERCHANT).alias("merchant"),
@@ -573,7 +578,6 @@ def ingest_excel_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
 _XLS_SPEC = BankSpec(
     bank_id="taishin_bank",
     keywords=["台新"],
-    file_type="excel",
     header_keyword=None,
     columns_mapping={
         "消費日": S.TRANSACTION_DATE,
@@ -608,12 +612,12 @@ def ingest_xls_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
     LABELSST/NUMBER/RK records), checked against the hand-transcribed
     content of the committed fixture workbook (tools/make_xls_fixture.py
     regenerates it)."""
-    df = read_excel_statement(
-        spark, str(_FIXTURE_DIR.parent / "台新_202406.xls"), _XLS_SPEC
+    df = statement_lines(
+        spark, str(_FIXTURE_DIR.parent / "台新_202406.xls"), [_XLS_SPEC]
     )
     return df.select(
         F.col(S.BANK_NAME).alias("bank"),
-        F.col("pos").cast("long").alias("pos"),
+        _data_row_index(),
         F.col(S.TRANSACTION_DATE).alias("txn_date"),
         F.col(S.CARD_NO).alias("card_no"),
         F.col(S.MERCHANT).alias("merchant"),

@@ -212,8 +212,8 @@ def export_workbook_configs_query(
 ) -> DataFrame:
     """A7 (convert_model.py:15-23,54-75): the committed master workbook
     (fixtures/configs_workbook.xlsx) exported to per-sheet BOM CSV
-    configs through the vendored stdlib path (pandas engine when
-    installed), read back utf-8-sig and hashed cell-by-cell — covers
+    configs through the vendored stdlib .xlsx reader, read back
+    utf-8-sig and hashed cell-by-cell — covers
     sheet-map routing, all-empty-row drops, and unmapped-sheet skips."""
     import os
     import tempfile

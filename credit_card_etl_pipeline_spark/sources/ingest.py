@@ -5,11 +5,18 @@ Re-expression of the reference's `etl.py` Part 2/3 ingest
 directory scan) in a Spark-native shape:
 
 * **One `binaryFile` scan** over the statement directory — files are
-  routed to banks by filename keyword (A1, etl.py:453-459) and decoded
-  (A4: utf-8 / cp950 / Big5, ``errors='replace'``) inside a single
-  Arrow-batched ``mapInPandas``.
+  routed to banks by filename keyword (A1, etl.py:453-459) and parsed
+  inside a single Arrow-batched ``mapInPandas`` by :func:`file_rows`,
+  which the driver can call on a file's bytes as well.
+* **One parser for every format** (A4-A6, etl.py:290-316): a file's
+  leading bytes, not its name or its bank, pick the format.  CSV text
+  is decoded in the bank's encoding (A4: utf-8 / cp950 / Big5,
+  ``errors='replace'``); HTML (A5) is flattened to cell-separator rows
+  by a stdlib-``HTMLParser`` table extractor, also when it carries an
+  ``.xls`` name; ``.xlsx`` and legacy ``.xls`` workbooks (A6) are read
+  by the vendored stdlib readers (``sources.xlsx``, ``sources.xls``).
 * **Each file under its own header** (A3 + B1/B2, etl.py:129-152): the
-  decode holds the whole file, so it finds the header there (the first
+  parse holds the whole file, so it finds the header there (the first
   of lines 0-50 containing the spec's ``header_keyword``, else line 0),
   maps that header's cells through the spec's ``columns_mapping`` and
   emits one fixed-schema row per data line: ``path``, ``Bank_Name``,
@@ -20,11 +27,6 @@ directory scan) in a Spark-native shape:
   padded with nulls.  Line numbers stay explicit — they carry the
   order-dependent forward-fill (E2, SURVEY §2.E) without relying on
   implicit row order.
-* **HTML statements** (A5, etl.py:290-304) are flattened to
-  cell-separator rows by a stdlib-``HTMLParser`` table extractor inside
-  the same decode step (BeautifulSoup/lxml are not required).
-* **Excel** (A6, etl.py:312-316) is a driver-side read of one workbook
-  (:func:`read_excel_statement`), sniffed by magic bytes.
 
 The scan is one lazy plan for every bank: no driver action, no cache,
 no per-bank branch.  Filename metadata (A2) is a Spark column
@@ -46,8 +48,8 @@ from pyspark.sql import types as T
 
 from .. import schema as S
 
-#: Cell separator used to flatten HTML table rows into "lines".
-HTML_CELL_SEP = "\x1f"
+#: Cell separator used to flatten HTML and workbook rows into "lines".
+CELL_SEP = "\x1f"
 
 
 @dataclass
@@ -58,7 +60,6 @@ class BankSpec:
     bank_id: str
     keywords: list[str]  # filename routing tokens (etl.py:453-459)
     columns_mapping: dict[str, str]  # raw header → canonical name
-    file_type: str = "csv"  # csv | html | excel
     encoding: str = "utf-8"
     header_keyword: str | None = None
 
@@ -69,7 +70,6 @@ DEFAULT_BANK_SPECS: list[BankSpec] = [
     BankSpec(
         bank_id="esun_bank",
         keywords=["玉山"],
-        file_type="csv",
         encoding="utf-8",
         header_keyword="交易日期",
         columns_mapping={
@@ -84,7 +84,6 @@ DEFAULT_BANK_SPECS: list[BankSpec] = [
     BankSpec(
         bank_id="cube_bank",
         keywords=["國泰", "國泰世華"],
-        file_type="csv",
         encoding="utf-8",
         header_keyword="信用卡號",
         columns_mapping={
@@ -99,7 +98,6 @@ DEFAULT_BANK_SPECS: list[BankSpec] = [
     BankSpec(
         bank_id="ctbc_bank",
         keywords=["中信", "中國信託"],
-        file_type="csv",
         encoding="cp950",
         header_keyword="消費日期",
         columns_mapping={
@@ -115,7 +113,6 @@ DEFAULT_BANK_SPECS: list[BankSpec] = [
     BankSpec(
         bank_id="hncb_bank",
         keywords=["華南"],
-        file_type="html",
         encoding="big5",
         header_keyword="交易日期",
         columns_mapping={
@@ -165,14 +162,14 @@ class _TableExtractor(HTMLParser):
 
 def html_table_lines(text: str, header_keyword: str | None) -> list[str]:
     """A5: rows of the table containing ``header_keyword``, flattened to
-    HTML_CELL_SEP-joined lines (etl.py:290-304)."""
+    CELL_SEP-joined lines (etl.py:290-304)."""
     parser = _TableExtractor()
     parser.feed(text)
     for table in parser.tables:
         if header_keyword is None or any(
             header_keyword in cell for row in table for cell in row
         ):
-            return [HTML_CELL_SEP.join(row) for row in table]
+            return [CELL_SEP.join(row) for row in table]
     return []
 
 
@@ -186,10 +183,47 @@ def route_bank(filename: str, specs: list[BankSpec]) -> BankSpec | None:
 
 _HEADER_SCAN_LINES = 50  # A3: header keyword searched in lines 0-50
 
+#: OLE2 / Compound-File-Binary magic — the container of legacy binary
+#: .xls workbooks (public format signature, [MS-CFB] 2.2).
+_OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
+_WORKBOOK_SUFFIXES = (".xls", ".xlsx")
 
-def _split_cells(line: str, html: bool) -> list[str]:
-    if html:
-        return line.split(HTML_CELL_SEP)
+
+def sniff_workbook_format(head: bytes) -> str:
+    """Classify a statement file by its leading bytes, not its name:
+    ``xlsx`` (zip), ``xls`` (OLE2 compound file), ``html`` (``<`` after
+    optional whitespace or a UTF-8 BOM — bank portals routinely serve
+    HTML under an .xls name), else ``csv``."""
+    head = head[:512]
+    if head[:4] == b"PK\x03\x04":
+        return "xlsx"
+    if head[:8] == _OLE2_MAGIC:
+        return "xls"
+    if head.removeprefix(b"\xef\xbb\xbf").lstrip()[:1] == b"<":
+        return "html"
+    return "csv"
+
+
+def workbook_sheets(path: str, data: bytes) -> dict[str, list[list[str]]]:
+    """Every worksheet of the .xlsx or .xls workbook ``data`` as name →
+    padded rows of cell strings, in workbook order.  Raises ValueError
+    naming ``path`` when ``data`` is no workbook or does not parse."""
+    kind = sniff_workbook_format(data)
+    if kind == "xlsx":
+        from .xlsx import read_xlsx_sheets as read
+    elif kind == "xls":
+        from .xls import read_xls_sheets as read
+    else:
+        raise ValueError(f"{path}: not an .xlsx or .xls workbook")
+    try:
+        return read(data)
+    except Exception as e:  # any reader failure is one unreadable file
+        raise ValueError(f"{path}: unreadable {kind} workbook: {e}") from e
+
+
+def _split_cells(line: str, table: bool) -> list[str]:
+    if table:
+        return line.split(CELL_SEP)
     return next(_csv.reader((line,)), [])
 
 
@@ -203,17 +237,29 @@ def _header_index(lines: list[str], keyword: str | None) -> int:
     return 0
 
 
-def _file_rows(
-    path: str, spec: BankSpec, lines: list[str], columns: list[str]
+def file_rows(
+    path: str, content: bytes, spec: BankSpec, columns: list[str]
 ) -> Iterator[tuple]:
-    """A3+B1+B2 for one file: its own header picks, for each canonical
-    column, the cell it comes from; one row per non-blank data line."""
+    """A3-A6 + B1/B2 for one statement file: its bytes pick the format,
+    its own header picks, for each of ``columns``, the cell it comes
+    from; one ``(path, Bank_Name, pos, *columns)`` row per non-blank
+    data line.  A file with a workbook name whose bytes are neither a
+    workbook nor HTML raises ValueError naming ``path``."""
+    kind = sniff_workbook_format(content)
+    if kind == "html":
+        text = content.decode(spec.encoding, errors="replace")
+        lines = html_table_lines(text, spec.header_keyword)
+    elif kind == "csv" and not path.lower().endswith(_WORKBOOK_SUFFIXES):
+        lines = content.decode(spec.encoding, errors="replace").splitlines()
+    else:
+        sheet = next(iter(workbook_sheets(path, content).values()), [])
+        lines = [CELL_SEP.join(row) for row in sheet]
     if not lines:
         return
-    html = spec.file_type == "html"
+    table = kind != "csv"
     hpos = _header_index(lines, spec.header_keyword)
     # B2: trim + flatten whitespace in raw header names (etl.py:301,319)
-    header = [" ".join(c.split()) for c in _split_cells(lines[hpos], html)]
+    header = [" ".join(c.split()) for c in _split_cells(lines[hpos], table)]
     where: dict[str, int] = {}
     for i, raw in enumerate(header):
         canonical = spec.columns_mapping.get(raw)
@@ -226,15 +272,15 @@ def _file_rows(
         if not line.strip(" "):
             continue
         try:
-            cells = _split_cells(line, html)
+            cells = _split_cells(line, table)
         except _csv.Error:  # e.g. a field over the csv module's size limit
             continue
-        if not html and len(cells) > width:
+        if not table and len(cells) > width:
             continue  # etl.py:146 on_bad_lines='skip': too many fields
         # short rows pad with nulls; an empty CSV field is null, an empty
-        # HTML cell stays ''
+        # HTML or workbook cell stays ''
         vals = [None if i is None or i >= len(cells) else cells[i] for i in idx]
-        if not html:
+        if not table:
             vals = [v or None for v in vals]
         yield (path, spec.bank_id, pos, *vals)
 
@@ -242,10 +288,10 @@ def _file_rows(
 def statement_lines(
     spark: SparkSession, data_dir: str, specs: list[BankSpec] | None = None
 ) -> DataFrame:
-    """A1-A5 + B1/B2: one distributed frame of every data line of every
-    routable statement file under ``data_dir`` — ``path``,
-    ``Bank_Name``, ``pos``, the canonical raw string columns, and the
-    filename's ``base_year`` / ``bill_month`` (A2)."""
+    """A1-A6 + B1/B2: one distributed frame of every data line of every
+    routable statement file under ``data_dir`` (a directory or one
+    file) — ``path``, ``Bank_Name``, ``pos``, the canonical raw string
+    columns, and the filename's ``base_year`` / ``bill_month`` (A2)."""
     spec_list = list(specs if specs is not None else DEFAULT_BANK_SPECS)
     # every spec's mapping targets, in first-seen order
     columns = list(
@@ -271,14 +317,8 @@ def statement_lines(
             out: list[tuple] = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 spec = route_bank(path.rsplit("/", 1)[-1], spec_list)
-                if spec is None:
-                    continue
-                text = bytes(content).decode(spec.encoding, errors="replace")
-                if spec.file_type == "html":
-                    lines = html_table_lines(text, spec.header_keyword)
-                else:
-                    lines = text.splitlines()
-                out.extend(_file_rows(path, spec, lines, columns))
+                if spec is not None:
+                    out.extend(file_rows(path, bytes(content), spec, columns))
             yield pd.DataFrame(out, columns=names)
 
     return files.mapInPandas(decode, schema).withColumns(
@@ -327,84 +367,3 @@ def parse_banks(
     frame, in spec order (lazy, no action)."""
     specs = specs if specs is not None else DEFAULT_BANK_SPECS
     return {s.bank_id: lines.where(F.col(S.BANK_NAME) == s.bank_id) for s in specs}
-
-
-#: OLE2 / Compound-File-Binary magic — the container of legacy binary
-#: .xls workbooks (public format signature, [MS-CFB] 2.2).
-_OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
-
-
-def sniff_workbook_format(path: str) -> str:
-    """Classify a workbook file by leading bytes, not extension:
-    ``xlsx`` (PK zip), ``xls`` (OLE2 compound file), ``html`` (bank
-    portals routinely serve HTML with an .xls name), else ``unknown``."""
-    with open(path, "rb") as f:
-        head = f.read(512)
-    if head[:4] == b"PK\x03\x04":
-        return "xlsx"
-    if head[:8] == _OLE2_MAGIC:
-        return "xls"
-    if head.lstrip()[:1] == b"<":
-        return "html"
-    return "unknown"
-
-
-def read_excel_statement(
-    spark: SparkSession, path: str, spec: BankSpec
-) -> DataFrame:
-    """A6 (etl.py:312-316): driver-side Excel read.  The file format is
-    sniffed from magic bytes BEFORE any parser touches it, so an HTML
-    table masquerading under an ``.xls`` name (reference README.md:98)
-    always parses via the HTML path — even when a pandas Excel engine
-    is installed and would raise a raw ValueError/BadZipFile on it —
-    a true OLE2 binary .xls goes through the vendored stdlib BIFF8
-    parser (sources.xls), and a real .xlsx goes through
-    ``pandas.read_excel`` when an engine is installed, else the
-    vendored stdlib .xlsx parser (sources.xlsx)."""
-    kind = sniff_workbook_format(path)
-    if kind == "html":
-        with open(path, "rb") as f:
-            text = f.read().decode(spec.encoding, errors="replace")
-        lines = html_table_lines(text, spec.header_keyword)
-        if not lines:
-            raise ValueError(f"no matching HTML table in {path}")
-        grid = [ln.split(HTML_CELL_SEP) for ln in lines]
-        width = len(grid[0])
-        body = [r[:width] + [""] * (width - len(r)) for r in grid[1:]]
-        pdf = pd.DataFrame(body, columns=grid[0])
-    elif kind == "xls":
-        from .xls import read_xls_rows
-
-        rows = read_xls_rows(path)
-        if not rows:
-            raise ValueError(f"empty workbook: {path}")
-        pdf = pd.DataFrame(rows[1:], columns=rows[0])
-    elif kind == "xlsx":
-        try:
-            pdf = pd.read_excel(path, dtype=str)
-        except (ImportError, ValueError) as e:  # no engine / engine balked
-            from .xlsx import read_xlsx_rows
-
-            rows = read_xlsx_rows(path)
-            if not rows:
-                raise ValueError(f"empty workbook: {path}") from e
-            pdf = pd.DataFrame(rows[1:], columns=rows[0])
-    else:
-        raise NotImplementedError(
-            f"{path}: unrecognized workbook format (not zip/.xlsx,"
-            " OLE2/.xls, or HTML); convert to .xlsx/CSV."
-        )
-    pdf.columns = [" ".join(str(c).split()) for c in pdf.columns]
-    pdf = pdf.astype(str)  # raw cells as strings BEFORE adding typed cols
-    pdf["path"] = path
-    pdf["pos"] = range(len(pdf))  # must stay integral: E2 orders on it
-    df = spark.createDataFrame(pdf)
-    cols = [F.col("path"), F.col("pos").cast("long").alias("pos")]
-    for raw, canonical in spec.columns_mapping.items():
-        if raw in pdf.columns:
-            cols.append(F.col(raw).alias(canonical))
-    return (
-        df.select(*cols)
-        .withColumn(S.BANK_NAME, F.lit(spec.bank_id))
-        .withColumns(filename_meta(F.col("path")))
-    )

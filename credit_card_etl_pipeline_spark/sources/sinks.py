@@ -9,7 +9,7 @@ thousand part files).
 
 A7 — ``convert_model.py:15-23,54-75``: an Excel workbook's sheets are
 the author's master rule/dim model; export each mapped sheet to a CSV
-config.  Driver-side utility, gated on a pandas Excel engine.
+config.  Driver-side utility over the vendored .xlsx / .xls readers.
 """
 
 from __future__ import annotations
@@ -59,39 +59,25 @@ def export_workbook_configs(
     output_dir: str,
     sheet_map: dict[str, str] | None = None,
 ) -> list[str]:
-    """A7: read every mapped sheet (``dtype=str``), drop all-empty rows
-    and columns, write one BOM CSV per sheet.  Returns written paths."""
+    """A7: read every mapped sheet of an .xlsx or .xls workbook as
+    strings, drop all-empty rows and columns, write one BOM CSV per
+    sheet.  Returns written paths."""
     import pandas as pd
 
+    from .ingest import workbook_sheets
+
     sheet_map = sheet_map or WORKBOOK_SHEET_MAP
-    try:
-        sheets = pd.read_excel(workbook_path, sheet_name=None, dtype=str)
-    except ImportError as e:
-        import zipfile
-
-        if not zipfile.is_zipfile(workbook_path):  # legacy .xls
-            raise NotImplementedError(
-                "legacy .xls workbook export requires a pandas Excel "
-                "engine (xlrd)"
-            ) from e
-        from .xlsx import read_xlsx_sheets
-
-        # Vendored stdlib path: '' → NA so the all-empty row/column
-        # drops below behave exactly like the pandas engine's NaNs.
-        sheets = {
-            name: (
-                pd.DataFrame(rows[1:], columns=rows[0]).replace("", pd.NA)
-                if rows
-                else pd.DataFrame()
-            )
-            for name, rows in read_xlsx_sheets(workbook_path).items()
-        }
+    with open(workbook_path, "rb") as f:
+        sheets = workbook_sheets(workbook_path, f.read())
     os.makedirs(output_dir, exist_ok=True)
     written: list[str] = []
     for sheet_name, csv_name in sheet_map.items():
         if sheet_name not in sheets:
             continue
-        pdf = sheets[sheet_name].dropna(how="all").dropna(axis=1, how="all")
+        rows = sheets[sheet_name]
+        pdf = pd.DataFrame(rows[1:], columns=rows[0]) if rows else pd.DataFrame()
+        # '' → NA, so that an empty cell counts as missing in the drops
+        pdf = pdf.replace("", pd.NA).dropna(how="all").dropna(axis=1, how="all")
         out = os.path.join(output_dir, csv_name)
         pdf.to_csv(out, index=False, encoding="utf-8-sig")
         written.append(out)

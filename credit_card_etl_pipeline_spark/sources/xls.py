@@ -8,9 +8,9 @@ documented formats ([MS-CFB] compound file, [MS-XLS] BIFF8), and the
 subset a bank statement needs — one worksheet grid of text and number
 cells — is small:
 
-* ``read_xls_rows`` returns the first worksheet as padded rows of cell
-  strings (the same surface ``pd.read_excel(dtype=str)`` feeds the
-  statement parser, and the same contract as ``xlsx.read_xlsx_rows``).
+* ``read_xls_sheets`` returns every worksheet of a workbook's bytes as
+  padded rows of cell strings (the same contract as
+  ``xlsx.read_xlsx_sheets``); ``read_xls_rows`` returns the first.
 * ``write_minimal_xls`` emits a spec-valid single-sheet BIFF8 workbook
   in an OLE2 container — enough to build test fixtures without Excel.
 
@@ -282,11 +282,9 @@ def _fmt_number(v: float) -> str:
     return str(int(v)) if v == int(v) else repr(v)
 
 
-def read_xls_sheets(path: str) -> dict[str, list[list[str]]]:
-    """Every worksheet as name → padded rows of cell strings, in
-    workbook order.  Missing cells become ''."""
-    with open(path, "rb") as f:
-        data = f.read()
+def read_xls_sheets(data: bytes) -> dict[str, list[list[str]]]:
+    """Every worksheet of the workbook ``data`` as name → padded rows of
+    cell strings, in workbook order.  Missing cells become ''."""
     book = _Ole2(data).stream("Workbook", "Book")
 
     # Workbook-globals pass: sheet offsets + shared string table
@@ -351,13 +349,13 @@ def read_xls_sheets(path: str) -> dict[str, list[list[str]]]:
         else:
             out[name] = []
     if not out:
-        raise ValueError(f"no worksheets in {path}")
+        raise ValueError("no worksheets in workbook")
     return out
 
 
-def read_xls_rows(path: str) -> list[list[str]]:
+def read_xls_rows(data: bytes) -> list[list[str]]:
     """First worksheet as rows of cell strings (see read_xls_sheets)."""
-    return next(iter(read_xls_sheets(path).values()), [])
+    return next(iter(read_xls_sheets(data).values()), [])
 
 
 # ------------------------------------------------------------------

@@ -7,19 +7,18 @@ the subset a bank statement needs — one worksheet grid of strings and
 numbers, shared-string and inline-string cells — parses fine with
 ``zipfile`` + ``xml.etree``:
 
-* ``read_xlsx_rows`` returns the first worksheet as padded rows of cell
-  strings (the same surface ``pd.read_excel(dtype=str)`` feeds the
-  statement parser).
-* ``write_minimal_xlsx`` emits a spec-valid single-sheet workbook using
-  inline strings — enough to build test fixtures without an Excel
-  engine.
+* ``read_xlsx_sheets`` returns every worksheet of a workbook's bytes as
+  padded rows of cell strings; ``read_xlsx_rows`` returns the first.
+* ``write_minimal_xlsx`` emits a spec-valid workbook using inline
+  strings — enough to build test fixtures without an Excel engine.
 
-Legacy binary ``.xls`` is NOT covered (not a zip container); that path
-still requires a pandas engine.
+Legacy binary ``.xls`` (an OLE2 container, not a zip) is read by
+``sources.xls``.
 """
 
 from __future__ import annotations
 
+import io
 import xml.etree.ElementTree as ET
 import zipfile
 from xml.sax.saxutils import escape
@@ -126,10 +125,11 @@ def _parse_sheet(sheet: ET.Element, shared: list[str]) -> list[list[str]]:
     return [r + [""] * (width - len(r)) for r in rows]
 
 
-def read_xlsx_sheets(path: str) -> dict[str, list[list[str]]]:
-    """Every worksheet as name → padded rows of cell strings, in
-    workbook order.  Missing cells (sparse refs) become ''."""
-    with zipfile.ZipFile(path) as z:
+def read_xlsx_sheets(data: bytes) -> dict[str, list[list[str]]]:
+    """Every worksheet of the workbook ``data`` as name → padded rows of
+    cell strings, in workbook order.  Missing cells (sparse refs)
+    become ''."""
+    with zipfile.ZipFile(io.BytesIO(data)) as z:
         shared = _shared_strings(z)
         return {
             name: _parse_sheet(ET.fromstring(z.read(target)), shared)
@@ -137,9 +137,9 @@ def read_xlsx_sheets(path: str) -> dict[str, list[list[str]]]:
         }
 
 
-def read_xlsx_rows(path: str) -> list[list[str]]:
+def read_xlsx_rows(data: bytes) -> list[list[str]]:
     """First worksheet as rows of cell strings (see read_xlsx_sheets)."""
-    return next(iter(read_xlsx_sheets(path).values()), [])
+    return next(iter(read_xlsx_sheets(data).values()), [])
 
 
 # ------------------------------------------------------------------

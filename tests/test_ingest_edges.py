@@ -1,7 +1,8 @@
 """Ingest edge cases: rows with too many fields skipped and short rows
 padded, each file read under its own header, keyword-less files fall
-back to line 0, empty directories yield an empty canonical frame, and
-the extract-to-report path leaves no persisted RDD behind."""
+back to line 0, empty directories yield an empty canonical frame, the
+extract-to-report path leaves no persisted RDD behind, and every file
+format, workbooks included, goes through the one parser."""
 
 from __future__ import annotations
 
@@ -70,38 +71,6 @@ def test_headerless_fallback_uses_first_line(spark, tmp_path):
     # header fell back to line 0; 日期X is unmapped so Transaction_Date
     # is never populated → row dropped by the null-date filter (B6)
     assert rows == []
-
-
-def test_excel_statement_path(spark, monkeypatch, tmp_path):
-    # A6 with a (faked) workbook engine: monkeypatch the pandas reader
-    # so the mapping/typing/ordering plumbing is exercised for real.
-    # The file itself only needs the zip magic — sniffing runs first.
-    import pandas as pd
-
-    from credit_card_etl_pipeline_spark.sources.ingest import (
-        DEFAULT_BANK_SPECS,
-        read_excel_statement,
-    )
-
-    def fake_read_excel(path, dtype=None, **kw):
-        return pd.DataFrame(
-            {
-                "交易日期": [f"01/{i:02d}" for i in range(1, 13)],
-                "交易說明": [f"SHOP{i}" for i in range(12)],
-                "臺幣金額": [str(100 + i) for i in range(12)],
-            }
-        )
-
-    monkeypatch.setattr(pd, "read_excel", fake_read_excel)
-    spec = DEFAULT_BANK_SPECS[0]
-    xlsx = tmp_path / "玉山_202401.xlsx"
-    xlsx.write_bytes(b"PK\x03\x04 fake zip body")
-    df = read_excel_statement(spark, str(xlsx), spec)
-    rows = df.orderBy("pos").collect()
-    assert dict(df.dtypes)["pos"] == "bigint"  # E2 ordering must be numeric
-    assert [r["pos"] for r in rows] == list(range(12))
-    assert rows[0][S.MERCHANT] == "SHOP0"
-    assert rows[0]["base_year"] == 2024 and rows[0]["bill_month"] == 1
 
 
 def test_empty_dir_yields_empty_canonical(spark, tmp_path):
@@ -206,40 +175,34 @@ def test_vendored_xlsx_shared_strings_and_sparse_cells(tmp_path):
             '<row r="2"><c r="B2"><v>42</v></c></row>'
             "</sheetData></worksheet>",
         )
-    assert read_xlsx_rows(str(path)) == [
+    assert read_xlsx_rows(path.read_bytes()) == [
         ["交易日期", "richtext"],
         ["", "42"],
     ]
 
 
-def test_workbook_sniffing_ole2_and_html(spark, tmp_path, monkeypatch):
-    """Magic-byte sniffing: true OLE2 .xls fails honestly; HTML
-    masquerading as .xls parses through the HTML table path."""
-    import pandas as pd
-    import pytest
-
+def test_workbook_sniffing_ole2_and_html(spark, tmp_path):
+    """The bytes pick the parser: junk under an .xls name raises with
+    its path, a true OLE2 .xls parses through the vendored BIFF8 reader,
+    and HTML masquerading as .xls parses through the HTML table path."""
     from credit_card_etl_pipeline_spark.sources.ingest import (
         DEFAULT_BANK_SPECS,
-        read_excel_statement,
         sniff_workbook_format,
+        statement_lines,
     )
-
-    def no_engine(path, dtype=None, **kw):
-        raise ImportError("no excel engine")
-
-    monkeypatch.setattr(pd, "read_excel", no_engine)
-    spec = DEFAULT_BANK_SPECS[0]
-
-    junk = tmp_path / "玉山_202401.dat"
-    junk.write_bytes(b"\x00\x01\x02\x03 not a workbook at all")
-    assert sniff_workbook_format(str(junk)) == "unknown"
-    with pytest.raises(NotImplementedError, match="unrecognized workbook"):
-        read_excel_statement(spark, str(junk), spec)
-
-    # true OLE2 .xls now parses via the vendored BIFF8 reader
     from credit_card_etl_pipeline_spark.sources.xls import write_minimal_xls
 
-    ole2 = tmp_path / "玉山_202401.xls"
+    specs = DEFAULT_BANK_SPECS[:1]
+
+    junk = tmp_path / "玉山_202401.xls"
+    junk.write_bytes(b"\x00\x01\x02\x03 not a workbook at all")
+    assert sniff_workbook_format(junk.read_bytes()) == "csv"
+    with pytest.raises(
+        Exception, match="玉山_202401.xls: not an .xlsx or .xls workbook"
+    ):
+        statement_lines(spark, str(junk), specs).collect()
+
+    ole2 = tmp_path / "玉山_202402.xls"
     write_minimal_xls(
         str(ole2),
         [
@@ -248,25 +211,70 @@ def test_workbook_sniffing_ole2_and_html(spark, tmp_path, monkeypatch):
             ["01/09", "書店", 450],
         ],
     )
-    assert sniff_workbook_format(str(ole2)) == "xls"
-    df = read_excel_statement(spark, str(ole2), spec)
-    got = {r["pos"]: r for r in df.collect()}
+    assert sniff_workbook_format(ole2.read_bytes()) == "xls"
+    got = {r["pos"]: r for r in statement_lines(spark, str(ole2), specs).collect()}
     assert len(got) == 2
-    assert got[1][S.MERCHANT] == "書店" and got[1][S.AMOUNT] == "450"
-    assert got[0]["base_year"] == 2024 and got[0]["bill_month"] == 1
+    assert got[2][S.MERCHANT] == "書店" and got[2][S.AMOUNT] == "450"
+    assert got[1]["base_year"] == 2024 and got[1]["bill_month"] == 2
 
     cells = "".join(
         f"<tr><td>01/{i:02d}</td><td>SHOP{i}</td><td>{100 + i}</td></tr>"
         for i in range(1, 4)
     )
-    html = tmp_path / "玉山_202402.xls"
+    html = tmp_path / "玉山_202403.xls"
     html.write_text(
-        "<html><body><table><tr><th>交易日期</th><th>交易說明</th>"
+        "\ufeff  <html><body><table><tr><th>交易日期</th><th>交易說明</th>"
         f"<th>臺幣金額</th></tr>{cells}</table></body></html>",
-        encoding=spec.encoding,
+        encoding="utf-8",
     )
-    assert sniff_workbook_format(str(html)) == "html"
-    df = read_excel_statement(spark, str(html), spec)
-    rows = df.orderBy("pos").collect()
-    assert len(rows) == 3
-    assert rows[0]["base_year"] == 2024 and rows[0]["bill_month"] == 2
+    assert sniff_workbook_format(html.read_bytes()) == "html"
+    rows = statement_lines(spark, str(html), specs).orderBy("pos").collect()
+    assert [r[S.MERCHANT] for r in rows] == ["SHOP1", "SHOP2", "SHOP3"]
+    assert rows[0]["base_year"] == 2024 and rows[0]["bill_month"] == 3
+
+
+def test_run_etl_lands_every_format(spark, tmp_path):
+    """CSV, HTML, .xlsx and legacy .xls statements in one directory go
+    through the one parser: each workbook's rows land with their
+    values, and a corrupt workbook under a routed name raises with its
+    path instead of landing null rows."""
+    import datetime as dt
+    import os
+    import shutil
+
+    from credit_card_etl_pipeline_spark.queries.etl_queries import (
+        _EXCEL_SPEC,
+        _XLS_SPEC,
+    )
+    from credit_card_etl_pipeline_spark.sources.ingest import DEFAULT_BANK_SPECS
+    from tests.test_etl import ESUN_CSV, HNCB_HTML
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    specs = [*DEFAULT_BANK_SPECS, _EXCEL_SPEC, _XLS_SPEC]
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "玉山銀行113年1月.csv").write_text(ESUN_CSV, encoding="utf-8")
+    (d / "華南_202404.html").write_bytes(HNCB_HTML.encode("big5"))
+    shutil.copy(os.path.join(root, "fixtures", "statements", "富邦_202405.xlsx"), d)
+    shutil.copy(os.path.join(root, "fixtures", "台新_202406.xls"), d)
+
+    rows = {
+        (r[S.BANK_NAME], r[S.MERCHANT]): r
+        for r in run_etl(spark, str(d), specs).collect()
+    }
+    assert sum(b == "fubon_bank" for b, _ in rows) == 3
+    assert sum(b == "taishin_bank" for b, _ in rows) == 4
+    fubon = rows[("fubon_bank", "誠品 書店")]
+    assert fubon[S.TRANSACTION_DATE] == dt.date(2024, 5, 6)
+    assert fubon[S.POSTING_DATE] == dt.date(2024, 5, 7)
+    assert (fubon[S.CARD_NO], fubon[S.AMOUNT]) == ("7777", 1350.0)
+    taishin = rows[("taishin_bank", "台新Richart轉帳回饋")]
+    assert taishin[S.TRANSACTION_DATE] == dt.date(2024, 6, 7)
+    assert taishin[S.AMOUNT] == -120.0
+    assert rows[("taishin_bank", "書店  文具")][S.AMOUNT] == 2480.0
+    assert ("esun_bank", "全聯福利中心") in rows
+    assert ("hncb_bank", "家樂福") in rows
+
+    (d / "台新_202407.xlsx").write_bytes(b"PK\x03\x04 truncated zip")
+    with pytest.raises(Exception, match="台新_202407.xlsx: unreadable xlsx"):
+        run_etl(spark, str(d), specs).collect()

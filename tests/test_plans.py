@@ -41,6 +41,19 @@ def test_rfm_dual_window_single_fact_aggregate(spark):
     # one lazy plan: the aggregate feeds the ranks without a persist
     assert "InMemoryTableScan" not in plan
 
+    # the card report derives its analysis date from its own aggregate:
+    # the executed plan scans orders twice (the rows and the B10 window's
+    # anchor) and joins the one-row dates twice
+    from credit_card_etl_pipeline_spark.queries.rfm_queries import (
+        rfm_card_portfolio,
+    )
+
+    card = rfm_card_portfolio(spark, SF)
+    card.collect()
+    final = _plan(card).split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 2
+    assert final.count("BroadcastNestedLoopJoin") == 2
+
 
 def test_refine_pipeline_is_shuffle_free(spark):
     # The whole transform (conform → C1 → H10 → C2 → H11 → C3 → I1 →

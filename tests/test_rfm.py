@@ -91,13 +91,14 @@ def test_derived_analysis_date_requires_a_non_null_date(spark):
     )
     empty = all_null.limit(0)
     for df in (all_null, empty):
-        with pytest.raises(
-            Exception,
-            match=r"USER_RAISED_EXCEPTION\] no non-null values in d",
-        ):
-            rfm_ops.rfm_dual_window(
-                df, ["k"], date_col="d", id_col="id", amount_col="amt"
-            ).collect()
+        for report in (rfm_ops.rfm_dual_window, rfm_ops.rfm_aggregate):
+            with pytest.raises(
+                Exception,
+                match=r"USER_RAISED_EXCEPTION\] no non-null values in d",
+            ):
+                report(
+                    df, ["k"], date_col="d", id_col="id", amount_col="amt"
+                ).collect()
 
 
 def test_hybrid_rule_replacement_determines_category():

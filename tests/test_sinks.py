@@ -1,5 +1,5 @@
 """Sink tests: BOM presence (A9), size guard, distributed path, and the
-workbook exporter's engine gate (A7)."""
+workbook exporter (A7): legacy .xls export and the non-workbook error."""
 
 from __future__ import annotations
 
@@ -44,8 +44,31 @@ def test_csv_distributed(spark, small_df, tmp_path):
 
 
 def test_workbook_export_gate(tmp_path):
-    # no Excel engine in this runtime → the gate must raise cleanly
+    # bytes that are no workbook raise the one error naming the file
     fake = tmp_path / "model.xlsx"
     fake.write_bytes(b"not a real workbook")
-    with pytest.raises((NotImplementedError, ValueError, Exception)):
+    with pytest.raises(ValueError, match="model.xlsx: not an .xlsx or .xls workbook"):
         export_workbook_configs(str(fake), str(tmp_path / "cfg"))
+
+
+def test_legacy_xls_workbook_export(tmp_path):
+    # a legacy BIFF8 .xls exports through the vendored reader; the
+    # all-empty row and column are dropped as with an .xlsx
+    from credit_card_etl_pipeline_spark.sources.xls import write_minimal_xls
+
+    book = tmp_path / "model.xls"
+    write_minimal_xls(
+        str(book),
+        [
+            ["Keyword", "", "Card_Name"],
+            ["LINE", "", "LINE Pay"],
+            ["", "", ""],
+            ["全聯", "", "PX Pay"],
+        ],
+        sheet="card_mapping",
+    )
+    written = export_workbook_configs(str(book), str(tmp_path / "cfg"))
+    assert [os.path.basename(p) for p in written] == ["cards.csv"]
+    back = pd.read_csv(written[0], encoding="utf-8-sig", dtype=str)
+    assert list(back.columns) == ["Keyword", "Card_Name"]
+    assert back.values.tolist() == [["LINE", "LINE Pay"], ["全聯", "PX Pay"]]

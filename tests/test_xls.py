@@ -33,7 +33,7 @@ def test_roundtrip_strings_numbers_cjk(tmp_path):
     p = tmp_path / "t.xls"
     write_minimal_xls(str(p), rows, sheet="帳單")
     assert p.read_bytes()[:8] == OLE2_MAGIC
-    got = read_xls_sheets(str(p))
+    got = read_xls_sheets(p.read_bytes())
     assert list(got) == ["帳單"]
     assert got["帳單"][0] == rows[0]
     assert got["帳單"][2] == ["05/06", "", "誠品  書店", "1350"]
@@ -48,7 +48,7 @@ def test_sst_continue_split_roundtrip(tmp_path):
     ]
     p = tmp_path / "big.xls"
     write_minimal_xls(str(p), rows)
-    back = read_xls_rows(str(p))
+    back = read_xls_rows(p.read_bytes())
     assert len(back) == 601
     assert back[600] == ["merchant_name_number_00599", "599"]
     assert back[1] == ["merchant_name_number_00000", "0"]
@@ -107,7 +107,7 @@ def test_rk_mulrk_label_records(tmp_path):
     p = tmp_path / "hand.xls"
     p.write_bytes(_ole2_container(stream))
     # MULRK spans cols 0-1, so every row pads to width 2
-    assert read_xls_rows(str(p)) == [
+    assert read_xls_rows(p.read_bytes()) == [
         ["42", ""],
         ["100", "2.5"],
         ["早餐", ""],
@@ -120,7 +120,7 @@ def test_multi_sector_payload_fat_chain(tmp_path):
     rows = [["k", "v"]] + [[f"key_{i:04d}", f"val_{i:04d}"] for i in range(700)]
     p = tmp_path / "chain.xls"
     write_minimal_xls(str(p), rows)
-    back = read_xls_rows(str(p))
+    back = read_xls_rows(p.read_bytes())
     assert back[700] == ["key_0699", "val_0699"]
 
 
@@ -128,7 +128,7 @@ def test_missing_stream_raises(tmp_path):
     p = tmp_path / "empty.xls"
     p.write_bytes(_ole2_container(b"\x00" * 16, stream_name="NotABook"))
     with pytest.raises(ValueError, match="no stream named"):
-        read_xls_rows(str(p))
+        read_xls_rows(p.read_bytes())
 
 
 def test_committed_fixture_matches_generator():
@@ -143,6 +143,7 @@ def test_committed_fixture_matches_generator():
         from make_xls_fixture import ROWS
     finally:
         sys.path.pop(0)
-    got = read_xls_rows(os.path.join(root, "fixtures", "台新_202406.xls"))
+    with open(os.path.join(root, "fixtures", "台新_202406.xls"), "rb") as f:
+        got = read_xls_rows(f.read())
     want = [[str(c) for c in row] for row in ROWS]
     assert got == want

@@ -14,15 +14,13 @@ source + its oracle SQL + the md5 of the module file defining it + the
 md5s of every ENGINE MODULE that module transitively imports + the sf
 dir) and skips entries whose fingerprint already has a recorded PASS
 in ``tools/.oracle_check_state.json``; the state updates on every PASS,
-in both modes.  The transitive-import digest (static ast walk, VERDICT
-r10 ask #5) closes the hole where editing an operator library
-(dataops/, operators/, functions/) left query-module fingerprints
-unchanged and silently skipped re-verification in local iteration.
+in both modes.  The transitive-import digest (static ast walk) makes
+an edit to an operator library (dataops/, operators/, functions/)
+re-verify the queries that use it.
 
 ``--json-out`` artifacts carry a ``__meta__`` provenance header
-(master, sf, loadavg, wall, env — VERDICT r10 ask #3) so the
-certification axis that produced a sweep is verifiable from the
-artifact alone.
+(master, sf, loadavg, wall, env), so the setup that produced a sweep
+is known from the artifact alone.
 """
 
 from __future__ import annotations
@@ -212,9 +210,7 @@ def main() -> int:
         default=None,
         help="write a machine-readable result file in the driver's "
              "CORRECTNESS_r<N>.json schema ({name: {rows_match, "
-             "schema_match, hash_match, spark_rows, oracle_rows, err}}) "
-             "so round-close full sweeps are diffable against driver "
-             "samples (VERDICT r8 ask #5)",
+             "schema_match, hash_match, spark_rows, oracle_rows, err}})",
     )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
