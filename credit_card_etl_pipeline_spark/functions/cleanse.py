@@ -30,9 +30,9 @@ def normalize_country_code(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     stripped = F.trim(c.cast("string"))
     clean = F.upper(F.split(stripped, " ", 2).getItem(0))
-    mapped: Column = clean  # 2-char and unknown codes pass through
-    for k, v in COUNTRY_3TO2.items():
-        mapped = F.when(clean == k, F.lit(v)).otherwise(mapped)
+    iso2 = F.create_map(*(F.lit(x) for kv in COUNTRY_3TO2.items() for x in kv))
+    # 2-char and unknown codes pass through
+    mapped = F.coalesce(F.try_element_at(iso2, clean), clean)
     return F.when(c.isNull() | (stripped == ""), "TW").otherwise(mapped)
 
 

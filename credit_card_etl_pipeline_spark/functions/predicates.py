@@ -7,6 +7,9 @@ express the reference's ``''``-convention guards over nullable columns.
 
 from __future__ import annotations
 
+import json
+from collections.abc import Iterable, Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -35,10 +38,15 @@ def contains_ci(col: Column | str, pattern: str) -> Column:
     return F.coalesce(s(col).rlike(f"(?i){pattern}"), F.lit(False))
 
 
-def contains_cs(col: Column | str, pattern: str) -> Column:
-    """pandas ``str.contains(pattern, na=False)`` (case-sensitive;
-    patterns may carry their own ``(?i)``)."""
-    return F.coalesce(s(col).rlike(pattern), F.lit(False))
+def rule_table(rows: Iterable[Sequence[str | None]], *fields: str) -> Column:
+    """A rule table as one literal ``array<struct<fields: string>>`` (row
+    order kept, ``None`` → null).  It is built from one JSON string that
+    Catalyst folds into a single literal, so a plan that applies the
+    table with a higher-order function has the same nodes at any row
+    count, an empty table included."""
+    text = json.dumps([dict(zip(fields, row)) for row in rows])
+    schema = ",".join(f"{f}: string" for f in fields)
+    return F.from_json(F.lit(text), f"array<struct<{schema}>>")
 
 
 def by_bank(exprs: dict[str, Column], otherwise: Column) -> Column:

@@ -15,24 +15,21 @@ Reference semantics preserved exactly:
   each output field the LAST matching rule with a non-empty value wins.
 * A rule writes a field only when its value is non-empty.
 
-Compilation: rule tables are KB-sized (tens of rows), so each output
-field compiles to a single ``coalesce(when(match_n, lit), …,
-when(match_1, lit), existing)`` expression evaluated in reverse rule
-order — pure JVM codegen, zero shuffles, zero joins.  If the rule corpus
-ever grows past ~1k rows, swap the compiler for a broadcast left join on
-the snapshot keys with ``row_number`` picking the last match; semantics
-are identical.
+Compilation: the rules are one literal array; each row matches its
+snapshot keys against it once with ``filter``, and each output field
+takes the last matching rule whose value is non-empty, or else keeps its
+value — zero shuffles, zero joins, and the same plan at any rule count.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
-from ..functions.predicates import s
+from ..functions.predicates import rule_table, s
 
 #: cards.csv column names (refine.py:121-125).
 CARD_NAME_COL = "對應卡片"
@@ -44,50 +41,56 @@ REPLACE_NO_COL = "卡號代換"
 PAYMENT_PREFIX = "payment_prefix"
 
 
-def _rule_match(rule: dict[str, Any], card_key: Column, mobile_key: Column) -> Column:
-    target_card = (rule.get(CARD_NO_COL) or "").replace(" ", "")
-    target_mobile = (rule.get(MOBILE_TAG_COL) or "").strip()
-    if "/" in target_card:
-        return card_key == target_card
-    if target_mobile:
-        return (card_key == target_card) & (mobile_key == target_mobile)
-    return card_key == target_card
-
-
 def apply_card_mapping(df: DataFrame, rules: list[dict[str, Any]]) -> DataFrame:
     """C1: assign Card_Type / Mobile_Payment / payment_prefix / Card_No
     from the card rule table; adds the ``payment_prefix`` working column.
     """
-    rules = [r for r in rules if (r.get(CARD_NO_COL) or "").replace(" ", "")]
+    out_fields = {
+        CARD_NAME_COL: S.CARD_TYPE,
+        MOBILE_TAG_COL: S.MOBILE_PAYMENT,
+        PREFIX_COL: PAYMENT_PREFIX,
+        REPLACE_NO_COL: S.CARD_NO,
+    }
+    rows = []
+    for r in rules:
+        card = (r.get(CARD_NO_COL) or "").replace(" ", "")
+        if not card:
+            continue
+        # Match modes (refine.py:154-166): a dual number 'NNNN/NNNN'
+        # matches the card alone, else a mobile tag makes the key
+        # compound; '' matches any mobile tag.
+        mobile = "" if "/" in card else (r.get(MOBILE_TAG_COL) or "").strip()
+        values = [(r.get(c) or "").strip() for c in out_fields]
+        rows.append((card, mobile, *values))
+    table = rule_table(rows, "card", "mobile", *out_fields.values())
 
     # Snapshot keys (refine.py:139-140): evaluated against the INPUT
-    # columns only — expression trees below reference these, not the
-    # updated values.
+    # columns only, so no rule sees another rule's writes.
     card_key = F.regexp_replace(s(S.CARD_NO), " ", "")
     mobile_key = F.trim(s(S.MOBILE_PAYMENT))
-
-    out_fields = [
-        (CARD_NAME_COL, S.CARD_TYPE),
-        (MOBILE_TAG_COL, S.MOBILE_PAYMENT),
-        (PREFIX_COL, PAYMENT_PREFIX),
-        (REPLACE_NO_COL, S.CARD_NO),
-    ]
     if PAYMENT_PREFIX not in df.columns:
         df = df.withColumn(PAYMENT_PREFIX, F.lit(None).cast("string"))
-
-    assignments: dict[str, Column] = {}
-    for rule_col, target in out_fields:
-        expr: Column = F.col(target)
-        # Forward iteration nests later rules OUTERMOST, so the last
-        # matching rule with a non-empty value is evaluated first —
-        # i.e. last-match-wins, as in the reference's loop.
-        for rule in rules:
-            value = (rule.get(rule_col) or "").strip()
-            if not value:
-                continue
-            expr = F.when(_rule_match(rule, card_key, mobile_key), F.lit(value)).otherwise(expr)
-        assignments[target] = expr
-    return df.withColumns(assignments)
+    df = df.withColumn(
+        "__c1",
+        F.filter(
+            table,
+            lambda r: (r.card == card_key)
+            & ((r.mobile == "") | (r.mobile == mobile_key)),
+        ),
+    )
+    # Rules apply in file order and each writes its non-empty values,
+    # so the last matching rule with a value wins (refine.py:154-172).
+    return df.withColumns(
+        {
+            target: F.coalesce(
+                F.try_element_at(
+                    F.filter("__c1", lambda r: r[target] != ""), F.lit(-1)
+                )[target],
+                F.col(target),
+            )
+            for target in out_fields.values()
+        }
+    ).drop("__c1")
 
 
 def cleanup_cathay_remaining(df: DataFrame) -> DataFrame:

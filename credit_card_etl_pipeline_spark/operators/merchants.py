@@ -5,9 +5,8 @@ priority-descending order; rows whose CURRENT merchant value matches
 ``Pattern`` get the whole value replaced by ``Replacement``;
 empty-Replacement rules are skipped.  The reference's loop is
 **sequential**: a later rule can re-match a value written by an earlier
-rule (SURVEY §4 trap 3).  We replicate exactly by folding the rules into
-a nested expression — ``m_k = CASE WHEN m_{k-1} RLIKE p_k THEN r_k ELSE
-m_{k-1} END`` — still a single codegen'd projection, no UDF, no shuffle.
+rule (SURVEY §4 trap 3).  We replicate exactly with a left fold over the
+rules — one projection, no UDF, no shuffle.
 
 C4 — ``process_merchant_hybrid`` (db_to_RFManalysis.py:105-134): the
 RFM job's three-stage resolver:
@@ -19,9 +18,11 @@ RFM job's three-stage resolver:
 3. regex scan in priority order (db_to_RFManalysis.py:128-130);
 4. fallback: keep the name, category ``Unknown`` (…:133-134).
 
-Stage 2 compiles to a **broadcast equi-join** (the exact-lookup dict);
-stages 1/3 are expression chains.  This mirrors the reference's
-"exact-before-regex" hand optimization with Spark-native pieces.
+Every rule table is one literal array of structs (``rule_table``)
+applied by one higher-order function, so the plan has the same shape at
+4 rules and at 1,000; only the literal grows.  A pattern read from the
+array is compiled per evaluation instead of once per plan, the price of
+that constant shape.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
-from ..functions.predicates import contains_ci, s
+from ..functions.predicates import rule_table, s
 
 
 def clean_merchant_by_regex(
@@ -41,47 +42,34 @@ def clean_merchant_by_regex(
     """C3: sequential whole-value regex canonicalization.
 
     Each rule re-matches the PREVIOUS rule's output (the reference's
-    cascade, SURVEY §4 trap 3), so this cannot be a single join or an
-    FMW chain.  Folding it as one nested expression would reference the
-    prior tree twice per rule (``when(prev rlike p, r).otherwise(prev)``)
-    — exponential tree growth.  Instead each step materializes a named
-    working column: the per-step expression references a cheap attribute
-    twice, the plan stays LINEAR in the rule count, and Catalyst keeps
-    the projects separate (CollapseProject does not inline non-cheap
-    expressions used more than once).  Still zero shuffles, zero UDFs.
+    cascade, SURVEY §4 trap 3), so the rules are a left fold over the
+    priority-ordered table: ``aggregate(rules, m, (acc, r) -> CASE WHEN
+    acc RLIKE r.p THEN r.v ELSE acc END)``.  Zero shuffles, zero UDFs.
     """
-    work = "__c3_work"
-    df = df.withColumn(work, s(merchant_col))  # astype(str) view: null → ''
-    for rule in rules:
-        pat, repl = rule.get("Pattern"), rule.get("Replacement")
-        if not repl:
-            continue
-        df = df.withColumn(
-            work,
-            F.when(F.col(work).rlike(pat), F.lit(repl)).otherwise(F.col(work)),
-        )
-    # Restore the engine's internal null convention ('' ≡ null).
-    return df.withColumn(
-        merchant_col, F.when(F.col(work) == "", None).otherwise(F.col(work))
-    ).drop(work)
+    table = rule_table(
+        ((r.get("Pattern"), r["Replacement"]) for r in rules if r.get("Replacement")),
+        "p",
+        "v",
+    )
+    folded = F.aggregate(
+        table,
+        s(merchant_col),  # astype(str) view: null → ''
+        lambda acc, r: F.when(F.regexp_like(acc, r.p), r.v).otherwise(acc),
+        # Restore the engine's internal null convention ('' ≡ null).
+        lambda acc: F.nullif(acc, F.lit("")),
+    )
+    return df.withColumn(merchant_col, folded)
 
 
 def _strip_prefix_expr(col: Column, prefixes: list[str]) -> Column:
     """Stage 1: remove the FIRST matching prefix in length-descending
-    order (the reference breaks after one strip).  Longest prefix must
-    be evaluated first → nest it outermost."""
-    expr = col
-    for p in sorted({p.strip() for p in prefixes if p and p.strip()}, key=len):
-        expr = F.when(col.startswith(p), F.substring(col, len(p) + 1, 2**31 - 1)).otherwise(
-            expr
-        )
-    return expr
-
-
-#: Above this many regex rules, stage 3 switches from a nested ``when``
-#: chain (expression size grows O(n²) — each rule re-wraps the prior
-#: tree) to a broadcast rlike-join with FMW picked by ``row_number``.
-REGEX_JOIN_THRESHOLD = 64
+    order (the reference breaks after one strip)."""
+    longest_first = sorted(
+        {p.strip() for p in prefixes if p and p.strip()}, key=len, reverse=True
+    )
+    table = rule_table(((p,) for p in longest_first), "p")
+    hit = F.try_element_at(F.filter(table, lambda r: col.startswith(r.p)), F.lit(1))
+    return F.coalesce(col.substr(F.length(hit.p) + 1, F.lit(2**31 - 1)), col)
 
 
 def resolve_merchant_hybrid(
@@ -90,7 +78,6 @@ def resolve_merchant_hybrid(
     payment_prefixes: list[str],
     *,
     merchant_col: str = "merchant_name",
-    regex_join_threshold: int = REGEX_JOIN_THRESHOLD,
 ) -> DataFrame:
     """C4: append ``clean_merchant_name``, ``Category``, ``Sub_Category``,
     ``RFM_Exclusion`` columns.
@@ -99,204 +86,67 @@ def resolve_merchant_hybrid(
     Sub_Category / RFM_Exclusion (merchants.csv schema,
     db_to_RFManalysis.py:59-99).
     """
-    spark = df.sparkSession
     # Reference trims, strips the first (longest) matching prefix, then
     # trims again (db_to_RFManalysis.py:115-120).  Null merchants resolve
     # to "Unknown"/"Unknown" (the isinstance guard, …:110-111).
     trimmed = F.trim(s(merchant_col))
-    stripped = F.trim(_strip_prefix_expr(trimmed, payment_prefixes))
-    df = df.withColumn("__stripped", stripped)
-
-    # Stage 2: exact lookup on Replacement keys → broadcast equi-join.
-    lookup_rows = []
-    seen: set[str] = set()
-    for r in rules:
-        key = (r.get("Replacement") or "").strip()
-        if key and key not in seen:
-            seen.add(key)
-            lookup_rows.append(
-                (
-                    key,
-                    r.get("Category") or "",
-                    r.get("Sub_Category") or "",
-                    _parse_bool(r.get("RFM_Exclusion")),
-                )
-            )
-    if lookup_rows:
-        lookup = spark.createDataFrame(
-            lookup_rows, "__k string, __cat string, __sub string, __excl boolean"
-        )
-        df = df.join(F.broadcast(lookup), df["__stripped"] == lookup["__k"], "left")
-    else:
-        df = (
-            df.withColumn("__k", F.lit(None).cast("string"))
-            .withColumn("__cat", F.lit(None).cast("string"))
-            .withColumn("__sub", F.lit(None).cast("string"))
-            .withColumn("__excl", F.lit(None).cast("boolean"))
-        )
-
-    # Stage 3: case-insensitive regex scan in priority order for stage-2
-    # misses (FMW; the reference compiles every pattern with
-    # re.IGNORECASE — db_to_RFManalysis.py:76).  Stage 4 fallback: keep
-    # the stripped name, or the raw name if stripping emptied it; null
-    # merchant → "Unknown" (…:130-134).
-    fallback_name = (
-        F.when(F.col(merchant_col).isNull(), F.lit("Unknown"))
-        .when(F.col("__stripped") != "", F.col("__stripped"))
-        .otherwise(s(merchant_col))
+    df = df.withColumn(
+        "__stripped", F.trim(_strip_prefix_expr(trimmed, payment_prefixes))
     )
-    regex_rules = [r for r in rules if r.get("Pattern")]
+    stripped = F.col("__stripped")
 
-    if len(regex_rules) >= regex_join_threshold:
-        df = _stage3_regex_join(df, regex_rules, merchant_col, fallback_name)
-    else:
-        df = _stage3_when_chain(df, regex_rules, merchant_col, fallback_name)
+    fields = ("p", "n", "c", "s", "e")
 
-    hit2 = F.col("__k").isNotNull() & F.col(merchant_col).isNotNull()
-    return (
-        df.withColumn(
-            "clean_merchant_name",
-            F.when(hit2, F.col("__stripped")).otherwise(F.col("__n3")),
-        )
-        .withColumn("Category", F.when(hit2, F.col("__cat")).otherwise(F.col("__c3")))
-        .withColumn(
-            "Sub_Category", F.when(hit2, F.col("__sub")).otherwise(F.col("__s3"))
-        )
-        .withColumn(
-            "RFM_Exclusion", F.when(hit2, F.col("__excl")).otherwise(F.col("__e3"))
-        )
-        .drop(
-            "__stripped", "__k", "__cat", "__sub", "__excl",
-            "__n3", "__c3", "__s3", "__e3",
-        )
-    )
-
-
-def _stage3_when_chain(
-    df: DataFrame,
-    rules: list[dict[str, Any]],
-    merchant_col: str,
-    fallback_name: Column,
-) -> DataFrame:
-    """Expression-fold stage 3: optimal for small rule corpora (no
-    join, pure codegen), but each rule wraps the prior tree — O(n²)
-    expression growth caps its use at REGEX_JOIN_THRESHOLD.
-
-    One short-circuiting CASE computes the first-matching rule INDEX,
-    and the four payload columns are O(1) lookups into constant-folded
-    literal arrays on that index — each rule's regex is evaluated at
-    most once per row instead of once per output column (the previous
-    four parallel when-chains re-ran every ``contains_ci`` per column;
-    codegen subexpression elimination does not hoist from CaseWhen
-    branches).  First-match-wins order and the fallback values are
-    unchanged.  The index lives in its own projection: it is non-cheap
-    and referenced by all four outputs, so CollapseProject keeps it
-    evaluated once."""
-    n = len(rules)
-    idx: Column = F.lit(n)
-    for i in reversed(range(n)):
-        cond = F.col(merchant_col).isNotNull() & contains_ci(
-            F.col("__stripped"), rules[i]["Pattern"]
-        )
-        idx = F.when(cond, F.lit(i)).otherwise(idx)
-    df = df.withColumn("__i3", idx)
-
-    def pick(values: list[Any], fallback: Column) -> Column:
-        # CreateArray of literals constant-folds to one array literal;
-        # element_at is 1-based and only reached when a rule matched.
-        arr = F.array(*[F.lit(v) for v in values])
-        return F.when(
-            F.col("__i3") < n, F.element_at(arr, F.col("__i3") + 1)
-        ).otherwise(fallback)
-
-    return df.withColumns(
-        {
-            "__n3": pick(
-                [(r.get("Replacement") or "").strip() for r in rules],
-                fallback_name,
-            ),
-            "__c3": pick([r.get("Category") or "" for r in rules], F.lit("Unknown")),
-            "__s3": pick([r.get("Sub_Category") or "" for r in rules], F.lit("")),
-            "__e3": pick(
-                [_parse_bool(r.get("RFM_Exclusion")) for r in rules],
-                F.lit(False),
-            ),
-        }
-    ).drop("__i3")
-
-
-def _stage3_regex_join(
-    df: DataFrame,
-    rules: list[dict[str, Any]],
-    merchant_col: str,
-    fallback_name: Column,
-) -> DataFrame:
-    """Broadcast rlike-join stage 3 for large rule corpora: the rule
-    table ships once per executor and FMW is resolved by ``row_number``
-    over the priority-sorted rule index.  Resolution is a pure function
-    of the stripped merchant string, so the probe side is the DISTINCT
-    set of still-unresolved strings — O(distinct_strings × rules) regex
-    evaluations instead of O(rows × rules), and the join-back key is
-    the string itself: deterministic under task retry and AQE
-    re-partitioning (no ``monotonically_increasing_id``)."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    rule_rows = [
-        (
-            i,
-            "(?i)" + r["Pattern"],
+    def row(r: dict[str, Any], pattern: str | None) -> tuple[str | None, ...]:
+        return (
+            pattern,
             (r.get("Replacement") or "").strip(),
             r.get("Category") or "",
             r.get("Sub_Category") or "",
-            _parse_bool(r.get("RFM_Exclusion")),
+            # merchants.csv carries RFM_Exclusion as 'True'/'False'
+            # strings (db_to_RFManalysis.py:82)
+            str(r.get("RFM_Exclusion")).strip().lower(),
         )
-        for i, r in enumerate(rules)
-    ]
-    rules_df = spark.createDataFrame(
-        rule_rows,
-        "__idx long, __pat string, __r3 string, __rc3 string, "
-        "__rs3 string, __re3 boolean",
+
+    # Stage 2: exact lookup of the stripped name in a literal map from
+    # each Replacement (first occurrence wins) to its rule.
+    exact: dict[str, tuple[str | None, ...]] = {}
+    for r in rules:
+        key = (r.get("Replacement") or "").strip()
+        if key and key not in exact:
+            exact[key] = row(r, None)
+    by_name = rule_table(exact.values(), *fields)
+    lookup = F.try_element_at(F.map_from_arrays(by_name.n, by_name), stripped)
+
+    # Stage 3: case-insensitive regex scan in priority order for stage-2
+    # misses (FMW; the reference compiles every pattern with
+    # re.IGNORECASE — db_to_RFManalysis.py:76).
+    by_pattern = rule_table(
+        (row(r, "(?i)" + r["Pattern"]) for r in rules if r.get("Pattern")), *fields
     )
-    elig = F.col(merchant_col).isNotNull() & F.col("__k").isNull()
-    probe = (
-        df.where(elig)
-        .select(F.coalesce(F.col("__stripped"), F.lit("")).alias("__probe"))
-        .distinct()
+    scan = F.try_element_at(
+        F.filter(by_pattern, lambda r: F.regexp_like(stripped, r.p)), F.lit(1)
     )
-    cand = probe.join(
-        F.broadcast(rules_df),
-        F.expr("rlike(__probe, __pat)"),
-        "inner",
+    # The matched rule lives in its own projection: it is non-cheap and
+    # read by all four outputs, so CollapseProject keeps it evaluated once.
+    df = df.withColumn(
+        "__rule", F.when(F.col(merchant_col).isNotNull(), F.coalesce(lookup, scan))
     )
-    best = (
-        cand.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("__probe").orderBy("__idx")
-            ),
-        )
-        .where(F.col("__rn") == 1)
-        .select("__probe", "__r3", "__rc3", "__rs3", "__re3")
+    rule = F.col("__rule")
+
+    # Stage 4 fallback: keep the stripped name, or the raw name if
+    # stripping emptied it; null merchant → "Unknown" (…:130-134).
+    fallback_name = (
+        F.when(F.col(merchant_col).isNull(), F.lit("Unknown"))
+        .when(stripped != "", stripped)
+        .otherwise(s(merchant_col))
     )
-    # Join-back on the string key: best is at most one row per distinct
-    # unresolved string (dim-sized in practice — merchants repeat
-    # heavily), so AQE is free to broadcast it; ineligible rows carry a
-    # null key and fall through to the stage-4 fallback.
-    out = df.withColumn(
-        "__probe", F.when(elig, F.coalesce(F.col("__stripped"), F.lit("")))
-    ).join(best, "__probe", "left")
-    return out.withColumns(
+    return df.withColumns(
         {
-            "__n3": F.coalesce(F.col("__r3"), fallback_name),
-            "__c3": F.coalesce(F.col("__rc3"), F.lit("Unknown")),
-            "__s3": F.coalesce(F.col("__rs3"), F.lit("")),
-            "__e3": F.coalesce(F.col("__re3"), F.lit(False)),
+            "clean_merchant_name": F.coalesce(rule.n, fallback_name),
+            "Category": F.coalesce(rule.c, F.lit("Unknown")),
+            "Sub_Category": F.coalesce(rule.s, F.lit("")),
+            "RFM_Exclusion": F.coalesce(rule.e == "true", F.lit(False)),
         }
-    ).drop("__probe", "__r3", "__rc3", "__rs3", "__re3")
+    ).drop("__stripped", "__rule")
 
-
-def _parse_bool(v: Any) -> bool:
-    """merchants.csv carries RFM_Exclusion as 'True'/'False' strings
-    (db_to_RFManalysis.py:82)."""
-    return str(v).strip().lower() == "true"

@@ -5,27 +5,29 @@ priority-descending (stable); for each rule, rows whose Merchant matches
 ``Pattern`` AND whose Mobile_Payment is still blank get
 ``payment_prefix = Prefix_Label`` and ``Mobile_Payment = Category``.
 Because a match fills Mobile_Payment, later rules can't re-match — i.e.
-first-match-wins over the sorted rule list.  Compiled here as one
-``when`` chain in priority order, guarded by the row's ORIGINAL blank
-test (equivalent: a row matched by any rule takes the first such rule).
+first-match-wins over the sorted rule list.  Compiled here as the first
+match of one literal rule array in priority order, guarded by the row's
+ORIGINAL blank test (equivalent: a row matched by any rule takes the
+first such rule).
 
 C5 — ``identify_payment_method`` (db_to_Payment_RFM.py:34-84): maps a
 merchant-name *prefix* back to the payment-method category for the
 payment-RFM job.  Only rules with ``Priority >= 20`` participate
 (db_to_Payment_RFM.py:21,52); prefixes are tried longest-first
 (db_to_Payment_RFM.py:66) so ``LinePay－`` beats ``Line－``; no match →
-``實體卡/其他``.
+``實體卡/其他``.  Compiled as the first ``startswith`` match of one literal
+prefix array.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
-from ..functions.predicates import blank, contains_cs
+from ..functions.predicates import blank, rule_table, s
 from .cards import PAYMENT_PREFIX
 
 FALLBACK_METHOD = "實體卡/其他"
@@ -35,23 +37,36 @@ def identify_third_party_payment(
     df: DataFrame, rules: list[dict[str, Any]]
 ) -> DataFrame:
     """C2: tag mobile-payment category + merchant prefix, FMW by priority."""
-    if not rules:
-        return df
     if PAYMENT_PREFIX not in df.columns:
         df = df.withColumn(PAYMENT_PREFIX, F.lit(None).cast("string"))
 
-    guard = blank(S.MOBILE_PAYMENT)
-    prefix_expr: Column = F.col(PAYMENT_PREFIX)
-    mobile_expr: Column = F.col(S.MOBILE_PAYMENT)
-    # Reverse nesting → first (highest-priority) rule outermost = FMW.
-    for rule in reversed(rules):
-        pattern = rule.get("Pattern")
-        if not pattern:
-            continue
-        cond = guard & contains_cs(S.MERCHANT, pattern)
-        prefix_expr = F.when(cond, F.lit(rule.get("Prefix_Label"))).otherwise(prefix_expr)
-        mobile_expr = F.when(cond, F.lit(rule.get("Category"))).otherwise(mobile_expr)
-    return df.withColumns({PAYMENT_PREFIX: prefix_expr, S.MOBILE_PAYMENT: mobile_expr})
+    table = rule_table(
+        (
+            (r["Pattern"], r.get("Prefix_Label"), r.get("Category"))
+            for r in rules
+            if r.get("Pattern")
+        ),
+        "p",
+        "prefix",
+        "category",
+    )
+    merchant = s(S.MERCHANT)
+    first = F.try_element_at(
+        F.filter(table, lambda r: F.regexp_like(merchant, r.p)), F.lit(1)
+    )
+    # The matched rule gets its own projection: it is read four times.
+    df = df.withColumn("__c2", F.when(blank(S.MOBILE_PAYMENT), first))
+    hit = F.col("__c2").isNotNull()
+    return df.withColumns(
+        {
+            PAYMENT_PREFIX: F.when(hit, F.col("__c2.prefix")).otherwise(
+                F.col(PAYMENT_PREFIX)
+            ),
+            S.MOBILE_PAYMENT: F.when(hit, F.col("__c2.category")).otherwise(
+                F.col(S.MOBILE_PAYMENT)
+            ),
+        }
+    ).drop("__c2")
 
 
 def _c5_priority(r: dict[str, Any]) -> float | None:
@@ -90,9 +105,8 @@ def identify_payment_method(
 ) -> DataFrame:
     """C5: longest-prefix → category lookup with fallback bucket."""
     name = F.trim(F.col(merchant_col))
-    expr: Column = F.lit(FALLBACK_METHOD)
-    for prefix, category in reversed(payment_method_prefixes(rules)):
-        expr = F.when(
-            F.coalesce(name.startswith(prefix), F.lit(False)), F.lit(category)
-        ).otherwise(expr)
-    return df.withColumn(out, expr)
+    table = rule_table(payment_method_prefixes(rules), "p", "category")
+    first = F.try_element_at(
+        F.filter(table, lambda r: name.startswith(r.p)), F.lit(1)
+    )
+    return df.withColumn(out, F.coalesce(first.category, F.lit(FALLBACK_METHOD)))

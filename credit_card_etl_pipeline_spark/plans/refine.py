@@ -7,7 +7,9 @@ precedes classification (keyword matching sees canonical names); prefix
 stitching runs last so the RFM jobs can strip prefixes back off.
 
 The whole pipeline is one lazy expression chain per column — zero
-shuffles, fully codegen'd; Catalyst collapses the stacked projections.
+shuffles, one codegen'd stage; Catalyst collapses the stacked
+projections.  The rule tables are applied by higher-order functions,
+which that stage evaluates interpreted.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 """Merchant-resolution query family — operators C4, B7, B8, D5, D6, F2.
 
 ``merchant_resolve_hybrid`` drives the RFM job's three-stage resolver
-(db_to_RFManalysis.py:105-134: longest-prefix strip → broadcast exact
-lookup → priority-ordered regex scan → Unknown fallback) plus the B7/B8
+(db_to_RFManalysis.py:105-134: longest-prefix strip → exact lookup →
+priority-ordered regex scan → Unknown fallback) plus the B7/B8
 exclusion filters and a per-merchant aggregate.  The companion
 diagnostics mirror the reference's inline checks: the top-unknown table
 (db_to_RFManalysis.py:211-228, D6), the unknown-category rate, and the
@@ -110,8 +110,8 @@ GROUP BY 1, 2, 3
 def merchant_resolve_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 three-stage resolver + B7/B8 filters + per-merchant aggregate.
 
-    Stage 2 compiles to a broadcast equi-join, stages 1/3 are codegen'd
-    expression chains — one shuffle total (the final groupBy).
+    Every stage is an expression over a literal rule table, with no
+    join — one shuffle total (the final groupBy).
     """
     fact = synth_transactions(spark, sf_dir)
     df = resolve_merchant_hybrid(
@@ -264,8 +264,8 @@ def rfm_merchant_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship job 1:1 (db_to_RFManalysis.py:162-281):
     hybrid resolver → B7/B8 exclusions → dual-window RFM keyed by the
     CLEANED merchant name with Category carried through → pandas ranks
-    → I2 segmentation.  Resolver compiles to broadcast join +
-    expression chains; the dual window is one shuffle.
+    → I2 segmentation.  The resolver is expressions over literal rule
+    tables, with no join; the dual window is one shuffle.
 
     Category/Sub_Category ride the aggregate as GROUPING keys, not
     ``first()`` carriers (r12): they are functions of the resolved name

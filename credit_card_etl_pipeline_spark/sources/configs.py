@@ -1,8 +1,9 @@
 """Rule-table and taxonomy loaders (operator A8).
 
 Config tables are KB-sized dimension data: loaded driver-side (plain
-pandas/yaml), validated, priority-sorted, and compiled into Column
-expressions or broadcast DataFrames by the operators that consume them.
+pandas/yaml), validated, priority-sorted, and compiled by the operators
+that consume them into one literal array each, applied by a
+higher-order function.
 
 Semantics preserved from the reference:
 

@@ -250,7 +250,10 @@ def file_rows(
         text = content.decode(spec.encoding, errors="replace")
         lines = html_table_lines(text, spec.header_keyword)
     elif kind == "csv" and not path.lower().endswith(_WORKBOOK_SUFFIXES):
-        lines = content.decode(spec.encoding, errors="replace").splitlines()
+        # pandas' read_csv drops a UTF-8 BOM; kept, it would stay glued
+        # to the first header cell and unmap that column
+        text = content.decode(spec.encoding, errors="replace")
+        lines = text.removeprefix("\ufeff").splitlines()
     else:
         sheet = next(iter(workbook_sheets(path, content).values()), [])
         lines = [CELL_SEP.join(row) for row in sheet]

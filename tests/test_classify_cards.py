@@ -6,6 +6,10 @@
 * C1 card mapping (operators/cards.py) — snapshot keys, dual-number /
   compound-key / plain match modes, last-match-wins, non-empty-value
   writes only.
+* C2 third-party tagging and C5 payment-method lookup
+  (operators/payments.py) — first match by priority behind the
+  blank-mobile guard; longest prefix first behind the ``Priority >= 20``
+  gate, with the ``實體卡/其他`` fallback.
 """
 
 from __future__ import annotations
@@ -21,6 +25,11 @@ from credit_card_etl_pipeline_spark.operators.cards import (
 )
 from credit_card_etl_pipeline_spark.operators.classify import (
     classify_transaction_type,
+)
+from credit_card_etl_pipeline_spark.operators.payments import (
+    FALLBACK_METHOD,
+    identify_payment_method,
+    identify_third_party_payment,
 )
 from credit_card_etl_pipeline_spark.sources.configs import TransactionTypeKeywords
 
@@ -183,3 +192,65 @@ def test_card_snapshot_keys_no_cascade(spark):
     r = out.collect()[0].asDict()
     assert r[S.CARD_NO] == "2000"
     assert r[S.CARD_TYPE] == "A"  # rule B saw the ORIGINAL key, not 2000
+
+
+#: C2 rules as the loader hands them over: priority-descending.
+PAYMENT_RULES = [
+    {"Pattern": "LINE PAY", "Prefix_Label": "LinePay－", "Category": "LINE Pay",
+     "Priority": 50.0},
+    {"Pattern": "PAY", "Prefix_Label": "Pay－", "Category": "OtherPay",
+     "Priority": 10.0},
+]
+
+
+def test_third_party_first_match_by_priority(spark):
+    pdf = pd.DataFrame({
+        S.MERCHANT: ["LINE PAY 全家", "APPLE PAY 星巴克", "誠品書店", None],
+        S.MOBILE_PAYMENT: [None, " ", None, None],
+    })
+    out = identify_third_party_payment(spark.createDataFrame(pdf), PAYMENT_RULES)
+    got = [(r[S.MOBILE_PAYMENT], r[PAYMENT_PREFIX]) for r in out.collect()]
+    assert got == [
+        ("LINE Pay", "LinePay－"),   # both rules match: the higher wins
+        ("OtherPay", "Pay－"),       # whitespace-only mobile is blank
+        (None, None),
+        (None, None),
+    ]
+
+
+def test_card_rule_mobile_blocks_third_party_tag(spark):
+    # a dual-number card rule writes Mobile_Payment on a row that came in
+    # blank; C2 must then leave it alone although its merchant matches
+    rules = [{"對應卡片": "Cube", "卡號": "5678/9012", "行動支付標籤": "Apple Pay",
+              "加在消費明細摘要前方": "ApplePay－"}]
+    pdf = pd.DataFrame({
+        S.CARD_NO: ["5678/9012", "2222"],
+        S.CARD_TYPE: [None, None],
+        S.MOBILE_PAYMENT: [None, None],
+        S.MERCHANT: ["LINE PAY 全家", "LINE PAY 全家"],
+    })
+    df = apply_card_mapping(spark.createDataFrame(pdf), rules)
+    out = identify_third_party_payment(df, PAYMENT_RULES).collect()
+    assert (out[0][S.MOBILE_PAYMENT], out[0][PAYMENT_PREFIX]) == (
+        "Apple Pay", "ApplePay－")
+    assert (out[1][S.MOBILE_PAYMENT], out[1][PAYMENT_PREFIX]) == (
+        "LINE Pay", "LinePay－")
+
+
+def test_payment_method_longest_prefix_gate_and_fallback(spark):
+    rules = [
+        {"Prefix_Label": "Line－", "Category": "LINE", "Priority": "30"},
+        {"Prefix_Label": "LinePay－", "Category": "LINE Pay", "Priority": "25"},
+        {"Prefix_Label": "街口－", "Category": "街口支付", "Priority": ""},
+        {"Prefix_Label": "全支付－", "Category": "全支付", "Priority": "19"},
+    ]
+    names = ["LinePay－全家", " Line－星巴克", "街口－麥當勞", "全支付－7-11", None]
+    pdf = pd.DataFrame({"merchant_name": names})
+    out = identify_payment_method(spark.createDataFrame(pdf), rules).collect()
+    assert [r["Payment_Method"] for r in out] == [
+        "LINE Pay",        # LinePay－ beats the shorter Line－
+        "LINE",            # the name is trimmed before the match
+        FALLBACK_METHOD,   # a blank Priority excludes the rule
+        FALLBACK_METHOD,   # Priority 19 is under the gate
+        FALLBACK_METHOD,   # null merchant
+    ]

@@ -1,6 +1,6 @@
 """Ingest edge cases: rows with too many fields skipped and short rows
-padded, each file read under its own header, keyword-less files fall
-back to line 0, empty directories yield an empty canonical frame, the
+padded, a UTF-8 BOM kept off the first header cell, each file read
+under its own header, keyword-less files fall back to line 0, empty directories yield an empty canonical frame, the
 extract-to-report path leaves no persisted RDD behind, and every file
 format, workbooks included, goes through the one parser."""
 
@@ -33,6 +33,21 @@ def test_malformed_rows_skipped(spark, tmp_path):
     assert set(rows) == {"正常商店", "另一家", "短行"}
     assert rows["短行"][S.AMOUNT] is None
     assert rows["短行"][S.TRANSACTION_DATE].isoformat() == "2024-01-13"
+
+
+def test_utf8_bom_keeps_first_header_column(spark, tmp_path):
+    # Excel's "CSV UTF-8" starts with a BOM; left on the first header
+    # cell it unmaps 交易日期, and every row would fall to the null-date
+    # filter without an error
+    from tests.test_etl import ESUN_CSV
+
+    d = tmp_path / "bom"
+    d.mkdir()
+    body = ESUN_CSV.split("\n", 2)[2]  # no preamble: the header is line 0
+    (d / "玉山_202401.csv").write_text(body, encoding="utf-8-sig")
+    rows = run_etl(spark, str(d)).collect()
+    dates = sorted(r[S.TRANSACTION_DATE].isoformat() for r in rows)
+    assert dates == ["2023-12-30", "2024-01-10", "2024-01-12", "2024-01-20"]
 
 
 CUBE_HEADER = "交易日,入帳日,卡號末四碼,交易說明,臺幣金額,消費地/幣別,信用卡號"
