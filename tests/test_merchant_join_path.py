@@ -1,10 +1,11 @@
-"""The broadcast rlike-join stage-3 path must produce exactly the same
-resolution as the when-chain path."""
+"""C4 resolution cases that the resolver's single path must meet: the
+results the stage-3 when-chain gave, first-match-wins between two
+matching regex rules, and stable results for duplicates spread over
+partitions. The resolver holds no join, so partitioning cannot matter."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 from credit_card_etl_pipeline_spark.operators.merchants import (
     resolve_merchant_hybrid,
@@ -21,72 +22,43 @@ RULES = [
 
 PREFIXES = ["LinePay－"]
 
-
-def _resolve(spark, threshold):
-    pdf = pd.DataFrame(
-        {
-            "merchant_name": [
-                "LinePay－STORE-7",   # strip → regex rule 1
-                "STORE-3",            # exact lookup (stage 2)
-                "FOOD-9 deluxe",      # rules 2 and 3 match → FMW rule 2
-                "unmatched shop",     # stage 4 fallback
-                None,                  # null → Unknown
-            ]
-        }
-    )
-    out = resolve_merchant_hybrid(
-        spark.createDataFrame(pdf),
-        RULES,
-        PREFIXES,
-        merchant_col="merchant_name",
-        regex_join_threshold=threshold,
-    )
-    return sorted(
-        (
-            (
-                r["merchant_name"],
-                r["clean_merchant_name"],
-                r["Category"],
-                r["RFM_Exclusion"],
-            )
-            for r in out.collect()
-        ),
-        key=lambda t: (t[0] is None, t[0] or ""),
-    )
+# name → (clean_merchant_name, Category, RFM_Exclusion), as the when-chain
+# resolved them
+CASES = {
+    "LinePay－STORE-7": ("STORE-3", "Cafe", False),   # strip → regex rule 1
+    "STORE-3": ("STORE-3", "Cafe", False),            # exact lookup (stage 2)
+    "FOOD-9 deluxe": ("FoodCourt", "Food", False),    # rules 2, 3 match: FMW
+    "unmatched shop": ("unmatched shop", "Unknown", False),  # stage 4 fallback
+    None: ("Unknown", "Unknown", False),              # null → Unknown
+}
 
 
-def test_join_path_duplicates_and_repartition(spark):
-    """Row count must be preserved and every duplicate of a merchant
-    string must resolve identically, even when the input arrives
-    pre-shuffled — the join path keys on the stripped string itself,
-    so partitioning must not matter."""
-    names = ["FOOD-9 deluxe", "LinePay－STORE-7", "unmatched shop", None] * 50
-    pdf = pd.DataFrame({"merchant_name": names, "v": range(len(names))})
-    df = spark.createDataFrame(pdf).repartition(7, "v")
-    out = resolve_merchant_hybrid(
-        df, RULES, PREFIXES,
-        merchant_col="merchant_name", regex_join_threshold=1,
-    )
-    rows = out.collect()
-    assert len(rows) == len(names)
+def _resolved(df) -> tuple[int, dict]:
+    """Rows out, and merchant string → the set of results its rows got."""
+    rows = resolve_merchant_hybrid(
+        df, RULES, PREFIXES, merchant_col="merchant_name"
+    ).collect()
     res: dict = {}
     for r in rows:
         res.setdefault(r["merchant_name"], set()).add(
             (r["clean_merchant_name"], r["Category"], r["RFM_Exclusion"])
         )
-    assert res["FOOD-9 deluxe"] == {("FoodCourt", "Food", False)}
-    assert res["LinePay－STORE-7"] == {("STORE-3", "Cafe", False)}
-    assert res["unmatched shop"] == {("unmatched shop", "Unknown", False)}
-    assert res[None] == {("Unknown", "Unknown", False)}
+    return len(rows), res
+
+
+def test_join_path_duplicates_and_repartition(spark):
+    """200 rows arriving pre-shuffled: the row count holds and every
+    duplicate of a merchant string resolves the same way."""
+    names = ["FOOD-9 deluxe", "LinePay－STORE-7", "unmatched shop", None] * 50
+    pdf = pd.DataFrame({"merchant_name": names, "v": range(len(names))})
+    df = spark.createDataFrame(pdf).repartition(7, "v")
+    assert _resolved(df) == (
+        len(names), {name: {CASES[name]} for name in set(names)}
+    )
 
 
 def test_join_path_equals_when_chain(spark):
-    chain = _resolve(spark, threshold=10_000)  # force when-chain
-    join = _resolve(spark, threshold=1)        # force rlike-join
-    assert chain == join
-    by_name = {t[0]: t for t in chain}
-    assert by_name["LinePay－STORE-7"][1:] == ("STORE-3", "Cafe", False)
-    assert by_name["STORE-3"][1:] == ("STORE-3", "Cafe", False)
-    assert by_name["FOOD-9 deluxe"][1:] == ("FoodCourt", "Food", False)
-    assert by_name["unmatched shop"][1:] == ("unmatched shop", "Unknown", False)
-    assert by_name[None][1:] == ("Unknown", "Unknown", False)
+    pdf = pd.DataFrame({"merchant_name": list(CASES)})
+    assert _resolved(spark.createDataFrame(pdf)) == (
+        len(CASES), {name: {want} for name, want in CASES.items()}
+    )

@@ -1,14 +1,10 @@
-"""The C4 resolver has one path at any rule count: the cases of each
-stage, first-match-wins between two matching regex rules, and stable
-results for duplicates spread over partitions; then rule tables of
-1,000 rows through ``refine`` and the resolver, whose optimized plans
-must have the same nodes as at 4 rules."""
+"""Rule tables of 1,000 rows through ``refine`` and the C4 resolver:
+the values hold and the optimized plans have the same nodes as at 4
+rules. The resolver's per-stage cases are in test_merchant_join_path."""
 
 from __future__ import annotations
 
 import dataclasses
-
-import pandas as pd
 
 from credit_card_etl_pipeline_spark import schema as S
 from credit_card_etl_pipeline_spark.operators.merchants import (
@@ -17,41 +13,7 @@ from credit_card_etl_pipeline_spark.operators.merchants import (
 from credit_card_etl_pipeline_spark.plans.refine import refine
 from credit_card_etl_pipeline_spark.queries.refine_queries import REFINE_CONFIG
 
-RULES = [
-    {"Pattern": "^STORE-\\d+$", "Replacement": "STORE-3", "Priority": "50",
-     "Category": "Cafe", "Sub_Category": "Chain", "RFM_Exclusion": "False"},
-    {"Pattern": "^FOOD", "Replacement": "FoodCourt", "Priority": "40",
-     "Category": "Food", "Sub_Category": "", "RFM_Exclusion": "False"},
-    {"Pattern": "FOOD-9", "Replacement": "Nine", "Priority": "30",
-     "Category": "Nine", "Sub_Category": "", "RFM_Exclusion": "True"},
-]
-
 PREFIXES = ["LinePay－"]
-
-
-def test_resolver_stages_fmw_and_repartitioned_duplicates(spark):
-    cases = {
-        "LinePay－STORE-7": ("STORE-3", "Cafe", False),   # strip → regex rule 1
-        "STORE-3": ("STORE-3", "Cafe", False),            # exact lookup (stage 2)
-        "FOOD-9 deluxe": ("FoodCourt", "Food", False),    # rules 2, 3 match: FMW
-        "unmatched shop": ("unmatched shop", "Unknown", False),  # stage 4 fallback
-        None: ("Unknown", "Unknown", False),              # null → Unknown
-    }
-    # 200 rows arriving pre-shuffled: the row count holds and every
-    # duplicate of a merchant string resolves the same way
-    names = list(cases) * 40
-    pdf = pd.DataFrame({"merchant_name": names, "v": range(len(names))})
-    df = spark.createDataFrame(pdf).repartition(7, "v")
-    rows = resolve_merchant_hybrid(
-        df, RULES, PREFIXES, merchant_col="merchant_name"
-    ).collect()
-    assert len(rows) == len(names)
-    res: dict = {}
-    for r in rows:
-        res.setdefault(r["merchant_name"], set()).add(
-            (r["clean_merchant_name"], r["Category"], r["RFM_Exclusion"])
-        )
-    assert res == {name: {want} for name, want in cases.items()}
 
 
 def _expr_nodes(df) -> int:
